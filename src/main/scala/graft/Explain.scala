@@ -1,20 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted physical plans for selected queries so plan
   * regressions (lost pushdown, missed broadcast, surprise cartesian) are
   * visible. `runMain graft.Explain [q...]` — no args prints a curated set. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevSession(cpus = "4", logLevel = "ERROR")
     val names = if (args.nonEmpty) args.toSeq
     else Seq("q2_filter_project", "q3_join_agg", "q4_join_topk", "q5_topk",
       "q27_minhash_pairs", "q29_cosine_topk", "q35_asof_join", "q41_range_join",

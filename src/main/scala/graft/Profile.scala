@@ -1,14 +1,17 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Dev-only profiling main (optimization rounds): run named queries once
   * (after a warm-up) with (a) a listener that records every Spark job and
   * its first-stage call site, and (b) a driver stack sampler that
   * attributes the DRIVER GAP (wall − job time) to code paths. This is the
   * guide-§1 "where is the time actually going" measurement for a bench
-  * whose queries each run dozens of tiny jobs.
+  * whose queries each run dozens of tiny jobs. Each query's header also
+  * gives its Janino compiles (generated classes that missed Spark's
+  * codegen cache) and their compile time, so recompiles show next to jobs.
   *
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
   *     sbt "runMain graft.Profile q115_merge_commit q256_apply_changes_scd2"
@@ -16,15 +19,7 @@ import org.apache.spark.sql.SparkSession
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.sql.GraftSparkExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DevSession()
 
     final case class JobRec(id: Int, desc: String, start: Long,
                             var end: Long = 0L)
@@ -84,17 +79,21 @@ object Profile {
       })
       sampler.setDaemon(true)
       sampler.start()
+      val (compiles0, compileNs0) = janino()
       val t0 = System.nanoTime()
       try run(name) catch { case e: Throwable =>
         println(s"$name FAILED: ${e.getMessage}") }
       val wallMs = (System.nanoTime() - t0) / 1e6
+      val (compiles1, compileNs1) = janino()
       sampling = false
       Thread.sleep(300) // listener bus is async: let it drain
       spark.sparkContext.removeSparkListener(listener)
       val snap = jobs.synchronized(jobs.values.toVector)
       val jobMs = snap.map(j => (j.end - j.start).max(0L)).sum
       println(f"\n===== $name: wall ${wallMs}%.0f ms, ${snap.size} jobs, " +
-        f"job-time $jobMs ms, driver gap ${wallMs - jobMs}%.0f ms =====")
+        f"job-time $jobMs ms, driver gap ${wallMs - jobMs}%.0f ms, " +
+        f"janino ${compiles1 - compiles0} compiles / " +
+        f"${(compileNs1 - compileNs0) / 1e6}%.0f ms =====")
       val byDesc = snap.groupBy(_.desc).map { case (d, js) =>
         (d, js.size, js.map(j => (j.end - j.start).max(0L)).sum)
       }.toVector.sortBy(-_._3)
@@ -110,4 +109,10 @@ object Profile {
     }
     spark.stop()
   }
+
+  /** JVM-wide Janino compiles so far: the count from `CodegenMetrics`,
+    * the nanoseconds from `CodeGenerator.compileTime` (the histogram's
+    * decaying reservoir samples values, so it cannot give an exact sum). */
+  private def janino(): (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
 }

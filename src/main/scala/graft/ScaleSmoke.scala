@@ -185,18 +185,6 @@ object ScaleSmoke {
       buildScaled(s, src, target, copies, skewed)
     }
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   private def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
@@ -349,7 +337,7 @@ object ScaleSmoke {
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
     val reps = args.lift(3).map(_.toInt)
       .orElse(sys.env.get("SPARK_GRAFT_REPS").map(_.toInt)).getOrElse(3)
-    val spark = session()
+    val spark = DevSession()
     ensureBuilt(spark, src, target, copies, skewed = false)
     import graft.sql.{LakeSql, ResultCache}
     def run(label: String, dir: String): Map[String, Double] = {
@@ -426,7 +414,7 @@ object ScaleSmoke {
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
     val reps = args.lift(3).map(_.toInt)
       .orElse(sys.env.get("SPARK_GRAFT_REPS").map(_.toInt)).getOrElse(3)
-    val spark = session()
+    val spark = DevSession()
     ensureBuilt(spark, src, target, copies, skewed = false)
     import graft.sinks.{Layout, Snapshots}
     import graft.sql.{ApplyChanges, LakeSql}
@@ -495,7 +483,7 @@ object ScaleSmoke {
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
     val reps = args.lift(3).map(_.toInt)
       .orElse(sys.env.get("SPARK_GRAFT_REPS").map(_.toInt)).getOrElse(3)
-    val spark = session()
+    val spark = DevSession()
     ensureBuilt(spark, src, target, copies, skewed = false)
     import graft.sinks.{Cdc, Dv, Layout, Snapshots}
     val zcols = Seq("o_custkey", "o_totalprice")
@@ -576,7 +564,7 @@ object ScaleSmoke {
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
     val reps = args.lift(3).map(_.toInt)
       .orElse(sys.env.get("SPARK_GRAFT_REPS").map(_.toInt)).getOrElse(3)
-    val spark = session()
+    val spark = DevSession()
     ensureBuilt(spark, src, target, copies, skewed = false)
     import graft.sinks.{Layout, Maintenance, Snapshots}
     def orders(dir: String) = graft.model.Tables.load(spark, dir, "orders")
@@ -627,7 +615,7 @@ object ScaleSmoke {
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
     val reps = args.lift(3).map(_.toInt)
       .orElse(sys.env.get("SPARK_GRAFT_REPS").map(_.toInt)).getOrElse(3)
-    val spark = session()
+    val spark = DevSession()
     ensureBuilt(spark, src, target, copies, skewed = false)
     import graft.sinks.{Dv, Layout, Snapshots}
     val zcols = Seq("o_custkey", "o_totalprice")
@@ -713,7 +701,7 @@ object ScaleSmoke {
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
     val reps = args.lift(3).map(_.toInt)
       .orElse(sys.env.get("SPARK_GRAFT_REPS").map(_.toInt)).getOrElse(3)
-    val spark = session()
+    val spark = DevSession()
     ensureBuilt(spark, src, target, copies, skewed = false)
     import graft.ops.Ivm
     import graft.sinks.{Layout, Snapshots}
@@ -789,7 +777,7 @@ object ScaleSmoke {
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
     val reps = args.lift(3).map(_.toInt)
       .orElse(sys.env.get("SPARK_GRAFT_REPS").map(_.toInt)).getOrElse(3)
-    val spark = session()
+    val spark = DevSession()
     ensureBuilt(spark, src, target, copies, skewed = false)
     import graft.sinks.{Layout, Snapshots}
     import graft.sql.{LakeSql, MatViews}
@@ -842,7 +830,7 @@ object ScaleSmoke {
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
     val reps = args.lift(3).map(_.toInt)
       .orElse(sys.env.get("SPARK_GRAFT_REPS").map(_.toInt)).getOrElse(3)
-    val spark = session()
+    val spark = DevSession()
     ensureBuilt(spark, src, target, copies, skewed = false)
 
     def wall(name: String, dir: String): Double = median((1 to reps).map { _ =>
@@ -938,7 +926,7 @@ object ScaleSmoke {
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
     val reps = args.lift(3).map(_.toInt)
       .orElse(sys.env.get("SPARK_GRAFT_REPS").map(_.toInt)).getOrElse(3)
-    val spark = session()
+    val spark = DevSession()
     ensureBuilt(spark, src, target, copies, skewed = false)
     import graft.ext.ExactSubstr
     val minLen = 20
@@ -1014,7 +1002,7 @@ object ScaleSmoke {
     val copies = args.lift(2).map(_.toInt).getOrElse(100)
     val reps = args.lift(3).map(_.toInt)
       .orElse(sys.env.get("SPARK_GRAFT_REPS").map(_.toInt)).getOrElse(3)
-    val spark = session()
+    val spark = DevSession()
     ensureBuilt(spark, src, target, copies, skewed = true)
 
     def t(name: String) = spark.read.parquet(s"$target/$name.parquet")

@@ -295,8 +295,9 @@ object Layout {
     * same FP accumulation order — so planned boundaries are bit-identical
     * to the boxed `sortBy` this replaces (which cost 100–240 ms of driver
     * CPU per heavy write in the r19 profile). */
-  private def weightedQuantiles(groups: IndexedSeq[(Array[Double], Double)],
-                                qs: Seq[Double]): Seq[Double] = {
+  private[sinks] def weightedQuantiles(
+      groups: IndexedSeq[(Array[Double], Double)],
+      qs: Seq[Double]): Seq[Double] = {
     val gs = groups.filter(_._1.nonEmpty).map { case (vs, w) =>
       val s = vs.clone(); java.util.Arrays.sort(s); (s, w)
     }
@@ -312,7 +313,12 @@ object Layout {
       while (gi < gs.length) {
         if (pos(gi) < gs(gi)._1.length) {
           val v = gs(gi)._1(pos(gi))
-          if (best < 0 || v < bestV) { best = gi; bestV = v }
+          // Double.compare, not `<`: the same total order as the sort
+          // (-0.0 before 0.0, NaN last), so zeros split across groups
+          // merge in flat-sort order
+          if (best < 0 || java.lang.Double.compare(v, bestV) < 0) {
+            best = gi; bestV = v
+          }
         }
         gi += 1
       }

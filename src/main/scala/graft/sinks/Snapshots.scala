@@ -672,18 +672,20 @@ object Snapshots {
       case _ => df.count()
     }
 
-  /** Σ of a non-null long column without a Spark job when the frame is
-    * driver-local (footer-built manifests are LocalRelations). */
-  private[graft] def localLongSum(df: DataFrame, c: String): Long = {
+  /** Σ of a long column without a Spark job when the frame is
+    * driver-local (footer-built manifests are LocalRelations); None when
+    * any row's value is null (a manifest entry without its `rows` stat),
+    * so a caller can never under-count by skipping it. */
+  private[graft] def localLongSum(df: DataFrame, c: String): Option[Long] = {
     val proj = df.select(col(c))
     proj.queryExecution.optimizedPlan match {
       case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        var s = 0L
-        l.data.foreach(r => if (!r.isNullAt(0)) s += r.getLong(0))
-        s
+        if (l.data.exists(_.isNullAt(0))) None
+        else Some(l.data.iterator.map(_.getLong(0)).sum)
       case _ =>
-        val r = proj.agg(sum(col(c))).head()
-        if (r.isNullAt(0)) 0L else r.getLong(0)
+        val r = proj.agg(sum(col(c)), count(when(col(c).isNull, 1))).head()
+        if (r.getLong(1) > 0) None
+        else Some(if (r.isNullAt(0)) 0L else r.getLong(0))
     }
   }
 
@@ -903,21 +905,25 @@ object Snapshots {
     // needs its mask size, so that (rare post-purge) shape keeps the
     // counting scan. Survivor rows come from the new files' manifest stats
     // (footer reads — no job). This halves the data read of every
-    // copy-on-write DELETE: one pass instead of count-then-rewrite.
-    val deleted =
-      if (rewrite.isEmpty) 0L
+    // copy-on-write DELETE: one pass instead of count-then-rewrite. A file
+    // whose `rows` stat is null cannot close the books either, so it also
+    // takes the counting scan.
+    val arithmetic =
+      if (rewrite.isEmpty) Some(0L)
       else if (rewrite.forall(_.dv.isEmpty)) {
         val rewriteFiles = rewrite.map(_.file).toSet
-        val liveRows = localLongSum(manifest
-          .filter(col("file").isInCollection(rewriteFiles.toSeq)), "rows")
-        val survivorRows =
-          survivorStats.map(localLongSum(_, "rows")).getOrElse(0L)
-        liveRows - survivorRows
-      } else {
-        val live = Dv.readLive(spark, rewrite,
-          declaredAt(spark, manifestRoot, latestVersion(spark, manifestRoot)))
-        live.filter(pred).count()
-      }
+        for {
+          liveRows <- localLongSum(manifest
+            .filter(col("file").isInCollection(rewriteFiles.toSeq)), "rows")
+          survivorRows <-
+            survivorStats.map(localLongSum(_, "rows")).getOrElse(Some(0L))
+        } yield liveRows - survivorRows
+      } else None
+    val deleted = arithmetic.getOrElse {
+      val live = Dv.readLive(spark, rewrite,
+        declaredAt(spark, manifestRoot, latestVersion(spark, manifestRoot)))
+      live.filter(pred).count()
+    }
     commit(spark, next, manifestRoot)
     Layout.DeleteResult(rewrite.size.toLong, total,
       deleted + dropped.values.sum, dropped.size.toLong)

@@ -1,12 +1,13 @@
 package graft.sql
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.parser.{ParameterContext, ParseException, ParserInterface}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
+import org.apache.spark.sql.internal.StaticSQLConf
 import org.apache.spark.sql.types.{DataType, LongType, StructType}
 
 /** SESSION-CATALOG INTEGRATION (round-13 verdict item 3): plain
@@ -40,9 +41,21 @@ import org.apache.spark.sql.types.{DataType, LongType, StructType}
   * CONVERT TO LAKE) reaches plain spark.sql through the injected
   * [[GraftSqlParser]] (the DeltaSqlParser shape). Only the
   * Catalyst-parsed DDL (CTAS, ALTER) remains front-door-only.
+  *
+  * Registering the extension also sizes Spark's generated-class cache to
+  * graft's working set ([[GraftSparkExtensions.CodegenCacheEntries]]).
   */
 class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    // Keep generated code compiled across ops. Extensions run after the
+    // SparkContext starts and before the session state copies its conf,
+    // so the size reaches SQLConf; a size the user set wins. LIMIT:
+    // CodeGenerator reads the size once per JVM, when it first generates
+    // code, so this only takes effect if a graft-extended session is the
+    // first in the JVM to generate code.
+    GraftSqlBridge.activeSparkConf.foreach(_.setIfMissing(
+      StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
+      GraftSparkExtensions.CodegenCacheEntries.toString))
     ext.injectResolutionRule(ResolveLakeTables)
     // metadata-only aggregates: COUNT(*)/MIN/MAX over a bare lake scan
     // answered from the manifest, zero data files opened
@@ -77,6 +90,18 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
         "table_history"),
       args => LakeSql.tableHistoryPlan(SparkSession.active, args)))
   }
+}
+
+object GraftSparkExtensions {
+  /** Entries in Spark's generated-class cache (an LRU keyed by source
+    * text; Spark's default is 100). Measured working sets: one curation
+    * pass (quality filter, exact and MinHash dedup, clusters, exact
+    * substrings, IVF, kNN graph) needs ~290 distinct classes and one
+    * daily-ingest day ~160, so at 100 entries they cycle through the LRU
+    * and nearly every repeat recompiles through Janino. 1024 holds a pass
+    * with 3.5x headroom; classes tied to one input (inlined constants)
+    * age out of the LRU. A retained class costs ~28 KB of heap. */
+  val CodegenCacheEntries = 1024
 }
 
 /** The analyzer-rule twin of `LakeSql.sql`'s read resolution. Nothing

@@ -13,6 +13,29 @@ class LayoutSpec extends SparkSpec {
       pmod(xxhash64(col("id")), lit(1000)).as("x"),
       pmod(xxhash64(col("id"), lit(1)), lit(1000)).as("y"))
 
+  test("weightedQuantiles: ±0.0 split across groups match the flat sort " +
+      "bit for bit") {
+    val groups = IndexedSeq(
+      (Array(0.0, 1.0, 0.0), 1.0),
+      (Array(-0.0, 2.0, Double.NaN), 2.0),
+      (Array(-0.0, 0.0), 0.5))
+    val qs = Seq(0.1, 0.25, 0.4, 0.5, 0.75, 0.9)
+    // reference: sort the flat (value, weight) pairs in Double's total
+    // order (stable, so ties keep group order) and walk cumulative weight
+    val flat = groups.flatMap { case (vs, w) => vs.toSeq.map(v => (v, w)) }
+      .sortBy(_._1)(Ordering.Double.TotalOrdering)
+    val total = flat.map(_._2).sum
+    val cum = flat.map(_._2).scanLeft(0.0)(_ + _).tail
+    val want = qs.map { q =>
+      val i = cum.indexWhere(_ >= q * total)
+      if (i < 0) flat.last._1 else flat(i)._1
+    }
+    val got = Layout.weightedQuantiles(groups, qs)
+    def bits(xs: Seq[Double]) = xs.map(java.lang.Double.doubleToRawLongBits)
+    assert(bits(got) == bits(want), s"got $got, want $want")
+    assert(bits(want).contains(java.lang.Double.doubleToRawLongBits(-0.0)))
+  }
+
   test("zorderWrite round-trips the rows and drops the z column") {
     val dir = java.nio.file.Files.createTempDirectory("layout").toString
     Layout.zorderWrite(data, Seq("x", "y"), s"$dir/z", nFiles = 16)
