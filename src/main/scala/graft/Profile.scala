@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import graft.sinks.MetaCache
 
 /** Dev-only profiling main (optimization rounds): run named queries once
   * (after a warm-up) with (a) a listener that records every Spark job and
@@ -11,7 +12,9 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   * guide-§1 "where is the time actually going" measurement for a bench
   * whose queries each run dozens of tiny jobs. Each query's header also
   * gives its Janino compiles (generated classes that missed Spark's
-  * codegen cache) and their compile time, so recompiles show next to jobs.
+  * codegen cache) and their compile time, so recompiles show next to jobs,
+  * and the lake metadata cache's ([[graft.sinks.MetaCache]]) hits, misses
+  * and evictions.
   *
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
   *     sbt "runMain graft.Profile q115_merge_commit q256_apply_changes_scd2"
@@ -80,11 +83,13 @@ object Profile {
       sampler.setDaemon(true)
       sampler.start()
       val (compiles0, compileNs0) = janino()
+      val meta0 = MetaCache.stats
       val t0 = System.nanoTime()
       try run(name) catch { case e: Throwable =>
         println(s"$name FAILED: ${e.getMessage}") }
       val wallMs = (System.nanoTime() - t0) / 1e6
       val (compiles1, compileNs1) = janino()
+      val meta1 = MetaCache.stats
       sampling = false
       Thread.sleep(300) // listener bus is async: let it drain
       spark.sparkContext.removeSparkListener(listener)
@@ -93,7 +98,10 @@ object Profile {
       println(f"\n===== $name: wall ${wallMs}%.0f ms, ${snap.size} jobs, " +
         f"job-time $jobMs ms, driver gap ${wallMs - jobMs}%.0f ms, " +
         f"janino ${compiles1 - compiles0} compiles / " +
-        f"${(compileNs1 - compileNs0) / 1e6}%.0f ms =====")
+        f"${(compileNs1 - compileNs0) / 1e6}%.0f ms, " +
+        s"metacache ${meta1.hits - meta0.hits} hits / " +
+        s"${meta1.misses - meta0.misses} misses / " +
+        s"${meta1.evictions - meta0.evictions} evictions =====")
       val byDesc = snap.groupBy(_.desc).map { case (d, js) =>
         (d, js.size, js.map(j => (j.end - j.start).max(0L)).sum)
       }.toVector.sortBy(-_._3)

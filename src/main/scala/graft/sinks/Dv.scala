@@ -77,7 +77,7 @@ object Dv {
   // entries many times for gates/diffs/feeds). The session is part of the
   // key because the memoized plan is analyzed against (and pins scan conf
   // of) the session that assembled it — a second/restarted session must
-  // assemble its own. LRU-bounded; cleared by [[Snapshots]] on root
+  // assemble its own. LRU-bounded; emptied by [[MetaCache.forget]] on root
   // re-creation and vacuum (the only paths that delete referenced files).
   private type ReadLiveKey =
     (SparkSession, Seq[Entry], Option[org.apache.spark.sql.types.StructType])
@@ -88,19 +88,8 @@ object Dv {
           : Boolean = size() > 512
     }
 
-  private[graft] def clearReadLiveCache(): Unit = {
+  private[sinks] def clearReadLiveCache(): Unit =
     readLiveCache.synchronized(readLiveCache.clear())
-    fileSchemaCache.synchronized(fileSchemaCache.clear())
-  }
-
-  // per-file parquet schema memo (files are immutable; LRU-bounded)
-  private val fileSchemaCache =
-    new java.util.LinkedHashMap[String, org.apache.spark.sql.types.StructType](
-        16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, org.apache.spark.sql.types.StructType])
-          : Boolean = size() > 8192
-    }
 
   /** Relation-level nullable normalization (what `DataType.asNullable`
     * does; it is `private[sql]`): file-based relations serve every field
@@ -155,17 +144,14 @@ object Dv {
   /** The single schema shared by ALL of `files`, if they agree — each new
     * file costs one driver-side footer read (memoized thereafter); any
     * disagreement or read failure returns None so the caller falls back
-    * to Spark's distributed mergeSchema. */
+    * to Spark's distributed mergeSchema. Files are immutable, so the
+    * memo lives in [[MetaCache]] keyed by file path. */
   private def fileSchemas(spark: SparkSession, files: Seq[String])
       : Option[org.apache.spark.sql.types.StructType] = try {
     var agreed: Option[org.apache.spark.sql.types.StructType] = None
     files.foreach { f =>
-      val s = fileSchemaCache.synchronized(Option(fileSchemaCache.get(f)))
-        .getOrElse {
-          val read = footerSchema(spark, f)
-          fileSchemaCache.synchronized(fileSchemaCache.put(f, read)): Unit
-          read
-        }
+      val s = MetaCache.getOrElseUpdate(MetaCache.FileRoot, f)(
+        footerSchema(spark, f))
       agreed match {
         case None => agreed = Some(s)
         case Some(a) if a == s => ()

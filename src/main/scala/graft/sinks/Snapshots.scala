@@ -105,32 +105,26 @@ object Snapshots {
     }
   }
 
-  // (root, v) → resolved visibility. Only RESOLVED states memoize
-  // (plain version → true; txn committed → true; txn aborted → false);
-  // an unresolved pending stage re-checks its txn file every call
-  // because the commit file can appear at any moment.
-  private val txnVisMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), Boolean]
-
-  private[graft] def clearTxnVisMemo(manifestRoot: String): Unit =
-    txnVisMemo.keys.filter(_._1 == manifestRoot).foreach(txnVisMemo.remove)
-
+  // (root, v) → resolved visibility in [[MetaCache]]. Only RESOLVED
+  // states are stored (plain version → true; txn committed → true; txn
+  // aborted → false); an unresolved pending stage re-checks its txn file
+  // every call because the commit file can appear at any moment.
   private[graft] def txnVisible(spark: SparkSession, manifestRoot: String,
                                 v: Int): Boolean =
-    txnVisMemo.getOrElse((manifestRoot, v), {
-      pendingInfo(spark, manifestRoot, v) match {
-        case None =>
-          txnVisMemo.put((manifestRoot, v), true); true
+    MetaCache.get[Boolean](manifestRoot, ("txn", v)).getOrElse {
+      val resolved = pendingInfo(spark, manifestRoot, v) match {
+        case None => Some(true)
         case Some((dir, id)) =>
           val fs = hfs(spark, dir)
-          if (fs.exists(new org.apache.hadoop.fs.Path(dir, s"commit_$id"))) {
-            txnVisMemo.put((manifestRoot, v), true); true
-          } else if (fs.exists(
-              new org.apache.hadoop.fs.Path(dir, s"abort_$id"))) {
-            txnVisMemo.put((manifestRoot, v), false); false
-          } else false // unresolved: re-check next call, never memoize
+          if (fs.exists(new org.apache.hadoop.fs.Path(dir, s"commit_$id")))
+            Some(true)
+          else if (fs.exists(new org.apache.hadoop.fs.Path(dir, s"abort_$id")))
+            Some(false)
+          else None // unresolved: re-check next call, never memoize
       }
-    })
+      resolved.foreach(MetaCache.put(manifestRoot, ("txn", v), _))
+      resolved.getOrElse(false)
+    }
 
   /** True when version `v` is a txn stage whose transaction is neither
     * committed nor aborted — the one state a concurrent committer must
@@ -270,12 +264,12 @@ object Snapshots {
           next += 1
         } else {
           // a commit landing at v=1 is a root BEGINNING — fresh, or
-          // re-created at a path whose old life left memoized property
-          // maps behind (version numbers restart, so stale (root, v)
+          // re-created at a path whose old life left cached metadata
+          // behind (version numbers restart, so stale (root, v)
           // entries would otherwise be served): drop them here, where
           // every initialization path converges, not only in the SQL
           // registry
-          if (next == 1) invalidateProperties(manifestRoot)
+          if (next == 1) MetaCache.forget(manifestRoot)
           // the rows staged driver-side ARE the committed version's raw
           // parquet content — warm the manifest cache so the first
           // post-commit planner read is job-free (after the v=1
@@ -286,8 +280,7 @@ object Snapshots {
             // all-nullable schema — cached and uncached readers of one
             // version must observe the identical schema
             val relaxed = StructType(schema.fields.map(_.copy(nullable = true)))
-            manifestCache.synchronized(
-              manifestCachePut((manifestRoot, next), (relaxed, rows)))
+            cacheManifest(manifestRoot, ("manifest", next), relaxed, rows)
           }
           return next
         }
@@ -435,95 +428,40 @@ object Snapshots {
     * top. The gate-visible evidence that checkpoints actually re-base the
     * log (`deltasFolded` drops back to the post-checkpoint tail). */
   // ------------------------------------------------------------------
-  // MANIFEST CACHE — a committed version dir is IMMUTABLE (the CAS rename
-  // is the last write a v-dir ever sees), so the collected manifest rows
-  // of a (root, version) — and the delta FOLD over an explicit visible
-  // version set — can be served from driver memory instead of re-running
-  // a parquet scan job per planner read. This is the Delta/Iceberg
-  // snapshot-state cache re-expressed on the version log: every DML
-  // query reads its table's manifest dozens of times (touch-set
-  // planning, gates, change feeds, stream admission), and each read was
-  // a full Spark job (schema inference + scan + collect + a broadcast
-  // hadoop-conf per job). Bounded two ways: an entry larger than
-  // [[manifestCacheMaxRows]] rows is never cached (a 100 TB table's
-  // manifest stays a distributed read; the cap is env-tunable), and the
-  // map is LRU past 1024 entries. Invalidation: root re-creation
-  // ([[invalidateProperties]], already hooked at every v=1 commit and
-  // SQL re-registration), [[vacuum]] (drops version dirs), plus a
-  // per-serve existence probe so a DROPped-but-not-recreated root fails
-  // exactly like the uncached read did.
+  // MANIFEST CACHE — a committed version dir is IMMUTABLE, so the
+  // collected manifest rows of a (root, version) — and the delta FOLD over
+  // an explicit visible version set — are served from [[MetaCache]]
+  // instead of re-running a parquet scan job per planner read (the
+  // Delta/Iceberg snapshot-state cache re-expressed on the version log:
+  // every DML query reads its table's manifest dozens of times for
+  // touch-set planning, gates, change feeds and stream admission). A
+  // manifest of more than [[MetaCache.MaxEntryRows]] rows is never
+  // collected (a 100 TB table's manifest stays a distributed read), and a
+  // per-serve existence probe makes a DROPped-but-not-recreated root fail
+  // exactly like the uncached read.
   // ------------------------------------------------------------------
 
-  private[graft] val manifestCacheMaxRows: Int =
-    sys.env.get("SPARK_GRAFT_MANIFEST_CACHE_ROWS").map { v =>
-      try v.trim.toInt
-      catch { case _: NumberFormatException =>
-        throw new IllegalArgumentException(
-          s"SPARK_GRAFT_MANIFEST_CACHE_ROWS must be an integer, got '$v'")
-      }
-    }.getOrElse(65536)
+  private def cacheManifest(manifestRoot: String, key: Product,
+                            schema: StructType, rows: Array[Row]): Unit =
+    MetaCache.put(manifestRoot, key, (schema, rows), rows.length.max(1).toLong)
 
-  // SINGLE-WRITER-JVM TRUST MODEL (shared with propsCache/schemaMemo/
-  // txnVisMemo): invalidation is in-process. The per-serve dir-existence
-  // probe catches a DROP/vacuum from any process, but a SECOND process
-  // that re-creates the same root (version numbers restart) could be
-  // served the old life's rows once its new log reaches a cached version
-  // number. Delta's DeltaLog snapshot cache makes the same assumption;
-  // coordinating writers across JVMs is the catalog's job, not this
-  // cache's.
-  private val manifestCache =
-    new java.util.LinkedHashMap[Product, (StructType, Array[Row])](
-        16, 0.75f, true)
-
-  // Aggregate row budget across all cached entries: per-entry row caps
-  // alone let 1024 × 65536-row wide-stats manifests pin multi-GB of
-  // driver memory. Eviction is LRU until both bounds hold.
-  private val manifestCacheMaxTotalRows: Long =
-    sys.env.get("SPARK_GRAFT_MANIFEST_CACHE_TOTAL_ROWS").map(_.trim.toLong)
-      .getOrElse(1L << 22)
-  private var manifestCacheTotalRows: Long = 0L
-
-  // callers hold manifestCache's monitor
-  private def manifestCachePut(key: Product,
-                               value: (StructType, Array[Row])): Unit = {
-    Option(manifestCache.put(key, value))
-      .foreach(old => manifestCacheTotalRows -= old._2.length)
-    manifestCacheTotalRows += value._2.length
-    val it = manifestCache.entrySet().iterator()
-    while ((manifestCache.size() > 1024 ||
-        manifestCacheTotalRows > manifestCacheMaxTotalRows) && it.hasNext) {
-      val e = it.next()
-      if (e.getKey != key) { // never evict the entry just added
-        manifestCacheTotalRows -= e.getValue._2.length
-        it.remove()
-      }
-    }
-  }
-
-  // Pre-collect byte gate: the fill must be ONE straight collect() job.
-  // r18 filled with limit(cap+1).collect(), and CollectLimitExec runs
-  // executeTake's incremental partition waves (1 partition, then 4×
-  // more …) — SEVERAL jobs per miss, which is what the read-once version
-  // walks (q111_time_travel ×0.60, q114_version_changes ×0.67 in the r18
-  // driver bench) paid for nothing. Instead the on-disk size of the
-  // manifest's input dirs decides cacheability up front (file-count-
-  // bounded listing, same cost class as the per-serve existence probe);
-  // a 100 TB table's manifest stays a distributed read.
-  private[graft] val manifestCacheMaxBytes: Long =
-    sys.env.get("SPARK_GRAFT_MANIFEST_CACHE_BYTES").map(_.trim.toLong)
-      .getOrElse(16L << 20)
-
-  private[graft] def clearManifestCache(manifestRoot: String): Unit =
-    manifestCache.synchronized {
-      val it = manifestCache.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getKey.productElement(0) == manifestRoot) {
-          manifestCacheTotalRows -= e.getValue._2.length
-          it.remove()
-        }
-      }
-    }
+  /** Total rows in the parquet files under `dirs`, from their footers on
+    * the driver (no Spark job); Long.MaxValue when a footer cannot be
+    * read or a dir is not flat (a nested dir a parquet read would also
+    * scan). */
+  private def footerRows(spark: SparkSession, dirs: Seq[String]): Long =
+    try dirs.distinct.iterator.flatMap { d =>
+      hfs(spark, d).listStatus(new org.apache.hadoop.fs.Path(d)).iterator
+        .filterNot(st => st.getPath.getName.startsWith("_") ||
+          st.getPath.getName.startsWith("."))
+    }.map { st =>
+      require(st.isFile, s"not a flat manifest dir: ${st.getPath}")
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st,
+          spark.sparkContext.hadoopConfiguration))
+      try reader.getRecordCount finally reader.close()
+    }.sum
+    catch { case scala.util.control.NonFatal(_) => Long.MaxValue }
 
   /** Stage `content` into `tmpDir` as ONE parquet part file written from
     * the DRIVER (parquet-mr Group writer — no Spark job), when every
@@ -564,9 +502,9 @@ object Snapshots {
     }
     if (!localOnly(content.queryExecution.optimizedPlan)) return None
     val rows =
-      try content.limit(manifestCacheMaxRows + 1).collect()
+      try content.limit(MetaCache.MaxEntryRows + 1).collect()
       catch { case scala.util.control.NonFatal(_) => return None }
-    if (rows.length > manifestCacheMaxRows) return None
+    if (rows.length > MetaCache.MaxEntryRows) return None
     import org.apache.parquet.schema.{LogicalTypeAnnotation, Types => PTypes}
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     val builder = PTypes.buildMessage()
@@ -616,38 +554,31 @@ object Snapshots {
   }
 
   /** Serve `build`'s rows from the cache under `key`, populating it on
-    * miss with ONE straight collect job (pre-gated by the on-disk bytes
-    * of `probeDir` + `inputDirs`) — or pass `build` through untouched
-    * when the inputs are too large to cache or `probeDir` no longer
-    * exists. */
-  private def cachedManifestDf(spark: SparkSession, key: Product,
-                               probeDir: String,
+    * miss with ONE straight collect job — or pass `build` through
+    * untouched when `probeDir` no longer exists or the parquet footers of
+    * `probeDir` + `inputDirs` hold more than [[MetaCache.MaxEntryRows]]
+    * rows. That footer sum is an exact upper bound on the rows `build`
+    * yields (a fold never outgrows its inputs), so an oversized manifest
+    * is never collected. (A `limit(cap + 1)` collect would instead run
+    * executeTake's incremental partition waves: several jobs per miss.) */
+  private def cachedManifestDf(spark: SparkSession, manifestRoot: String,
+                               key: Product, probeDir: String,
                                inputDirs: Seq[String] = Seq.empty)
                               (build: => DataFrame): DataFrame = {
     import scala.jdk.CollectionConverters._
-    val fs = hfs(spark, probeDir)
-    val exists = fs.exists(new org.apache.hadoop.fs.Path(probeDir))
+    val exists = hfs(spark, probeDir)
+      .exists(new org.apache.hadoop.fs.Path(probeDir))
     if (exists)
-      manifestCache.synchronized(Option(manifestCache.get(key))).foreach {
-        case (schema, rows) =>
+      MetaCache.get[(StructType, Array[Row])](manifestRoot, key)
+        .foreach { case (schema, rows) =>
           return spark.createDataFrame(rows.toSeq.asJava, schema)
-      }
+        }
     val df = build
-    if (!exists) return df // let build's own missing-dir semantics apply
-    val bytes =
-      try (probeDir +: inputDirs).distinct.map { d =>
-        fs.listStatus(new org.apache.hadoop.fs.Path(d)).toSeq
-          .filter(_.isFile).map(_.getLen).sum
-      }.sum
-      catch { case scala.util.control.NonFatal(_) => Long.MaxValue }
-    if (bytes > manifestCacheMaxBytes) return df
+    if (!exists || footerRows(spark, probeDir +: inputDirs) >
+        MetaCache.MaxEntryRows) return df
     val rows = df.collect()
-    if (rows.length > manifestCacheMaxRows) df
-    else {
-      manifestCache.synchronized(
-        manifestCachePut(key, (df.schema, rows)))
-      spark.createDataFrame(rows.toSeq.asJava, df.schema)
-    }
+    cacheManifest(manifestRoot, key, df.schema, rows)
+    spark.createDataFrame(rows.toSeq.asJava, df.schema)
   }
 
   /** `localCheckpoint()` unless the frame is already driver-local (a
@@ -729,7 +660,7 @@ object Snapshots {
         "stage that is not (or never became) visible — reads serve only " +
         "committed history")
     if (!isDelta(spark, manifestRoot, version))
-      return cachedManifestDf(spark, (manifestRoot, version),
+      return cachedManifestDf(spark, manifestRoot, ("manifest", version),
         s"$manifestRoot/v=$version")(
         spark.read.parquet(s"$manifestRoot/v=$version"))
     val info = foldInfo(spark, manifestRoot, version)
@@ -739,21 +670,20 @@ object Snapshots {
     // versions): visibility changes (a txn stage resolving) change the
     // set and therefore the key, so a cached fold can never serve a
     // different-visibility answer
-    cachedManifestDf(spark,
-      (manifestRoot, version, info.base, info.baseIsCheckpoint,
-        deltaVs.toList),
+    cachedManifestDf(spark, manifestRoot,
+      ("fold", version, info.base, info.baseIsCheckpoint, deltaVs.toList),
       s"$manifestRoot/v=$version",
       inputDirs = (if (info.baseIsCheckpoint) s"$manifestRoot/ckpt=${info.base}"
         else s"$manifestRoot/v=${info.base}") +:
         deltaVs.map(v => s"$manifestRoot/v=$v")) {
       val baseDf = (if (info.baseIsCheckpoint)
           spark.read.parquet(s"$manifestRoot/ckpt=${info.base}")
-        else cachedManifestDf(spark, (manifestRoot, info.base),
+        else cachedManifestDf(spark, manifestRoot, ("manifest", info.base),
           s"$manifestRoot/v=${info.base}")(
           spark.read.parquet(s"$manifestRoot/v=${info.base}")))
         .withColumn(ActionCol, lit("add")).withColumn("_v", lit(info.base))
       val deltas = deltaVs
-        .map(v => cachedManifestDf(spark, (manifestRoot, v),
+        .map(v => cachedManifestDf(spark, manifestRoot, ("manifest", v),
           s"$manifestRoot/v=$v")(
           spark.read.parquet(s"$manifestRoot/v=$v"))
           .withColumn("_v", lit(v)))
@@ -780,7 +710,8 @@ object Snapshots {
               version: Int): DataFrame = {
     val entries = Dv.entries(manifestAt(spark, manifestRoot, version))
     if (entries.nonEmpty)
-      Dv.readLive(spark, entries, declaredAt(spark, manifestRoot, version))
+      Dv.readLive(spark, entries,
+        declaredSchemaAt(spark, manifestRoot, version))
     else {
       // EMPTY version — reachable once a covering DELETE can drop every
       // file, or from birth via CREATE TABLE ([[createEmptyTable]]). The
@@ -797,7 +728,7 @@ object Snapshots {
         .find(_.nonEmpty) match {
         case Some(prior) =>
           Dv.readLive(spark, prior,
-            declaredAt(spark, manifestRoot, version)).limit(0)
+            declaredSchemaAt(spark, manifestRoot, version)).limit(0)
         case None =>
           val declared = declaredSchemaAt(spark, manifestRoot, version)
             .getOrElse(throw new IllegalStateException(
@@ -820,7 +751,8 @@ object Snapshots {
     val df =
       if (hit.isEmpty) tableAt(spark, manifestRoot, version).filter(lit(false))
       else Dv.readLive(spark, hit,
-        declaredAt(spark, manifestRoot, version)).filter(Layout.inBoxExpr(ranges))
+          declaredSchemaAt(spark, manifestRoot, version))
+        .filter(Layout.inBoxExpr(ranges))
     Layout.PrunedScan(df, hit.size.toLong, total)
   }
 
@@ -879,7 +811,8 @@ object Snapshots {
     // new files carry no mask
     if (rewrite.nonEmpty) {
       val live = Dv.readLive(spark, rewrite,
-        declaredAt(spark, manifestRoot, latestVersion(spark, manifestRoot)))
+        declaredSchemaAt(spark, manifestRoot,
+          latestVersion(spark, manifestRoot)))
       val staging = path + ".delete_staging"
       // survivors = NOT(pred), with null-match rows kept: a WHERE that
       // evaluates to null on a row must not delete it (SQL three-valued
@@ -921,7 +854,8 @@ object Snapshots {
       } else None
     val deleted = arithmetic.getOrElse {
       val live = Dv.readLive(spark, rewrite,
-        declaredAt(spark, manifestRoot, latestVersion(spark, manifestRoot)))
+        declaredSchemaAt(spark, manifestRoot,
+          latestVersion(spark, manifestRoot)))
       live.filter(pred).count()
     }
     commit(spark, next, manifestRoot)
@@ -1009,13 +943,16 @@ object Snapshots {
     * the proof must not lean on), whose parquet footers prove the
     * cover's stats columns null-free — as file → row count (all live,
     * all provably matching, so the whole count is the file's deleted-row
-    * contribution). See [[deleteWherePred]] for the proof contract. */
+    * contribution). A file without its `rows` stat is left out, so it
+    * takes the rewrite path. See [[deleteWherePred]] for the proof
+    * contract. */
   private[sinks] def wholeFileDrops(spark: SparkSession, manifest: DataFrame,
                                     prune: org.apache.spark.sql.Column,
                                     cover: Option[(org.apache.spark.sql.Column, Seq[String])])
       : Map[String, Long] = cover match {
     case Some((cov, needCols)) =>
-      val cand = manifest.filter(prune && cov && col("dv").isNull)
+      val cand = manifest
+        .filter(prune && cov && col("dv").isNull && col("rows").isNotNull)
         .select(col("file"), col("rows")).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       val proven = Layout.nullFreeFiles(spark, cand.keys.toSeq, needCols)
@@ -1062,7 +999,7 @@ object Snapshots {
     val hit = Dv.entries(manifest.filter(prune))
     if (hit.isEmpty) return UpdateResult(0, total, 0)
     val live = Dv.readLive(spark, hit,
-      declaredAt(spark, manifestRoot, latestVersion(spark, manifestRoot)))
+      declaredSchemaAt(spark, manifestRoot, latestVersion(spark, manifestRoot)))
     val lower = assignments.map { case (k, v) =>
       k.toLowerCase(java.util.Locale.ROOT) -> v }
     val unknown = lower.keySet.diff(
@@ -1118,7 +1055,7 @@ object Snapshots {
     val hit = Dv.entries(manifest.filter(prune))
     if (hit.isEmpty) return MoRUpdateResult(v, 0, total, 0, 0)
     val live = Dv.readLiveWithPos(spark, hit,
-      declaredAt(spark, manifestRoot, v))
+      declaredSchemaAt(spark, manifestRoot, v))
     val dataCols = live.columns.toIndexedSeq
       .filterNot(c => c == "_dv_f" || c == "_dv_p")
     val lower = assignments.map { case (k, a) =>
@@ -1284,7 +1221,7 @@ object Snapshots {
     // vectors — the rewritten files carry no mask, and the superseded
     // sidecars expire with the versions that referenced them
     Layout.zorderWrite(
-      Dv.readLive(spark, entries, declaredAt(spark, manifestRoot, v)),
+      Dv.readLive(spark, entries, declaredSchemaAt(spark, manifestRoot, v)),
       zorderCols.getOrElse(cols), staging, nFiles)
     val moved = Layout.moveStagedIn(spark, staging, path)
     val next = Layout.buildManifestFor(spark, moved, cols)
@@ -1319,7 +1256,7 @@ object Snapshots {
       return CompactSmallResult(v, 0, entries.size.toLong, 0)
     val staging = path + ".compact_small_" + java.util.UUID.randomUUID()
     Layout.zorderWrite(
-      Dv.readLive(spark, small, declaredAt(spark, manifestRoot, v)),
+      Dv.readLive(spark, small, declaredSchemaAt(spark, manifestRoot, v)),
       cols, staging, nFiles)
     val moved = Layout.moveStagedIn(spark, staging, path)
     val keep = manifestAt(spark, manifestRoot, v)
@@ -1359,7 +1296,7 @@ object Snapshots {
       return CompactScopedResult(v, 0, total, 0)
     val staging = path + ".compact_scoped_" + java.util.UUID.randomUUID()
     Layout.zorderWrite(
-      Dv.readLive(spark, selected, declaredAt(spark, manifestRoot, v)),
+      Dv.readLive(spark, selected, declaredSchemaAt(spark, manifestRoot, v)),
       zorderCols.getOrElse(cols), staging, nFiles)
     val moved = Layout.moveStagedIn(spark, staging, path)
     val keep =
@@ -1426,7 +1363,7 @@ object Snapshots {
     val staging = path + ".cluster_staging_" + java.util.UUID.randomUUID()
     Layout.zorderWrite(
       Dv.readLive(spark, rewrite.map(_._1),
-        declaredAt(spark, manifestRoot, v)),
+        declaredSchemaAt(spark, manifestRoot, v)),
       clusterCols, staging, nOut)
     val moved = Layout.moveStagedIn(spark, staging, path)
     val keepM =
@@ -1488,7 +1425,8 @@ object Snapshots {
         // resurrect its masked rows (the rewrite folds the mask away)
         val hitRows = Dv.readLive(spark,
           Dv.entries(manifest.filter(col("file").isInCollection(hit))),
-          declaredAt(spark, manifestRoot, latestVersion(spark, manifestRoot)))
+          declaredSchemaAt(spark, manifestRoot,
+            latestVersion(spark, manifestRoot)))
         // ONE aggregate job yields all three metric scalars (rows
         // updated = touched-target rows sharing a key with the source;
         // matched source rows; source total): per-key counts on each
@@ -1657,7 +1595,8 @@ object Snapshots {
       if (hit.isEmpty) None
       else Some(Dv.readLive(spark,
           Dv.entries(manifest.filter(col("file").isInCollection(hit))),
-          declaredAt(spark, manifestRoot, latestVersion(spark, manifestRoot))))
+          declaredSchemaAt(spark, manifestRoot,
+            latestVersion(spark, manifestRoot))))
     val targetSchema = targetSchemaHint.getOrElse(
       rawHitRows.map(_.schema).getOrElse(
         tableAt(spark, manifestRoot,
@@ -1830,7 +1769,8 @@ object Snapshots {
       else {
         val hitRows = Dv.readLive(spark,
           Dv.entries(manifest.filter(col("file").isInCollection(hit))),
-          declaredAt(spark, manifestRoot, latestVersion(spark, manifestRoot)))
+          declaredSchemaAt(spark, manifestRoot,
+            latestVersion(spark, manifestRoot)))
           .localCheckpoint()
         val hitKeys = hitRows.select(col(key)).distinct().localCheckpoint()
         val unmatched = hitRows.join(srcKeys, Seq(key), "left_anti")
@@ -2027,7 +1967,8 @@ object Snapshots {
     // arrives by append, whose feed has no removed side to clash with
     def rows(es: Seq[Dv.Entry]): Option[DataFrame] =
       if (es.isEmpty) None
-      else Some(Dv.readLive(spark, es, declaredAt(spark, manifestRoot, vTo)))
+      else Some(Dv.readLive(spark, es,
+        declaredSchemaAt(spark, manifestRoot, vTo)))
     val df = (rows(removed), rows(added)) match {
       case (None, None) =>
         // no file-level change at all: an empty feed with the table schema
@@ -2064,7 +2005,8 @@ object Snapshots {
     if (removed.isEmpty && added.isEmpty) return true
     if (removed.isEmpty || added.isEmpty) return false
     def fp(es: Seq[Dv.Entry]): Seq[Any] = {
-      val df = Dv.readLive(spark, es, declaredAt(spark, manifestRoot, vTo))
+      val df = Dv.readLive(spark, es,
+        declaredSchemaAt(spark, manifestRoot, vTo))
       val cs = df.columns.sorted.map(col)
       df.agg(count(lit(1)),
           sum(xxhash64(cs: _*).cast("decimal(38,0)")),
@@ -2146,46 +2088,16 @@ object Snapshots {
     }.toMap
   }
 
-  /** The property map in force at `version` — empty before any SET. */
-  // (root, version) → properties memo. Sound because a committed
-  // version's marker set is immutable (every property change is a NEW
-  // commit; VACUUM removes whole versions, never edits markers) — the
-  // cached map IS the map that was in force at that version. A root
-  // re-created at the same path (DROP + CREATE) reuses version numbers;
-  // [[invalidateProperties]] runs both on table re-registration (the SQL
-  // layer's policy-cache discipline) AND — because Snapshots is a public
-  // API usable without the registry — inside [[commitStaged]] whenever a
-  // commit lands at v=1, which is the only way a fresh-or-recreated root
-  // can begin. Bounded by LRU: access-ordered LinkedHashMap evicting the
-  // least-recently-used entry past 8192 (never clear-all — a hot
-  // multi-table session keeps its working set).
-  private val propsCache =
-    new java.util.LinkedHashMap[(String, Int), Map[String, String]](
-        16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Int), Map[String, String]])
-          : Boolean = size() > 8192
-    }
-
-  /** Drop a root's memoized property maps AND declared schemas
-    * (re-created roots). */
-  def invalidateProperties(manifestRoot: String): Unit = {
-    propsCache.synchronized {
-      val it = propsCache.keySet().iterator()
-      while (it.hasNext) if (it.next()._1 == manifestRoot) it.remove()
-    }
-    clearSchemaMemo(manifestRoot)
-    clearTxnVisMemo(manifestRoot)
-    clearManifestCache(manifestRoot)
-    Dv.clearReadLiveCache()
-  }
-
+  /** The property map in force at `version` — empty before any SET.
+    * Memoized per (root, version) in [[MetaCache]], `Map.empty` included:
+    * a committed version's marker set is immutable (every property change
+    * is a NEW commit; VACUUM removes whole versions, never edits
+    * markers), so the stored map IS the map in force at that version. */
   def tableProperties(spark: SparkSession, manifestRoot: String,
-                      version: Int): Map[String, String] = {
-    val key = (manifestRoot, version)
-    propsCache.synchronized(Option(propsCache.get(key))).getOrElse {
+                      version: Int): Map[String, String] =
+    MetaCache.getOrElseUpdate(manifestRoot, ("props", version)) {
       val fs = hfs(spark, manifestRoot)
-      val m = versions(spark, manifestRoot).filter(_ <= version)
+      versions(spark, manifestRoot).filter(_ <= version)
         .sorted.reverse
         .iterator
         .map { v =>
@@ -2197,11 +2109,8 @@ object Snapshots {
           else Some(hits.map(parseProps).reduce(_ ++ _)) // disjoint chunks
         }
         .collectFirst { case Some(mm) => mm }
-        .getOrElse(Map.empty)
-      propsCache.synchronized(propsCache.put(key, m))
-      m
+        .getOrElse(Map.empty[String, String])
     }
-  }
 
   /** SET TBLPROPERTIES — Delta merge semantics (existing keys overwrite,
     * others persist), as ONE metadata-only marker commit: the next
@@ -2236,61 +2145,32 @@ object Snapshots {
     * is too long for the name-encoded props marker). */
   private val SchemaMarker = "_schema.json"
 
-  // (root, version) → declared schema memo: a committed version's
-  // `_schema.json` is immutable (schema changes are NEW commits), so the
-  // memo is sound under the same discipline as the property memo — LRU
-  // bounded, invalidated with [[invalidateProperties]] when a root is
-  // re-created. Without it every declared-schema read walks the version
-  // dirs.
-  private val schemaMemo =
-    new java.util.LinkedHashMap[(String, Int), Option[StructType]](
-        16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Int), Option[StructType]])
-          : Boolean = size() > 8192
-    }
-
-  private[graft] def clearSchemaMemo(manifestRoot: String): Unit =
-    schemaMemo.synchronized {
-      val it = schemaMemo.keySet().iterator()
-      while (it.hasNext) if (it.next()._1 == manifestRoot) it.remove()
-    }
-
-  /** Memoizing front of [[declaredSchemaAt]] — what the hot read paths
-    * call. */
-  def declaredAt(spark: SparkSession, manifestRoot: String,
-                 version: Int): Option[StructType] = {
-    val key = (manifestRoot, version)
-    schemaMemo.synchronized(Option(schemaMemo.get(key))).getOrElse {
-      val s = declaredSchemaAt(spark, manifestRoot, version)
-      schemaMemo.synchronized(schemaMemo.put(key, s))
-      s
-    }
-  }
-
   /** The DECLARED schema in force at `version`: the content of the
     * largest `_schema.json` marker at or below it (a CREATE TABLE writes
     * one into v1). None for tables born from data (CTAS, CONVERT,
-    * register()). */
+    * register()). Memoized per (root, version) in [[MetaCache]] — a
+    * committed version's `_schema.json` is immutable (schema changes are
+    * NEW commits) — so a write path does not walk every version dir. */
   def declaredSchemaAt(spark: SparkSession, manifestRoot: String,
-                       version: Int): Option[StructType] = {
-    val fs = hfs(spark, manifestRoot)
-    versions(spark, manifestRoot).filter(_ <= version).sorted.reverse
-      .iterator
-      .map { v =>
-        val p = new org.apache.hadoop.fs.Path(
-          s"$manifestRoot/v=$v", SchemaMarker)
-        if (fs.exists(p)) {
-          val in = fs.open(p)
-          try Some(org.apache.spark.sql.types.DataType
-            .fromJson(new String(
-              org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-              "UTF-8")).asInstanceOf[StructType])
-          finally in.close()
-        } else None
-      }
-      .collectFirst { case Some(s) => s }
-  }
+                       version: Int): Option[StructType] =
+    MetaCache.getOrElseUpdate(manifestRoot, ("schema", version)) {
+      val fs = hfs(spark, manifestRoot)
+      versions(spark, manifestRoot).filter(_ <= version).sorted.reverse
+        .iterator
+        .map { v =>
+          val p = new org.apache.hadoop.fs.Path(
+            s"$manifestRoot/v=$v", SchemaMarker)
+          if (fs.exists(p)) {
+            val in = fs.open(p)
+            try Some(org.apache.spark.sql.types.DataType
+              .fromJson(new String(
+                org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
+                "UTF-8")).asInstanceOf[StructType])
+            finally in.close()
+          } else None
+        }
+        .collectFirst { case Some(s) => s }
+    }
 
   /** Re-declare the table's schema — ONE metadata-only commit carrying a
     * fresh `_schema.json` whose content is `update(current)`. This is how
@@ -2353,7 +2233,7 @@ object Snapshots {
     require(columnMapping(spark, manifestRoot, head).isEmpty,
       "ALTER COLUMN TYPE under a column mapping is not supported")
     val lower = column.toLowerCase(java.util.Locale.ROOT)
-    val current = declaredAt(spark, manifestRoot, head)
+    val current = declaredSchemaAt(spark, manifestRoot, head)
       .getOrElse(tableAt(spark, manifestRoot, head).schema)
     val field = current.fields.find(
       _.name.toLowerCase(java.util.Locale.ROOT) == lower).getOrElse(
@@ -2770,11 +2650,9 @@ object Snapshots {
       mfs.delete(new org.apache.hadoop.fs.Path(s"$manifestRoot/ckpt=$c"), true)
     }
     // vacuum is the one operation that DELETES version dirs and data/DV
-    // files a cached manifest or read plan may reference — drop both
-    // caches for this root (and the file-keyed read-plan memo wholesale;
-    // vacuum cadence is rare, the memo re-warms in one read)
-    clearManifestCache(manifestRoot)
-    Dv.clearReadLiveCache()
+    // files a cached manifest or read plan may reference (vacuum cadence
+    // is rare; the cache re-warms in one read)
+    MetaCache.forget(manifestRoot)
     VacuumResult(plan.deadFiles.size.toLong + plan.deadDvDirs.size.toLong,
       drop.size.toLong)
   }
@@ -2906,47 +2784,42 @@ object Snapshots {
     }.toMap
   }
 
-  // marker-version memo per manifest root: (highest version scanned, ck
-  // markers found so far, DESCENDING by version). Sound because committed
+  // Marker scans memoized per manifest root in [[MetaCache]]: (highest
+  // version scanned, markers found so far). Sound because committed
   // version dirs are immutable (markers ride the commit's atomic rename;
   // vacuum's re-homing only duplicates an already-known set), so only the
-  // (scanned, head] tail ever needs listing — the write-path constraint
-  // probe costs O(new commits), not O(log length), per call. The memo is
-  // per-JVM; a fresh process pays one backward scan to the newest marker.
-  private val ckScan = scala.collection.concurrent.TrieMap
-    .empty[String, (Int, List[(Int, Map[String, String])])]
-
-  /** Test hook: drop the marker memo so the next [[checkConstraints]]
-    * re-reads the log from disk (what a fresh JVM would see). */
-  private[graft] def resetConstraintMemo(): Unit = { ckScan.clear(); cpScan.clear() }
-
-  // COPY INTO idempotency ledger: loaded-source-file keys ride the
-  // append's atomic rename as `_copy_<key>` markers and ACCUMULATE across
-  // versions (like ADD COLUMN markers — vacuum re-homes them). Same
-  // monotone memo shape as [[ckScan]].
-  private val cpScan = scala.collection.concurrent.TrieMap
-    .empty[String, (Int, Set[String])]
-
-  /** Every source-file key ever loaded by [[copyIntoCommit]] (union over
-    * all committed versions). O(new commits) FS listings per call. */
-  def copiedKeys(spark: SparkSession, manifestRoot: String): Set[String] = {
-    val fs = hfs(spark, manifestRoot)
+  // (scanned, head] tail ever needs listing — a write-path probe costs
+  // O(new commits), not O(log length). A log whose head went BACKWARDS
+  // was deleted and re-created at the same path by a process that did
+  // not [[MetaCache.forget]] it: the entry describes the old log, rescan.
+  private def markerScan[A](spark: SparkSession, manifestRoot: String,
+                            kind: String, empty: A)
+                           (extend: (A, Seq[Int]) => A): A = {
     val vs = versions(spark, manifestRoot)
-    val (scanned0, known0) = cpScan.getOrElse(manifestRoot, (0, Set.empty[String]))
-    val (scanned, known) =
-      if (vs.isEmpty || vs.last < scanned0) (0, Set.empty[String])
-      else (scanned0, known0)
-    val fresh = vs.filter(_ > scanned).flatMap { v =>
-      fs.listStatus(new org.apache.hadoop.fs.Path(s"$manifestRoot/v=$v"))
-        .toSeq.map(_.getPath.getName)
-        .collect { case n if n.startsWith(CopyPrefix) =>
-          n.stripPrefix(CopyPrefix) }
-    }
-    val all = known ++ fresh
+    val (scanned, known) = MetaCache.get[(Int, A)](manifestRoot, kind)
+      .filter(e => vs.nonEmpty && vs.last >= e._1).getOrElse((0, empty))
+    val all = extend(known, vs.filter(_ > scanned))
     if (vs.nonEmpty && vs.last > scanned)
-      cpScan.put(manifestRoot, (vs.last, all)) : Unit
+      MetaCache.put(manifestRoot, kind, (vs.last, all))
     all
   }
+
+  private def markerNames(spark: SparkSession, manifestRoot: String,
+                          v: Int): Seq[String] =
+    hfs(spark, manifestRoot)
+      .listStatus(new org.apache.hadoop.fs.Path(s"$manifestRoot/v=$v"))
+      .toSeq.map(_.getPath.getName)
+
+  /** Every source-file key ever loaded by [[copyIntoCommit]] (union over
+    * all committed versions: the keys ride each append's atomic rename as
+    * `_copy_<key>` markers and accumulate, and vacuum re-homes them).
+    * O(new commits) FS listings per call. */
+  def copiedKeys(spark: SparkSession, manifestRoot: String): Set[String] =
+    markerScan(spark, manifestRoot, "cp", Set.empty[String]) { (known, fresh) =>
+      known ++ fresh.flatMap(v => markerNames(spark, manifestRoot, v)
+        .collect { case n if n.startsWith(CopyPrefix) =>
+          n.stripPrefix(CopyPrefix) })
+    }
 
   final case class CopyResult(version: Int, filesLoaded: Long,
                               rowsLoaded: Long, filesSkipped: Long)
@@ -2986,25 +2859,16 @@ object Snapshots {
     * governs every later version until superseded). Conditions are SQL
     * expression text over PHYSICAL column names. */
   def checkConstraints(spark: SparkSession, manifestRoot: String,
-                       version: Int): Map[String, String] = {
-    val fs = hfs(spark, manifestRoot)
-    val vs = versions(spark, manifestRoot)
-    val (scanned0, known0) = ckScan.getOrElse(manifestRoot, (0, Nil))
-    // a log whose head went BACKWARDS was deleted and recreated at the
-    // same path (DROP PURGE + CREATE) — the memo describes the old log
-    val (scanned, known) =
-      if (vs.isEmpty || vs.last < scanned0) (0, Nil) else (scanned0, known0)
-    val fresh = vs.filter(_ > scanned).sorted.reverse.flatMap { v =>
-      fs.listStatus(new org.apache.hadoop.fs.Path(s"$manifestRoot/v=$v"))
-        .toSeq.map(_.getPath.getName)
-        .collectFirst { case n if n.startsWith(CkPrefix) => v -> parseCk(n) }
-    }
-    val all = fresh.toList ++ known
-    if (vs.nonEmpty && vs.last > scanned)
-      ckScan.put(manifestRoot, (vs.last, all)) : Unit
-    all.collectFirst { case (v, m) if v <= version => m }
+                       version: Int): Map[String, String] =
+    markerScan(spark, manifestRoot, "ck",
+        List.empty[(Int, Map[String, String])]) { (known, fresh) =>
+      // DESCENDING by version: the first at or below `version` governs
+      fresh.sorted.reverse.flatMap { v =>
+        markerNames(spark, manifestRoot, v)
+          .collectFirst { case n if n.startsWith(CkPrefix) => v -> parseCk(n) }
+      }.toList ++ known
+    }.collectFirst { case (v, m) if v <= version => m }
       .getOrElse(Map.empty)
-  }
 
   /** ADD a named CHECK constraint — ONE metadata-only commit after
     * validating that every EXISTING live row satisfies it (the Delta ADD
@@ -3025,7 +2889,7 @@ object Snapshots {
     val entries = Dv.entries(Dv.ensureDv(manifestAt(spark, manifestRoot, v)))
     val bad =
       if (entries.isEmpty) 0L
-      else Dv.readLive(spark, entries, declaredAt(spark, manifestRoot, v))
+      else Dv.readLive(spark, entries, declaredSchemaAt(spark, manifestRoot, v))
         .filter(!coalesce(expr(condition), lit(true))).count()
     if (bad > 0)
       throw new ConstraintViolationException(
@@ -3066,7 +2930,7 @@ object Snapshots {
     val entries = Dv.entries(Dv.ensureDv(manifestAt(spark, manifestRoot, v)))
     if (entries.nonEmpty) {
       val orphans = orphanCount(spark,
-        Dv.readLive(spark, entries, declaredAt(spark, manifestRoot, v)),
+        Dv.readLive(spark, entries, declaredSchemaAt(spark, manifestRoot, v)),
         column, parentManifestRoot, parentKey)
       if (orphans > 0)
         throw new ConstraintViolationException(
@@ -3088,7 +2952,7 @@ object Snapshots {
     val parent = Dv.readLive(spark, Dv.entries(Dv.ensureDv(
         manifestAt(spark, parentManifestRoot,
           latestVersion(spark, parentManifestRoot)))),
-      declaredAt(spark, parentManifestRoot,
+      declaredSchemaAt(spark, parentManifestRoot,
         latestVersion(spark, parentManifestRoot)))
       .select(col(parentKey).as("_fk_p")).distinct()
     df.filter(col(column).isNotNull)
@@ -3237,7 +3101,8 @@ object Snapshots {
       if (rewrite.isEmpty) (Seq.empty[String], 0L)
       else {
         val live = Dv.readLive(spark, rewrite,
-          declaredAt(spark, manifestRoot, latestVersion(spark, manifestRoot)))
+          declaredSchemaAt(spark, manifestRoot,
+            latestVersion(spark, manifestRoot)))
         val del = live.filter(pred).count()
         val sStaging = path + ".replace_surv_" + java.util.UUID.randomUUID()
         live.filter(!coalesce(pred, lit(false)))

@@ -7,16 +7,15 @@ import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedAttribute, UnresolvedIdentifier, UnresolvedRelation, UnresolvedTable, UnresolvedTableOrView, UnresolvedTableValuedFunction}
 import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Exists, Expression, GreaterThan, GreaterThanOrEqual, In, InSubquery, LessThan, LessThanOrEqual, Like, ListQuery, Literal, ScalarSubquery}
 import org.apache.spark.sql.functions.{col, count, countDistinct, lit, max, min, substring, sum, when}
 import org.apache.spark.sql.catalyst.plans.logical.{AddCheckConstraint, AddColumns, AlterColumns, Assignment, CreateTable, CreateTableAsSelect, DeleteAction, DeleteFromTable, DescribeRelation, DropColumns, DropConstraint, DropTable, InsertAction, InsertIntoStatement, InsertStarAction, LogicalPlan, MergeIntoTable, RenameColumn, ReplaceTableAsSelect, SetTableProperties, ShowTableProperties, ShowTables, SubqueryAlias, TruncateTable, UnsetTableProperties, UnresolvedTableSpec, UpdateAction, UpdateStarAction, UpdateTable}
-import org.apache.spark.sql.graft.PlanExec
 import org.apache.spark.sql.types.{DataType, DateType, IntegerType, LongType, NullType, NumericType, StringType, StructField, StructType, TimestampNTZType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sinks.{Layout, Snapshots}
+import graft.sinks.{Layout, MetaCache, Snapshots}
 
 /** SQL-TEXT FRONT DOOR over the versioned lake tables (round-12 verdict lead
   * item): the reference's consumers speak SQL — Power BI over Databricks
@@ -100,18 +99,13 @@ object LakeSql {
     * case-insensitive, session-global (the driver runs queries
     * sequentially; use distinct names per fixture). */
   def register(name: String, spec: LakeTableSpec): Unit = {
-    invalidatePolicies(spec.manifestRoot)
-    Snapshots.invalidateProperties(spec.manifestRoot)
+    MetaCache.forget(spec.manifestRoot)
     registry.put(name.toLowerCase(java.util.Locale.ROOT), spec) : Unit
   }
 
   def unregister(name: String): Unit =
-    registry.remove(name.toLowerCase(java.util.Locale.ROOT)) match {
-      case Some(spec) =>
-        invalidatePolicies(spec.manifestRoot)
-        Snapshots.invalidateProperties(spec.manifestRoot)
-      case None => ()
-    }
+    registry.remove(name.toLowerCase(java.util.Locale.ROOT))
+      .foreach(spec => MetaCache.forget(spec.manifestRoot))
 
   // Maintenance statements, the Delta-extension grammar shape — Spark's
   // parser has no OPTIMIZE/VACUUM productions, so these dispatch on the
@@ -1304,7 +1298,7 @@ object LakeSql {
           StructField("data_type", StringType, nullable = false),
           StructField("comment", StringType, nullable = false))))
       case read =>
-        PlanExec.ofRows(spark, resolveReads(spark, read))
+        GraftSqlBridge.ofRows(spark, resolveReads(spark, read))
     }
 
   // ---------------------------------------------------------------- reads
@@ -1441,32 +1435,13 @@ object LakeSql {
     * metadata-only aggregate rule is structural: a row filter interposes
     * a `Filter`, a mask a non-attribute `Project` — either breaks
     * [[ServeAggFromManifest]]'s match, so policied counts always scan. */
-  /** (row filter, masks) at a table's head, MEMOIZED per (manifestRoot,
-    * head version): version dirs are immutable after their atomic rename,
-    * so the pair can never change under a fixed key — and any policy or
-    * data commit bumps the head, minting a fresh key. Without the memo
-    * every read of a props-free table walks ALL its version dirs
-    * (tableProperties falls through to Map.empty), which the round-15
-    * bench measured as a 1.3-1.5× tax on multi-version DML fixtures.
-    * [[register]]/[[unregister]] clear a root's entries so a same-root
-    * re-creation can never serve a stale policy. */
-  private val policyCache =
-    TrieMap.empty[(String, Int), (Option[String], Map[String, String])]
-
-  private[sql] def invalidatePolicies(manifestRoot: String): Unit =
-    policyCache.keys.filter(_._1 == manifestRoot)
-      .foreach(policyCache.remove)
-
   private def headPolicies(spark: SparkSession, spec: LakeTableSpec)
       : (Option[String], Map[String, String]) = {
-    val head = Snapshots.latestVersion(spark, spec.manifestRoot)
-    policyCache.getOrElseUpdate((spec.manifestRoot, head), {
-      if (policyCache.size > 4096) policyCache.clear()
-      val props = Snapshots.tableProperties(spark, spec.manifestRoot, head)
-      (props.get(RowFilterProp), props.collect {
-        case (k, v) if k.startsWith(MaskPropPrefix) =>
-          k.stripPrefix(MaskPropPrefix) -> v
-      })
+    val props = Snapshots.tableProperties(spark, spec.manifestRoot,
+      Snapshots.latestVersion(spark, spec.manifestRoot))
+    (props.get(RowFilterProp), props.collect {
+      case (k, v) if k.startsWith(MaskPropPrefix) =>
+        k.stripPrefix(MaskPropPrefix) -> v
     })
   }
 
@@ -1680,7 +1655,8 @@ object LakeSql {
     // the source arrives in the LOGICAL schema; the lake's rows are
     // physical — route it through the mapping before the commit
     val source = toPhysicalFrame(
-      PlanExec.ofRows(spark, resolveReads(spark, m.sourceTable)), mapping0)
+      GraftSqlBridge.ofRows(spark, resolveReads(spark, m.sourceTable)),
+      mapping0)
     // WITH SCHEMA EVOLUTION (the Delta clause, parsed natively by Spark):
     // source columns absent from the table's visible schema are DECLARED
     // first — metadata-only ADD COLUMN commits, old rows serve typed
@@ -1848,7 +1824,7 @@ object LakeSql {
       srcLower.contains(physical.toLowerCase(java.util.Locale.ROOT))
 
     /** matched-clause context: joined (target, source) pair. */
-    def pairExpr(e: Expression): Column = PlanExec.column(e.transform {
+    def pairExpr(e: Expression): Column = GraftSqlBridge.column(e.transform {
       case a: UnresolvedAttribute => a.nameParts match {
         case Seq(q, n) if isSrcQ(q) => UnresolvedAttribute(Seq("_s_" + phys(n)))
         case Seq(q, n) if isTgtQ(q) => UnresolvedAttribute(Seq(phys(n)))
@@ -1863,7 +1839,7 @@ object LakeSql {
     })
 
     /** insert-clause context: the bare source frame. */
-    def srcExpr(e: Expression): Column = PlanExec.column(e.transform {
+    def srcExpr(e: Expression): Column = GraftSqlBridge.column(e.transform {
       case a: UnresolvedAttribute => a.nameParts match {
         case Seq(q, n) if isSrcQ(q) => UnresolvedAttribute(Seq(phys(n)))
         case Seq(n) => UnresolvedAttribute(Seq(phys(n)))
@@ -1875,7 +1851,7 @@ object LakeSql {
 
     /** by-source clause context: the bare TARGET frame — there is no
       * source row to reference ("key absent from source"). */
-    def tgtExpr(e: Expression): Column = PlanExec.column(e.transform {
+    def tgtExpr(e: Expression): Column = GraftSqlBridge.column(e.transform {
       case a: UnresolvedAttribute => a.nameParts match {
         case Seq(q, n) if isTgtQ(q) => UnresolvedAttribute(Seq(phys(n)))
         case Seq(n) if targetLogical.exists(_.equalsIgnoreCase(n)) =>
@@ -1953,7 +1929,7 @@ object LakeSql {
       "INSERT with a column list needs a declared schema (CREATE TABLE) " +
         "— tables born from data (CTAS/CONVERT) take full-width batches")
     def lower(s: String) = s.toLowerCase(java.util.Locale.ROOT)
-    val src = PlanExec.ofRows(spark, resolveReads(spark, ins.query))
+    val src = GraftSqlBridge.ofRows(spark, resolveReads(spark, ins.query))
     val engineNames = engineCols.map(f => lower(f.name)).toSet
     val explicit = (src.columns.map(lower).toSet ++
       ins.userSpecifiedCols.map(lower)).intersect(engineNames)
@@ -2049,7 +2025,7 @@ object LakeSql {
   private def alignedPhysicalBatch(spark: SparkSession, spec: LakeTableSpec,
                                    query: LogicalPlan): DataFrame =
     alignedPhysicalFrame(spark, spec, toPhysicalFrame(
-      PlanExec.ofRows(spark, resolveReads(spark, query)),
+      GraftSqlBridge.ofRows(spark, resolveReads(spark, query)),
       headMapping(spark, spec)))
 
   /** The table's VISIBLE (logical-name) schema at head — mapping-aware,
@@ -2164,7 +2140,7 @@ object LakeSql {
       throw new IllegalArgumentException(
         s"lake table '$name' already exists (use IF NOT EXISTS)")
     }
-    val df = PlanExec.ofRows(spark, resolveReads(spark, cts.query))
+    val df = GraftSqlBridge.ofRows(spark, resolveReads(spark, cts.query))
     val missing = spec.cols.filterNot(df.columns.contains)
     require(missing.isEmpty,
       s"stats_cols ${missing.mkString(", ")} not in the CTAS query's " +
@@ -2223,7 +2199,7 @@ object LakeSql {
         val statsCols = props.get("stats_cols")
           .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
           .getOrElse(spec0.cols)
-        val df = PlanExec.ofRows(spark, resolveReads(spark, rts.query))
+        val df = GraftSqlBridge.ofRows(spark, resolveReads(spark, rts.query))
         val missing = statsCols.filterNot(df.columns.contains)
         require(missing.isEmpty,
           s"stats_cols ${missing.mkString(", ")} not in the REPLACE " +
@@ -2431,7 +2407,7 @@ object LakeSql {
         // names — both sides route through the mapping (the RHS resolves
         // against the PHYSICAL live rows)
         physicalName(k.nameParts.last, mapping, "UPDATE target") ->
-          PlanExec.column(
+          GraftSqlBridge.column(
             mapping.fold(v)(m => toPhysicalExpr(v, m)))
       case other => throw new IllegalArgumentException(
         s"unsupported UPDATE assignment target: $other")
@@ -2507,7 +2483,7 @@ object LakeSql {
     val folded = subEval match {
       case Some(s) => cond0.transformUp {
         case sq: ScalarSubquery =>
-          val df = PlanExec.ofRows(s, resolveReads(s, sq.plan))
+          val df = GraftSqlBridge.ofRows(s, resolveReads(s, sq.plan))
           require(df.columns.length == 1,
             s"scalar subquery must return ONE column, got " +
               df.columns.mkString(", "))
@@ -2540,7 +2516,7 @@ object LakeSql {
       case a: UnresolvedAttribute => UnresolvedAttribute(Seq(
         physicalName(a.nameParts.last, mapping, "predicate column")))
     }
-    val rowPred = PlanExec.column(subEval match {
+    val rowPred = GraftSqlBridge.column(subEval match {
       case Some(s) => mapped.transform {
         case q: ListQuery => q.copy(plan = resolveReads(s, q.plan))
         case e: Exists => e.copy(plan = resolveReads(s, e.plan))
@@ -2608,7 +2584,7 @@ object LakeSql {
 
   /** The manifest-prune contribution of one conjunct, or None when it can
     * only serve as row residual. Literals stay in their parsed Catalyst
-    * type ([[PlanExec.column]]), so the stats comparison coerces by
+    * type ([[GraftSqlBridge.column]]), so the stats comparison coerces by
     * Spark's own (monotone) rules — a file is pruned only when NO value
     * in its [min,max] can satisfy the comparison. */
   private def pruneOf(e: Expression, spec: LakeTableSpec,
@@ -2624,7 +2600,7 @@ object LakeSql {
       if (spec.cols.contains(phys) && statLitOk(types, phys, lt)) Some(phys)
       else None
     }
-    def l(v: Literal): Column = PlanExec.column(v)
+    def l(v: Literal): Column = GraftSqlBridge.column(v)
     e match {
       case EqualTo(a: UnresolvedAttribute, v: Literal) =>
         stats(a, v.dataType)
@@ -2678,7 +2654,7 @@ object LakeSql {
         // row side keeps the subquery (Catalyst semi-join rewrite).
         subEval match {
           case Some(s) =>
-            val sub = PlanExec.ofRows(s, resolveReads(s, q.plan))
+            val sub = GraftSqlBridge.ofRows(s, resolveReads(s, q.plan))
             require(sub.columns.length == 1,
               s"IN subquery must return ONE column, got " +
                 sub.columns.mkString(", "))
@@ -2756,7 +2732,7 @@ object LakeSql {
       if (spec.cols.contains(phys) && statLitOk(types, phys, lt)) Some(phys)
       else None
     }
-    def l(v: Literal): Column = PlanExec.column(v)
+    def l(v: Literal): Column = GraftSqlBridge.column(v)
     def mk(c: String, cov: Column) = (cov, Seq(c))
     e match {
       case EqualTo(a: UnresolvedAttribute, v: Literal) =>
@@ -2790,7 +2766,7 @@ object LakeSql {
         stats(a, vs.head.asInstanceOf[Literal].dataType)
           .map(c => mk(c, col(s"min_$c") === col(s"max_$c") &&
             col(s"min_$c").isin(vs.map { case v: Literal =>
-              PlanExec.column(v) }: _*)))
+              GraftSqlBridge.column(v) }: _*)))
       case Like(a: UnresolvedAttribute, Literal(p: UTF8String, StringType), _)
           if isPrefixPattern(p.toString) =>
         // both bounds carry the prefix ⇒ every string between them does

@@ -322,7 +322,8 @@ object MatViews {
     val prunedMf =
       if (pruneConds.isEmpty) mf else mf.filter(pruneConds.reduce(_ && _))
     val entries = Dv.entries(prunedMf)
-    val schemaHint = Snapshots.declaredAt(spark, baseSpec.manifestRoot, head)
+    val schemaHint =
+      Snapshots.declaredSchemaAt(spark, baseSpec.manifestRoot, head)
     val baseRows =
       if (entries.isEmpty)
         Snapshots.tableAt(spark, baseSpec.manifestRoot, head).limit(0)

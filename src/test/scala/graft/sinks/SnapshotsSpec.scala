@@ -53,6 +53,23 @@ class SnapshotsSpec extends SparkSpec {
       10000L - expected)
   }
 
+  test("a covered DELETE rewrites a file with no rows stat instead of dropping it") {
+    val dir = tmpDir("snap")
+    Layout.zorderWrite(data, Seq("x", "y"), s"$dir/z", nFiles = 16)
+    val m = Layout.buildManifest(spark, s"$dir/z", Seq("x", "y"))
+    val blank = m.select("file").orderBy("file").head().getString(0)
+    Snapshots.commit(spark, m.withColumn("rows",
+      when(col("file") === blank, lit(null).cast("long"))
+        .otherwise(col("rows"))), s"$dir/m")
+    // x >= 0 holds for every row, so every file is a whole-drop candidate
+    val res = Snapshots.deleteWherePred(spark, s"$dir/z", s"$dir/m",
+      Seq("x", "y"), col("max_x") >= 0, col("x") >= 0,
+      cover = Some((col("min_x") >= 0, Seq("x"))))
+    assert(res.rowsDeleted == 10000L)
+    assert(res.filesRewritten == 1L)
+    assert(Snapshots.tableAt(spark, s"$dir/m", 2).count() == 0L)
+  }
+
   test("readAt time-travels a pruned box read past a delete") {
     val (dir, v1) = freshLayout()
     Snapshots.deleteWhere(spark, s"$dir/z", s"$dir/m",

@@ -2,7 +2,7 @@ package graft.sql
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import graft.sinks.{Layout, Snapshots}
+import graft.sinks.{Layout, MetaCache, Snapshots}
 import graft.sql.LakeSql.LakeTableSpec
 
 /** Round-14 SQL-surface additions: REPLACE WHERE (scoped atomic overwrite),
@@ -123,7 +123,7 @@ class LakeSurfaceR14Spec extends SparkSpec {
     assert(LakeSql.sql(spark, "SELECT count(*) AS n FROM t_copy")
       .head().getLong(0) == 10000L + 170L)
     // the ledger survives a fresh JVM (memo reset = disk truth)
-    Snapshots.resetConstraintMemo()
+    MetaCache.clear()
     val m4 = LakeSql.sql(spark, s"COPY INTO t_copy FROM '$srcDir'").head()
     assert(m4.getAs[Long]("files_loaded") == 0L)
     assert(m4.getAs[Long]("files_skipped") == 3L)
@@ -403,7 +403,7 @@ class LakeSurfaceR14Spec extends SparkSpec {
     }
     Snapshots.vacuum(spark, s"$dir/z", s"$dir/m", retainLast = 2)
     // fresh-JVM view: the memo cleared, the set must come from DISK
-    Snapshots.resetConstraintMemo()
+    MetaCache.clear()
     val head = Snapshots.latestVersion(spark, s"$dir/m")
     assert(Snapshots.checkConstraints(spark, s"$dir/m", head)
       .contains("x_nonneg"),
