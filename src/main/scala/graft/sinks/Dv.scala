@@ -120,16 +120,24 @@ object Dv {
     * Fidelity is pinned by DvFooterSchemaSpec (footer path == inference
     * path across every column type the engine writes). */
   private[sinks] def footerSchema(spark: SparkSession, file: String)
-      : org.apache.spark.sql.types.StructType = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(file)
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
-    val (msg, kv) =
+      : org.apache.spark.sql.types.StructType =
+    readFooter(spark, org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(file),
+      spark.sparkContext.hadoopConfiguration)).schema
+
+  /** One parquet part file as its footer describes it. */
+  private[sinks] final case class Part(rows: Long,
+                                       schema: org.apache.spark.sql.types.StructType)
+
+  /** Open `in`'s footer once: its row count and [[footerSchema]]. */
+  private def readFooter(spark: SparkSession,
+                         in: org.apache.parquet.hadoop.util.HadoopInputFile)
+      : Part = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val (rows, msg, kv) =
       try {
         val md = reader.getFooter.getFileMetaData
-        (md.getSchema, md.getKeyValueMetaData)
+        (reader.getRecordCount, md.getSchema, md.getKeyValueMetaData)
       } finally reader.close()
     val fromMeta =
       Option(kv.get("org.apache.spark.sql.parquet.row.metadata")).flatMap(j =>
@@ -138,8 +146,28 @@ object Dv {
     val sch = fromMeta.getOrElse(
       new org.apache.spark.sql.execution.datasources.parquet
         .ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(msg))
-    relaxNullable(sch).asInstanceOf[org.apache.spark.sql.types.StructType]
+    Part(rows,
+      relaxNullable(sch).asInstanceOf[org.apache.spark.sql.types.StructType])
   }
+
+  /** The part files of a FLAT dir (a manifest version or checkpoint, a DV
+    * sidecar, a staging dir; `_`/`.` names skipped), each footer opened
+    * once on the driver. None when the dir cannot be listed, holds a
+    * nested dir (a parquet read would scan it too) or a footer cannot be
+    * read. Nothing is memoized: a staging dir is renamed away right after
+    * its read, and a manifest dir's rows are cached whole by the caller. */
+  private[sinks] def flatParts(spark: SparkSession,
+                               dir: String): Option[Seq[Part]] =
+    try {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      val conf = spark.sparkContext.hadoopConfiguration
+      val listing = p.getFileSystem(conf).listStatus(p).toSeq.filterNot { st =>
+        st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith(".")
+      }
+      if (listing.exists(_.isDirectory)) None
+      else Some(listing.map(st => readFooter(spark,
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))))
+    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** The single schema shared by ALL of `files`, if they agree — each new
     * file costs one driver-side footer read (memoized thereafter); any
@@ -160,6 +188,22 @@ object Dv {
     }
     agreed
   } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** `spark.read.parquet(dir)` over a FLAT dir of part files with the
+    * schema taken from their footers ([[flatParts]], read by the caller)
+    * instead of one schema-inference job per call. The inferring read
+    * stays the fallback when the footers disagree or `parts` is None, so
+    * a missing dir fails exactly as before. */
+  private[sinks] def readParts(spark: SparkSession, dir: String,
+                               parts: Option[Seq[Part]]): DataFrame =
+    parts.map(_.map(_.schema).distinct) match {
+      case Some(Seq(sch)) => spark.read.schema(sch).parquet(dir)
+      case _ => spark.read.parquet(dir)
+    }
+
+  /** [[readParts]] over `dir`'s own listing. */
+  private[sinks] def readDir(spark: SparkSession, dir: String): DataFrame =
+    readParts(spark, dir, flatParts(spark, dir))
 
   /** [[readLive]] with the row's provenance retained as `_dv_f` (canonical
     * file path) and `_dv_p` (parquet row ordinal) — what a delete needs to
@@ -222,7 +266,7 @@ object Dv {
           val data = scan(group.map(_._1))
           // restrict the sidecar to this group's files: other files may
           // share the sidecar but carry a NEWER dv in the same manifest
-          val dv = spark.read.parquet(dvPath)
+          val dv = readDir(spark, dvPath)
             .filter(col(FileCol).isInCollection(group.map(_._1)))
           data.join(dv,
               data("_dv_f") === dv(FileCol) && data("_dv_p") === dv(PosCol),
@@ -242,6 +286,48 @@ object Dv {
       .coalesce(1).write.mode("overwrite").parquet(out)
     out
   }
+
+  /** The current mask rows of `files`, one read per sidecar, restricted
+    * to those files (a sidecar is shared by its commit's whole touch set,
+    * and other files may carry a NEWER sidecar in the same manifest). */
+  private def priorMasks(spark: SparkSession,
+                         files: Seq[Entry]): Seq[DataFrame] =
+    files.collect { case Entry(f, Some(d)) => (f, d) }
+      .groupBy(_._2).toSeq.map { case (dvPath, group) =>
+        readDir(spark, dvPath)
+          .filter(col(FileCol).isInCollection(group.map(_._1)))
+      }
+
+  /** Rows the current masks of `files` hide — what a manifest `rows` sum
+    * over them must lose to count live rows. */
+  private[sinks] def maskedRows(spark: SparkSession, files: Seq[Entry]): Long =
+    priorMasks(spark, files).map(_.count()).sum
+
+  /** Write the ONE sidecar that replaces the masks of `files`: their
+    * CARRIED-FORWARD prior mask rows (the new pointer replaces the old one
+    * on their manifest rows, so every earlier delete must ride along) plus
+    * the `fresh` (file, pos) positions. Returns the sidecar path. */
+  private[sinks] def remask(spark: SparkSession, tablePath: String,
+                            files: Seq[Entry], fresh: DataFrame): String =
+    writeSidecar(spark, tablePath,
+      (priorMasks(spark, files) :+ fresh).reduce(_.unionByName(_)))
+
+  /** `m` with the manifest rows of `files` pointing at `sidecar`. */
+  private[sinks] def repoint(m: DataFrame, files: Seq[String],
+                             sidecar: String): DataFrame =
+    m.withColumn("dv",
+      when(col("file").isInCollection(files), lit(sidecar))
+        .otherwise(col("dv")))
+
+  /** The (file, pos) sidecar columns of rows read by [[readLiveWithPos]]. */
+  private[sinks] def positionCols(matched: DataFrame): DataFrame =
+    matched.select(col("_dv_f").as(FileCol), col("_dv_p").as(PosCol))
+
+  /** [[positionCols]] pinned: the positions feed the deleted-row count
+    * AND the sidecar, and must not recompute once the manifest starts
+    * moving. */
+  private def positions(matched: DataFrame): DataFrame =
+    positionCols(matched).localCheckpoint()
 
   /** MERGE-ON-READ targeted delete as a version commit. Plans the touch
     * set by manifest stats exactly like the copy-on-write twin, but
@@ -267,37 +353,9 @@ object Dv {
                                    filesDropped: Long = 0L)
 
   def deleteWhereMoR(spark: SparkSession, path: String, manifestRoot: String,
-                     box: Seq[(String, Double, Double)]): MoRDeleteResult = {
-    val v = Snapshots.latestVersion(spark, manifestRoot)
-    val manifest = Snapshots.pinLocal(
-      ensureDv(Snapshots.manifestAt(spark, manifestRoot, v)))
-    val total = Snapshots.localCount(manifest)
-    val hit = entries(manifest.filter(Layout.intersectsExpr(box)))
-    if (hit.isEmpty) return MoRDeleteResult(v, 0, total, 0, 0)
-    val hitFiles = hit.map(_.file)
-    // newly deleted = live rows of the touched files inside the box
-    val fresh = readLiveWithPos(spark, hit)
-      .filter(Layout.inBoxExpr(box))
-      .select(col("_dv_f").as(FileCol), col("_dv_p").as(PosCol))
-      .localCheckpoint() // pin before the sidecar they feed is swapped in
-    val rowsDeleted = fresh.count()
-    if (rowsDeleted == 0) return MoRDeleteResult(v, 0, total, 0, 0)
-    // carried-forward mask: ALL prior DV rows of the touched files (in-box
-    // or not — the new sidecar REPLACES the old pointer on these rows)
-    val prior = hit.collect { case Entry(f, Some(d)) => (f, d) }
-      .groupBy(_._2).toSeq.map { case (dvPath, group) =>
-        spark.read.parquet(dvPath)
-          .filter(col(FileCol).isInCollection(group.map(_._1)))
-      }
-    val mask = (prior :+ fresh).reduce(_.unionByName(_))
-    val sidecar = writeSidecar(spark, path, mask)
-    val next = manifest
-      .withColumn("dv",
-        when(col("file").isInCollection(hitFiles), lit(sidecar))
-          .otherwise(col("dv")))
-    MoRDeleteResult(Snapshots.commit(spark, next, manifestRoot),
-      hit.size.toLong, total, rowsDeleted, 0)
-  }
+                     box: Seq[(String, Double, Double)]): MoRDeleteResult =
+    deleteWhereMoRPred(spark, path, manifestRoot,
+      Layout.intersectsExpr(box), Layout.inBoxExpr(box))
 
   /** [[deleteWhereMoR]] generalized to the (prune, predicate) pair the SQL
     * front door's typed compiler emits (see `Snapshots.deleteWherePred`
@@ -314,49 +372,26 @@ object Dv {
                          pred: org.apache.spark.sql.Column,
                          cover: Option[(org.apache.spark.sql.Column, Seq[String])] = None)
       : MoRDeleteResult = {
-    val v = Snapshots.latestVersion(spark, manifestRoot)
-    val manifest = Snapshots.pinLocal(
-      ensureDv(Snapshots.manifestAt(spark, manifestRoot, v)))
-    val total = Snapshots.localCount(manifest)
-    val hit = entries(manifest.filter(prune))
-    if (hit.isEmpty) return MoRDeleteResult(v, 0, total, 0, 0)
-    val dropped = Snapshots.wholeFileDrops(spark, manifest, prune, cover)
+    val h = Snapshots.head(spark, manifestRoot)
+    val total = Snapshots.localCount(h.manifest)
+    val hit = entries(h.manifest.filter(prune))
+    if (hit.isEmpty) return MoRDeleteResult(h.version, 0, total, 0, 0)
+    val dropped = Snapshots.wholeFileDrops(spark, h.manifest, prune, cover)
     val mask = hit.filterNot(e => dropped.contains(e.file))
-    val maskFiles = mask.map(_.file)
     // newly deleted among the files that stay = their live in-predicate
     // rows (null-predicate rows survive: filter(pred) keeps TRUE only)
     val fresh =
       if (mask.isEmpty) None
-      else {
-        val f = readLiveWithPos(spark, mask)
-          .filter(pred)
-          .select(col("_dv_f").as(FileCol), col("_dv_p").as(PosCol))
-          .localCheckpoint() // pin before the sidecar they feed is swapped in
-        if (f.isEmpty) None else Some(f)
-      }
-    val freshRows = fresh.map(_.count()).getOrElse(0L)
+      else Some(positions(readLiveWithPos(spark, mask).filter(pred)))
+    val freshRows = fresh.fold(0L)(_.count())
     if (freshRows == 0 && dropped.isEmpty)
-      return MoRDeleteResult(v, 0, total, 0, 0)
-    val next0 =
-      if (dropped.isEmpty) manifest
-      else manifest.filter(!col("file").isInCollection(dropped.keys.toSeq))
-    val next = fresh match {
-      case None => next0
-      case Some(f) =>
-        // carried-forward mask: ALL prior DV rows of the re-masked files
-        // (the new sidecar REPLACES the old pointer on these rows)
-        val prior = mask.collect { case Entry(fl, Some(d)) => (fl, d) }
-          .groupBy(_._2).toSeq.map { case (dvPath, group) =>
-            spark.read.parquet(dvPath)
-              .filter(col(FileCol).isInCollection(group.map(_._1)))
-          }
-        val sidecar = writeSidecar(spark, path,
-          (prior :+ f).reduce(_.unionByName(_)))
-        next0.withColumn("dv",
-          when(col("file").isInCollection(maskFiles), lit(sidecar))
-            .otherwise(col("dv")))
-    }
-    MoRDeleteResult(Snapshots.commit(spark, next, manifestRoot),
+      return MoRDeleteResult(h.version, 0, total, 0, 0)
+    val next =
+      if (freshRows == 0) h.manifest
+      else repoint(h.manifest, mask.map(_.file),
+        remask(spark, path, mask, fresh.get))
+    MoRDeleteResult(Snapshots.swapCommit(spark, manifestRoot, next,
+        dropped.keys.toSeq, None),
       (if (freshRows == 0) 0 else mask.size).toLong, total,
       freshRows + dropped.values.sum, 0, dropped.size.toLong)
   }
@@ -375,27 +410,18 @@ object Dv {
   def planDeleteMoR(spark: SparkSession, path: String, manifestRoot: String,
                     box: Seq[(String, Double, Double)])
       : Option[(Snapshots.Txn, Long)] = {
-    val v = Snapshots.latestVersion(spark, manifestRoot)
-    val manifest = Snapshots.pinLocal(
-      ensureDv(Snapshots.manifestAt(spark, manifestRoot, v)))
-    val hit = entries(manifest.filter(Layout.intersectsExpr(box)))
+    val h = Snapshots.head(spark, manifestRoot)
+    val hit = entries(h.manifest.filter(Layout.intersectsExpr(box)))
     if (hit.isEmpty) return None
-    val hitFiles = hit.map(_.file).toSet
-    val fresh = readLiveWithPos(spark, hit)
-      .filter(Layout.inBoxExpr(box))
-      .select(col("_dv_f").as(FileCol), col("_dv_p").as(PosCol))
-      .localCheckpoint()
+    val fresh = positions(readLiveWithPos(spark, hit)
+      .filter(Layout.inBoxExpr(box)))
     val rowsDeleted = fresh.count()
     if (rowsDeleted == 0) return None
-    val prior = hit.collect { case Entry(f, Some(d)) => (f, d) }
-      .groupBy(_._2).toSeq.map { case (dvPath, group) =>
-        spark.read.parquet(dvPath)
-          .filter(col(FileCol).isInCollection(group.map(_._1)))
-      }
-    val sidecar = writeSidecar(spark, path, (prior :+ fresh).reduce(_.unionByName(_)))
-    val adds = manifest.filter(col("file").isInCollection(hitFiles.toSeq))
-      .withColumn("dv", lit(sidecar))
-    Some((Snapshots.Txn(v, hitFiles, Some(adds.localCheckpoint()), hitFiles),
+    val hitFiles = hit.map(_.file).toSet
+    // the pinned head makes the re-pointed rows immutable already
+    val adds = h.manifest.filter(col("file").isInCollection(hitFiles.toSeq))
+      .withColumn("dv", lit(remask(spark, path, hit, fresh)))
+    Some((Snapshots.Txn(h.version, hitFiles, Some(adds), hitFiles),
       rowsDeleted))
   }
 
@@ -415,9 +441,8 @@ object Dv {
   def deleteKeysMoR(spark: SparkSession, path: String, manifestRoot: String,
                     key: String, keys: DataFrame,
                     deltaCommit: Boolean = false): MoRDeleteResult = {
-    val v = Snapshots.latestVersion(spark, manifestRoot)
-    val manifest = Snapshots.pinLocal(
-      ensureDv(Snapshots.manifestAt(spark, manifestRoot, v)))
+    val h = Snapshots.head(spark, manifestRoot)
+    val manifest = h.manifest
     val total = Snapshots.localCount(manifest)
     // Stats-prune the touch set ONLY when the manifest actually carries
     // [min,max] stats for the delete key — a manifest built with stats for
@@ -439,33 +464,21 @@ object Dv {
           .select(col("file")).distinct()
           .collect().map(_.getString(0)).toSeq
       }
-    if (hitFiles.isEmpty) return MoRDeleteResult(v, 0, total, 0, 0)
+    if (hitFiles.isEmpty) return MoRDeleteResult(h.version, 0, total, 0, 0)
     val hit = entries(manifest.filter(col("file").isInCollection(hitFiles)))
-    val fresh = readLiveWithPos(spark, hit)
-      .join(keys.select(col(key)).distinct(), Seq(key), "left_semi")
-      .select(col("_dv_f").as(FileCol), col("_dv_p").as(PosCol))
-      .localCheckpoint()
+    val fresh = positions(readLiveWithPos(spark, hit)
+      .join(keys.select(col(key)).distinct(), Seq(key), "left_semi"))
     val rowsDeleted = fresh.count()
-    if (rowsDeleted == 0) return MoRDeleteResult(v, 0, total, 0, 0)
-    val prior = hit.collect { case Entry(f, Some(d)) => (f, d) }
-      .groupBy(_._2).toSeq.map { case (dvPath, group) =>
-        spark.read.parquet(dvPath)
-          .filter(col(FileCol).isInCollection(group.map(_._1)))
-      }
-    val mask = (prior :+ fresh).reduce(_.unionByName(_))
-    val sidecar = writeSidecar(spark, path, mask)
+    if (rowsDeleted == 0) return MoRDeleteResult(h.version, 0, total, 0, 0)
+    val sidecar = remask(spark, path, hit, fresh)
     val committed =
       if (deltaCommit)
         Snapshots.commitDelta(spark, manifestRoot,
           Some(manifest.filter(col("file").isInCollection(hitFiles))
             .withColumn("dv", lit(sidecar))))
-      else {
-        val next = manifest
-          .withColumn("dv",
-            when(col("file").isInCollection(hitFiles), lit(sidecar))
-              .otherwise(col("dv")))
-        Snapshots.commit(spark, next, manifestRoot)
-      }
+      else
+        Snapshots.commit(spark, repoint(manifest, hitFiles, sidecar),
+          manifestRoot)
     MoRDeleteResult(committed, hitFiles.size.toLong, total, rowsDeleted, 0)
   }
 
@@ -486,22 +499,15 @@ object Dv {
 
   def purgeDv(spark: SparkSession, path: String, manifestRoot: String,
               cols: Seq[String]): PurgeResult = {
-    val v = Snapshots.latestVersion(spark, manifestRoot)
-    val manifest = Snapshots.pinLocal(
-      ensureDv(Snapshots.manifestAt(spark, manifestRoot, v)))
-    val total = Snapshots.localCount(manifest)
-    val masked = entries(manifest.filter(col("dv").isNotNull))
-    if (masked.isEmpty) return PurgeResult(v, 0, total, 0)
-    val staging = path + ".purge_staging"
-    readLive(spark, masked).write.mode("overwrite").parquet(staging)
-    val moved = Layout.moveStagedIn(spark, staging, path)
-    val keep = manifest.filter(col("dv").isNull)
-    val next =
-      if (moved.isEmpty) keep // every masked file was fully dead
-      else keep.unionByName(
-        ensureDv(Layout.buildManifestFor(spark, moved, cols)),
-        allowMissingColumns = true)
-    PurgeResult(Snapshots.commit(spark, next, manifestRoot),
+    val h = Snapshots.head(spark, manifestRoot)
+    val total = Snapshots.localCount(h.manifest)
+    val masked = entries(h.manifest.filter(col("dv").isNotNull))
+    if (masked.isEmpty) return PurgeResult(h.version, 0, total, 0)
+    // an empty landing means every masked file was fully dead
+    val moved = Snapshots.land(spark, path, gatedBy = None)(
+      readLive(spark, masked).write.parquet(_))
+    PurgeResult(Snapshots.swapCommit(spark, manifestRoot, h.manifest,
+        masked.map(_.file), Snapshots.statsFor(spark, moved, cols)),
       masked.size.toLong, total, moved.size.toLong)
   }
 }

@@ -583,40 +583,6 @@ object Layout {
       col(c).cast("double").between(lit(lo), lit(hi))
     }.reduce(_ && _)
 
-  /** Move every part file of a finished staging write into the layout dir
-    * and drop the staging dir. Part-file names embed the writing job's
-    * UUID, so moves from distinct jobs can never collide. Returns the
-    * moved files' new paths. Shared by delete staging, versioned append,
-    * and versioned compaction. */
-  private[sinks] def moveStagedIn(spark: SparkSession, staging: String,
-                                  path: String): Seq[String] = {
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val moved = fs.listStatus(new org.apache.hadoop.fs.Path(staging)).toSeq
-      .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-      .map { st =>
-        val dest = new org.apache.hadoop.fs.Path(dir, st.getPath.getName)
-        require(fs.rename(st.getPath, dest), s"move failed: ${st.getPath}")
-        dest.toString
-      }
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    moved
-  }
-
-  /** Stage the survivors of the `hit` files (rows NOT matching `inBox`) and
-    * move them into the layout as new data files. Returns (moved file
-    * paths, deleted row count). Shared by the in-place [[deleteWhere]] and
-    * the versioned [[Snapshots.deleteWhere]]. */
-  private[sinks] def stageSurvivors(spark: SparkSession, path: String,
-                                    hit: Seq[String],
-                                    inBox: Column): (Seq[String], Long) = {
-    val hitRows = spark.read.parquet(hit: _*)
-    val deleted = hitRows.filter(inBox).count()
-    val staging = path + ".delete_staging"
-    hitRows.filter(!inBox).write.mode("overwrite").parquet(staging)
-    (moveStagedIn(spark, staging, path), deleted)
-  }
-
   /** Outcome of a [[deleteWhere]]: how targeted the rewrite was.
     * `filesDropped` counts files removed METADATA-ONLY — stats + footer
     * null counts proved every row matched, so the file left the manifest
@@ -649,8 +615,11 @@ object Layout {
     val hit = manifest.filter(intersectsExpr(box)).select(col("file"))
       .collect().map(_.getString(0)).toSeq
     if (hit.isEmpty) return DeleteResult(0, total, 0)
-    // (1) stage the hit files' survivors, move them in as new data files
-    val (moved, deleted) = stageSurvivors(spark, path, hit, inBoxExpr(box))
+    // (1) land the hit files' survivors as new data files
+    val hitRows = spark.read.parquet(hit: _*)
+    val deleted = hitRows.filter(inBoxExpr(box)).count()
+    val moved = Snapshots.land(spark, path, gatedBy = None)(
+      hitRows.filter(!inBoxExpr(box)).write.parquet(_))
     val dir = new org.apache.hadoop.fs.Path(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // (2) atomic manifest swap: unaffected rows + the new files' stats

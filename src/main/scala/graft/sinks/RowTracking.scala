@@ -48,21 +48,21 @@ object RowTracking {
     if (!m.columns.contains("row_hw")) 0L
     else m.agg(coalesce(max(col("row_hw")), lit(0L))).head().getLong(0)
 
-  /** Z-ordered batch append with row-id assignment: stages like
-    * [[Snapshots.appendCommit]], then allocates each staged file a
-    * `base_row_id` from the high-water mark (files in name order, offsets
-    * by cumulative row counts) and commits with `row_hw` advanced by the
-    * batch's row total. Returns (version, files appended). */
+  /** Z-ordered batch append with row-id assignment: lands like
+    * [[Snapshots.appendCommit]] (constraint-gated), then allocates each
+    * landed file a `base_row_id` from the high-water mark (files in name
+    * order, offsets by cumulative row counts) and commits with `row_hw`
+    * advanced by the batch's row total. A fresh root starts at 0. Returns
+    * (version, files appended). */
   def appendTracked(spark: SparkSession, batch: DataFrame, cols: Seq[String],
                     path: String, manifestRoot: String,
                     nFiles: Int): (Int, Int) = {
-    val prev = Snapshots.versions(spark, manifestRoot).lastOption
-      .map(v => Snapshots.pinLocal(
-        Snapshots.manifestAt(spark, manifestRoot, v)))
+    val prev = Option.when(Snapshots.versions(spark, manifestRoot).nonEmpty)(
+      Snapshots.head(spark, manifestRoot).manifest)
     val hw = prev.map(highWater).getOrElse(0L)
-    val staging = path + ".append_staging_" + java.util.UUID.randomUUID()
-    Layout.zorderWrite(batch, cols, staging, nFiles)
-    val moved = Layout.moveStagedIn(spark, staging, path)
+    val moved = Snapshots.land(spark, path,
+        gatedBy = prev.map(_ => manifestRoot))(
+      Layout.zorderWrite(batch, cols, _, nFiles))
     val stats = Layout.buildManifestFor(spark, moved, cols)
     // (file, rows) in name order → cumulative base offsets; file-count-
     // bounded driver arithmetic, the same order both engines of a restart
@@ -126,14 +126,12 @@ object RowTracking {
     * in, files out). */
   def compactTracked(spark: SparkSession, path: String, manifestRoot: String,
                      cols: Seq[String], nFiles: Int): (Int, Int, Int) = {
-    val v = Snapshots.latestVersion(spark, manifestRoot)
-    val m = Snapshots.manifestAt(spark, manifestRoot, v)
-    val hw = highWater(m)
-    val nIn = m.count().toInt
-    val staging = path + ".compact_staging_" + java.util.UUID.randomUUID()
-    Layout.zorderWrite(readTracked(spark, manifestRoot, v), cols,
-      staging, nFiles)
-    val moved = Layout.moveStagedIn(spark, staging, path)
+    val h = Snapshots.head(spark, manifestRoot)
+    val hw = highWater(h.manifest)
+    val nIn = Snapshots.localCount(h.manifest).toInt
+    val moved = Snapshots.land(spark, path, gatedBy = None)(
+      Layout.zorderWrite(readTracked(spark, manifestRoot, h.version), cols,
+        _, nFiles))
     val next = Layout.buildManifestFor(spark, moved, cols)
       .withColumn("base_row_id", lit(null).cast("long"))
       .withColumn("rid_mat", lit(true))

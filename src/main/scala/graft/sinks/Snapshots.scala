@@ -84,6 +84,20 @@ object Snapshots {
           "transaction stage — nothing visible to read"))
   }
 
+  /** A writer's view of the table head, read once: the latest visible
+    * version, its manifest (DV-normalized and pinned with [[pinLocal]], so
+    * the planner never sees a commit that lands while it works) and the
+    * declared schema at that SAME version. */
+  final case class Head(version: Int, manifest: DataFrame,
+                        schema: Option[StructType])
+
+  /** The [[Head]] every DML planner starts from. */
+  def head(spark: SparkSession, manifestRoot: String): Head = {
+    val v = latestVersion(spark, manifestRoot)
+    Head(v, pinLocal(Dv.ensureDv(manifestAt(spark, manifestRoot, v))),
+      declaredSchemaAt(spark, manifestRoot, v))
+  }
+
   /** Content-marker filename a cross-table txn stage travels in (body =
     * txn dir + txn id, newline-separated). */
   private[graft] val TxnPendingMarker = "_txn_pending.txt"
@@ -173,62 +187,19 @@ object Snapshots {
     commitStaged(spark, manifest, manifestRoot, tag, delta = false, markers,
       contentFiles)
 
-  /** Shared staging + CAS-rename loop behind [[commit]] (full manifests)
-    * and [[commitDelta]] (log-structured commits). A delta version carries
-    * an underscore-prefixed `_delta` marker file inside the staged dir, so
-    * the marker becomes visible in the same atomic rename as the content —
-    * a version is never observable in a half-classified state. */
+  /** The CAS-rename loop behind [[commit]] (full manifests) and
+    * [[commitDelta]] (log-structured commits): stage the version dir
+    * once, then claim the next free slot, retrying the SAME staged dir one
+    * slot higher after each lost race. Bounded retries so a broken store
+    * surfaces as an error, not a spin. */
   private def commitStaged(spark: SparkSession, content: DataFrame,
                            manifestRoot: String, tag: Option[String],
                            delta: Boolean,
                            markers: Seq[String] = Seq.empty,
                            contentFiles: Seq[(String, String)] = Seq.empty)
       : Int = {
-    val fs = hfs(spark, manifestRoot)
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"$manifestRoot/.tmp_${java.util.UUID.randomUUID()}")
-    // DRIVER-SIDE manifest write when the content is cache-bounded and
-    // simply-typed: a manifest is file-count-bounded planner metadata
-    // (the Delta commit-log shape — Delta writes its JSON commit from the
-    // driver too), and paying a full Spark write job per commit was the
-    // single largest fixed cost of every DML version commit. The collected
-    // rows double as the new version's manifest-cache entry, so the first
-    // post-commit read costs no job either. Oversized or exotically-typed
-    // manifests keep the distributed write.
-    val localRows = stageManifestLocal(spark, content, tmp)
-    if (localRows.isEmpty)
-      content.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    // the txn tag travels INSIDE the staged dir: tag and manifest become
-    // visible in the same atomic rename — no window where the version
-    // exists untagged (underscore-prefixed, so parquet readers skip it)
-    tag.foreach { t =>
-      fs.create(new org.apache.hadoop.fs.Path(tmp, s"_txn_$t"), true).close()
-    }
-    if (delta)
-      fs.create(new org.apache.hadoop.fs.Path(tmp, DeltaMarker), true).close()
-    // the commit TIMESTAMP rides the same atomic rename (the Delta
-    // in-commit-timestamp model): stamped strictly after the latest
-    // existing stamp so single-writer logs resolve `AS OF <timestamp>`
-    // unambiguously even when two commits land within one clock tick.
-    // (Racing writers can still interleave stamps out of version order —
-    // resolution is max-version-at-or-below-timestamp, matching Delta.)
-    val ts = math.max(System.currentTimeMillis(),
-      latestCommitTs(spark, manifestRoot) + 1)
-    fs.create(new org.apache.hadoop.fs.Path(tmp, s"$TsPrefix$ts"), true).close()
-    markers.foreach { m =>
-      require(m.startsWith("_"), s"marker must be underscore-prefixed: $m")
-      fs.create(new org.apache.hadoop.fs.Path(tmp, m), true).close()
-    }
-    // CONTENT-bearing markers (e.g. the declared schema JSON, which does
-    // not fit a filename): written inside the staged dir, so content and
-    // manifest become visible in the same atomic rename like every other
-    // marker
-    contentFiles.foreach { case (name, body) =>
-      require(name.startsWith("_"),
-        s"content marker must be underscore-prefixed: $name")
-      val out = fs.create(new org.apache.hadoop.fs.Path(tmp, name), true)
-      out.write(body.getBytes("UTF-8")); out.close()
-    }
+    val staged = stageVersion(spark, manifestRoot, content, tag, delta,
+      markers, contentFiles)
     // write-write conflict with an in-flight cross-table transaction:
     // committing past an unresolved stage would silently bury it when
     // its txn commits — refuse loudly; the txn owner resolves first.
@@ -252,43 +223,110 @@ object Snapshots {
         s"$manifestRoot v=${next - 1} is an unresolved cross-table " +
           "transaction stage that landed mid-commit — concurrent write " +
           "refused (commit or abort the transaction first)")
-      val dest = new org.apache.hadoop.fs.Path(s"$manifestRoot/v=$next")
-      if (fs.exists(dest)) next += 1 // lost before trying: take the next slot
-      else if (fs.rename(tmp, dest)) {
-        // some local FSes "succeed" a rename onto an existing dir by moving
-        // the source INSIDE it — that is a lost race, not a commit: undo
-        // the nesting and retry at the next version
-        val nested = new org.apache.hadoop.fs.Path(dest, tmp.getName)
-        if (fs.exists(nested)) {
-          require(fs.rename(nested, tmp), s"un-nest failed: $nested")
-          next += 1
-        } else {
-          // a commit landing at v=1 is a root BEGINNING — fresh, or
-          // re-created at a path whose old life left cached metadata
-          // behind (version numbers restart, so stale (root, v)
-          // entries would otherwise be served): drop them here, where
-          // every initialization path converges, not only in the SQL
-          // registry
-          if (next == 1) MetaCache.forget(manifestRoot)
-          // the rows staged driver-side ARE the committed version's raw
-          // parquet content — warm the manifest cache so the first
-          // post-commit planner read is job-free (after the v=1
-          // invalidation above, never before it)
-          localRows.foreach { case (schema, rows) =>
-            // asNullable: lit()-built staging columns are non-nullable but
-            // a fresh parquet read of the committed version serves an
-            // all-nullable schema — cached and uncached readers of one
-            // version must observe the identical schema
-            val relaxed = StructType(schema.fields.map(_.copy(nullable = true)))
-            cacheManifest(manifestRoot, ("manifest", next), relaxed, rows)
-          }
-          return next
-        }
-      } else next += 1 // rename refused: another writer took v=N
+      if (claimSlot(spark, manifestRoot, staged, next)) return next
+      next += 1
     }
     throw new IllegalStateException(
       s"version commit gave up after $attempts attempts under $manifestRoot")
   }
+
+  /** A staged, not yet visible manifest dir, plus the rows it holds when
+    * they were staged from the driver (they warm the cache on a win). */
+  private final case class Staged(dir: org.apache.hadoop.fs.Path,
+                                  rows: Option[(StructType, Array[Row])])
+
+  /** Stage `content` as ONE parquet part file in a hidden, uniquely-named
+    * dir under the root (two racing committers never share one).
+    * DRIVER-SIDE write when the content is cache-bounded and simply-typed
+    * ([[stageManifestLocal]]): a manifest is file-count-bounded planner
+    * metadata (the Delta commit-log shape — Delta writes its JSON commit
+    * from the driver too), and a Spark write job per commit was the single
+    * largest fixed cost of every DML version commit. Oversized or
+    * exotically-typed manifests keep the distributed write. */
+  private def stageManifest(spark: SparkSession, manifestRoot: String,
+                            content: DataFrame): Staged = {
+    val tmp = new org.apache.hadoop.fs.Path(
+      s"$manifestRoot/.tmp_${java.util.UUID.randomUUID()}")
+    val rows = stageManifestLocal(spark, content, tmp)
+    if (rows.isEmpty)
+      content.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    Staged(tmp, rows)
+  }
+
+  /** Stage a whole version dir: the manifest plus every marker that must
+    * become visible with it. Each marker is underscore-prefixed (parquet
+    * readers skip it) and travels INSIDE the staged dir, so content and
+    * classification appear in the same atomic rename — a version is never
+    * observable untagged, unclassified or unstamped. */
+  private def stageVersion(spark: SparkSession, manifestRoot: String,
+                           content: DataFrame, tag: Option[String],
+                           delta: Boolean, markers: Seq[String],
+                           contentFiles: Seq[(String, String)]): Staged = {
+    val fs = hfs(spark, manifestRoot)
+    val staged = stageManifest(spark, manifestRoot, content)
+    def put(name: String, body: String = ""): Unit = {
+      require(name.startsWith("_"), s"marker must be underscore-prefixed: $name")
+      val out = fs.create(new org.apache.hadoop.fs.Path(staged.dir, name), true)
+      try out.write(body.getBytes("UTF-8")) finally out.close()
+    }
+    tag.foreach(t => put(s"_txn_$t"))
+    if (delta) put(DeltaMarker)
+    // the commit TIMESTAMP (the Delta in-commit-timestamp model): stamped
+    // strictly after the latest existing stamp so single-writer logs
+    // resolve `AS OF <timestamp>` unambiguously even when two commits land
+    // within one clock tick. (Racing writers can still interleave stamps
+    // out of version order — resolution is max-version-at-or-below-
+    // timestamp, matching Delta.)
+    put(TsPrefix + math.max(System.currentTimeMillis(),
+      latestCommitTs(spark, manifestRoot) + 1))
+    markers.foreach(put(_))
+    // CONTENT-bearing markers (the declared schema JSON, a txn's pending
+    // marker — bodies that do not fit a filename)
+    contentFiles.foreach { case (name, body) => put(name, body) }
+    staged
+  }
+
+  /** Claim slot `n` for a staged version — the rename IS the
+    * compare-and-swap. On a win, a v=1 commit forgets the root's cached
+    * metadata (a root BEGINNING — fresh, or re-created at a path whose old
+    * life left entries behind; version numbers restart, so stale (root, v)
+    * entries would otherwise be served; every initialization path
+    * converges here), and driver-staged rows warm the new version's
+    * manifest entry so the first post-commit read is job-free (after the
+    * forget, never before it). On a loss the staged dir stays for the next
+    * attempt. */
+  private def claimSlot(spark: SparkSession, manifestRoot: String,
+                        staged: Staged, n: Int): Boolean = {
+    val won = renameOnto(hfs(spark, manifestRoot), staged.dir,
+      new org.apache.hadoop.fs.Path(s"$manifestRoot/v=$n"))
+    if (won) {
+      if (n == 1) MetaCache.forget(manifestRoot)
+      staged.rows.foreach { case (schema, rows) =>
+        // asNullable: lit()-built staging columns are non-nullable but a
+        // fresh parquet read of the committed version serves an
+        // all-nullable schema — cached and uncached readers of one version
+        // must observe the identical schema
+        val relaxed = StructType(schema.fields.map(_.copy(nullable = true)))
+        cacheManifest(manifestRoot, ("manifest", n), relaxed, rows)
+      }
+    }
+    won
+  }
+
+  /** Rename `src` onto `dest` if `dest` does not exist; false on a lost
+    * race. Some local FSes "succeed" a rename onto an existing dir by
+    * moving the source INSIDE it — that is a loss too: the nesting is
+    * undone, so `src` is intact for a retry. */
+  private def renameOnto(fs: org.apache.hadoop.fs.FileSystem,
+                         src: org.apache.hadoop.fs.Path,
+                         dest: org.apache.hadoop.fs.Path): Boolean =
+    !fs.exists(dest) && fs.rename(src, dest) && {
+      val nested = new org.apache.hadoop.fs.Path(dest, src.getName)
+      if (fs.exists(nested)) {
+        require(fs.rename(nested, src), s"un-nest failed: $nested")
+        false
+      } else true
+    }
 
   /** The version whose commit carried `tag`, if any — the idempotence
     * lookup for exactly-once writers (the Delta txnAppId/txnVersion
@@ -326,15 +364,16 @@ object Snapshots {
       .flatMap(commitTimestamp(spark, manifestRoot, _))
       .maxOption.getOrElse(0L)
 
-  /** `AS OF <timestamp>` resolution: the LAST committed version whose stamp
+  /** `AS OF <timestamp>` resolution: the LAST visible version whose stamp
     * is at or below `tsMillis` (the Delta/Iceberg timestamp-travel
-    * contract). Rejects a timestamp earlier than every stamped commit —
+    * contract; a pending or aborted txn stage is stamped but is not table
+    * history). Rejects a timestamp earlier than every stamped commit —
     * "before the table existed" must be an error, not an empty table. Pass
     * the result to [[manifestAt]]/[[tableAt]]/[[readAt]]; timestamp travel
     * is a resolution step, not a second read path. */
   def versionAtTimestamp(spark: SparkSession, manifestRoot: String,
                          tsMillis: Long): Int = {
-    val stamped = versions(spark, manifestRoot)
+    val stamped = visibleVersions(spark, manifestRoot)
       .flatMap(v => commitTimestamp(spark, manifestRoot, v).map(v -> _))
     require(stamped.nonEmpty, s"no timestamped versions under $manifestRoot")
     val atOrBefore = stamped.filter(_._2 <= tsMillis)
@@ -411,16 +450,10 @@ object Snapshots {
     val fs = hfs(spark, manifestRoot)
     val dest = new org.apache.hadoop.fs.Path(s"$manifestRoot/ckpt=$version")
     if (fs.exists(dest)) return
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"$manifestRoot/.tmp_${java.util.UUID.randomUUID()}")
-    val folded = manifestAt(spark, manifestRoot, version)
-    if (stageManifestLocal(spark, folded, tmp).isEmpty)
-      folded.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    if (!fs.rename(tmp, dest)) fs.delete(tmp, true) // lost a benign race
-    else {
-      val nested = new org.apache.hadoop.fs.Path(dest, tmp.getName)
-      if (fs.exists(nested)) fs.delete(nested, true) // local-FS rename-into
-    }
+    val staged = stageManifest(spark, manifestRoot,
+      manifestAt(spark, manifestRoot, version))
+    if (!renameOnto(fs, staged.dir, dest))
+      fs.delete(staged.dir, true) // lost a benign race
   }
 
   /** How [[manifestAt]] would reconstruct `version`: the base it folds from
@@ -444,24 +477,6 @@ object Snapshots {
   private def cacheManifest(manifestRoot: String, key: Product,
                             schema: StructType, rows: Array[Row]): Unit =
     MetaCache.put(manifestRoot, key, (schema, rows), rows.length.max(1).toLong)
-
-  /** Total rows in the parquet files under `dirs`, from their footers on
-    * the driver (no Spark job); Long.MaxValue when a footer cannot be
-    * read or a dir is not flat (a nested dir a parquet read would also
-    * scan). */
-  private def footerRows(spark: SparkSession, dirs: Seq[String]): Long =
-    try dirs.distinct.iterator.flatMap { d =>
-      hfs(spark, d).listStatus(new org.apache.hadoop.fs.Path(d)).iterator
-        .filterNot(st => st.getPath.getName.startsWith("_") ||
-          st.getPath.getName.startsWith("."))
-    }.map { st =>
-      require(st.isFile, s"not a flat manifest dir: ${st.getPath}")
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st,
-          spark.sparkContext.hadoopConfiguration))
-      try reader.getRecordCount finally reader.close()
-    }.sum
-    catch { case scala.util.control.NonFatal(_) => Long.MaxValue }
 
   /** Stage `content` into `tmpDir` as ONE parquet part file written from
     * the DRIVER (parquet-mr Group writer — no Spark job), when every
@@ -557,14 +572,18 @@ object Snapshots {
     * miss with ONE straight collect job — or pass `build` through
     * untouched when `probeDir` no longer exists or the parquet footers of
     * `probeDir` + `inputDirs` hold more than [[MetaCache.MaxEntryRows]]
-    * rows. That footer sum is an exact upper bound on the rows `build`
-    * yields (a fold never outgrows its inputs), so an oversized manifest
-    * is never collected. (A `limit(cap + 1)` collect would instead run
-    * executeTake's incremental partition waves: several jobs per miss.) */
+    * rows (or cannot be read). That footer sum is an exact upper bound on
+    * the rows `build` yields (a fold never outgrows its inputs), so an
+    * oversized manifest is never collected. (A `limit(cap + 1)` collect
+    * would instead run executeTake's incremental partition waves: several
+    * jobs per miss.) Each input dir is listed and its footers opened once
+    * per miss: `build` reads a dir through the `read` it is handed, which
+    * takes the schema from those same footers. */
   private def cachedManifestDf(spark: SparkSession, manifestRoot: String,
                                key: Product, probeDir: String,
                                inputDirs: Seq[String] = Seq.empty)
-                              (build: => DataFrame): DataFrame = {
+                              (build: (String => DataFrame) => DataFrame)
+      : DataFrame = {
     import scala.jdk.CollectionConverters._
     val exists = hfs(spark, probeDir)
       .exists(new org.apache.hadoop.fs.Path(probeDir))
@@ -573,12 +592,23 @@ object Snapshots {
         .foreach { case (schema, rows) =>
           return spark.createDataFrame(rows.toSeq.asJava, schema)
         }
-    val df = build
-    if (!exists || footerRows(spark, probeDir +: inputDirs) >
-        MetaCache.MaxEntryRows) return df
+    val parts = (probeDir +: inputDirs).distinct
+      .map(d => d -> (if (exists) Dv.flatParts(spark, d) else None)).toMap
+    val df = build(d => Dv.readParts(spark, d, parts(d)))
+    val bound = parts.values.foldLeft(Option(0L)) { (acc, ps) =>
+      for (a <- acc; p <- ps) yield a + p.map(_.rows).sum }
+    if (!bound.exists(_ <= MetaCache.MaxEntryRows)) return df
     val rows = df.collect()
     cacheManifest(manifestRoot, key, df.schema, rows)
     spark.createDataFrame(rows.toSeq.asJava, df.schema)
+  }
+
+  /** The raw content of ONE committed version dir — a full manifest, or a
+    * delta commit's add/remove rows — served through the manifest cache. */
+  private def versionRows(spark: SparkSession, manifestRoot: String,
+                          v: Int): DataFrame = {
+    val dir = s"$manifestRoot/v=$v"
+    cachedManifestDf(spark, manifestRoot, ("manifest", v), dir)(_(dir))
   }
 
   /** `localCheckpoint()` unless the frame is already driver-local (a
@@ -660,9 +690,7 @@ object Snapshots {
         "stage that is not (or never became) visible — reads serve only " +
         "committed history")
     if (!isDelta(spark, manifestRoot, version))
-      return cachedManifestDf(spark, manifestRoot, ("manifest", version),
-        s"$manifestRoot/v=$version")(
-        spark.read.parquet(s"$manifestRoot/v=$version"))
+      return versionRows(spark, manifestRoot, version)
     val info = foldInfo(spark, manifestRoot, version)
     val deltaVs = visibleVersions(spark, manifestRoot)
       .filter(v => v > info.base && v <= version)
@@ -675,18 +703,13 @@ object Snapshots {
       s"$manifestRoot/v=$version",
       inputDirs = (if (info.baseIsCheckpoint) s"$manifestRoot/ckpt=${info.base}"
         else s"$manifestRoot/v=${info.base}") +:
-        deltaVs.map(v => s"$manifestRoot/v=$v")) {
+        deltaVs.map(v => s"$manifestRoot/v=$v")) { read =>
       val baseDf = (if (info.baseIsCheckpoint)
-          spark.read.parquet(s"$manifestRoot/ckpt=${info.base}")
-        else cachedManifestDf(spark, manifestRoot, ("manifest", info.base),
-          s"$manifestRoot/v=${info.base}")(
-          spark.read.parquet(s"$manifestRoot/v=${info.base}")))
+          read(s"$manifestRoot/ckpt=${info.base}")
+        else versionRows(spark, manifestRoot, info.base))
         .withColumn(ActionCol, lit("add")).withColumn("_v", lit(info.base))
       val deltas = deltaVs
-        .map(v => cachedManifestDf(spark, manifestRoot, ("manifest", v),
-          s"$manifestRoot/v=$v")(
-          spark.read.parquet(s"$manifestRoot/v=$v"))
-          .withColumn("_v", lit(v)))
+        .map(v => versionRows(spark, manifestRoot, v).withColumn("_v", lit(v)))
       val all = (baseDf +: deltas)
         .reduce(_.unionByName(_, allowMissingColumns = true))
       val w = org.apache.spark.sql.expressions.Window
@@ -797,40 +820,25 @@ object Snapshots {
                       pred: org.apache.spark.sql.Column,
                       cover: Option[(org.apache.spark.sql.Column, Seq[String])] = None)
       : Layout.DeleteResult = {
-    val manifest =
-      pinLocal(Dv.ensureDv(manifestAt(spark, manifestRoot,
-        latestVersion(spark, manifestRoot))))
-    val total = localCount(manifest)
-    val hit = Dv.entries(manifest.filter(prune))
+    val h = head(spark, manifestRoot)
+    val total = localCount(h.manifest)
+    val hit = Dv.entries(h.manifest.filter(prune))
     if (hit.isEmpty) return Layout.DeleteResult(0, total, 0)
-    val dropped = wholeFileDrops(spark, manifest, prune, cover)
+    val dropped = wholeFileDrops(spark, h.manifest, prune, cover)
     val rewrite = hit.filterNot(e => dropped.contains(e.file))
     // survivors come from the LIVE rows (existing deletion vectors
     // applied — a copy-on-write rewrite of a masked file must not
     // resurrect its masked rows); the rewrite also FOLDS the DV away: the
     // new files carry no mask
-    if (rewrite.nonEmpty) {
-      val live = Dv.readLive(spark, rewrite,
-        declaredSchemaAt(spark, manifestRoot,
-          latestVersion(spark, manifestRoot)))
-      val staging = path + ".delete_staging"
-      // survivors = NOT(pred), with null-match rows kept: a WHERE that
-      // evaluates to null on a row must not delete it (SQL three-valued
-      // logic — DELETE removes rows where the predicate is TRUE)
-      live.filter(!coalesce(pred, lit(false)))
-        .write.mode("overwrite").parquet(staging)
-    }
+    lazy val live = Dv.readLive(spark, rewrite, h.schema)
+    // survivors = NOT(pred), with null-match rows kept: a WHERE that
+    // evaluates to null on a row must not delete it (SQL three-valued
+    // logic — DELETE removes rows where the predicate is TRUE)
     val moved =
       if (rewrite.isEmpty) Seq.empty[String]
-      else Layout.moveStagedIn(spark, path + ".delete_staging", path)
-    val keep = manifest.filter(!col("file").isInCollection(hit.map(_.file)))
-    val survivorStats =
-      if (moved.isEmpty) None
-      else Some(Layout.buildManifestFor(spark, moved, cols))
-    val next = survivorStats match {
-      case None => keep
-      case Some(s) => keep.unionByName(s, allowMissingColumns = true)
-    }
+      else land(spark, path, gatedBy = None)(
+        live.filter(!coalesce(pred, lit(false))).write.parquet(_))
+    val survivorStats = statsFor(spark, moved, cols)
     // deleted = live(rewrite set) − survivors, by ARITHMETIC, not a second
     // data scan: every live row is either pred-TRUE (deleted) or not
     // (written out), so the counts close the books. Live rows of an
@@ -844,21 +852,15 @@ object Snapshots {
     val arithmetic =
       if (rewrite.isEmpty) Some(0L)
       else if (rewrite.forall(_.dv.isEmpty)) {
-        val rewriteFiles = rewrite.map(_.file).toSet
         for {
-          liveRows <- localLongSum(manifest
-            .filter(col("file").isInCollection(rewriteFiles.toSeq)), "rows")
+          liveRows <- localLongSum(h.manifest
+            .filter(col("file").isInCollection(rewrite.map(_.file))), "rows")
           survivorRows <-
             survivorStats.map(localLongSum(_, "rows")).getOrElse(Some(0L))
         } yield liveRows - survivorRows
       } else None
-    val deleted = arithmetic.getOrElse {
-      val live = Dv.readLive(spark, rewrite,
-        declaredSchemaAt(spark, manifestRoot,
-          latestVersion(spark, manifestRoot)))
-      live.filter(pred).count()
-    }
-    commit(spark, next, manifestRoot)
+    val deleted = arithmetic.getOrElse(live.filter(pred).count())
+    swapCommit(spark, manifestRoot, h.manifest, hit.map(_.file), survivorStats)
     Layout.DeleteResult(rewrite.size.toLong, total,
       deleted + dropped.values.sum, dropped.size.toLong)
   }
@@ -876,21 +878,13 @@ object Snapshots {
     * version's schema ([[tableAt]]), and later INSERTs refill normally. */
   def truncateCommit(spark: SparkSession, manifestRoot: String)
       : TruncateResult = {
-    val m = pinLocal(Dv.ensureDv(manifestAt(spark, manifestRoot,
-      latestVersion(spark, manifestRoot))))
-    val files = localCount(m)
-    if (files == 0)
-      return TruncateResult(latestVersion(spark, manifestRoot), 0, 0)
-    val phys = m.agg(sum(col("rows"))).head().getLong(0)
-    // masked rows are already dead — subtract each touched sidecar's
-    // entries for the files that still point at it
-    val masked = Dv.entries(m).collect { case Dv.Entry(f, Some(d)) => (f, d) }
-      .groupBy(_._2).toSeq.map { case (dvPath, group) =>
-        spark.read.parquet(dvPath)
-          .filter(col(Dv.FileCol).isInCollection(group.map(_._1)))
-          .count()
-      }.sum
-    val v = commit(spark, m.filter(lit(false)), manifestRoot)
+    val h = head(spark, manifestRoot)
+    val files = localCount(h.manifest)
+    if (files == 0) return TruncateResult(h.version, 0, 0)
+    val phys = h.manifest.agg(sum(col("rows"))).head().getLong(0)
+    // masked rows are already dead
+    val masked = Dv.maskedRows(spark, Dv.entries(h.manifest))
+    val v = commit(spark, h.manifest.filter(lit(false)), manifestRoot)
     TruncateResult(v, phys - masked, files)
   }
 
@@ -912,29 +906,22 @@ object Snapshots {
     * plus the missing-file list WITHOUT committing. */
   def fsckCommit(spark: SparkSession, manifestRoot: String,
                  dryRun: Boolean = false): (FsckResult, Seq[String]) = {
-    val v = latestVersion(spark, manifestRoot)
-    val m = pinLocal(Dv.ensureDv(manifestAt(spark, manifestRoot, v)))
-    val total = localCount(m)
+    val h = head(spark, manifestRoot)
+    val total = localCount(h.manifest)
     val conf = spark.sparkContext.hadoopConfiguration
-    val missing = m.select(col("file"), col("rows"), col("dv")).collect()
-      .filterNot { r =>
+    val missing = h.manifest.select(col("file"), col("rows"), col("dv"))
+      .collect().filterNot { r =>
         val p = new org.apache.hadoop.fs.Path(r.getString(0))
         p.getFileSystem(conf).exists(p)
       }
-    if (missing.isEmpty) return (FsckResult(v, 0, total, 0), Seq.empty)
+    if (missing.isEmpty) return (FsckResult(h.version, 0, total, 0), Seq.empty)
     val files = missing.map(_.getString(0)).toSeq
-    val masked = missing.filter(!_.isNullAt(2)).map(r =>
-      (r.getString(0), r.getString(2))).groupBy(_._2).toSeq
-      .map { case (dvPath, group) =>
-        spark.read.parquet(dvPath)
-          .filter(col(Dv.FileCol).isInCollection(group.map(_._1).toSeq))
-          .count()
-      }.sum
+    val masked = Dv.maskedRows(spark,
+      missing.map(r => Dv.Entry(r.getString(0), Option(r.getString(2)))).toSeq)
     val lost = missing.map(_.getLong(1)).sum - masked
     if (dryRun)
-      return (FsckResult(v, files.size.toLong, total, lost), files)
-    val nv = commit(spark, m.filter(!col("file").isInCollection(files)),
-      manifestRoot)
+      return (FsckResult(h.version, files.size.toLong, total, lost), files)
+    val nv = swapCommit(spark, manifestRoot, h.manifest, files, None)
     (FsckResult(nv, files.size.toLong, total, lost), files)
   }
 
@@ -992,14 +979,11 @@ object Snapshots {
                       pred: org.apache.spark.sql.Column,
                       assignments: Map[String, org.apache.spark.sql.Column]): UpdateResult = {
     require(assignments.nonEmpty, "UPDATE with no assignments")
-    val manifest =
-      pinLocal(Dv.ensureDv(manifestAt(spark, manifestRoot,
-        latestVersion(spark, manifestRoot))))
-    val total = localCount(manifest)
-    val hit = Dv.entries(manifest.filter(prune))
+    val h = head(spark, manifestRoot)
+    val total = localCount(h.manifest)
+    val hit = Dv.entries(h.manifest.filter(prune))
     if (hit.isEmpty) return UpdateResult(0, total, 0)
-    val live = Dv.readLive(spark, hit,
-      declaredSchemaAt(spark, manifestRoot, latestVersion(spark, manifestRoot)))
+    val live = Dv.readLive(spark, hit, h.schema)
     val lower = assignments.map { case (k, v) =>
       k.toLowerCase(java.util.Locale.ROOT) -> v }
     val unknown = lower.keySet.diff(
@@ -1013,14 +997,10 @@ object Snapshots {
         .map(rhs => when(coalesce(pred, lit(false)), rhs).otherwise(col(c)).as(c))
         .getOrElse(col(c))
     }: _*)
-    val staging = path + ".update_staging_" + java.util.UUID.randomUUID()
-    rewritten.write.mode("overwrite").parquet(staging)
-    enforceStagedConstraints(spark, manifestRoot, staging)
-    val moved = Layout.moveStagedIn(spark, staging, path)
-    val keep = manifest.filter(!col("file").isInCollection(hit.map(_.file)))
-    val next = keep.unionByName(Layout.buildManifestFor(spark, moved, cols),
-      allowMissingColumns = true)
-    commit(spark, next, manifestRoot)
+    val moved = land(spark, path, gatedBy = Some(manifestRoot))(
+      rewritten.write.parquet(_))
+    swapCommit(spark, manifestRoot, h.manifest, hit.map(_.file),
+      statsFor(spark, moved, cols))
     UpdateResult(hit.size.toLong, total, updated)
   }
 
@@ -1049,13 +1029,11 @@ object Snapshots {
                          assignments: Map[String, org.apache.spark.sql.Column],
                          nFiles: Int): MoRUpdateResult = {
     require(assignments.nonEmpty, "UPDATE with no assignments")
-    val v = latestVersion(spark, manifestRoot)
-    val manifest = pinLocal(Dv.ensureDv(manifestAt(spark, manifestRoot, v)))
-    val total = localCount(manifest)
-    val hit = Dv.entries(manifest.filter(prune))
-    if (hit.isEmpty) return MoRUpdateResult(v, 0, total, 0, 0)
-    val live = Dv.readLiveWithPos(spark, hit,
-      declaredSchemaAt(spark, manifestRoot, v))
+    val h = head(spark, manifestRoot)
+    val total = localCount(h.manifest)
+    val hit = Dv.entries(h.manifest.filter(prune))
+    if (hit.isEmpty) return MoRUpdateResult(h.version, 0, total, 0, 0)
+    val live = Dv.readLiveWithPos(spark, hit, h.schema)
     val dataCols = live.columns.toIndexedSeq
       .filterNot(c => c == "_dv_f" || c == "_dv_p")
     val lower = assignments.map { case (k, a) =>
@@ -1069,37 +1047,23 @@ object Snapshots {
     // sidecar — it must not recompute after the manifest starts moving
     val matched = live.filter(coalesce(pred, lit(false))).localCheckpoint()
     val rowsUpdated = matched.count()
-    if (rowsUpdated == 0) return MoRUpdateResult(v, 0, total, 0, 0)
+    if (rowsUpdated == 0) return MoRUpdateResult(h.version, 0, total, 0, 0)
     // (b) the updated payload, staged and constraint-checked FIRST — a
     // violating update aborts before anything becomes visible
     val updatedRows = matched.select(dataCols.map(c =>
       lower.get(c.toLowerCase(java.util.Locale.ROOT))
         .map(_.as(c)).getOrElse(col(c))): _*)
-    val staging = path + ".morupd_staging_" + java.util.UUID.randomUUID()
-    Layout.zorderWrite(updatedRows, cols, staging, nFiles)
-    enforceStagedConstraints(spark, manifestRoot, staging)
-    val moved = Layout.moveStagedIn(spark, staging, path)
-    // (a) mask exactly the matched rows' files; carried-forward prior
-    // masks of THOSE files ride into the replacing sidecar
+    val moved = land(spark, path, gatedBy = Some(manifestRoot))(
+      Layout.zorderWrite(updatedRows, cols, _, nFiles))
+    // (a) mask exactly the matched rows' files
     val maskFiles = matched.select(col("_dv_f")).distinct()
       .collect().map(_.getString(0)).toSeq
-    val freshMask = matched.select(col("_dv_f").as(Dv.FileCol),
-      col("_dv_p").cast("long").as(Dv.PosCol))
-    val prior = hit
-      .collect { case Dv.Entry(f, Some(d)) if maskFiles.contains(f) => (f, d) }
-      .groupBy(_._2).toSeq.map { case (dvPath, group) =>
-        spark.read.parquet(dvPath)
-          .filter(col(Dv.FileCol).isInCollection(group.map(_._1)))
-      }
-    val sidecar = Dv.writeSidecar(spark, path,
-      (prior :+ freshMask).reduce(_.unionByName(_)))
-    val next = manifest
-      .withColumn("dv",
-        when(col("file").isInCollection(maskFiles), lit(sidecar))
-          .otherwise(col("dv")))
-      .unionByName(Layout.buildManifestFor(spark, moved, cols),
-        allowMissingColumns = true)
-    MoRUpdateResult(commit(spark, next, manifestRoot),
+    val sidecar = Dv.remask(spark, path,
+      hit.filter(e => maskFiles.contains(e.file)),
+      Dv.positionCols(matched))
+    MoRUpdateResult(swapCommit(spark, manifestRoot,
+        Dv.repoint(h.manifest, maskFiles, sidecar), Nil,
+        statsFor(spark, moved, cols)),
       maskFiles.size.toLong, total, rowsUpdated, moved.size.toLong)
   }
 
@@ -1121,30 +1085,72 @@ object Snapshots {
                    markers: Seq[String] = Seq.empty,
                    contentFiles: Seq[(String, String)] = Seq.empty)
       : (Int, Int) = {
-    val prev =
-      pinLocal(manifestAt(spark, manifestRoot,
-        latestVersion(spark, manifestRoot)))
-    val moved = stageDataFiles(spark, batch, cols, path, manifestRoot, nFiles)
-    val next = prev.unionByName(Layout.buildManifestFor(spark, moved, cols),
-      allowMissingColumns = true)
-    (commit(spark, next, manifestRoot, tag, markers, contentFiles),
-      moved.size)
+    val h = head(spark, manifestRoot)
+    val moved = land(spark, path, gatedBy = Some(manifestRoot))(
+      Layout.zorderWrite(batch, cols, _, nFiles))
+    (swapCommit(spark, manifestRoot, h.manifest, Nil,
+      statsFor(spark, moved, cols), tag, markers, contentFiles), moved.size)
   }
 
-  /** Land `batch` into the table's DATA dir without committing any
-    * manifest: z-ordered staging write, constraint enforcement, atomic
-    * move-in. Returns the landed file paths. A crash after this leaves
-    * only unreferenced files (invisible to every read, reclaimed by
-    * [[vacuum]]) — the half every committing append shares, exposed for
-    * optimistic transactions that defer the manifest commit. */
-  private[graft] def stageDataFiles(spark: SparkSession, batch: DataFrame,
-                                    cols: Seq[String], path: String,
-                                    manifestRoot: String,
-                                    nFiles: Int): Seq[String] = {
-    val staging = path + ".append_staging_" + java.util.UUID.randomUUID()
-    Layout.zorderWrite(batch, cols, staging, nFiles)
-    enforceStagedConstraints(spark, manifestRoot, staging)
-    Layout.moveStagedIn(spark, staging, path)
+  /** LAND one write into the table's DATA dir without committing any
+    * manifest — the one staging path every writer takes. `write` fills a
+    * fresh, uniquely-named staging dir (two writers never share one, so a
+    * concurrent writer's in-flight files are never overwritten or adopted);
+    * when `gatedBy` names a manifest root, the staged rows must pass that
+    * table's constraint set ([[enforceStagedConstraints]]); then every part
+    * file moves in and the staging dir is dropped. New rows are gated;
+    * survivor and re-layout rewrites only move rows the table already
+    * holds, so they pass None. Returns the landed file paths. A crash
+    * after this leaves only unreferenced files (invisible to every read,
+    * reclaimed by [[vacuum]]) — which is also what lets optimistic
+    * transactions land first and commit the manifest later. */
+  private[graft] def land(spark: SparkSession, path: String,
+                          gatedBy: Option[String])
+                         (write: String => Unit): Seq[String] = {
+    val staging = s"$path.staging_${java.util.UUID.randomUUID()}"
+    write(staging)
+    gatedBy.foreach(enforceStagedConstraints(spark, _, staging))
+    val dir = new org.apache.hadoop.fs.Path(path)
+    val fs = hfs(spark, path)
+    // part-file names embed the writing job's UUID, so moves from distinct
+    // jobs never collide
+    val moved = fs.listStatus(new org.apache.hadoop.fs.Path(staging)).toSeq
+      .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
+      .map { st =>
+        val dest = new org.apache.hadoop.fs.Path(dir, st.getPath.getName)
+        require(fs.rename(st.getPath, dest), s"move failed: ${st.getPath}")
+        dest.toString
+      }
+    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
+    moved
+  }
+
+  /** Manifest rows (stats over `cols`) for freshly landed files; None
+    * when nothing landed. */
+  private[graft] def statsFor(spark: SparkSession, files: Seq[String],
+                              cols: Seq[String]): Option[DataFrame] =
+    if (files.isEmpty) None else Some(Layout.buildManifestFor(spark, files, cols))
+
+  /** The one MANIFEST SWAP every DML planner ends with: vN+1 = `base`
+    * minus the `removed` files, plus the `added` manifest rows, committed
+    * as the next version (see [[commit]]). Returns the version it landed
+    * at. */
+  private[graft] def swapCommit(spark: SparkSession, manifestRoot: String,
+                                base: DataFrame, removed: Seq[String],
+                                added: Option[DataFrame],
+                                tag: Option[String] = None,
+                                markers: Seq[String] = Seq.empty,
+                                contentFiles: Seq[(String, String)] = Seq.empty)
+      : Int =
+    commit(spark, swapped(base, removed, added), manifestRoot, tag, markers,
+      contentFiles)
+
+  private def swapped(base: DataFrame, removed: Seq[String],
+                      added: Option[DataFrame]): DataFrame = {
+    val keep =
+      if (removed.isEmpty) base
+      else base.filter(!col("file").isInCollection(removed))
+    added.fold(keep)(keep.unionByName(_, allowMissingColumns = true))
   }
 
   /** [[appendCommit]] in LOG-STRUCTURED form: the batch is staged and moved
@@ -1164,12 +1170,10 @@ object Snapshots {
                         cols: Seq[String], path: String, manifestRoot: String,
                         nFiles: Int, tag: Option[String] = None,
                         checkpointEvery: Int = 0): (Int, Int) = {
-    val staging = path + ".append_staging_" + java.util.UUID.randomUUID()
-    Layout.zorderWrite(batch, cols, staging, nFiles)
-    enforceStagedConstraints(spark, manifestRoot, staging)
-    val moved = Layout.moveStagedIn(spark, staging, path)
-    val v = commitDelta(spark, manifestRoot,
-      Some(Layout.buildManifestFor(spark, moved, cols)), tag = tag)
+    val moved = land(spark, path, gatedBy = Some(manifestRoot))(
+      Layout.zorderWrite(batch, cols, _, nFiles))
+    val v = commitDelta(spark, manifestRoot, statsFor(spark, moved, cols),
+      tag = tag)
     if (checkpointEvery > 0 &&
         foldInfo(spark, manifestRoot, v).deltasFolded >= checkpointEvery)
       writeCheckpoint(spark, manifestRoot, v)
@@ -1186,9 +1190,8 @@ object Snapshots {
   def replaceCommit(spark: SparkSession, df: DataFrame, cols: Seq[String],
                     path: String, manifestRoot: String,
                     nFiles: Int, tag: Option[String] = None): (Int, Int) = {
-    val staging = path + ".replace_staging_" + java.util.UUID.randomUUID()
-    Layout.zorderWrite(df, cols, staging, nFiles)
-    val moved = Layout.moveStagedIn(spark, staging, path)
+    val moved = land(spark, path, gatedBy = None)(
+      Layout.zorderWrite(df, cols, _, nFiles))
     (commit(spark, Layout.buildManifestFor(spark, moved, cols),
       manifestRoot, tag = tag), moved.size)
   }
@@ -1214,16 +1217,14 @@ object Snapshots {
   def compactCommit(spark: SparkSession, path: String, manifestRoot: String,
                     cols: Seq[String], nFiles: Int,
                     zorderCols: Option[Seq[String]] = None): (Int, Int, Int) = {
-    val v = latestVersion(spark, manifestRoot)
-    val entries = Dv.entries(manifestAt(spark, manifestRoot, v))
-    val staging = path + ".compact_staging_" + java.util.UUID.randomUUID()
+    val h = head(spark, manifestRoot)
+    val entries = Dv.entries(h.manifest)
     // compaction reads LIVE rows: it is also the fold point for deletion
     // vectors — the rewritten files carry no mask, and the superseded
     // sidecars expire with the versions that referenced them
-    Layout.zorderWrite(
-      Dv.readLive(spark, entries, declaredSchemaAt(spark, manifestRoot, v)),
-      zorderCols.getOrElse(cols), staging, nFiles)
-    val moved = Layout.moveStagedIn(spark, staging, path)
+    val moved = land(spark, path, gatedBy = None)(
+      Layout.zorderWrite(Dv.readLive(spark, entries, h.schema),
+        zorderCols.getOrElse(cols), _, nFiles))
     val next = Layout.buildManifestFor(spark, moved, cols)
     (commit(spark, next, manifestRoot), entries.size, moved.size)
   }
@@ -1246,24 +1247,18 @@ object Snapshots {
   def compactSmallCommit(spark: SparkSession, path: String,
                          manifestRoot: String, cols: Seq[String],
                          smallBytes: Long, nFiles: Int): CompactSmallResult = {
-    val v = latestVersion(spark, manifestRoot)
-    val entries = Dv.entries(manifestAt(spark, manifestRoot, v))
+    val h = head(spark, manifestRoot)
+    val entries = Dv.entries(h.manifest)
     val fs = hfs(spark, path)
     val (small, big) = entries.partition { e =>
       fs.getFileStatus(new org.apache.hadoop.fs.Path(e.file)).getLen < smallBytes
     }
     if (small.size < 2)
-      return CompactSmallResult(v, 0, entries.size.toLong, 0)
-    val staging = path + ".compact_small_" + java.util.UUID.randomUUID()
-    Layout.zorderWrite(
-      Dv.readLive(spark, small, declaredSchemaAt(spark, manifestRoot, v)),
-      cols, staging, nFiles)
-    val moved = Layout.moveStagedIn(spark, staging, path)
-    val keep = manifestAt(spark, manifestRoot, v)
-      .filter(col("file").isInCollection(big.map(_.file)))
-    val next = keep.unionByName(Layout.buildManifestFor(spark, moved, cols),
-      allowMissingColumns = true)
-    CompactSmallResult(commit(spark, next, manifestRoot),
+      return CompactSmallResult(h.version, 0, entries.size.toLong, 0)
+    val moved = land(spark, path, gatedBy = None)(
+      Layout.zorderWrite(Dv.readLive(spark, small, h.schema), cols, _, nFiles))
+    CompactSmallResult(swapCommit(spark, manifestRoot, h.manifest,
+        small.map(_.file), statsFor(spark, moved, cols)),
       small.size.toLong, big.size.toLong, moved.size.toLong)
   }
 
@@ -1288,23 +1283,16 @@ object Snapshots {
                           manifestRoot: String, cols: Seq[String],
                           scope: Column, nFiles: Int,
                           zorderCols: Option[Seq[String]] = None): CompactScopedResult = {
-    val v = latestVersion(spark, manifestRoot)
-    val manifest = pinLocal(Dv.ensureDv(manifestAt(spark, manifestRoot, v)))
-    val total = localCount(manifest)
-    val selected = Dv.entries(manifest.filter(scope))
+    val h = head(spark, manifestRoot)
+    val total = localCount(h.manifest)
+    val selected = Dv.entries(h.manifest.filter(scope))
     if (selected.size < 2 && !selected.exists(_.dv.isDefined))
-      return CompactScopedResult(v, 0, total, 0)
-    val staging = path + ".compact_scoped_" + java.util.UUID.randomUUID()
-    Layout.zorderWrite(
-      Dv.readLive(spark, selected, declaredSchemaAt(spark, manifestRoot, v)),
-      zorderCols.getOrElse(cols), staging, nFiles)
-    val moved = Layout.moveStagedIn(spark, staging, path)
-    val keep =
-      manifest.filter(!col("file").isInCollection(selected.map(_.file)))
-    val next = keep.unionByName(
-      Layout.buildManifestFor(spark, moved, cols),
-      allowMissingColumns = true)
-    CompactScopedResult(commit(spark, next, manifestRoot),
+      return CompactScopedResult(h.version, 0, total, 0)
+    val moved = land(spark, path, gatedBy = None)(
+      Layout.zorderWrite(Dv.readLive(spark, selected, h.schema),
+        zorderCols.getOrElse(cols), _, nFiles))
+    CompactScopedResult(swapCommit(spark, manifestRoot, h.manifest,
+        selected.map(_.file), statsFor(spark, moved, cols)),
       selected.size.toLong, total - selected.size, moved.size.toLong)
   }
 
@@ -1340,11 +1328,10 @@ object Snapshots {
                                nFiles: Int,
                                full: Boolean = false): ClusterResult = {
     require(clusterCols.nonEmpty, "incremental clustering needs keys")
-    val v = latestVersion(spark, manifestRoot)
-    val manifest0 = Dv.ensureDv(manifestAt(spark, manifestRoot, v))
-    val manifest = pinLocal(
-      if (manifest0.columns.contains(ClusteredCol)) manifest0
-      else manifest0.withColumn(ClusteredCol, lit(null).cast("boolean")))
+    val h = head(spark, manifestRoot)
+    val manifest =
+      if (h.manifest.columns.contains(ClusteredCol)) h.manifest
+      else h.manifest.withColumn(ClusteredCol, lit(null).cast("boolean"))
     val flagged = manifest
       .select(col("file"), col("dv"), col(ClusteredCol)).collect().toSeq
       .map(r => (Dv.Entry(r.getString(0), Option(r.getString(1))),
@@ -1355,25 +1342,17 @@ object Snapshots {
       !full && isClustered && e.dv.isEmpty
     }
     if (rewrite.isEmpty)
-      return ClusterResult(v, 0, keep.size.toLong, 0)
+      return ClusterResult(h.version, 0, keep.size.toLong, 0)
     // increment-proportional output width: a 1-file append re-clusters
     // into ~1 file, a first-time OPTIMIZE into the table's full width
     val nOut = math.max(1, math.ceil(
       nFiles.toDouble * rewrite.size / flagged.size).toInt)
-    val staging = path + ".cluster_staging_" + java.util.UUID.randomUUID()
-    Layout.zorderWrite(
-      Dv.readLive(spark, rewrite.map(_._1),
-        declaredSchemaAt(spark, manifestRoot, v)),
-      clusterCols, staging, nOut)
-    val moved = Layout.moveStagedIn(spark, staging, path)
-    val keepM =
-      if (keep.isEmpty) manifest.filter(lit(false))
-      else manifest.filter(col("file").isInCollection(keep.map(_._1.file)))
-    val next = keepM.unionByName(
-      Layout.buildManifestFor(spark, moved, cols)
-        .withColumn(ClusteredCol, lit(true)),
-      allowMissingColumns = true)
-    ClusterResult(commit(spark, next, manifestRoot),
+    val moved = land(spark, path, gatedBy = None)(
+      Layout.zorderWrite(Dv.readLive(spark, rewrite.map(_._1), h.schema),
+        clusterCols, _, nOut))
+    ClusterResult(swapCommit(spark, manifestRoot, manifest,
+        rewrite.map(_._1.file), statsFor(spark, moved, cols)
+          .map(_.withColumn(ClusteredCol, lit(true)))),
       rewrite.size.toLong, keep.size.toLong, moved.size.toLong)
   }
 
@@ -1406,12 +1385,10 @@ object Snapshots {
                   nFiles: Int): MergeResult = {
     require(cols.contains(key),
       s"merge key $key needs manifest stats — not in ${cols.mkString(",")}")
-    val manifest =
-      pinLocal(Dv.ensureDv(manifestAt(spark, manifestRoot,
-        latestVersion(spark, manifestRoot))))
-    val total = localCount(manifest)
+    val h = head(spark, manifestRoot)
+    val total = localCount(h.manifest)
     val hit = source.select(col(key).cast("double").as("k")).distinct()
-      .join(broadcast(manifest.select(col("file"),
+      .join(broadcast(h.manifest.select(col("file"),
           col(s"min_$key").cast("double").as("lo"),
           col(s"max_$key").cast("double").as("hi"))),
         col("k") >= col("lo") && col("k") <= col("hi"))
@@ -1424,9 +1401,8 @@ object Snapshots {
         // live rows only: a merge rewriting a DV-masked file must not
         // resurrect its masked rows (the rewrite folds the mask away)
         val hitRows = Dv.readLive(spark,
-          Dv.entries(manifest.filter(col("file").isInCollection(hit))),
-          declaredSchemaAt(spark, manifestRoot,
-            latestVersion(spark, manifestRoot)))
+          Dv.entries(h.manifest.filter(col("file").isInCollection(hit))),
+          h.schema)
         // ONE aggregate job yields all three metric scalars (rows
         // updated = touched-target rows sharing a key with the source;
         // matched source rows; source total): per-key counts on each
@@ -1451,16 +1427,10 @@ object Snapshots {
           at(0), at(1), at(2))
       }
     val inserted = srcTotal - matchedSrc
-    val staging = path + ".merge_staging_" + java.util.UUID.randomUUID()
-    Layout.zorderWrite(newData, cols, staging, nFiles)
-    enforceStagedConstraints(spark, manifestRoot, staging)
-    val moved = Layout.moveStagedIn(spark, staging, path)
-    val keep =
-      if (hit.isEmpty) manifest
-      else manifest.filter(!col("file").isInCollection(hit))
-    val next = keep.unionByName(Layout.buildManifestFor(spark, moved, cols),
-      allowMissingColumns = true)
-    MergeResult(commit(spark, next, manifestRoot), hit.size.toLong, total,
+    val moved = land(spark, path, gatedBy = Some(manifestRoot))(
+      Layout.zorderWrite(newData, cols, _, nFiles))
+    MergeResult(swapCommit(spark, manifestRoot, h.manifest, hit,
+        statsFor(spark, moved, cols)), hit.size.toLong, total,
       updated, inserted)
   }
 
@@ -1562,9 +1532,8 @@ object Snapshots {
     require(dup.isEmpty,
       s"MERGE source has duplicate key tuples (e.g. ${dup.headOption}) — " +
         "a target row matched twice has no deterministic outcome")
-    val manifest =
-      pinLocal(Dv.ensureDv(manifestAt(spark, manifestRoot,
-        latestVersion(spark, manifestRoot))))
+    val h = head(spark, manifestRoot)
+    val manifest = h.manifest
     val total = localCount(manifest)
     // touch set: distinct source key tuples × broadcast manifest, file
     // hit iff the tuple sits inside the file's stats box on EVERY key
@@ -1595,12 +1564,10 @@ object Snapshots {
       if (hit.isEmpty) None
       else Some(Dv.readLive(spark,
           Dv.entries(manifest.filter(col("file").isInCollection(hit))),
-          declaredSchemaAt(spark, manifestRoot,
-            latestVersion(spark, manifestRoot))))
+          h.schema))
     val targetSchema = targetSchemaHint.getOrElse(
       rawHitRows.map(_.schema).getOrElse(
-        tableAt(spark, manifestRoot,
-          latestVersion(spark, manifestRoot)).schema))
+        tableAt(spark, manifestRoot, h.version).schema))
     // align touched rows to the target schema: declared columns the data
     // files don't carry yet serve as typed nulls (the footer-merge
     // null-fill, applied to the rewrite input)
@@ -1705,16 +1672,10 @@ object Snapshots {
     val pieces = survivors.toSeq ++ matchedKept.toSeq ++ Seq(insRows)
     val newData = pieces.reduce(
       _.unionByName(_, allowMissingColumns = true))
-    val staging = path + ".merge_staging_" + java.util.UUID.randomUUID()
-    Layout.zorderWrite(newData, cols, staging, nFiles)
-    enforceStagedConstraints(spark, manifestRoot, staging)
-    val moved = Layout.moveStagedIn(spark, staging, path)
-    val keep =
-      if (hit.isEmpty) manifest
-      else manifest.filter(!col("file").isInCollection(hit))
-    val next = keep.unionByName(Layout.buildManifestFor(spark, moved, cols),
-      allowMissingColumns = true)
-    MergeFullResult(commit(spark, next, manifestRoot), hit.size.toLong,
+    val moved = land(spark, path, gatedBy = Some(manifestRoot))(
+      Layout.zorderWrite(newData, cols, _, nFiles))
+    MergeFullResult(swapCommit(spark, manifestRoot, manifest, hit,
+        statsFor(spark, moved, cols)), hit.size.toLong,
       total, updated + bsUpdated, inserted, deleted + bsDeleted)
   }
 
@@ -1749,9 +1710,8 @@ object Snapshots {
                           deletePred: org.apache.spark.sql.Column): MergeFullResult = {
     require(cols.contains(key),
       s"merge key $key needs manifest stats — not in ${cols.mkString(",")}")
-    val manifest =
-      pinLocal(Dv.ensureDv(manifestAt(spark, manifestRoot,
-        latestVersion(spark, manifestRoot))))
+    val h = head(spark, manifestRoot)
+    val manifest = h.manifest
     val total = localCount(manifest)
     val keyHit = source.select(col(key).cast("double").as("k")).distinct()
       .join(broadcast(manifest.select(col("file"),
@@ -1769,8 +1729,7 @@ object Snapshots {
       else {
         val hitRows = Dv.readLive(spark,
           Dv.entries(manifest.filter(col("file").isInCollection(hit))),
-          declaredSchemaAt(spark, manifestRoot,
-            latestVersion(spark, manifestRoot)))
+          h.schema)
           .localCheckpoint()
         val hitKeys = hitRows.select(col(key)).distinct().localCheckpoint()
         val unmatched = hitRows.join(srcKeys, Seq(key), "left_anti")
@@ -1784,16 +1743,10 @@ object Snapshots {
       .map(_.unionByName(source, allowMissingColumns = true))
       .getOrElse(source)
     val inserted = source.count() - matchedSrc
-    val staging = path + ".merge_staging_" + java.util.UUID.randomUUID()
-    Layout.zorderWrite(newData, cols, staging, nFiles)
-    enforceStagedConstraints(spark, manifestRoot, staging)
-    val moved = Layout.moveStagedIn(spark, staging, path)
-    val keep =
-      if (hit.isEmpty) manifest
-      else manifest.filter(!col("file").isInCollection(hit))
-    val next = keep.unionByName(Layout.buildManifestFor(spark, moved, cols),
-      allowMissingColumns = true)
-    MergeFullResult(commit(spark, next, manifestRoot), hit.size.toLong,
+    val moved = land(spark, path, gatedBy = Some(manifestRoot))(
+      Layout.zorderWrite(newData, cols, _, nFiles))
+    MergeFullResult(swapCommit(spark, manifestRoot, manifest, hit,
+        statsFor(spark, moved, cols)), hit.size.toLong,
       total, updated, inserted, deleted)
   }
 
@@ -1838,10 +1791,12 @@ object Snapshots {
   def commitTxn(spark: SparkSession, manifestRoot: String, txn: Txn,
                 contentFiles: Seq[(String, String)] = Seq.empty)
       : TxnResult = {
+    val fs = hfs(spark, manifestRoot)
     var attempts = 0
     while (attempts < 100) {
       attempts += 1
-      val latest = latestVersion(spark, manifestRoot)
+      val h = head(spark, manifestRoot)
+      val latest = h.version
       if (latest > txn.readVersion) {
         val mine = txn.readSet ++ txn.removes
         var prev = Dv.entries(manifestAt(spark, manifestRoot,
@@ -1853,8 +1808,7 @@ object Snapshots {
             if (!isDelta(spark, manifestRoot, v))
               Dv.entries(manifestAt(spark, manifestRoot, v)).toSet
             else {
-              val rows = Dv.ensureDv(
-                  spark.read.parquet(s"$manifestRoot/v=$v"))
+              val rows = Dv.ensureDv(versionRows(spark, manifestRoot, v))
                 .select(col("file"), col("dv"), col(ActionCol)).collect()
               val touched = rows.map(_.getString(0)).toSet
               prev.filterNot(e => touched.contains(e.file)) ++
@@ -1870,54 +1824,29 @@ object Snapshots {
           prev = cur
         }
       }
-      val base = pinLocal(Dv.ensureDv(manifestAt(spark, manifestRoot, latest)))
-      val keep =
-        if (txn.removes.isEmpty) base
-        else base.filter(!col("file").isInCollection(txn.removes.toSeq))
-      val next = txn.adds match {
-        case Some(a) => keep.unionByName(Dv.ensureDv(a),
-          allowMissingColumns = true)
-        case None => keep
-      }
-      // CAS at exactly latest+1: if another writer takes the slot first we
-      // must NOT slide to the next free one (that would skip re-diffing
-      // its commit) — re-enter the loop and re-check instead.
-      val fs = hfs(spark, manifestRoot)
-      val tmp = new org.apache.hadoop.fs.Path(
-        s"$manifestRoot/.tmp_${java.util.UUID.randomUUID()}")
-      next.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       // content markers (e.g. a cross-table txn's pending marker) become
       // visible in the same atomic rename as the manifest
-      contentFiles.foreach { case (name, body) =>
-        require(name.startsWith("_"),
-          s"content marker must be underscore-prefixed: $name")
-        val out = fs.create(new org.apache.hadoop.fs.Path(tmp, name), true)
-        out.write(body.getBytes("UTF-8")); out.close()
-      }
-      val dest = new org.apache.hadoop.fs.Path(s"$manifestRoot/v=${latest + 1}")
-      // the slot above the visible head may be held by ANOTHER txn's
-      // unresolved stage — that is a held write lock, not a lost race:
-      // spinning would never free it, so refuse loudly like every other
-      // writer does
-      if (fs.exists(dest) &&
-          unresolvedStage(spark, manifestRoot, latest + 1)) {
-        fs.delete(tmp, true)
+      val staged = stageVersion(spark, manifestRoot,
+        swapped(h.manifest, txn.removes.toSeq, txn.adds.map(Dv.ensureDv)),
+        tag = None, delta = false, markers = Seq.empty, contentFiles)
+      // CAS at exactly latest+1: if another writer takes the slot first we
+      // must NOT slide to the next free one (that would skip re-diffing
+      // its commit) — re-enter the loop and re-check instead. The slot
+      // may be held by ANOTHER txn's unresolved stage — that is a held
+      // write lock, not a lost race: spinning would never free it, so
+      // refuse loudly like every other writer does
+      val slot = latest + 1
+      if (fs.exists(new org.apache.hadoop.fs.Path(s"$manifestRoot/v=$slot")) &&
+          unresolvedStage(spark, manifestRoot, slot)) {
+        fs.delete(staged.dir, true)
         throw new IllegalStateException(
-          s"$manifestRoot v=${latest + 1} is an unresolved cross-table " +
+          s"$manifestRoot v=$slot is an unresolved cross-table " +
             "transaction stage — concurrent write refused (commit or " +
             "abort the transaction first)")
       }
-      val won =
-        if (fs.exists(dest)) false
-        else if (fs.rename(tmp, dest)) {
-          val nested = new org.apache.hadoop.fs.Path(dest, tmp.getName)
-          if (fs.exists(nested)) { // local-FS rename-into semantics: lost
-            require(fs.rename(nested, tmp), s"un-nest failed: $nested")
-            false
-          } else true
-        } else false
-      if (won) return TxnResult(latest + 1, latest - txn.readVersion)
-      fs.delete(tmp, true)
+      if (claimSlot(spark, manifestRoot, staged, slot))
+        return TxnResult(slot, latest - txn.readVersion)
+      fs.delete(staged.dir, true)
     }
     throw new IllegalStateException(
       s"optimistic commit gave up after $attempts attempts under $manifestRoot")
@@ -2591,7 +2520,12 @@ object Snapshots {
     val vs = versions(spark, manifestRoot)
     require(vs.nonEmpty, s"no committed versions under $manifestRoot")
     val (drop, keep) = vs.splitAt((vs.size - retainLast).max(0))
-    val retained = keep.map(v => Dv.entries(manifestAt(spark, manifestRoot, v)))
+    // a txn stage in the kept range is read raw ([[manifestAt]] refuses
+    // it): an unresolved stage's files must outlive the vacuum, since its
+    // txn may still commit
+    val retained = keep.map(v => Dv.entries(
+      if (txnVisible(spark, manifestRoot, v)) manifestAt(spark, manifestRoot, v)
+      else versionRows(spark, manifestRoot, v)))
     val referenced = retained.flatten.map(e => Layout.fileName(e.file)).toSet
     val dir = new org.apache.hadoop.fs.Path(path)
     val fs = hfs(spark, path)
@@ -2949,11 +2883,10 @@ object Snapshots {
   private def orphanCount(spark: SparkSession, df: DataFrame, column: String,
                           parentManifestRoot: String,
                           parentKey: String): Long = {
-    val parent = Dv.readLive(spark, Dv.entries(Dv.ensureDv(
-        manifestAt(spark, parentManifestRoot,
-          latestVersion(spark, parentManifestRoot)))),
-      declaredSchemaAt(spark, parentManifestRoot,
-        latestVersion(spark, parentManifestRoot)))
+    val pv = latestVersion(spark, parentManifestRoot)
+    val parent = Dv.readLive(spark,
+        Dv.entries(manifestAt(spark, parentManifestRoot, pv)),
+        declaredSchemaAt(spark, parentManifestRoot, pv))
       .select(col(parentKey).as("_fk_p")).distinct()
     df.filter(col(column).isNotNull)
       .select(col(column).as("_fk_c")).distinct()
@@ -2978,16 +2911,22 @@ object Snapshots {
   }
 
   /** The write-path enforcement seam: validate a finished staging dir
-    * against the constraint set in force, in ONE fused counting pass over
-    * the staged bytes (zero extra compute of the input frame — the rows
-    * were just written; reading them back costs one local columnar scan).
-    * A violation deletes the staging dir and aborts: nothing was moved or
-    * referenced, so the table stays byte-identical. No-op (and no read)
-    * when the table has no constraints. */
+    * against the constraint set in force at the log head NOW (at staging
+    * time, so a concurrent ADD CONSTRAINT that landed after the writer
+    * planned still gates it), resolved once for both legs. The FOREIGN
+    * KEY leg runs first: a batch-keys-bounded anti-join per edge (see
+    * [[orphanCount]]); the CHECK and NOT NULL constraints then share ONE
+    * fused counting pass over the staged bytes (zero extra compute of the
+    * input frame — the rows were just written; reading them back costs
+    * one local columnar scan). A violation deletes the staging dir and
+    * aborts: nothing was moved or referenced, so the table stays
+    * byte-identical. No-op (and no read) when the table has no
+    * constraints. */
   private def enforceStagedConstraints(spark: SparkSession,
                                        manifestRoot: String,
                                        staging: String): Unit = {
     val v = latestVersion(spark, manifestRoot)
+    val fks = foreignKeys(spark, manifestRoot, v).toSeq.sortBy(_._1)
     val cs = checkConstraints(spark, manifestRoot, v).toSeq.sorted
     // NOT NULL (the OTHER write-side contract a Databricks table
     // carries): declared-nullable=false columns gate alongside the CHECK
@@ -2997,59 +2936,37 @@ object Snapshots {
     val nn = declaredSchemaAt(spark, manifestRoot, v)
       .map(_.fields.filter(!_.nullable).map(_.name).toSeq)
       .getOrElse(Seq.empty)
-    // FK enforcement runs first: its per-edge anti-join is separate from
-    // the fused aggregate below, and both share the abort discipline
-    enforceStagedForeignKeys(spark, manifestRoot, staging)
-    if (cs.isEmpty && nn.isEmpty) return
-    val df = spark.read.parquet(staging)
+    if (fks.isEmpty && cs.isEmpty && nn.isEmpty) return
+    val df = Dv.readDir(spark, staging)
     val present = df.columns.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
+    def reject(what: String): Nothing = {
+      val p = new org.apache.hadoop.fs.Path(staging)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(p, true) : Unit
+      throw new ConstraintViolationException(
+        s"$what — staging dropped, nothing committed")
+    }
+    fks.foreach { case (name, (column, parentRoot, parentKey)) =>
+      if (present(column.toLowerCase(java.util.Locale.ROOT))) {
+        val orphans = orphanCount(spark, df, column, parentRoot, parentKey)
+        if (orphans > 0)
+          reject(s"FOREIGN KEY '$name' ($column → $parentKey) violated by " +
+            s"$orphans staged rows with no parent")
+      }
+    }
     val nnHere = nn.filter(c =>
       present(c.toLowerCase(java.util.Locale.ROOT))).sorted
     val checks: Seq[(String, org.apache.spark.sql.Column)] =
       cs.map { case (n, c) =>
         s"CHECK constraint '$n' ($c)" -> !coalesce(expr(c), lit(true)) } ++
       nnHere.map(c => s"NOT NULL constraint on '$c'" -> col(c).isNull)
+    if (checks.isEmpty) return
     val aggs = checks.zipWithIndex.map { case ((_, bad), i) =>
       sum(when(bad, 1L).otherwise(0L)).as(s"_c$i") }
     val row = df.agg(aggs.head, aggs.tail: _*).head()
     checks.zipWithIndex.foreach { case ((what, _), i) =>
       val bad = if (row.isNullAt(i)) 0L else row.getLong(i)
-      if (bad > 0) {
-        val p = new org.apache.hadoop.fs.Path(staging)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .delete(p, true) : Unit
-        throw new ConstraintViolationException(
-          s"$what violated by $bad staged rows — " +
-            "staging dropped, nothing committed")
-      }
-    }
-  }
-
-  /** The FOREIGN KEY leg of the write gate — separate from the fused
-    * CHECK/NOT-NULL aggregate because it needs a join, but still
-    * batch-keys-bounded (see [[orphanCount]]). Same abort discipline:
-    * orphans drop the staging dir, nothing moves. */
-  private def enforceStagedForeignKeys(spark: SparkSession,
-                                       manifestRoot: String,
-                                       staging: String): Unit = {
-    val v = latestVersion(spark, manifestRoot)
-    val fks = foreignKeys(spark, manifestRoot, v).toSeq.sortBy(_._1)
-    if (fks.isEmpty) return
-    val df = spark.read.parquet(staging)
-    val present = df.columns.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
-    fks.foreach { case (name, (column, parentRoot, parentKey)) =>
-      if (present(column.toLowerCase(java.util.Locale.ROOT))) {
-        val orphans = orphanCount(spark, df, column, parentRoot, parentKey)
-        if (orphans > 0) {
-          val p = new org.apache.hadoop.fs.Path(staging)
-          p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .delete(p, true) : Unit
-          throw new ConstraintViolationException(
-            s"FOREIGN KEY '$name' ($column → $parentKey) violated by " +
-              s"$orphans staged rows with no parent — staging dropped, " +
-              "nothing committed")
-        }
-      }
+      if (bad > 0) reject(s"$what violated by $bad staged rows")
     }
   }
 
@@ -3080,45 +2997,30 @@ object Snapshots {
       s"REPLACE WHERE batch has $escaped rows OUTSIDE the replaced " +
         "predicate — a scoped overwrite cannot smuggle rows past its " +
         "scope; nothing committed")
-    val manifest =
-      pinLocal(Dv.ensureDv(manifestAt(spark, manifestRoot,
-        latestVersion(spark, manifestRoot))))
-    val total = localCount(manifest)
-    val hit = Dv.entries(manifest.filter(prune))
+    val h = head(spark, manifestRoot)
+    val total = localCount(h.manifest)
+    val hit = Dv.entries(h.manifest.filter(prune))
     // whole-file drops (same proof as [[deleteWherePred]]): the daily
     // `REPLACE WHERE run_date = X` re-land is THE partition-overwrite
     // workload — on a date-clustered layout the old partition's files are
     // fully covered, so the replace removes them metadata-only and pays
     // for writing the new batch, not rewriting the old one
-    val dropped = wholeFileDrops(spark, manifest, prune, cover)
+    val dropped = wholeFileDrops(spark, h.manifest, prune, cover)
     val rewrite = hit.filterNot(e => dropped.contains(e.file))
-    // batch stages (and constraint-checks) FIRST: a rejected batch aborts
-    // before any survivor rewrite work is spent or moved
-    val bStaging = path + ".replace_batch_" + java.util.UUID.randomUUID()
-    Layout.zorderWrite(batch, cols, bStaging, nFiles)
-    enforceStagedConstraints(spark, manifestRoot, bStaging)
+    // batch lands (and constraint-checks) FIRST: a rejected batch aborts
+    // before any survivor rewrite work is spent
+    val bMoved = land(spark, path, gatedBy = Some(manifestRoot))(
+      Layout.zorderWrite(batch, cols, _, nFiles))
     val (survivorFiles, deleted) =
       if (rewrite.isEmpty) (Seq.empty[String], 0L)
       else {
-        val live = Dv.readLive(spark, rewrite,
-          declaredSchemaAt(spark, manifestRoot,
-            latestVersion(spark, manifestRoot)))
+        val live = Dv.readLive(spark, rewrite, h.schema)
         val del = live.filter(pred).count()
-        val sStaging = path + ".replace_surv_" + java.util.UUID.randomUUID()
-        live.filter(!coalesce(pred, lit(false)))
-          .write.mode("overwrite").parquet(sStaging)
-        (Layout.moveStagedIn(spark, sStaging, path), del)
+        (land(spark, path, gatedBy = None)(
+          live.filter(!coalesce(pred, lit(false))).write.parquet(_)), del)
       }
-    val bMoved = Layout.moveStagedIn(spark, bStaging, path)
-    val keep =
-      if (hit.isEmpty) manifest
-      else manifest.filter(!col("file").isInCollection(hit.map(_.file)))
-    val adds = survivorFiles ++ bMoved
-    val next =
-      if (adds.isEmpty) keep
-      else keep.unionByName(Layout.buildManifestFor(spark, adds, cols),
-        allowMissingColumns = true)
-    ReplaceResult(commit(spark, next, manifestRoot), rewrite.size.toLong,
+    ReplaceResult(swapCommit(spark, manifestRoot, h.manifest, hit.map(_.file),
+        statsFor(spark, survivorFiles ++ bMoved, cols)), rewrite.size.toLong,
       total, deleted + dropped.values.sum, bMoved.size.toLong,
       dropped.size.toLong)
   }

@@ -135,12 +135,12 @@ object LakeTxn {
     try {
       stages.foreach { st =>
         val spec = specOf(st.name)
-        val moved = Snapshots.stageDataFiles(spark, st.batch, spec.cols,
-          spec.path, spec.manifestRoot, spec.nFiles)
-        val adds = graft.sinks.Layout.buildManifestFor(spark, moved,
-          spec.cols)
+        val moved = Snapshots.land(spark, spec.path,
+            gatedBy = Some(spec.manifestRoot))(
+          graft.sinks.Layout.zorderWrite(st.batch, spec.cols, _, spec.nFiles))
         val r = Snapshots.commitTxn(spark, spec.manifestRoot,
-          Snapshots.Txn(st.readVersion, Set.empty, Some(adds), st.readSet),
+          Snapshots.Txn(st.readVersion, Set.empty,
+            Snapshots.statsFor(spark, moved, spec.cols), st.readSet),
           contentFiles = Seq(Snapshots.TxnPendingMarker -> s"$txnDir\n$id"))
         staged += st.name -> r.version
       }

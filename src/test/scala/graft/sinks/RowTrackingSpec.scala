@@ -68,4 +68,45 @@ class RowTrackingSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("DV-masked"))
   }
+
+  test("appendTracked appends past an aborted txn stage at the raw log tail") {
+    val root = tmpDir("rt4")
+    val (t, m) = (s"$root/t", s"$root/m")
+    def batch(ks: Range) = ks.map(k => (k.toLong, k.toDouble)).toDF("k", "v")
+    val (v1, _) = RowTracking.appendTracked(spark, batch(0 until 20),
+      Seq("k"), t, m, nFiles = 1)
+    // a cross-table txn stages the next slot, then aborts
+    val (txnDir, id) = (s"$root/txn", "t1")
+    val (staged, _) = Snapshots.appendCommit(spark, batch(100 until 110),
+      Seq("k"), t, m, 1,
+      contentFiles = Seq(Snapshots.TxnPendingMarker -> s"$txnDir\n$id"))
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.create(new org.apache.hadoop.fs.Path(txnDir, s"abort_$id")).close()
+    assert(Snapshots.latestVersion(spark, m) == v1)
+    val (v3, _) = RowTracking.appendTracked(spark, batch(20 until 30),
+      Seq("k"), t, m, nFiles = 1)
+    assert(v3 == staged + 1)
+    val at3 = ids(root, v3)
+    assert(at3.keySet == (0L until 30L).toSet,
+      "the aborted stage's rows must never be served")
+    assert(at3.values.toSeq.distinct.size == 30)
+    ids(root, v1).foreach { case (k, rid) => assert(at3(k) == rid) }
+  }
+
+  test("appendTracked enforces the table's CHECK constraints") {
+    val root = tmpDir("rt5")
+    val (t, m) = (s"$root/t", s"$root/m")
+    def batch(ks: Range) = ks.map(k => (k.toLong, k.toDouble)).toDF("k", "v")
+    RowTracking.appendTracked(spark, batch(0 until 10), Seq("k"), t, m, 1)
+    Snapshots.addConstraint(spark, m, "k_small", "k < 100")
+    val before = Snapshots.versions(spark, m)
+    intercept[Snapshots.ConstraintViolationException] {
+      RowTracking.appendTracked(spark, batch(95 until 105), Seq("k"), t, m, 1)
+    }
+    assert(Snapshots.versions(spark, m) == before, "nothing committed")
+    val (v, _) = RowTracking.appendTracked(spark, batch(10 until 20),
+      Seq("k"), t, m, 1)
+    assert(ids(root, v).keySet == (0L until 20L).toSet)
+  }
 }

@@ -395,4 +395,38 @@ class SnapshotsSpec extends SparkSpec {
     // identical manifests (no file change at all) are trivially invisible
     assert(Snapshots.relayoutInvisible(spark, s"$dir/m", vd, vd))
   }
+
+  test("DELETE and PURGE stage into their own dirs: a foreign in-flight " +
+      "staging write survives and is never adopted") {
+    val (dir, _) = freshLayout()
+    val (z, m) = (s"$dir/z", s"$dir/m")
+    val conf = spark.sparkContext.hadoopConfiguration
+    // another writer's in-flight staging output under the fixed names the
+    // delete and purge paths once shared
+    val foreign = Seq("delete_staging", "purge_staging").map { suffix =>
+      spark.range(3).coalesce(1).write.parquet(s"$z.$suffix")
+      val d = new org.apache.hadoop.fs.Path(s"$z.$suffix")
+      d.getFileSystem(conf).listStatus(d).map(_.getPath)
+        .find(_.getName.startsWith("part-")).get
+    }
+    val res = Snapshots.deleteWherePred(spark, z, m, Seq("x", "y"),
+      Layout.intersectsExpr(Seq(("x", 100.0, 199.0))),
+      Layout.inBoxExpr(Seq(("x", 100.0, 199.0))))
+    assert(res.rowsDeleted == data.filter(col("x").between(100, 199)).count())
+    Dv.deleteWhereMoR(spark, z, m, Seq(("y", 0.0, 49.0)))
+    val live = data.filter(!col("x").between(100, 199) &&
+      !col("y").between(0, 49))
+    val purged = Dv.purgeDv(spark, z, m, Seq("x", "y"))
+    assert(purged.filesPurged > 0)
+    val head = Snapshots.latestVersion(spark, m)
+    assert(Snapshots.tableAt(spark, m, head).select("id", "x", "y")
+      .exceptAll(live).isEmpty)
+    assert(Snapshots.tableAt(spark, m, head).count() == live.count())
+    val referenced = Dv.entries(Snapshots.manifestAt(spark, m, head))
+      .map(e => Layout.fileName(e.file)).toSet
+    foreign.foreach { p =>
+      assert(p.getFileSystem(conf).exists(p), s"$p was overwritten")
+      assert(!referenced.contains(p.getName), s"$p was adopted")
+    }
+  }
 }

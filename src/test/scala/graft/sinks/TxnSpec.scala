@@ -51,6 +51,17 @@ class TxnSpec extends SparkSpec {
     assert(Snapshots.versions(spark, s"$dir/m") == Seq(1, 2))
   }
 
+  test("commitTxn versions carry a commit timestamp") {
+    val (dir, v1) = freshLayout()
+    val fs = manifestFiles(dir, v1)
+    val r = Snapshots.commitTxn(spark, s"$dir/m",
+      Snapshots.Txn(v1, Set(fs.head), None, Set(fs.head)))
+    val ts = Snapshots.commitTimestamp(spark, s"$dir/m", r.version)
+    assert(ts.isDefined, "a txn commit must be stamped like any other")
+    val now = math.max(System.currentTimeMillis(), ts.get)
+    assert(Snapshots.versionAtTimestamp(spark, s"$dir/m", now) == r.version)
+  }
+
   test("losing the CAS slot is not a conflict: re-diff and land on the next") {
     val (dir, v1) = freshLayout()
     // another writer takes v=2 with an identical manifest (no removals)

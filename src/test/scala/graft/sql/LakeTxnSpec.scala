@@ -149,6 +149,39 @@ class LakeTxnSpec extends SparkSpec {
     LakeSql.unregister("tx_orders"); LakeSql.unregister("tx_cust")
   }
 
+  test("a publish that conflicts on its second table keeps the first " +
+      "table's aborted stage out of timestamp travel and retention") {
+    import spark.implicits._
+    val root = fixture("txn5")
+    val pins = LakeTxn.snapshotAll(spark, Seq("tx_orders", "tx_cust"))
+    val ordRoot = LakeSql.specOf("tx_orders").get.manifestRoot
+    val cust = LakeSql.specOf("tx_cust").get
+    val readSet = graft.sinks.Dv.entries(
+      Snapshots.manifestAt(spark, ordRoot, pins("tx_orders")))
+      .map(_.file).toSet
+    fd("DELETE FROM tx_orders WHERE k = 1")
+    intercept[Snapshots.CommitConflictException](
+      LakeTxn.publishOptimistic(spark, s"$root/txnlog_ts", Seq(
+        LakeTxn.OptimisticStage("tx_cust",
+          Seq((40L, "d")).toDF("c", "n"), pins("tx_cust")),
+        LakeTxn.OptimisticStage("tx_orders",
+          Seq((8L, 80.0)).toDF("k", "v"), pins("tx_orders"), readSet))))
+    // the cust stage took the slot above its head, then was aborted
+    val aborted = pins("tx_cust") + 1
+    assert(Snapshots.versions(spark, cust.manifestRoot) ==
+      Seq(pins("tx_cust"), aborted))
+    val stamp = Snapshots.commitTimestamp(spark, cust.manifestRoot, aborted)
+    assert(stamp.isDefined)
+    assert(Snapshots.versionAtTimestamp(spark, cust.manifestRoot,
+      stamp.get) == pins("tx_cust"), "AS OF resolved to an aborted stage")
+    // retention at that instant keeps the version that was live then
+    Snapshots.vacuumRetention(spark, cust.path, cust.manifestRoot, stamp.get)
+    assert(Snapshots.versions(spark, cust.manifestRoot).contains(pins("tx_cust")))
+    assert(fd("SELECT sum(c) AS s FROM tx_cust").head().getLong(0) == 30L,
+      "retention expired the visible version or the aborted rows leaked")
+    LakeSql.unregister("tx_orders"); LakeSql.unregister("tx_cust")
+  }
+
   test("STREAMING txn visibility: an unresolved stage is never emitted, " +
       "an aborted stage's rows never stream, a committed stage streams " +
       "after its marker, and VERSION AS OF a staged version refuses") {
