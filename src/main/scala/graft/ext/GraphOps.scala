@@ -23,6 +23,11 @@ import org.apache.spark.sql.functions._
   */
 object GraphOps {
 
+  /** Estimated bytes of one (node, rank) row in a broadcast rank vector:
+    * an UnsafeRow's null bitset, the double, the string's offset word and
+    * a short vertex key. */
+  private[ext] val RankRowBytes = 48L
+
   /** PageRank over a directed edge list (`src`, `dst` string columns),
     * uniform init 1/N, fixed iteration count, no dangling-mass
     * redistribution (dangling nodes keep contributing nothing — the
@@ -55,22 +60,26 @@ object GraphOps {
         e.groupBy(col("src"))
           .agg(count(lit(1)).cast("double").as("outdeg")), "src")
       .localCheckpoint()
+    // the rank vector is O(vertices) — broadcast it onto the (much
+    // wider) edge list so the join never shuffles edges; only the
+    // per-destination aggregate shuffles, and it shuffles partial
+    // aggregates, not edges (guide §2.4/§3.1). The hint is gated on the
+    // session's broadcast threshold: a vertex set whose rank vector
+    // (estimated at RankRowBytes per vertex) outgrows it drops the hint,
+    // and both sides shuffle-join on the vertex key — ranks identical.
+    val threshold = edges.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val small = threshold >= 0 && n * RankRowBytes <= threshold
+    def vertexSide(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     var rank = nodes.select(col("node"), (lit(1.0) / lit(n)).as("rank"))
     for (_ <- 1 to iters) {
-      // the rank vector is O(vertices) — broadcast it onto the (much
-      // wider) edge list so the join never shuffles edges; only the
-      // per-destination aggregate shuffles, and it shuffles partial
-      // aggregates, not edges (guide §2.4/§3.1). At depths where the
-      // vertex set outgrows a broadcast, drop the hint and both sides
-      // shuffle-join on the vertex key as before — verdicts identical.
-      val contrib = broadcast(rank)
+      val contrib = vertexSide(rank)
         .join(eDeg, rank("node") === eDeg("src"))
         .groupBy(col("dst"))
         .agg(sum(col("rank") / col("outdeg")).as("mass"))
       // Checkpoint the rank vector each round: iteration cost stays flat
       // (one vertex-keyed join + one agg), the GraphX/Pregel discipline.
       rank = nodes
-        .join(broadcast(contrib), nodes("node") === contrib("dst"), "left")
+        .join(vertexSide(contrib), nodes("node") === contrib("dst"), "left")
         .select(col("node"),
           (lit(1.0 - damping) / lit(n) +
             lit(damping) * coalesce(col("mass"), lit(0.0))).as("rank"))

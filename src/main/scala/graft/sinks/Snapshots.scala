@@ -498,28 +498,17 @@ object Snapshots {
       case _ => false
     })
     if (!simple || schema.isEmpty) return None
-    // only when the OPTIMIZED plan is local-composed (LocalRelation leaves
-    // under Union/Project/Filter — the shape cached manifests and footer
-    // manifest builds produce): collecting it is a driver-side or
-    // trivially-small job. A distributed content plan (scan-fallback stats
-    // build, un-cached fold) keeps the parallel write — collecting it
-    // first would serialize the computation through one partition.
-    def localOnly(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-        : Boolean = p match {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true
-      case u: org.apache.spark.sql.catalyst.plans.logical.Union =>
-        u.children.forall(localOnly)
-      case pr: org.apache.spark.sql.catalyst.plans.logical.Project =>
-        localOnly(pr.child)
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        localOnly(f.child)
-      case _ => false
-    }
-    if (!localOnly(content.queryExecution.optimizedPlan)) return None
-    val rows =
-      try content.limit(MetaCache.MaxEntryRows + 1).collect()
-      catch { case scala.util.control.NonFatal(_) => return None }
-    if (rows.length > MetaCache.MaxEntryRows) return None
+    // only when every row already sits on the driver ([[driverRows]]: the
+    // shape cached manifests, footer manifest builds and their unions
+    // produce) — no Spark job at all. A distributed content plan
+    // (scan-fallback stats build, un-cached fold) keeps the parallel
+    // write: collecting it first would serialize the computation through
+    // one partition.
+    val local = driverRows(content).getOrElse(return None)
+    if (local.length > MetaCache.MaxEntryRows) return None
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(schema)
+    val rows = local.map(r => toRow(r).asInstanceOf[Row]).toArray
     import org.apache.parquet.schema.{LogicalTypeAnnotation, Types => PTypes}
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     val builder = PTypes.buildMessage()
@@ -611,27 +600,34 @@ object Snapshots {
     cachedManifestDf(spark, manifestRoot, ("manifest", v), dir)(_(dir))
   }
 
-  /** `localCheckpoint()` unless the frame is already driver-local (a
-    * cached manifest serve folds to a LocalRelation): checkpointing local
-    * rows pays a Spark job + a partition copy for rows that already sit
-    * in driver memory, and both forms are equally immutable pins. The
-    * DML planners pin every manifest before the commit starts moving the
-    * table under it — this keeps that pin while making it job-free on
-    * the cache-hit path. */
-  private[graft] def pinLocal(df: DataFrame): DataFrame =
+  /** The rows of a driver-local frame — its optimized plan a
+    * `LocalRelation` or a `Union` of them (a cached manifest serve, a
+    * footer-built manifest, a swap commit's kept ∪ added rows) — in the
+    * frame's output order; None when computing it would need a Spark job. */
+  private def driverRows(df: DataFrame)
+      : Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] = {
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Union}
     df.queryExecution.optimizedPlan match {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => df
-      case _ => df.localCheckpoint()
+      case l: LocalRelation => Some(l.data)
+      case u: Union if u.children.forall(_.isInstanceOf[LocalRelation]) =>
+        Some(u.children.flatMap(_.asInstanceOf[LocalRelation].data))
+      case _ => None
     }
+  }
+
+  /** `localCheckpoint()` unless the frame is already driver-local
+    * ([[driverRows]]): checkpointing local rows pays a Spark job + a
+    * partition copy for rows that already sit in driver memory, and both
+    * forms are equally immutable pins. The DML planners pin every manifest
+    * before the commit starts moving the table under it — this keeps that
+    * pin while making it job-free on the cache-hit path. */
+  private[graft] def pinLocal(df: DataFrame): DataFrame =
+    if (driverRows(df).isDefined) df else df.localCheckpoint()
 
   /** Row count without a Spark job when the frame is driver-local (the
     * manifest `count()`s every DML planner opens with). */
   private[graft] def localCount(df: DataFrame): Long =
-    df.queryExecution.optimizedPlan match {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        l.data.length.toLong
-      case _ => df.count()
-    }
+    driverRows(df).fold(df.count())(_.length.toLong)
 
   /** Σ of a long column without a Spark job when the frame is
     * driver-local (footer-built manifests are LocalRelations); None when
@@ -639,11 +635,11 @@ object Snapshots {
     * so a caller can never under-count by skipping it. */
   private[graft] def localLongSum(df: DataFrame, c: String): Option[Long] = {
     val proj = df.select(col(c))
-    proj.queryExecution.optimizedPlan match {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        if (l.data.exists(_.isNullAt(0))) None
-        else Some(l.data.iterator.map(_.getLong(0)).sum)
-      case _ =>
+    driverRows(proj) match {
+      case Some(rows) =>
+        if (rows.exists(_.isNullAt(0))) None
+        else Some(rows.iterator.map(_.getLong(0)).sum)
+      case None =>
         val r = proj.agg(sum(col(c)), count(when(col(c).isNull, 1))).head()
         if (r.getLong(1) > 0) None
         else Some(if (r.isNullAt(0)) 0L else r.getLong(0))
@@ -1831,11 +1827,19 @@ object Snapshots {
         tag = None, delta = false, markers = Seq.empty, contentFiles)
       // CAS at exactly latest+1: if another writer takes the slot first we
       // must NOT slide to the next free one (that would skip re-diffing
-      // its commit) — re-enter the loop and re-check instead. The slot
-      // may be held by ANOTHER txn's unresolved stage — that is a held
-      // write lock, not a lost race: spinning would never free it, so
-      // refuse loudly like every other writer does
-      val slot = latest + 1
+      // its commit) — re-enter the loop and re-check instead. The one
+      // exception: when every raw version above the visible head is an
+      // ABORTED txn stage, CAS just above the raw tail — an aborted stage
+      // is not history, so skipping it needs no re-diff (and its slot can
+      // never be won). The slot may be held by ANOTHER txn's unresolved
+      // stage — that is a held write lock, not a lost race: spinning
+      // would never free it, so refuse loudly like every other writer does
+      val above = versions(spark, manifestRoot).filter(_ > latest)
+      val slot =
+        if (above.nonEmpty && above.forall(v =>
+            !txnVisible(spark, manifestRoot, v) &&
+              !unresolvedStage(spark, manifestRoot, v))) above.last + 1
+        else latest + 1
       if (fs.exists(new org.apache.hadoop.fs.Path(s"$manifestRoot/v=$slot")) &&
           unresolvedStage(spark, manifestRoot, slot)) {
         fs.delete(staged.dir, true)

@@ -32,15 +32,15 @@ import org.apache.spark.sql.types.{DataType, LongType, StructType}
   * relations over registered lake names are re-pointed.
   *
   * DML works through plain `spark.sql` too, the way Delta does it: the
-  * rule rewrites a root `DELETE`/`UPDATE`/`MERGE`/`INSERT` against a
-  * lake table into a [[LakeDmlCommand]] — a runnable command that
-  * executes the SAME front-door handler (so spark.sql and LakeSql.sql
-  * produce the same commit and the same metric row), deferred to
-  * command run time so analysis never side-effects. The EXTENSION
-  * grammar (OPTIMIZE, VACUUM, RESTORE, SHALLOW CLONE, REPLACE WHERE,
-  * CONVERT TO LAKE) reaches plain spark.sql through the injected
-  * [[GraftSqlParser]] (the DeltaSqlParser shape). Only the
-  * Catalyst-parsed DDL (CTAS, ALTER) remains front-door-only.
+  * rule rewrites a root `DELETE`/`UPDATE`/`MERGE`/`INSERT`/`TRUNCATE`
+  * against a lake table into a [[LakeDmlCommand]] — a runnable command
+  * that executes the SAME handler `LakeSql.sql` runs (so both produce the
+  * same commit and the same metric row), deferred to command run time so
+  * analysis never side-effects. The EXTENSION grammar (OPTIMIZE, VACUUM,
+  * RESTORE, CLONE, REPLACE WHERE, CONVERT TO LAKE, …) and QUALIFY reach
+  * plain spark.sql through the injected [[GraftSqlParser]], the one text
+  * dispatcher `LakeSql.sql` parses through too. Only the Catalyst-parsed
+  * DDL (CTAS, ALTER) remains front-door-only.
   *
   * Registering the extension also sizes Spark's generated-class cache to
   * graft's working set ([[GraftSparkExtensions.CodegenCacheEntries]]).
@@ -68,13 +68,12 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
     // aggregation over a base whose scanned version equals a registered
     // MV's cursor is answered from the MV (graft.sql.MatViews)
     ext.injectOptimizerRule(ServeFromMatViews)
-    // EXTENSION GRAMMAR through plain spark.sql — the DeltaSqlParser
-    // shape: a delegating parser intercepts the statements Spark's ANTLR
-    // grammar has no productions for (OPTIMIZE, VACUUM, RESTORE, SHALLOW
-    // CLONE, INSERT … REPLACE WHERE, CONVERT TO LAKE) and wraps each into
-    // a runnable command executing the front door's own handler — same
-    // commit, same metric row, deferred to command run time. Everything
-    // else delegates to Spark's parser untouched.
+    // EXTENSION GRAMMAR and QUALIFY through plain spark.sql — the
+    // DeltaSqlParser shape: a delegating parser intercepts the statements
+    // Spark's ANTLR grammar has no productions for (OPTIMIZE, VACUUM,
+    // RESTORE, CLONE, INSERT … REPLACE WHERE, CONVERT TO LAKE, …) and
+    // wraps each into a runnable command executing its one declared
+    // handler. Everything else delegates to Spark's parser untouched.
     ext.injectParser((_, delegate) => new GraftSqlParser(delegate))
     // the version-log TVFs register as REAL session table functions —
     // an appended resolution rule cannot serve them, because Spark's own
@@ -144,12 +143,8 @@ final case class ResolveLakeTables(spark: SparkSession)
     // the same outcome the shadowed-target backstop produces.)
     if (p.resolved) p
     else LakeSql.dmlCommand(p,
-      n => spark.sessionState.catalog.isTempView(Seq(n))) match {
-      case Some((names, exec)) =>
-        LakeDmlCommand(LakeSql.longSchema(names), exec)
-      case None =>
-        p.resolveOperatorsDown(LakeSql.substitutions(spark, _ => false))
-    }
+      n => spark.sessionState.catalog.isTempView(Seq(n))).getOrElse(
+      p.resolveOperatorsDown(LakeSql.substitutions(spark, _ => false)))
   }
 }
 
@@ -249,11 +244,13 @@ final case class ServeAggFromManifest(spark: SparkSession)
   }
 }
 
-/** DML-as-command (the Delta DeleteCommand/UpdateCommand shape): carries
-  * the front-door executor for one parsed DML statement; `spark.sql`
-  * executes it eagerly exactly once, and the commit happens in [[run]],
-  * never during analysis. Output is the front door's metric row for the
-  * statement kind (declared up front — commands must know their schema
+/** A lake statement as a command (the Delta DeleteCommand/UpdateCommand
+  * shape): its declared output schema plus the handler that runs it.
+  * [[LakeSql.extendedStatement]] and [[LakeSql.dmlCommand]] declare one
+  * per statement; `spark.sql` executes it eagerly exactly once, so the
+  * commit happens in [[run]], never during analysis, while
+  * [[LakeSql.sql]] calls `exec` directly and returns the handler's own
+  * frame. Output is declared up front (commands must know their schema
   * before running); MERGE clause shapes that report fewer metrics
   * zero-fill the rest. */
 final case class LakeDmlCommand(outSchema: StructType,
@@ -278,83 +275,69 @@ final case class LakeDmlCommand(outSchema: StructType,
   }
 }
 
-/** Delegating session parser (the DeltaSqlParser integration shape): an
-  * extension-grammar statement — recognized by [[LakeSql.extendedStatement]],
-  * which also declares its metric-row schema — parses to a
-  * [[LakeDmlCommand]] running the front door's own dispatcher, so plain
-  * `spark.sql("OPTIMIZE t ZORDER BY (c)")` and `LakeSql.sql` are the same
-  * code path; every other string delegates to Spark's parser verbatim. */
+/** The one SQL TEXT DISPATCHER (the DeltaSqlParser integration shape),
+  * shared by plain `spark.sql` (injected by [[GraftSparkExtensions]]) and
+  * [[LakeSql.sql]] (which wraps Spark's parser in one when the session
+  * lacks the extension). Per statement, in order:
+  *
+  *  1. QUALIFY ([[LakeSql.rewriteQualify]]) rewrites at the text level —
+  *     Spark's grammar has no production for it. A scanner false positive
+  *     (a bare identifier `qualify`) yields unparseable text, and then the
+  *     original statement is parsed instead.
+  *  2. The extension grammar ([[LakeSql.extendedStatement]]) parses to a
+  *     [[LakeDmlCommand]].
+  *  3. Everything else delegates to Spark's parser verbatim, followed by
+  *     the post-parse claims on CATALOG-SHAPED statements Spark's grammar
+  *     DOES have productions for but whose semantics are ours:
+  *      - DML whose target is a NAMESPACED lake-catalog table
+  *        (`DELETE FROM lake.db.t …`): claimed here, while the tree is
+  *        still fully unresolved, because by the time the injected
+  *        analyzer rule would see it Spark's own resolution has already
+  *        turned the target into a write-incapable V2 relation and
+  *        resolved the condition's attributes — the front door's typed
+  *        predicate compiler wants the raw unresolved form. Single-part
+  *        targets are NOT claimed here (multipartOnly) — they keep the
+  *        analyzer-rule path and its temp-view-precedence contract.
+  *      - `CREATE TABLE t (…) USING lake` / `CREATE OR REPLACE TABLE t
+  *        USING lake … AS query`: the session catalog would try to own
+  *        them; the lake provider makes them ours
+  *        ([[LakeSql.claimableCreate]], [[LakeSql.claimableReplace]]).
+  *        Catalog-qualified creates are NOT claimed — Spark routes them to
+  *        the LakeCatalog itself.
+  */
 final class GraftSqlParser(delegate: ParserInterface)
   extends ParserInterface {
 
-  /** Post-parse claims on CATALOG-SHAPED statements Spark's grammar DOES
-    * have productions for but whose semantics are ours:
-    *
-    *  - DML whose target is a NAMESPACED lake-catalog table
-    *    (`DELETE FROM lake.db.t …`): claimed here, while the tree is
-    *    still fully unresolved, because by the time the injected
-    *    analyzer rule would see it Spark's own resolution has already
-    *    turned the target into a write-incapable V2 relation and
-    *    resolved the condition's attributes — the front door's typed
-    *    predicate compiler wants the raw unresolved form. Single-part
-    *    targets are NOT claimed here (multipartOnly) — they keep the
-    *    analyzer-rule path and its temp-view-precedence contract.
-    *  - `CREATE TABLE t (…) USING lake` with a SINGLE-PART name: the
-    *    session catalog would try to own it; the lake provider makes it
-    *    ours ([[LakeSql.claimableCreate]]). Namespaced creates are NOT
-    *    claimed — Spark routes them to the LakeCatalog itself.
-    */
   private def claim(plan: LogicalPlan): LogicalPlan = plan match {
     case ct: org.apache.spark.sql.catalyst.plans.logical.CreateTable
         if LakeSql.claimableCreate(ct) =>
       LakeDmlCommand(LakeSql.longSchema(Seq("version")),
-        s => LakeSql.runCreateClaimed(s, ct))
+        s => LakeSql.runCreate(s, ct))
     case rts: org.apache.spark.sql.catalyst.plans.logical.ReplaceTableAsSelect
         if LakeSql.claimableReplace(rts) =>
       LakeDmlCommand(LakeSql.longSchema(Seq("version", "files")),
-        s => LakeSql.runReplaceClaimed(s, rts))
+        s => LakeSql.runReplaceTas(s, rts))
     case _ =>
-      LakeSql.dmlCommand(plan, _ => false, multipartOnly = true) match {
-        case Some((names, exec)) =>
-          LakeDmlCommand(LakeSql.longSchema(names), exec)
-        case None => plan
-      }
+      LakeSql.dmlCommand(plan, _ => false, multipartOnly = true)
+        .getOrElse(plan)
+  }
+
+  private def dispatch(text: String)(parse: String => LogicalPlan)
+      : LogicalPlan = {
+    def one(t: String): LogicalPlan =
+      LakeSql.extendedStatement(t).getOrElse(claim(parse(t)))
+    LakeSql.rewriteQualify(text) match {
+      case Some(r) =>
+        try one(r) catch { case _: ParseException => one(text) }
+      case None => one(text)
+    }
   }
 
   override def parsePlan(text: String): LogicalPlan =
-    // QUALIFY rewrites at the text level (Spark's grammar has no
-    // production) — plain spark.sql serves the clause like the front door
-    LakeSql.rewriteQualify(text) match {
-      case Some(r) =>
-        // a scanner false-positive (bare identifier `qualify`) yields
-        // unparseable text — the original statement is authoritative
-        try parsePlan(r)
-        catch { case _: ParseException => parsePlanClaimed(text) }
-      case None => parsePlanClaimed(text)
-    }
-
-  private def parsePlanClaimed(text: String): LogicalPlan =
-    LakeSql.extendedStatement(text) match {
-      case Some(schema) => LakeDmlCommand(schema, s => LakeSql.sql(s, text))
-      case None => claim(delegate.parsePlan(text))
-    }
+    dispatch(text)(delegate.parsePlan)
   override def parsePlanWithParameters(text: String,
                                        ctx: ParameterContext): LogicalPlan =
-    LakeSql.rewriteQualify(text) match {
-      case Some(r) =>
-        try parsePlanWithParameters(r, ctx)
-        catch {
-          case _: ParseException => LakeSql.extendedStatement(text) match {
-            case Some(schema) =>
-              LakeDmlCommand(schema, s => LakeSql.sql(s, text))
-            case None => claim(delegate.parsePlanWithParameters(text, ctx))
-          }
-        }
-      case None => LakeSql.extendedStatement(text) match {
-        case Some(schema) => LakeDmlCommand(schema, s => LakeSql.sql(s, text))
-        case None => claim(delegate.parsePlanWithParameters(text, ctx))
-      }
-    }
+    dispatch(text)(delegate.parsePlanWithParameters(_, ctx))
   override def parseExpression(t: String): Expression =
     delegate.parseExpression(t)
   override def parseTableIdentifier(t: String): TableIdentifier =

@@ -23,8 +23,10 @@ import graft.sinks.{Layout, MetaCache, Snapshots}
   * endpoint (`endpoints.yml:49`) — so the snapshot tables need a SQL
   * surface, not just the Scala [[Snapshots]] API.
   *
-  * Mechanics are Spark-first: the text goes through Spark's OWN parser
-  * (`spark.sessionState.sqlParser`), so the grammar — `VERSION AS OF` /
+  * Mechanics are Spark-first: the text is parsed ONCE, by
+  * [[GraftSqlParser]] — the session's own parser, or Spark's wrapped in
+  * one — which delegates everything outside the extension grammar to
+  * Spark's OWN parser, so the grammar — `VERSION AS OF` /
   * `TIMESTAMP AS OF`, `MERGE INTO … WHEN MATCHED THEN UPDATE SET *`,
   * `DELETE FROM … WHERE` — is genuine Spark SQL, not a homegrown dialect.
   * This layer only RE-POINTS the parsed Catalyst nodes:
@@ -72,8 +74,9 @@ import graft.sinks.{Layout, MetaCache, Snapshots}
   *    path; `TBLPROPERTIES ('delete.mode'/'update.mode' = 'mor')` flip
   *    DELETE/UPDATE to deletion-vector masking (zero-rewrite writes,
   *    repaid by `REORG … APPLY (PURGE)`).
-  *  - Lifecycle/maintenance grammar (Delta-extension shapes, dispatched
-  *    on the statement head): OPTIMIZE [WHERE] [ZORDER BY] / VACUUM
+  *  - Lifecycle/maintenance grammar (Delta-extension shapes, each
+  *    declared once in [[extendedStatement]] and matched by the parser
+  *    before Spark's grammar): OPTIMIZE [WHERE] [ZORDER BY] / VACUUM
   *    [DRY RUN] / REORG APPLY (PURGE) / RESTORE / SHALLOW CLONE /
   *    CONVERT TO LAKE / COPY INTO / TRUNCATE TABLE (metadata-only empty
   *    commit; empty versions stay readable) / FSCK REPAIR TABLE
@@ -108,9 +111,10 @@ object LakeSql {
       .foreach(spec => MetaCache.forget(spec.manifestRoot))
 
   // Maintenance statements, the Delta-extension grammar shape — Spark's
-  // parser has no OPTIMIZE/VACUUM productions, so these dispatch on the
-  // statement head before the parser (exactly how Delta extends the SQL
-  // surface, minus the ANTLR ceremony for a two-statement grammar):
+  // parser has no OPTIMIZE/VACUUM productions, so [[GraftSqlParser]]
+  // matches these on the statement head before Spark's parser, through
+  // [[extendedStatement]] (exactly how Delta extends the SQL surface,
+  // minus the ANTLR ceremony):
   //   OPTIMIZE <t>                      → full re-layout compactCommit
   //   OPTIMIZE <t> SMALLFILES <bytes>   → size-policy compactSmallCommit
   //                                       (bin-pack only the small tail)
@@ -130,11 +134,6 @@ object LakeSql {
   //   (and re-arms the metadata-only aggregate fast path)
   private val ReorgRe =
     """(?is)\s*REORG\s+TABLE\s+([A-Za-z0-9_.]+)\s+APPLY\s*\(\s*PURGE\s*\)\s*""".r
-  //   TRUNCATE TABLE <t> → remove every live row as ONE metadata-only
-  //   commit (the next version references no files; nothing read or
-  //   rewritten, pinned readers keep the data until VACUUM)
-  private val TruncateRe =
-    """(?is)\s*TRUNCATE\s+TABLE\s+([A-Za-z0-9_.]+)\s*""".r
   //   FSCK REPAIR TABLE <t> [DRY RUN] → drop manifest entries whose data
   //   files no longer exist on disk (Delta's FSCK): status probes only,
   //   metadata-only commit; DRY RUN lists the missing files instead
@@ -300,104 +299,13 @@ object LakeSql {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Seq.empty)
 
-  /** The metric-row column names of an EXTENSION-GRAMMAR statement (the
-    * regex-dispatched surface Spark's parser has no productions for:
-    * OPTIMIZE/VACUUM/RESTORE/CLONE/REPLACE WHERE/CONVERT), when `text` is
-    * one — [[GraftSqlParser]] wraps the match into a runnable command with
-    * this declared schema so plain `spark.sql` serves the same statements
-    * (the DeltaSqlParser shape). None ⇒ not ours, delegate. */
   /** All-Long metric-row schema — the shape every commit-returning
-    * statement reports; [[GraftSparkExtensions]] zero-fills these. */
+    * statement reports; [[LakeDmlCommand]] zero-fills these. */
   private[sql] def longSchema(names: Seq[String]): StructType =
     StructType(names.map(n => StructField(n, LongType, nullable = false)))
 
   private def strSchema(names: String*): StructType =
     StructType(names.map(n => StructField(n, StringType, nullable = false)))
-
-  private[sql] def extendedStatement(text: String): Option[StructType] =
-    text match {
-      case OptimizeZRe(_, _) =>
-        Some(longSchema(Seq("version", "files_in", "files_out")))
-      case OptimizeWhereRe(_, _, _) =>
-        Some(longSchema(Seq("version", "files_rewritten", "files_skipped",
-          "files_out")))
-      case OptimizeFullRe(_) =>
-        Some(longSchema(Seq("version", "files_in", "files_out")))
-      case OptimizeRe(_, small) =>
-        Some(longSchema(if (small == null)
-          Seq("version", "files_in", "files_out")
-        else Seq("version", "files_compacted", "files_skipped",
-          "files_out")))
-      case VacuumRe(_, _, _, dry) =>
-        Some(if (dry == null)
-          longSchema(Seq("files_deleted", "versions_dropped"))
-        else strSchema("item", "kind"))
-      case ReorgRe(_) =>
-        Some(longSchema(Seq("version", "files_purged", "files_total",
-          "files_written")))
-      // TRUNCATE is VALID Spark SQL (unlike the rest of this grammar):
-      // claim it only for registered lake names, so a catalog table's
-      // TRUNCATE still reaches Spark's own parser and command
-      case TruncateRe(name)
-          if isRegisteredName(name) =>
-        Some(longSchema(Seq("version", "rows_deleted", "files_dropped")))
-      case FsckRe(_, dry) =>
-        Some(if (dry == null)
-          longSchema(Seq("version", "files_missing", "files_total",
-            "rows_lost"))
-        else strSchema("file"))
-      case ShowCreateRe(name)
-          if isRegisteredName(name) =>
-        Some(strSchema("createtab_stmt"))
-      case DescribeDetailRe(_) =>
-        Some(StructType(Seq(
-          StructField("name", StringType, nullable = false),
-          StructField("location", StringType, nullable = false),
-          StructField("num_files", LongType, nullable = false),
-          StructField("size_bytes", LongType, nullable = false),
-          StructField("num_versions", LongType, nullable = false),
-          StructField("stats_cols", StringType, nullable = false))))
-      case RestoreRe(_, _) =>
-        Some(longSchema(Seq("version", "restored_to")))
-      case RestoreTsRe(_, _) =>
-        Some(longSchema(Seq("version", "restored_to")))
-      case CloneRe(_, _, _, _) =>
-        Some(longSchema(Seq("version", "cloned_from")))
-      case DeepCloneRe(_, _, _, _) =>
-        Some(longSchema(Seq("version", "cloned_from", "files_copied",
-          "bytes_copied")))
-      case InsertReplaceRe(_, _, _) =>
-        Some(longSchema(Seq("version", "files_rewritten", "files_total",
-          "rows_deleted", "files_appended", "files_dropped")))
-      case ConvertRe(_, _, _, _) =>
-        Some(longSchema(Seq("version", "files_converted")))
-      case CopyIntoRe(_, _, _) =>
-        Some(longSchema(Seq("version", "files_loaded", "rows_loaded",
-          "files_skipped")))
-      case AnalyzeRe(name, _) if isRegisteredName(name) =>
-        Some(longSchema(Seq("version", "row_count", "columns_analyzed")))
-      case AddFkRe(name, _, _, parent, _, _)
-          if isRegisteredName(name) && isRegisteredName(parent) =>
-        Some(longSchema(Seq("version")))
-      case SetRowFilterRe(_, _) | DropRowFilterRe(_) | SetMaskRe(_, _, _) |
-           DropMaskRe(_, _) =>
-        Some(longSchema(Seq("version")))
-      case AlterColTypeRe(name, _, _) if isRegisteredName(name) =>
-        Some(longSchema(Seq("version")))
-      case AlterClusterNoneRe(name) if isRegisteredName(name) =>
-        Some(longSchema(Seq("version")))
-      case AlterClusterRe(name, _) if isRegisteredName(name) =>
-        Some(longSchema(Seq("version")))
-      case CreateMvRe(_, _, _) =>
-        Some(longSchema(Seq("version", "base_version")))
-      case RefreshMvRe(_, _) =>
-        Some(longSchema(Seq("version", "from_version", "to_version",
-          "feed_rows", "groups_recomputed", "base_files_read",
-          "base_files_total")))
-      case DropMvRe(_) =>
-        Some(longSchema(Seq("dropped")))
-      case _ => None
-    }
 
   /** QUALIFY — the window-filter clause (Databricks/DuckDB/Snowflake
     * surface; Spark's grammar has no production for it). Rewritten at
@@ -414,7 +322,7 @@ object LakeSql {
     * never scanned — a table or column literally named `qualify` in an
     * UPDATE can't trigger a bogus rewrite). If the rewritten text still
     * fails to parse (a bare identifier `qualify` at depth 0 in a query),
-    * both call sites fall back to parsing the ORIGINAL text. The
+    * [[GraftSqlParser]] falls back to parsing the ORIGINAL text. The
     * condition must reference select-list ALIASES (`row_number() … AS
     * rn … QUALIFY rn = 1`) — a bare window expression in the condition
     * fails analysis loudly rather than silently misbinding. */
@@ -584,534 +492,588 @@ object LakeSql {
 
   /** Parse + route one SQL statement. Reads return the query's rows; DML
     * and maintenance statements execute the commit and return its metrics
-    * as one row. */
-  def sql(spark: SparkSession, text: String): DataFrame = text match {
-    case t if rewriteQualify(t).isDefined =>
-      // fallback contract: if the rewrite produced unparseable text (a
-      // bare identifier named `qualify` tripped the scanner), the
-      // ORIGINAL statement is what the caller meant — parse that instead
-      try sql(spark, rewriteQualify(t).get)
-      catch {
-        case _: org.apache.spark.sql.catalyst.parser.ParseException =>
-          sqlParsed(spark, t)
-      }
-    // OPTIMIZE … ZORDER BY: re-layout the latest snapshot CLUSTERED on the
-    // named columns — the statement a consumer runs when the query
-    // workload's hot predicate column isn't the one the table was loaded
-    // clustered by. The manifest still records stats for every stats
-    // column (sound bounds under any order), so this changes PRUNING
-    // TIGHTNESS, not correctness — and it is a pure re-layout: the change
-    // feed across the commit is empty.
-    // OPTIMIZE … WHERE: scoped re-layout — the statement a consumer runs
-    // after a day's fragmented ingest into one key range; cost tracks the
-    // scope's bytes, not the table's. DVs on selected files fold away.
-    case OptimizeWhereRe(name, condText, colList) =>
-      val spec = specByName(name)
-      val mapping = headMapping(spark, spec)
-      val zcols = Option(colList).map(_.split(",").map(_.trim)
-        .filter(_.nonEmpty).toSeq
-        .map(c => physicalName(c, mapping, "ZORDER BY column")))
-      zcols.foreach { zc =>
-        require(zc.nonEmpty, "ZORDER BY needs at least one column")
-        val missing = zc.filterNot(spec.cols.contains)
-        require(missing.isEmpty,
-          s"ZORDER BY columns must carry manifest stats (have " +
-            s"${spec.cols.mkString(", ")}; missing ${missing.mkString(", ")})")
-      }
-      val cond = spark.sessionState.sqlParser.parseExpression(condText)
-      val (prune, _) = compileWhere(cond, spec, mapping, Some(spark))
-      val r = Snapshots.compactScopedCommit(spark, spec.path,
-        spec.manifestRoot, spec.cols, prune, spec.nFiles, zcols)
-      metricsRow(spark, Seq("version" -> r.version.toLong,
-        "files_rewritten" -> r.filesRewritten,
-        "files_skipped" -> r.filesSkipped,
-        "files_out" -> r.filesOut))
-    case OptimizeZRe(name, colList) =>
-      val spec = specByName(name)
-      val mapping = headMapping(spark, spec)
-      val zcols = colList.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        .map(c => physicalName(c, mapping, "ZORDER BY column"))
-      require(zcols.nonEmpty, "ZORDER BY needs at least one column")
-      val missing = zcols.filterNot(spec.cols.contains)
-      require(missing.isEmpty,
-        s"ZORDER BY columns must carry manifest stats (have " +
-          s"${spec.cols.mkString(", ")}; missing ${missing.mkString(", ")}) " +
-          "— clustering a column no stats can prune buys nothing")
-      val (version, nIn, nOut) = Snapshots.compactCommit(spark, spec.path,
-        spec.manifestRoot, spec.cols, spec.nFiles, zorderCols = Some(zcols))
-      metricsRow(spark, Seq("version" -> version.toLong,
-        "files_in" -> nIn.toLong, "files_out" -> nOut.toLong))
-    case OptimizeFullRe(name) =>
-      val spec = specByName(name)
-      val ccols = clusterColsOf(spark, spec)
-      require(ccols.nonEmpty,
-        s"OPTIMIZE $name FULL needs clustering keys — set them with " +
-          "CREATE/ALTER TABLE … CLUSTER BY (…)")
-      val mapping = headMapping(spark, spec)
-      val physical =
-        ccols.map(c => physicalName(c, mapping, "CLUSTER BY column"))
-      val r = Snapshots.clusterIncrementalCommit(spark, spec.path,
-        spec.manifestRoot, spec.cols, physical, spec.nFiles, full = true)
-      metricsRow(spark, Seq("version" -> r.version.toLong,
-        "files_in" -> r.filesReclustered, "files_out" -> r.filesOut))
-    case OptimizeRe(name, small) =>
-      val spec = specByName(name)
-      if (small == null) {
-        // a table with clustering keys as a property takes the
-        // INCREMENTAL path: only unclustered files rewrite, the
-        // clustered base stays byte-identical (liquid shape); tables
-        // without keys keep the full re-layout compaction
-        val ccols = clusterColsOf(spark, spec)
-        if (ccols.nonEmpty) {
+    * as one row. The text is parsed ONCE, by [[GraftSqlParser]] (QUALIFY
+    * rewrite, extension grammar, Spark's grammar, lake claims), and the
+    * plan is routed by [[sqlParsed]]. */
+  def sql(spark: SparkSession, text: String): DataFrame =
+    sqlParsed(spark, parser(spark).parsePlan(text))
+
+  /** The session's parser when the session carries [[GraftSparkExtensions]],
+    * else Spark's wrapped in a [[GraftSqlParser]] — so this entry point
+    * serves the full statement surface in every session. */
+  private[sql] def parser(spark: SparkSession): GraftSqlParser =
+    spark.sessionState.sqlParser match {
+      case g: GraftSqlParser => g
+      case other => new GraftSqlParser(other)
+    }
+
+  /** One lake statement as a command: its declared result schema and the
+    * handler producing its rows, run when the command runs. */
+  private def command(schema: StructType)(rows: SparkSession => Seq[Row])
+      : Option[LakeDmlCommand] =
+    Some(LakeDmlCommand(schema,
+      s => s.createDataFrame(rows(s).asJava, schema)))
+
+  /** A commit statement's one all-Long metric row: `names` and the
+    * handler's values line up by position. */
+  private def metrics(names: String*)(values: SparkSession => Seq[Long])
+      : Option[LakeDmlCommand] =
+    command(longSchema(names))(s => Seq(Row(values(s): _*)))
+
+  /** The EXTENSION GRAMMAR, each statement declared once — regex, guard,
+    * result schema and handler. [[GraftSqlParser]] tries it before Spark's
+    * parser (the DeltaSqlParser shape); a match becomes a [[LakeDmlCommand]]
+    * whose handler runs at command run time, never at parse time. None ⇒
+    * not ours, delegate. Statements that are ALSO valid Spark SQL (SHOW
+    * CREATE TABLE, ANALYZE, ALTER … TYPE / CLUSTER BY / FOREIGN KEY) are
+    * claimed only for registered lake names, so a catalog table's statement
+    * still reaches Spark's own parser and command. */
+  private[sql] def extendedStatement(text: String): Option[LakeDmlCommand] =
+    text match {
+      // OPTIMIZE … WHERE: scoped re-layout — the statement a consumer runs
+      // after a day's fragmented ingest into one key range; cost tracks the
+      // scope's bytes, not the table's. DVs on selected files fold away.
+      case OptimizeWhereRe(name, condText, colList) =>
+        metrics("version", "files_rewritten", "files_skipped", "files_out") {
+          spark =>
+            val spec = specByName(name)
+            val mapping = headMapping(spark, spec)
+            val zcols = Option(colList).map(zorderCols(spec, mapping, _))
+            val cond = spark.sessionState.sqlParser.parseExpression(condText)
+            val (prune, _) = compileWhere(cond, spec, mapping, Some(spark))
+            val r = Snapshots.compactScopedCommit(spark, spec.path,
+              spec.manifestRoot, spec.cols, prune, spec.nFiles, zcols)
+            Seq(r.version.toLong, r.filesRewritten, r.filesSkipped, r.filesOut)
+        }
+      // OPTIMIZE … ZORDER BY: re-layout the latest snapshot CLUSTERED on
+      // the named columns — the statement a consumer runs when the query
+      // workload's hot predicate column isn't the one the table was loaded
+      // clustered by. The manifest still records stats for every stats
+      // column (sound bounds under any order), so this changes PRUNING
+      // TIGHTNESS, not correctness — and it is a pure re-layout: the change
+      // feed across the commit is empty.
+      case OptimizeZRe(name, colList) =>
+        metrics("version", "files_in", "files_out") { spark =>
+          val spec = specByName(name)
+          val zcols = zorderCols(spec, headMapping(spark, spec), colList)
+          val (version, nIn, nOut) = Snapshots.compactCommit(spark, spec.path,
+            spec.manifestRoot, spec.cols, spec.nFiles, zorderCols = Some(zcols))
+          Seq(version.toLong, nIn.toLong, nOut.toLong)
+        }
+      case OptimizeFullRe(name) =>
+        metrics("version", "files_in", "files_out") { spark =>
+          val spec = specByName(name)
+          require(clusterColsOf(spark, spec).nonEmpty,
+            s"OPTIMIZE $name FULL needs clustering keys — set them with " +
+              "CREATE/ALTER TABLE … CLUSTER BY (…)")
+          recluster(spark, spec, full = true)
+        }
+      case OptimizeRe(name, small) =>
+        if (small == null)
+          metrics("version", "files_in", "files_out") { spark =>
+            // a table with clustering keys as a property takes the
+            // INCREMENTAL path: only unclustered files rewrite, the
+            // clustered base stays byte-identical (liquid shape); tables
+            // without keys keep the full re-layout compaction
+            val spec = specByName(name)
+            if (clusterColsOf(spark, spec).nonEmpty)
+              recluster(spark, spec, full = false)
+            else {
+              val (version, nIn, nOut) = Snapshots.compactCommit(spark,
+                spec.path, spec.manifestRoot, spec.cols, spec.nFiles)
+              Seq(version.toLong, nIn.toLong, nOut.toLong)
+            }
+          }
+        else
+          metrics("version", "files_compacted", "files_skipped", "files_out") {
+            spark =>
+              val spec = specByName(name)
+              val r = Snapshots.compactSmallCommit(spark, spec.path,
+                spec.manifestRoot, spec.cols, smallBytes = small.toLong,
+                nFiles = 1)
+              Seq(r.version.toLong, r.filesCompacted, r.filesSkipped,
+                r.filesOut)
+          }
+      case ReorgRe(name) =>
+        metrics("version", "files_purged", "files_total", "files_written") {
+          spark =>
+            val spec = specByName(name)
+            val r = graft.sinks.Dv.purgeDv(spark, spec.path, spec.manifestRoot,
+              spec.cols)
+            Seq(r.version.toLong, r.filesPurged, r.filesTotal,
+              r.dataFilesWritten)
+        }
+      case FsckRe(name, dry) =>
+        if (dry == null)
+          metrics("version", "files_missing", "files_total", "rows_lost") {
+            spark =>
+              val spec = specByName(name)
+              val (r, _) = Snapshots.fsckCommit(spark, spec.manifestRoot,
+                dryRun = false)
+              Seq(r.version.toLong, r.filesMissing, r.filesTotal, r.rowsLost)
+          }
+        else
+          command(strSchema("file")) { spark =>
+            val spec = specByName(name)
+            Snapshots.fsckCommit(spark, spec.manifestRoot, dryRun = true)._2
+              .map(Row(_))
+          }
+      case ShowCreateRe(name) if isRegisteredName(name) =>
+        command(strSchema("createtab_stmt"))(spark =>
+          Seq(Row(showCreate(spark, name))))
+      case VacuumRe(name, n, unit, dry) =>
+        val byVersions = unit.equalsIgnoreCase("VERSIONS")
+        def cutoffMs = System.currentTimeMillis() - n.toLong * 3600000L
+        if (dry != null)
+          // DRY RUN: the reclaim listing, nothing touched — shares the
+          // plan code with the destructive path so it can never drift.
+          command(strSchema("item", "kind")) { spark =>
+            val spec = specByName(name)
+            val p =
+              if (byVersions)
+                Snapshots.vacuumPlan(spark, spec.path, spec.manifestRoot,
+                  retainLast = n.toInt)
+              else
+                Snapshots.vacuumRetentionPlan(spark, spec.path,
+                  spec.manifestRoot, cutoffMs)
+            p.dropVersions.map(v => Row(s"${spec.manifestRoot}/v=$v",
+              "version")) ++
+              p.deadFiles.map(Row(_, "data")) ++
+              p.deadDvDirs.map(Row(_, "dv"))
+          }
+        else
+          metrics("files_deleted", "versions_dropped") { spark =>
+            val spec = specByName(name)
+            val r =
+              if (byVersions)
+                Snapshots.vacuum(spark, spec.path, spec.manifestRoot,
+                  retainLast = n.toInt)
+              else
+                Snapshots.vacuumRetention(spark, spec.path, spec.manifestRoot,
+                  cutoffMs)
+            Seq(r.filesDeleted, r.versionsDropped)
+          }
+      // DESCRIBE DETAIL: one metadata row from manifest + file status —
+      // the table-inventory read a catalog browser issues; never a scan.
+      case DescribeDetailRe(name) =>
+        command(StructType(Seq(
+            StructField("name", StringType, nullable = false),
+            StructField("location", StringType, nullable = false),
+            StructField("num_files", LongType, nullable = false),
+            StructField("size_bytes", LongType, nullable = false),
+            StructField("num_versions", LongType, nullable = false),
+            StructField("stats_cols", StringType, nullable = false)))) {
+          spark =>
+            val spec = specByName(name)
+            val v = Snapshots.latestVersion(spark, spec.manifestRoot)
+            val entries = graft.sinks.Dv.entries(
+              Snapshots.manifestAt(spark, spec.manifestRoot, v))
+            val p = new org.apache.hadoop.fs.Path(spec.path)
+            val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+            val bytes = entries.map(e =>
+              fs.getFileStatus(new org.apache.hadoop.fs.Path(e.file)).getLen)
+              .sum
+            val nv = Snapshots.versions(spark, spec.manifestRoot).size
+            Seq(Row(name.toLowerCase(java.util.Locale.ROOT), spec.path,
+              entries.size.toLong, bytes, nv.toLong, spec.cols.mkString(",")))
+        }
+      // ALTER TABLE … ADD CONSTRAINT … FOREIGN KEY: the enforced
+      // referential contract — parent resolved to its manifest root NOW
+      // (renaming the parent later does not silently detach the edge),
+      // column names translated through each table's mapping.
+      case AddFkRe(name, cname, column, parent, key, _)
+          if isRegisteredName(name) && isRegisteredName(parent) =>
+        metrics("version") { spark =>
+          val spec = specByName(name)
+          val pspec = specByName(parent)
+          val childCol = physicalName(
+            column.toLowerCase(java.util.Locale.ROOT),
+            headMapping(spark, spec), "FOREIGN KEY column")
+          val parentCol = physicalName(
+            key.toLowerCase(java.util.Locale.ROOT),
+            headMapping(spark, pspec), "REFERENCES column")
+          Seq(Snapshots.addForeignKey(spark, spec.manifestRoot,
+            cname.toLowerCase(java.util.Locale.ROOT), childCol,
+            pspec.manifestRoot, parentCol).toLong)
+        }
+      case AlterColTypeRe(name, colName, typeStr) if isRegisteredName(name) =>
+        metrics("version") { spark =>
+          val dt = org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+            .parseDataType(typeStr.trim)
+          Seq(Snapshots.widenColumn(spark, specByName(name).manifestRoot,
+            colName, dt).toLong)
+        }
+      // GOVERNANCE POLICIES: row filter + column masks as property commits;
+      // applied to every read by [[aliasedTableAt]] → [[applyPolicies]].
+      case SetRowFilterRe(name, cond) =>
+        metrics("version") { spark =>
+          val spec = specByName(name)
+          validatePolicyExpr(spark, spec, cond.trim, None)
+          Seq(Snapshots.setProperties(spark, spec.manifestRoot,
+            Map(RowFilterProp -> cond.trim)).toLong)
+        }
+      case DropRowFilterRe(name) =>
+        metrics("version")(spark => Seq(Snapshots.unsetProperties(spark,
+          specByName(name).manifestRoot, Seq(RowFilterProp)).toLong))
+      case SetMaskRe(name, colName, maskExpr) =>
+        metrics("version") { spark =>
+          val spec = specByName(name)
+          val c = colName.toLowerCase(java.util.Locale.ROOT)
+          validatePolicyExpr(spark, spec, maskExpr.trim, Some(c))
+          Seq(Snapshots.setProperties(spark, spec.manifestRoot,
+            Map(s"$MaskPropPrefix$c" -> maskExpr.trim)).toLong)
+        }
+      case DropMaskRe(name, colName) =>
+        metrics("version")(spark => Seq(Snapshots.unsetProperties(spark,
+          specByName(name).manifestRoot,
+          Seq(MaskPropPrefix + colName.toLowerCase(java.util.Locale.ROOT)))
+          .toLong))
+      // MATERIALIZED VIEWS (the Databricks MV surface; [[MatViews]]):
+      // CREATE materializes the algebraic aggregate as a lake table with
+      // the definition in its properties and an mvref_<baseVersion> cursor
+      // tag; REFRESH folds the base change feed since the cursor; DROP
+      // unregisters. Serving is the injected [[ServeFromMatViews]] rule.
+      case CreateMvRe(name, loc, query) =>
+        metrics("version", "base_version") { spark =>
+          val r = MatViews.create(spark, name, Option(loc), query)
+          Seq(r.version.toLong, r.baseVersion.toLong)
+        }
+      case RefreshMvRe(name, full) =>
+        metrics("version", "from_version", "to_version", "feed_rows",
+            "groups_recomputed", "base_files_read", "base_files_total") {
+          spark =>
+            val r = MatViews.refresh(spark, name, full = full != null)
+            Seq(r.version.toLong, r.fromVersion.toLong, r.toVersion.toLong,
+              r.feedRows, r.groupsRecomputed, r.baseFilesRead,
+              r.baseFilesTotal)
+        }
+      case DropMvRe(name) =>
+        metrics("dropped")(spark =>
+          Seq(if (MatViews.drop(spark, name)) 1L else 0L))
+      // CLUSTERING KEYS as table state (liquid shape): one metadata-only
+      // property commit; plain OPTIMIZE reads the keys back and
+      // re-clusters only the unclustered increment. Keys must carry
+      // manifest stats (same rule as ZORDER BY — clustering a column no
+      // stats can prune buys nothing).
+      case AlterClusterNoneRe(name) if isRegisteredName(name) =>
+        metrics("version")(spark => Seq(Snapshots.unsetProperties(spark,
+          specByName(name).manifestRoot, Seq(ClusterByProp)).toLong))
+      case AlterClusterRe(name, colList) if isRegisteredName(name) =>
+        metrics("version") { spark =>
+          val spec = specByName(name)
           val mapping = headMapping(spark, spec)
+          val ccols = colList.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+            .map(_.toLowerCase(java.util.Locale.ROOT))
+          require(ccols.nonEmpty, "CLUSTER BY needs at least one column")
           val physical =
             ccols.map(c => physicalName(c, mapping, "CLUSTER BY column"))
-          val r = Snapshots.clusterIncrementalCommit(spark, spec.path,
-            spec.manifestRoot, spec.cols, physical, spec.nFiles)
-          metricsRow(spark, Seq("version" -> r.version.toLong,
-            "files_in" -> r.filesReclustered, "files_out" -> r.filesOut))
-        } else {
-          val (version, nIn, nOut) = Snapshots.compactCommit(spark,
-            spec.path, spec.manifestRoot, spec.cols, spec.nFiles)
-          metricsRow(spark, Seq("version" -> version.toLong,
-            "files_in" -> nIn.toLong, "files_out" -> nOut.toLong))
+          val missing = physical.filterNot(spec.cols.contains)
+          require(missing.isEmpty,
+            s"CLUSTER BY columns must carry manifest stats (have " +
+              s"${spec.cols.mkString(", ")}; missing ${missing.mkString(", ")})")
+          Seq(Snapshots.setProperties(spark, spec.manifestRoot,
+            Map(ClusterByProp -> ccols.mkString(","))).toLong)
         }
-      } else {
-        val r = Snapshots.compactSmallCommit(spark, spec.path,
-          spec.manifestRoot, spec.cols, smallBytes = small.toLong,
-          nFiles = 1)
-        metricsRow(spark, Seq("version" -> r.version.toLong,
-          "files_compacted" -> r.filesCompacted,
-          "files_skipped" -> r.filesSkipped, "files_out" -> r.filesOut))
-      }
-    case ReorgRe(name) =>
-      val spec = specByName(name)
-      val r = graft.sinks.Dv.purgeDv(spark, spec.path, spec.manifestRoot,
-        spec.cols)
-      metricsRow(spark, Seq("version" -> r.version.toLong,
-        "files_purged" -> r.filesPurged, "files_total" -> r.filesTotal,
-        "files_written" -> r.dataFilesWritten))
-    // TRUNCATE / SHOW CREATE are claimed only for REGISTERED lake names
-    // (same guard as extendedStatement) — a catalog table's statement
-    // falls through to Spark's own parser untouched
-    case TruncateRe(name)
-        if isRegisteredName(name) =>
-      val spec = specByName(name)
-      requireDmlClearance(spark, spec, "TRUNCATE")
-      val r = Snapshots.truncateCommit(spark, spec.manifestRoot)
-      metricsRow(spark, Seq("version" -> r.version.toLong,
-        "rows_deleted" -> r.rowsDeleted, "files_dropped" -> r.filesDropped))
-    case FsckRe(name, dry) =>
-      val spec = specByName(name)
-      val (r, files) = Snapshots.fsckCommit(spark, spec.manifestRoot,
-        dryRun = dry != null)
-      if (dry != null) {
-        import spark.implicits._
-        files.toDF("file")
-      } else metricsRow(spark, Seq("version" -> r.version.toLong,
-        "files_missing" -> r.filesMissing, "files_total" -> r.filesTotal,
-        "rows_lost" -> r.rowsLost))
-    case ShowCreateRe(name)
-        if isRegisteredName(name) =>
-      val spec = specByName(name)
-      val lname = canonicalName(name)
-      // LOGICAL schema (column mapping applied): what a new consumer
-      // would re-create; physical layout is an implementation detail.
-      // The statement is VALID Spark DDL that ROUND-TRIPS: feeding it
-      // back through LakeSql.sql (or spark.sql against a lake catalog)
-      // re-creates an empty table with this schema, layout, and stats
-      // domain — the structural halves travel as table properties, the
-      // form CREATE TABLE reads them back in.
-      // column contracts (NOT NULL / DEFAULT / identity / generated) live
-      // in the DECLARED schema's field metadata — print them back so the
-      // statement round-trips contracts, not just names and types
-      val declaredByName = Snapshots.declaredSchemaAt(spark,
-          spec.manifestRoot,
-          Snapshots.latestVersion(spark, spec.manifestRoot))
-        .map(_.fields.map(f =>
-          f.name.toLowerCase(java.util.Locale.ROOT) -> f).toMap)
-        .getOrElse(Map.empty)
-      val fields = mappedTableSchema(spark, spec).fields.toSeq
-        .map { f =>
-          val clauses = declaredByName
-            .get(f.name.toLowerCase(java.util.Locale.ROOT)).toSeq
-            .flatMap { d =>
-              val m = d.metadata
-              (if (m.contains(IdentityStartKey))
-                Seq("GENERATED ALWAYS AS IDENTITY (START WITH " +
-                  s"${m.getLong(IdentityStartKey)} INCREMENT BY " +
-                  s"${m.getLong(IdentityStepKey)})")
-              else Seq.empty) ++
-              (if (m.contains(GenerationKey))
-                Seq(s"GENERATED ALWAYS AS (${m.getString(GenerationKey)})")
-              else Seq.empty) ++
-              (if (m.contains(DefaultKey))
-                Seq(s"DEFAULT ${m.getString(DefaultKey)}") else Seq.empty) ++
-              (if (!d.nullable && !m.contains(IdentityStartKey))
-                Seq("NOT NULL") else Seq.empty)
+      // ANALYZE TABLE: one aggregate job over the LIVE rows (DV-masked rows
+      // excluded — statistics describe what readers see); row count always,
+      // exact per-visible-column distinct + null counts under FOR ALL
+      // COLUMNS. Persisted as stats.* properties in one metadata commit so
+      // SHOW TBLPROPERTIES / DESCRIBE EXTENDED serve them back; at 100 TB
+      // the job is a single pass with map-side partials (the multi-distinct
+      // plans through Spark's expand, still one scan).
+      case AnalyzeRe(name, forCols) if isRegisteredName(name) =>
+        metrics("version", "row_count", "columns_analyzed") { spark =>
+          val spec = specByName(name)
+          val v = Snapshots.latestVersion(spark, spec.manifestRoot)
+          val df = Snapshots.mappedTableAt(spark, spec.manifestRoot, v)
+          val cols =
+            if (forCols == null) Seq.empty[String] else df.columns.toSeq
+          val aggs = count(lit(1)).as("_rc") +: cols.flatMap(c => Seq(
+            countDistinct(col(c)).as(s"_ndv_$c"),
+            sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"_nulls_$c")))
+          val row = df.agg(aggs.head, aggs.tail: _*).head()
+          def longAt(i: Int) = if (row.isNullAt(i)) 0L else row.getLong(i)
+          val rc = longAt(0)
+          val props = Map("stats.rowCount" -> rc.toString) ++
+            cols.zipWithIndex.flatMap { case (c, i) => Seq(
+              s"stats.$c.distinctCount" -> longAt(1 + 2 * i).toString,
+              s"stats.$c.nullCount" -> longAt(2 + 2 * i).toString) }
+          val nv = Snapshots.setProperties(spark, spec.manifestRoot, props)
+          Seq(nv.toLong, rc, cols.size.toLong)
+        }
+      // RESTORE TABLE (the Delta RESTORE statement): ONE metadata-only
+      // roll-FORWARD commit re-referencing the target version's files —
+      // zero data files written, history above the target stays pinnable
+      // (Snapshots.restoreCommit re-asserts the target's column mapping).
+      case RestoreRe(name, v) =>
+        metrics("version", "restored_to")(spark => Seq(
+          Snapshots.restoreCommit(spark, specByName(name).manifestRoot,
+            v.toInt).toLong, v.toLong))
+      case RestoreTsRe(name, ts) =>
+        metrics("version", "restored_to") { spark =>
+          val spec = specByName(name)
+          val zone = java.time.ZoneId.of(
+            spark.sessionState.conf.sessionLocalTimeZone)
+          val raw = ts.trim
+          val ldt =
+            if (raw.contains(' ') || raw.contains('T'))
+              java.time.LocalDateTime.parse(raw.replace(' ', 'T'))
+            else java.time.LocalDate.parse(raw).atStartOfDay()
+          val ms = ldt.atZone(zone).toInstant.toEpochMilli
+          val target =
+            Snapshots.versionAtTimestamp(spark, spec.manifestRoot, ms)
+          Seq(Snapshots.restoreCommit(spark, spec.manifestRoot, target).toLong,
+            target.toLong)
+        }
+      // CREATE TABLE … SHALLOW CLONE (the Delta CLONE statement): the
+      // clone's v=1 IS the source's pinned manifest — zero data files
+      // copied; both logs evolve independently from there (clone-side DML
+      // stages into the CLONE's data dir). Same documented hazard as every
+      // shallow clone: don't vacuum the source while clones reference it.
+      case CloneRe(dst, src, ver, loc) =>
+        metrics("version", "cloned_from") { spark =>
+          cloneInto(spark, dst, src, ver, loc, "SHALLOW") {
+            (srcSpec, dstSpec, version) =>
+              Seq(Snapshots.cloneCommit(spark, srcSpec.manifestRoot,
+                dstSpec.manifestRoot, version).toLong, version.toLong)
+          }
+        }
+      // DEEP CLONE: same naming/registration contract as SHALLOW, but the
+      // destination owns PHYSICAL copies (executor-parallel copy job) —
+      // source vacuum/purge/delete can never invalidate it
+      case DeepCloneRe(dst, src, ver, loc) =>
+        metrics("version", "cloned_from", "files_copied", "bytes_copied") {
+          spark =>
+            cloneInto(spark, dst, src, ver, loc, "DEEP") {
+              (srcSpec, dstSpec, version) =>
+                val r = Snapshots.deepCloneCommit(spark, srcSpec.manifestRoot,
+                  dstSpec.path, dstSpec.manifestRoot, version)
+                Seq(r.version.toLong, version.toLong, r.filesCopied,
+                  r.bytesCopied)
             }
-          (s"  ${f.name} ${f.dataType.sql}" +: clauses).mkString(" ")
         }
-      val props = Snapshots.tableProperties(spark, spec.manifestRoot,
-        Snapshots.latestVersion(spark, spec.manifestRoot))
-      val all = Seq(
-        "stats_cols" -> spec.cols.mkString(","),
-        "files" -> spec.nFiles.toString,
-        "data_dir" -> spec.path,
-        "manifest_dir" -> spec.manifestRoot) ++
-        (props -- Seq(Snapshots.SchemaProp, "stats_cols", "files",
-          "data_dir", "manifest_dir")).toSeq.sorted
-      val stmt = s"CREATE TABLE $lname (\n" +
-        fields.mkString(",\n") + "\n) USING lake\nTBLPROPERTIES (" +
-        all.map { case (k, v) => s"'$k' = '$v'" }.mkString(", ") + ")"
-      import spark.implicits._
-      Seq(stmt).toDF("createtab_stmt")
-    case VacuumRe(name, n, unit, dry) =>
-      val spec = specByName(name)
-      val byVersions = unit.equalsIgnoreCase("VERSIONS")
-      val cutoffMs = System.currentTimeMillis() - n.toLong * 3600000L
-      if (dry != null) {
-        // DRY RUN: the reclaim listing, nothing touched — shares the
-        // plan code with the destructive path so it can never drift.
-        val p =
-          if (byVersions)
-            Snapshots.vacuumPlan(spark, spec.path, spec.manifestRoot,
-              retainLast = n.toInt)
-          else
-            Snapshots.vacuumRetentionPlan(spark, spec.path,
-              spec.manifestRoot, cutoffMs)
-        val rows =
-          p.dropVersions.map(v => Row(s"${spec.manifestRoot}/v=$v",
-            "version")) ++
-            p.deadFiles.map(Row(_, "data")) ++
-            p.deadDvDirs.map(Row(_, "dv"))
-        spark.createDataFrame(rows.asJava,
-          StructType(Seq(StructField("item", StringType, nullable = false),
-            StructField("kind", StringType, nullable = false))))
-      } else {
-        val r =
-          if (byVersions)
-            Snapshots.vacuum(spark, spec.path, spec.manifestRoot,
-              retainLast = n.toInt)
-          else
-            Snapshots.vacuumRetention(spark, spec.path, spec.manifestRoot,
-              cutoffMs)
-        metricsRow(spark, Seq("files_deleted" -> r.filesDeleted,
-          "versions_dropped" -> r.versionsDropped))
-      }
-    // DESCRIBE DETAIL: one metadata row from manifest + file status —
-    // the table-inventory read a catalog browser issues; never a scan.
-    case DescribeDetailRe(name) =>
-      val spec = specByName(name)
-      val v = Snapshots.latestVersion(spark, spec.manifestRoot)
-      val entries = graft.sinks.Dv.entries(
-        Snapshots.manifestAt(spark, spec.manifestRoot, v))
-      val p = new org.apache.hadoop.fs.Path(spec.path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val bytes = entries.map(e =>
-        fs.getFileStatus(new org.apache.hadoop.fs.Path(e.file)).getLen).sum
-      val nv = Snapshots.versions(spark, spec.manifestRoot).size
-      spark.createDataFrame(Seq(Row(name.toLowerCase(java.util.Locale.ROOT),
-          spec.path, entries.size.toLong, bytes, nv.toLong,
-          spec.cols.mkString(","))).asJava,
-        StructType(Seq(
-          StructField("name", StringType, nullable = false),
-          StructField("location", StringType, nullable = false),
-          StructField("num_files", LongType, nullable = false),
-          StructField("size_bytes", LongType, nullable = false),
-          StructField("num_versions", LongType, nullable = false),
-          StructField("stats_cols", StringType, nullable = false))))
-    // ALTER TABLE … ADD CONSTRAINT … FOREIGN KEY: the enforced
-    // referential contract — parent resolved to its manifest root NOW
-    // (renaming the parent later does not silently detach the edge),
-    // column names translated through each table's mapping.
-    case AddFkRe(name, cname, column, parent, key, _)
-        if isRegisteredName(name) && isRegisteredName(parent) =>
-      val spec = specByName(name)
-      val pspec = specByName(parent)
-      val childCol = physicalName(
-        column.toLowerCase(java.util.Locale.ROOT),
-        headMapping(spark, spec), "FOREIGN KEY column")
-      val parentCol = physicalName(
-        key.toLowerCase(java.util.Locale.ROOT),
-        headMapping(spark, pspec), "REFERENCES column")
-      val v = Snapshots.addForeignKey(spark, spec.manifestRoot,
-        cname.toLowerCase(java.util.Locale.ROOT), childCol,
-        pspec.manifestRoot, parentCol)
-      metricsRow(spark, Seq("version" -> v.toLong))
-    // GOVERNANCE POLICIES: row filter + column masks as property commits;
-    // applied to every read by [[aliasedTableAt]] → [[applyPolicies]].
-    case AlterColTypeRe(name, colName, typeStr) if isRegisteredName(name) =>
-      val spec = specByName(name)
-      val dt = org.apache.spark.sql.catalyst.parser.CatalystSqlParser
-        .parseDataType(typeStr.trim)
-      metricsRow(spark, Seq("version" -> Snapshots.widenColumn(spark,
-        spec.manifestRoot, colName, dt).toLong))
-    case SetRowFilterRe(name, cond) =>
-      val spec = specByName(name)
-      validatePolicyExpr(spark, spec, cond.trim, None)
-      metricsRow(spark, Seq("version" -> Snapshots.setProperties(spark,
-        spec.manifestRoot, Map(RowFilterProp -> cond.trim)).toLong))
-    case DropRowFilterRe(name) =>
-      val spec = specByName(name)
-      metricsRow(spark, Seq("version" -> Snapshots.unsetProperties(spark,
-        spec.manifestRoot, Seq(RowFilterProp)).toLong))
-    case SetMaskRe(name, colName, maskExpr) =>
-      val spec = specByName(name)
-      val c = colName.toLowerCase(java.util.Locale.ROOT)
-      validatePolicyExpr(spark, spec, maskExpr.trim, Some(c))
-      metricsRow(spark, Seq("version" -> Snapshots.setProperties(spark,
-        spec.manifestRoot,
-        Map(s"$MaskPropPrefix$c" -> maskExpr.trim)).toLong))
-    case DropMaskRe(name, colName) =>
-      val spec = specByName(name)
-      val c = colName.toLowerCase(java.util.Locale.ROOT)
-      metricsRow(spark, Seq("version" -> Snapshots.unsetProperties(spark,
-        spec.manifestRoot, Seq(s"$MaskPropPrefix$c")).toLong))
-    // CLUSTERING KEYS as table state (liquid shape): one metadata-only
-    // property commit; plain OPTIMIZE reads the keys back and
-    // re-clusters only the unclustered increment. Keys must carry
-    // manifest stats (same rule as ZORDER BY — clustering a column no
-    // stats can prune buys nothing).
-    // MATERIALIZED VIEWS (the Databricks MV surface; [[MatViews]]):
-    // CREATE materializes the algebraic aggregate as a lake table with
-    // the definition in its properties and an mvref_<baseVersion> cursor
-    // tag; REFRESH folds the base change feed since the cursor; DROP
-    // unregisters. Serving is the injected [[ServeFromMatViews]] rule.
-    case CreateMvRe(name, loc, query) =>
-      MatViews.create(spark, name, Option(loc), query)
-    case RefreshMvRe(name, full) =>
-      val r = MatViews.refresh(spark, name, full = full != null)
-      metricsRow(spark, Seq("version" -> r.version.toLong,
-        "from_version" -> r.fromVersion.toLong,
-        "to_version" -> r.toVersion.toLong,
-        "feed_rows" -> r.feedRows,
-        "groups_recomputed" -> r.groupsRecomputed,
-        "base_files_read" -> r.baseFilesRead,
-        "base_files_total" -> r.baseFilesTotal))
-    case DropMvRe(name) =>
-      metricsRow(spark,
-        Seq("dropped" -> (if (MatViews.drop(spark, name)) 1L else 0L)))
-    case AlterClusterNoneRe(name) if isRegisteredName(name) =>
-      val spec = specByName(name)
-      metricsRow(spark, Seq("version" -> Snapshots.unsetProperties(spark,
-        spec.manifestRoot, Seq(ClusterByProp)).toLong))
-    case AlterClusterRe(name, colList) if isRegisteredName(name) =>
-      val spec = specByName(name)
-      val mapping = headMapping(spark, spec)
-      val ccols = colList.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        .map(_.toLowerCase(java.util.Locale.ROOT))
-      require(ccols.nonEmpty, "CLUSTER BY needs at least one column")
-      val physical =
-        ccols.map(c => physicalName(c, mapping, "CLUSTER BY column"))
-      val missing = physical.filterNot(spec.cols.contains)
-      require(missing.isEmpty,
-        s"CLUSTER BY columns must carry manifest stats (have " +
-          s"${spec.cols.mkString(", ")}; missing ${missing.mkString(", ")})")
-      metricsRow(spark, Seq("version" -> Snapshots.setProperties(spark,
-        spec.manifestRoot,
-        Map(ClusterByProp -> ccols.mkString(","))).toLong))
-    // ANALYZE TABLE: one aggregate job over the LIVE rows (DV-masked rows
-    // excluded — statistics describe what readers see); row count always,
-    // exact per-visible-column distinct + null counts under FOR ALL
-    // COLUMNS. Persisted as stats.* properties in one metadata commit so
-    // SHOW TBLPROPERTIES / DESCRIBE EXTENDED serve them back; at 100 TB
-    // the job is a single pass with map-side partials (the multi-distinct
-    // plans through Spark's expand, still one scan).
-    case AnalyzeRe(name, forCols) if isRegisteredName(name) =>
-      val spec = specByName(name)
-      val v = Snapshots.latestVersion(spark, spec.manifestRoot)
-      val df = Snapshots.mappedTableAt(spark, spec.manifestRoot, v)
-      val cols = if (forCols == null) Seq.empty[String] else df.columns.toSeq
-      val aggs = count(lit(1)).as("_rc") +: cols.flatMap(c => Seq(
-        countDistinct(col(c)).as(s"_ndv_$c"),
-        sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"_nulls_$c")))
-      val row = df.agg(aggs.head, aggs.tail: _*).head()
-      def longAt(i: Int) = if (row.isNullAt(i)) 0L else row.getLong(i)
-      val rc = longAt(0)
-      val props = Map("stats.rowCount" -> rc.toString) ++
-        cols.zipWithIndex.flatMap { case (c, i) => Seq(
-          s"stats.$c.distinctCount" -> longAt(1 + 2 * i).toString,
-          s"stats.$c.nullCount" -> longAt(2 + 2 * i).toString) }
-      val nv = Snapshots.setProperties(spark, spec.manifestRoot, props)
-      metricsRow(spark, Seq("version" -> nv.toLong, "row_count" -> rc,
-        "columns_analyzed" -> cols.size.toLong))
-    // RESTORE TABLE (the Delta RESTORE statement): ONE metadata-only
-    // roll-FORWARD commit re-referencing the target version's files —
-    // zero data files written, history above the target stays pinnable
-    // (Snapshots.restoreCommit re-asserts the target's column mapping).
-    case RestoreRe(name, v) =>
-      val spec = specByName(name)
-      val nv = Snapshots.restoreCommit(spark, spec.manifestRoot, v.toInt)
-      metricsRow(spark, Seq("version" -> nv.toLong,
-        "restored_to" -> v.toLong))
-    case RestoreTsRe(name, ts) =>
-      val spec = specByName(name)
-      val zone = java.time.ZoneId.of(
-        spark.sessionState.conf.sessionLocalTimeZone)
-      val raw = ts.trim
-      val ldt =
-        if (raw.contains(' ') || raw.contains('T'))
-          java.time.LocalDateTime.parse(raw.replace(' ', 'T'))
-        else java.time.LocalDate.parse(raw).atStartOfDay()
-      val ms = ldt.atZone(zone).toInstant.toEpochMilli
-      val target = Snapshots.versionAtTimestamp(spark, spec.manifestRoot, ms)
-      val nv = Snapshots.restoreCommit(spark, spec.manifestRoot, target)
-      metricsRow(spark, Seq("version" -> nv.toLong,
-        "restored_to" -> target.toLong))
-    // CREATE TABLE … SHALLOW CLONE (the Delta CLONE statement): the
-    // clone's v=1 IS the source's pinned manifest — zero data files
-    // copied; both logs evolve independently from there (clone-side DML
-    // stages into the CLONE's data dir). Same documented hazard as every
-    // shallow clone: don't vacuum the source while clones reference it.
-    case CloneRe(dst, src, ver, loc) =>
-      val dstName = dst.toLowerCase(java.util.Locale.ROOT)
-      val srcSpec = specByName(src)
-      require(!registry.contains(dstName),
-        s"lake table '$dstName' already exists")
-      val version =
-        if (ver == null) Snapshots.latestVersion(spark, srcSpec.manifestRoot)
-        else ver.toInt
-      val root = Option(loc).orElse(warehouse.get().map(w => s"$w/$dstName"))
-        .getOrElse(throw new IllegalArgumentException(
-          "SHALLOW CLONE needs a LOCATION clause or LakeSql.setWarehouse"))
-      val v = Snapshots.cloneCommit(spark, srcSpec.manifestRoot,
-        s"$root/m", version)
-      register(dstName, LakeTableSpec(s"$root/z", s"$root/m",
-        srcSpec.cols, srcSpec.nFiles))
-      metricsRow(spark, Seq("version" -> v.toLong,
-        "cloned_from" -> version.toLong))
-    // DEEP CLONE: same naming/registration contract as SHALLOW, but the
-    // destination owns PHYSICAL copies (executor-parallel copy job) —
-    // source vacuum/purge/delete can never invalidate it
-    case DeepCloneRe(dst, src, ver, loc) =>
-      val dstName = dst.toLowerCase(java.util.Locale.ROOT)
-      val srcSpec = specByName(src)
-      require(!registry.contains(dstName),
-        s"lake table '$dstName' already exists")
-      val version =
-        if (ver == null) Snapshots.latestVersion(spark, srcSpec.manifestRoot)
-        else ver.toInt
-      val root = Option(loc).orElse(warehouse.get().map(w => s"$w/$dstName"))
-        .getOrElse(throw new IllegalArgumentException(
-          "DEEP CLONE needs a LOCATION clause or LakeSql.setWarehouse"))
-      val r = Snapshots.deepCloneCommit(spark, srcSpec.manifestRoot,
-        s"$root/z", s"$root/m", version)
-      register(dstName, LakeTableSpec(s"$root/z", s"$root/m",
-        srcSpec.cols, srcSpec.nFiles))
-      metricsRow(spark, Seq("version" -> r.version.toLong,
-        "cloned_from" -> version.toLong,
-        "files_copied" -> r.filesCopied, "bytes_copied" -> r.bytesCopied))
-    // INSERT INTO … REPLACE WHERE: scoped ATOMIC overwrite — one commit
-    // deletes exactly the predicate's rows and lands the batch; a reader
-    // sees the old slice or the new, never the gap a DELETE;INSERT pair
-    // opens. The predicate compiles through the same typed stats-box
-    // compiler as DELETE/UPDATE (file-pruned touch set, loud rejection
-    // when nothing prunes), the batch passes the same schema-on-write
-    // alignment as INSERT INTO, and every batch row must satisfy the
-    // predicate (a scoped overwrite cannot smuggle rows past its scope).
-    case InsertReplaceRe(name, condText, queryText) =>
-      val spec = specByName(name)
-      requireDmlClearance(spark, spec, "INSERT ... REPLACE WHERE")
-      val mapping = headMapping(spark, spec)
-      val cond = spark.sessionState.sqlParser.parseExpression(condText)
-      val (prune, pred) = compileWhere(cond, spec, mapping, Some(spark))
-      val batch = alignedPhysicalBatch(spark, spec,
-        spark.sessionState.sqlParser.parsePlan(queryText))
-      val r = Snapshots.replaceWhereCommit(spark, batch, spec.cols,
-        spec.path, spec.manifestRoot, spec.nFiles, prune, pred,
-        compileCover(cond, spec, mapping, Some(spark)))
-      metricsRow(spark, Seq("version" -> r.version.toLong,
-        "files_rewritten" -> r.filesRewritten,
-        "files_total" -> r.filesTotal,
-        "rows_deleted" -> r.rowsDeleted,
-        "files_appended" -> r.filesAppended,
-        "files_dropped" -> r.filesDropped))
-    // CONVERT TO LAKE: adopt an existing parquet directory IN PLACE — v1
-    // is a manifest over the directory's current files (footer stats when
-    // every stats column is plain numeric — a metadata-only read; one
-    // column-pruned scan otherwise), no data file written, moved, or
-    // rewritten. From v1 on the directory serves the whole surface:
-    // time travel, DML, OPTIMIZE, constraints. The manifest lives INSIDE
-    // the directory under an underscore-prefixed subdir, so plain
-    // spark.read.parquet over the dir keeps working untouched.
-    case ConvertRe(name, dir, colList, nf) =>
-      val lname = name.toLowerCase(java.util.Locale.ROOT)
-      require(!registry.contains(lname),
-        s"lake table '$lname' already exists")
-      val cols = colList.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      require(cols.nonEmpty, "CONVERT needs at least one stats column")
-      val manifestRoot = s"$dir/_lake_manifest"
-      require(Snapshots.versions(spark, manifestRoot).isEmpty,
-        s"$dir is already a lake table (manifest exists)")
-      val manifest = Layout.buildManifest(spark, dir, cols)
-      val version = Snapshots.commit(spark, manifest, manifestRoot)
-      val spec = LakeTableSpec(dir, manifestRoot, cols,
-        Option(nf).map(_.toInt).getOrElse(8))
-      register(lname, spec)
-      metricsRow(spark, Seq("version" -> version.toLong,
-        "files_converted" -> manifest.count()))
-    // COPY INTO: idempotent file-tracking ingest. Keys are name:size of
-    // each visible source data file; the batch passes the same
-    // schema-on-write gate as INSERT (mapping-aware), then lands as one
-    // marker-carrying append. JSON reads use the table's LOGICAL schema
-    // (no inference — drifted files fail the gate loudly, never null-fill).
-    case CopyIntoRe(name, dir, fmtOrNull) =>
-      val spec = specByName(name)
-      val fmt = Option(fmtOrNull).map(_.toUpperCase(java.util.Locale.ROOT))
-        .getOrElse("PARQUET")
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      require(fs.exists(p), s"COPY INTO source '$dir' does not exist")
-      val files = fs.listStatus(p).toSeq
-        .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith("."))
-        .map(st => (st.getPath.toString,
-          java.security.MessageDigest.getInstance("MD5")
-            // key = full qualified path : size : mtime — the Databricks
-            // COPY INTO contract. Base name alone would silently skip a
-            // NEW file that shares name+size with any previously loaded
-            // one (fixed-name daily exports from another directory);
-            // mtime makes an in-place rewrite load again, as it should.
-            .digest((s"${st.getPath.toString}:${st.getLen}:" +
-                st.getModificationTime)
-              .getBytes("UTF-8")).map("%02x".format(_)).mkString))
-      val mapping = headMapping(spark, spec)
-      val logicalSchema = Snapshots.mappedTableAt(spark, spec.manifestRoot,
-        Snapshots.latestVersion(spark, spec.manifestRoot)).schema
-      def read(paths: Seq[String]): DataFrame = {
-        val raw = fmt match {
-          case "PARQUET" => spark.read.parquet(paths: _*)
-          case "JSON" => spark.read.schema(logicalSchema).json(paths: _*)
+      // INSERT INTO … REPLACE WHERE: scoped ATOMIC overwrite — one commit
+      // deletes exactly the predicate's rows and lands the batch; a reader
+      // sees the old slice or the new, never the gap a DELETE;INSERT pair
+      // opens. The predicate compiles through the same typed stats-box
+      // compiler as DELETE/UPDATE (file-pruned touch set, loud rejection
+      // when nothing prunes), the batch passes the same schema-on-write
+      // alignment as INSERT INTO, and every batch row must satisfy the
+      // predicate (a scoped overwrite cannot smuggle rows past its scope).
+      case InsertReplaceRe(name, condText, queryText) =>
+        metrics("version", "files_rewritten", "files_total", "rows_deleted",
+            "files_appended", "files_dropped") { spark =>
+          val spec = specByName(name)
+          requireDmlClearance(spark, spec, "INSERT ... REPLACE WHERE")
+          val mapping = headMapping(spark, spec)
+          val cond = spark.sessionState.sqlParser.parseExpression(condText)
+          val (prune, pred) = compileWhere(cond, spec, mapping, Some(spark))
+          val batch = alignedPhysicalBatch(spark, spec,
+            spark.sessionState.sqlParser.parsePlan(queryText))
+          val r = Snapshots.replaceWhereCommit(spark, batch, spec.cols,
+            spec.path, spec.manifestRoot, spec.nFiles, prune, pred,
+            compileCover(cond, spec, mapping, Some(spark)))
+          Seq(r.version.toLong, r.filesRewritten, r.filesTotal,
+            r.rowsDeleted, r.filesAppended, r.filesDropped)
         }
-        alignedPhysicalFrame(spark, spec, toPhysicalFrame(raw, mapping))
-      }
-      val r = Snapshots.copyIntoCommit(spark, spec.path, spec.manifestRoot,
-        spec.cols, spec.nFiles, files, read)
-      maybeAutoCompact(spark, spec)
-      metricsRow(spark, Seq("version" -> r.version.toLong,
-        "files_loaded" -> r.filesLoaded,
-        "rows_loaded" -> r.rowsLoaded,
-        "files_skipped" -> r.filesSkipped))
-    case _ => sqlParsed(spark, text)
+      // CONVERT TO LAKE: adopt an existing parquet directory IN PLACE — v1
+      // is a manifest over the directory's current files (footer stats when
+      // every stats column is plain numeric — a metadata-only read; one
+      // column-pruned scan otherwise), no data file written, moved, or
+      // rewritten. From v1 on the directory serves the whole surface:
+      // time travel, DML, OPTIMIZE, constraints. The manifest lives INSIDE
+      // the directory under an underscore-prefixed subdir, so plain
+      // spark.read.parquet over the dir keeps working untouched.
+      case ConvertRe(name, dir, colList, nf) =>
+        metrics("version", "files_converted") { spark =>
+          val lname = name.toLowerCase(java.util.Locale.ROOT)
+          require(!registry.contains(lname),
+            s"lake table '$lname' already exists")
+          val cols = colList.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+          require(cols.nonEmpty, "CONVERT needs at least one stats column")
+          val manifestRoot = s"$dir/_lake_manifest"
+          require(Snapshots.versions(spark, manifestRoot).isEmpty,
+            s"$dir is already a lake table (manifest exists)")
+          val manifest = Layout.buildManifest(spark, dir, cols)
+          val version = Snapshots.commit(spark, manifest, manifestRoot)
+          register(lname, LakeTableSpec(dir, manifestRoot, cols,
+            Option(nf).map(_.toInt).getOrElse(8)))
+          Seq(version.toLong, manifest.count())
+        }
+      // COPY INTO: idempotent file-tracking ingest. Keys are name:size of
+      // each visible source data file; the batch passes the same
+      // schema-on-write gate as INSERT (mapping-aware), then lands as one
+      // marker-carrying append. JSON reads use the table's LOGICAL schema
+      // (no inference — drifted files fail the gate loudly, never null-fill).
+      case CopyIntoRe(name, dir, fmtOrNull) =>
+        metrics("version", "files_loaded", "rows_loaded", "files_skipped") {
+          spark =>
+            val r = copyInto(spark, specByName(name), dir, fmtOrNull)
+            Seq(r.version.toLong, r.filesLoaded, r.rowsLoaded,
+              r.filesSkipped)
+        }
+      case _ => None
+    }
+
+  /** ZORDER BY's column list in physical names; each must carry manifest
+    * stats — clustering a column no stats can prune buys nothing. */
+  private def zorderCols(spec: LakeTableSpec,
+                         mapping: Option[Map[String, String]],
+                         colList: String): Seq[String] = {
+    val zcols = colList.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+      .map(c => physicalName(c, mapping, "ZORDER BY column"))
+    require(zcols.nonEmpty, "ZORDER BY needs at least one column")
+    val missing = zcols.filterNot(spec.cols.contains)
+    require(missing.isEmpty,
+      s"ZORDER BY columns must carry manifest stats (have " +
+        s"${spec.cols.mkString(", ")}; missing ${missing.mkString(", ")}) " +
+        "— clustering a column no stats can prune buys nothing")
+    zcols
   }
 
-  private def sqlParsed(spark: SparkSession, text: String): DataFrame =
-    spark.sessionState.sqlParser.parsePlan(text) match {
-      case DeleteFromTable(target, condition) if isLake(target) =>
-        withAutoCompact(spark, target)(runDelete(spark, target, condition))
-      case m: MergeIntoTable if isLake(m.targetTable) =>
-        withAutoCompact(spark, m.targetTable)(runMerge(spark, m))
-      case ins: InsertIntoStatement if isLake(ins.table) =>
-        withAutoCompact(spark, ins.table)(runInsert(spark, ins))
-      case u: UpdateTable if isLake(u.table) =>
-        withAutoCompact(spark, u.table)(runUpdate(spark, u))
+  /** Re-cluster on the table's CLUSTER BY keys (incremental, or every
+    * live file when `full`): the (version, files_in, files_out) values. */
+  private def recluster(spark: SparkSession, spec: LakeTableSpec,
+                        full: Boolean): Seq[Long] = {
+    val mapping = headMapping(spark, spec)
+    val physical = clusterColsOf(spark, spec)
+      .map(c => physicalName(c, mapping, "CLUSTER BY column"))
+    val r = Snapshots.clusterIncrementalCommit(spark, spec.path,
+      spec.manifestRoot, spec.cols, physical, spec.nFiles, full = full)
+    Seq(r.version.toLong, r.filesReclustered, r.filesOut)
+  }
+
+  /** The naming/registration contract SHALLOW and DEEP CLONE share: the
+    * destination name must be free, the source version defaults to its
+    * head, the root comes from LOCATION or the warehouse; `commit` runs
+    * the clone and the destination registers after it. */
+  private def cloneInto[A](spark: SparkSession, dst: String, src: String,
+                           ver: String, loc: String, kind: String)
+                          (commit: (LakeTableSpec, LakeTableSpec, Int) => A): A = {
+    val dstName = dst.toLowerCase(java.util.Locale.ROOT)
+    val srcSpec = specByName(src)
+    require(!registry.contains(dstName),
+      s"lake table '$dstName' already exists")
+    val version =
+      if (ver == null) Snapshots.latestVersion(spark, srcSpec.manifestRoot)
+      else ver.toInt
+    val root = Option(loc).orElse(warehouse.get().map(w => s"$w/$dstName"))
+      .getOrElse(throw new IllegalArgumentException(
+        s"$kind CLONE needs a LOCATION clause or LakeSql.setWarehouse"))
+    val dstSpec = LakeTableSpec(s"$root/z", s"$root/m", srcSpec.cols,
+      srcSpec.nFiles)
+    val out = commit(srcSpec, dstSpec, version)
+    register(dstName, dstSpec)
+    out
+  }
+
+  /** SHOW CREATE TABLE's one statement: the LOGICAL schema (column
+    * mapping applied) — what a new consumer would re-create; physical
+    * layout is an implementation detail. The statement is VALID Spark DDL
+    * that ROUND-TRIPS: feeding it back through LakeSql.sql (or spark.sql
+    * against a lake catalog) re-creates an empty table with this schema,
+    * layout, and stats domain — the structural halves travel as table
+    * properties, the form CREATE TABLE reads them back in. Column
+    * contracts (NOT NULL / DEFAULT / identity / generated) live in the
+    * DECLARED schema's field metadata and print back too. */
+  private def showCreate(spark: SparkSession, name: String): String = {
+    val spec = specByName(name)
+    val head = Snapshots.latestVersion(spark, spec.manifestRoot)
+    val declaredByName = Snapshots.declaredSchemaAt(spark,
+        spec.manifestRoot, head)
+      .map(_.fields.map(f =>
+        f.name.toLowerCase(java.util.Locale.ROOT) -> f).toMap)
+      .getOrElse(Map.empty)
+    val fields = mappedTableSchema(spark, spec).fields.toSeq
+      .map { f =>
+        val clauses = declaredByName
+          .get(f.name.toLowerCase(java.util.Locale.ROOT)).toSeq
+          .flatMap { d =>
+            val m = d.metadata
+            (if (m.contains(IdentityStartKey))
+              Seq("GENERATED ALWAYS AS IDENTITY (START WITH " +
+                s"${m.getLong(IdentityStartKey)} INCREMENT BY " +
+                s"${m.getLong(IdentityStepKey)})")
+            else Seq.empty) ++
+            (if (m.contains(GenerationKey))
+              Seq(s"GENERATED ALWAYS AS (${m.getString(GenerationKey)})")
+            else Seq.empty) ++
+            (if (m.contains(DefaultKey))
+              Seq(s"DEFAULT ${m.getString(DefaultKey)}") else Seq.empty) ++
+            (if (!d.nullable && !m.contains(IdentityStartKey))
+              Seq("NOT NULL") else Seq.empty)
+          }
+        (s"  ${f.name} ${f.dataType.sql}" +: clauses).mkString(" ")
+      }
+    val props = Snapshots.tableProperties(spark, spec.manifestRoot, head)
+    val all = Seq(
+      "stats_cols" -> spec.cols.mkString(","),
+      "files" -> spec.nFiles.toString,
+      "data_dir" -> spec.path,
+      "manifest_dir" -> spec.manifestRoot) ++
+      (props -- Seq(Snapshots.SchemaProp, "stats_cols", "files",
+        "data_dir", "manifest_dir")).toSeq.sorted
+    s"CREATE TABLE ${canonicalName(name)} (\n" +
+      fields.mkString(",\n") + "\n) USING lake\nTBLPROPERTIES (" +
+      all.map { case (k, v) => s"'$k' = '$v'" }.mkString(", ") + ")"
+  }
+
+  /** COPY INTO's load: list the source dir, key each visible file by
+    * qualified path : size : mtime, read the unseen ones through the
+    * schema-on-write gate, and land them as one marker-carrying append
+    * (then the table's auto-compaction, like every other write). */
+  private def copyInto(spark: SparkSession, spec: LakeTableSpec, dir: String,
+                       fmtOrNull: String): Snapshots.CopyResult = {
+    val fmt = Option(fmtOrNull).map(_.toUpperCase(java.util.Locale.ROOT))
+      .getOrElse("PARQUET")
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(fs.exists(p), s"COPY INTO source '$dir' does not exist")
+    val files = fs.listStatus(p).toSeq
+      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+      .map(st => (st.getPath.toString,
+        java.security.MessageDigest.getInstance("MD5")
+          // key = full qualified path : size : mtime — the Databricks
+          // COPY INTO contract. Base name alone would silently skip a
+          // NEW file that shares name+size with any previously loaded
+          // one (fixed-name daily exports from another directory);
+          // mtime makes an in-place rewrite load again, as it should.
+          .digest((s"${st.getPath.toString}:${st.getLen}:" +
+              st.getModificationTime)
+            .getBytes("UTF-8")).map("%02x".format(_)).mkString))
+    val mapping = headMapping(spark, spec)
+    val logicalSchema = Snapshots.mappedTableAt(spark, spec.manifestRoot,
+      Snapshots.latestVersion(spark, spec.manifestRoot)).schema
+    def read(paths: Seq[String]): DataFrame = {
+      val raw = fmt match {
+        case "PARQUET" => spark.read.parquet(paths: _*)
+        case "JSON" => spark.read.schema(logicalSchema).json(paths: _*)
+      }
+      alignedPhysicalFrame(spark, spec, toPhysicalFrame(raw, mapping))
+    }
+    val r = Snapshots.copyIntoCommit(spark, spec.path, spec.manifestRoot,
+      spec.cols, spec.nFiles, files, read)
+    maybeAutoCompact(spark, spec)
+    r
+  }
+
+  /** Route one parsed statement: a command the parser claimed and lake
+    * DML / property statements ([[dmlCommand]]) run their handler now;
+    * everything else is lake DDL or a read. */
+  private[sql] def sqlParsed(spark: SparkSession,
+                             plan: LogicalPlan): DataFrame = plan match {
+    case c: LakeDmlCommand => c.exec(spark)
+    case _ =>
+      dmlCommand(plan, _ => false).fold(ddlOrRead(spark, plan))(_.exec(spark))
+  }
+
+  private def ddlOrRead(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    plan match {
       case cts: CreateTableAsSelect =>
         runCtas(spark, cts)
       case rts: ReplaceTableAsSelect =>
         runReplaceTas(spark, rts)
-      case ct: CreateTable if claimableCreate(ct) =>
-        runCreate(spark, ct)
       case rc: RenameColumn if isLake(rc.table) =>
         val (_, spec) = lookup(rc.table).get
         val v = Snapshots.renameColumn(spark, spec.manifestRoot,
@@ -1123,19 +1085,9 @@ object LakeSql {
           Snapshots.dropColumn(spark, spec.manifestRoot,
             f.name.mkString("."))).last
         metricsRow(spark, Seq("version" -> v.toLong))
-      // ALTER TABLE … SET/UNSET TBLPROPERTIES + SHOW TBLPROPERTIES: the
-      // Delta table-property store as metadata-only marker commits
-      // (superseding-set semantics; pinned reads see THEIR version's map)
-      case stp: SetTableProperties if isLake(stp.table) =>
-        val (_, spec) = lookup(stp.table).get
-        val v = Snapshots.setProperties(spark, spec.manifestRoot,
-          stp.properties)
-        metricsRow(spark, Seq("version" -> v.toLong))
-      case utp: UnsetTableProperties if isLake(utp.table) =>
-        val (_, spec) = lookup(utp.table).get
-        val v = Snapshots.unsetProperties(spark, spec.manifestRoot,
-          utp.propertyKeys)
-        metricsRow(spark, Seq("version" -> v.toLong))
+      // SHOW TBLPROPERTIES: the Delta table-property store's read side
+      // (SET/UNSET TBLPROPERTIES commit through [[dmlCommand]];
+      // superseding-set semantics, pinned reads see THEIR version's map)
       case sp: ShowTableProperties if isLake(sp.table) =>
         val (_, spec) = lookup(sp.table).get
         val props = Snapshots.tableProperties(spark, spec.manifestRoot,
@@ -1619,9 +1571,10 @@ object LakeSql {
     * APPLY (PURGE)` folds the debt. Both modes share the typed predicate
     * compiler and the whole-file drop proof: a fully-covered file leaves
     * the manifest outright on either path. Metrics are the superset
-    * (`files_masked` 0 under CoW, `files_rewritten` 0 under MoR). */
+    * (`files_masked` 0 under CoW, `files_rewritten` 0 under MoR), in
+    * [[dmlCommand]]'s DELETE order. */
   private def runDelete(spark: SparkSession, target: LogicalPlan,
-                        condition: Expression): DataFrame = {
+                        condition: Expression): Seq[Long] = {
     val (_, spec) = lookup(target).get
     requireDmlClearance(spark, spec, "DELETE")
     val mapping = headMapping(spark, spec)
@@ -1630,22 +1583,16 @@ object LakeSql {
     val mor = Snapshots.tableProperties(spark, spec.manifestRoot,
       Snapshots.latestVersion(spark, spec.manifestRoot))
       .get("delete.mode").exists(_.equalsIgnoreCase("mor"))
-    val metrics =
-      if (mor) {
-        val r = graft.sinks.Dv.deleteWhereMoRPred(spark, spec.path,
-          spec.manifestRoot, prune, pred, cover)
-        require(r.dataFilesWritten == 0, s"MoR delete wrote data files: $r")
-        Seq("files_rewritten" -> 0L, "files_total" -> r.filesTotal,
-          "rows_deleted" -> r.rowsDeleted, "files_dropped" -> r.filesDropped,
-          "files_masked" -> r.filesMasked)
-      } else {
-        val r = Snapshots.deleteWherePred(spark, spec.path,
-          spec.manifestRoot, spec.cols, prune, pred, cover)
-        Seq("files_rewritten" -> r.filesRewritten,
-          "files_total" -> r.filesTotal, "rows_deleted" -> r.rowsDeleted,
-          "files_dropped" -> r.filesDropped, "files_masked" -> 0L)
-      }
-    metricsRow(spark, metrics)
+    if (mor) {
+      val r = graft.sinks.Dv.deleteWhereMoRPred(spark, spec.path,
+        spec.manifestRoot, prune, pred, cover)
+      require(r.dataFilesWritten == 0, s"MoR delete wrote data files: $r")
+      Seq(0L, r.filesTotal, r.rowsDeleted, r.filesDropped, r.filesMasked)
+    } else {
+      val r = Snapshots.deleteWherePred(spark, spec.path,
+        spec.manifestRoot, spec.cols, prune, pred, cover)
+      Seq(r.filesRewritten, r.filesTotal, r.rowsDeleted, r.filesDropped, 0L)
+    }
   }
 
   private def runMerge(spark: SparkSession, m: MergeIntoTable): DataFrame = {
@@ -1897,7 +1844,7 @@ object LakeSql {
     * replace-everything semantic is a delete+insert the caller must spell
     * out (an accidental OVERWRITE at 100 TB is not a typo to forgive). */
   private def runInsert(spark: SparkSession,
-                        ins: InsertIntoStatement): DataFrame = {
+                        ins: InsertIntoStatement): Seq[Long] = {
     val (_, spec) = lookup(ins.table).get
     require(!ins.overwrite,
       "INSERT OVERWRITE is not supported on a versioned lake table — " +
@@ -1914,8 +1861,7 @@ object LakeSql {
       val aligned = alignedPhysicalBatch(spark, spec, ins.query)
       val (version, files) = Snapshots.appendCommit(spark, aligned, spec.cols,
         spec.path, spec.manifestRoot, spec.nFiles)
-      return metricsRow(spark,
-        Seq("version" -> version.toLong, "files_appended" -> files.toLong))
+      return Seq(version.toLong, files.toLong)
     }
     // ENGINE-ASSIGNED columns (identity / generated): the batch supplies
     // only OTHER columns — GENERATED ALWAYS means an explicit value is
@@ -2009,8 +1955,7 @@ object LakeSql {
       else Snapshots.mergedPropsMarkers(spark, spec.manifestRoot, hwm)
     val (version, files) = Snapshots.appendCommit(spark, aligned, spec.cols,
       spec.path, spec.manifestRoot, spec.nFiles, markers = markers)
-    metricsRow(spark,
-      Seq("version" -> version.toLong, "files_appended" -> files.toLong))
+    Seq(version.toLong, files.toLong)
   }
 
   /** Resolve an INSERT-shaped source query and align it to the table's
@@ -2163,7 +2108,7 @@ object LakeSql {
     * without it requires existence). Refused loudly under column mapping
     * or CHECK constraints: those contracts ride version markers that
     * would silently re-apply to the replaced schema. */
-  private def runReplaceTas(spark: SparkSession,
+  private[sql] def runReplaceTas(spark: SparkSession,
                             rts: ReplaceTableAsSelect): DataFrame = {
     val name = rts.name match {
       case UnresolvedIdentifier(Seq(n), _) =>
@@ -2227,10 +2172,6 @@ object LakeSql {
       case _ => false
     })
 
-  private[sql] def runReplaceClaimed(spark: SparkSession,
-                                     rts: ReplaceTableAsSelect): DataFrame =
-    runReplaceTas(spark, rts)
-
   /** Is this CreateTable ours to claim? Single-part name + `USING lake`
     * — the front-door / parser-level path. Catalog-qualified names
     * (`lake.db.t`) are NOT claimed: Spark routes those to the
@@ -2272,11 +2213,6 @@ object LakeSql {
     spark.sql(s"SELECT CAST(($sql) AS ${dt.sql})").queryExecution.analyzed
   }
 
-  /** [[runCreate]] for the parser-level claim ([[GraftSqlParser]]). */
-  private[sql] def runCreateClaimed(spark: SparkSession,
-                                    ct: CreateTable): DataFrame =
-    runCreate(spark, ct)
-
   /** Plain `CREATE TABLE t (cols…) USING lake TBLPROPERTIES
     * ('stats_cols' = '…', …)` — a table that exists BEFORE any data
     * ([[Snapshots.createEmptyTable]]): v1 is a typed empty manifest plus
@@ -2286,7 +2222,7 @@ object LakeSql {
     * round-trips through here. Layout from `LOCATION` (or the
     * warehouse), overridable per-half via `data_dir`/`manifest_dir`
     * properties. */
-  private def runCreate(spark: SparkSession, ct: CreateTable): DataFrame = {
+  private[sql] def runCreate(spark: SparkSession, ct: CreateTable): DataFrame = {
     val name = ct.name match {
       case UnresolvedIdentifier(parts, _) if parts.size <= 2 =>
         parts.map(_.toLowerCase(java.util.Locale.ROOT)).mkString(".")
@@ -2394,7 +2330,7 @@ object LakeSql {
     * DataFrame API as unresolved columns and resolve against the live
     * rows. An UPDATE without WHERE is rejected — unscoped it is a
     * full-table rewrite the caller must spell out via the DataFrame API. */
-  private def runUpdate(spark: SparkSession, u: UpdateTable): DataFrame = {
+  private def runUpdate(spark: SparkSession, u: UpdateTable): Seq[Long] = {
     val (_, spec) = lookup(u.table).get
     requireDmlClearance(spark, spec, "UPDATE")
     val mapping = headMapping(spark, spec)
@@ -2419,22 +2355,16 @@ object LakeSql {
     val mor = Snapshots.tableProperties(spark, spec.manifestRoot,
       Snapshots.latestVersion(spark, spec.manifestRoot))
       .get("update.mode").exists(_.equalsIgnoreCase("mor"))
-    val metrics =
-      if (mor) {
-        val r = Snapshots.updateWhereMoRPred(spark, spec.path,
-          spec.manifestRoot, spec.cols, prune, pred, assignments,
-          spec.nFiles)
-        Seq("files_rewritten" -> 0L, "files_total" -> r.filesTotal,
-          "rows_updated" -> r.rowsUpdated, "files_masked" -> r.filesMasked,
-          "files_appended" -> r.filesAppended)
-      } else {
-        val r = Snapshots.updateWherePred(spark, spec.path,
-          spec.manifestRoot, spec.cols, prune, pred, assignments)
-        Seq("files_rewritten" -> r.filesRewritten,
-          "files_total" -> r.filesTotal, "rows_updated" -> r.rowsUpdated,
-          "files_masked" -> 0L, "files_appended" -> 0L)
-      }
-    metricsRow(spark, metrics)
+    if (mor) {
+      val r = Snapshots.updateWhereMoRPred(spark, spec.path,
+        spec.manifestRoot, spec.cols, prune, pred, assignments,
+        spec.nFiles)
+      Seq(0L, r.filesTotal, r.rowsUpdated, r.filesMasked, r.filesAppended)
+    } else {
+      val r = Snapshots.updateWherePred(spark, spec.path,
+        spec.manifestRoot, spec.cols, prune, pred, assignments)
+      Seq(r.filesRewritten, r.filesTotal, r.rowsUpdated, 0L, 0L)
+    }
   }
 
   // ------------------------------------------ predicate → (prune, residual)
@@ -2873,19 +2803,22 @@ object LakeSql {
 
   private def isLake(p: LogicalPlan): Boolean = lookup(p).isDefined
 
-  /** spark.sql DML routing ([[GraftSparkExtensions]]): when a parsed
-    * statement root is DML against a registered lake table, return the
-    * (fixed metric schema, executor) pair the injected analyzer rule
-    * wraps into a runnable command — execution is DEFERRED to command
-    * run time, never performed during analysis (analysis may run many
-    * times; a commit must happen exactly once, when `spark.sql`
-    * eagerly executes the command). The schemas are the front door's
-    * own metric rows; MERGE declares the superset (run() zero-fills the
-    * clause shapes that report fewer). */
+  /** Lake DML and property statements, each declared once as a command:
+    * when a parsed statement root is DML (or SET/UNSET TBLPROPERTIES)
+    * against a registered lake table, the [[LakeDmlCommand]] carrying its
+    * metric schema and handler. Three callers share it: [[sqlParsed]]
+    * (runs the handler now), [[GraftSqlParser]] (namespaced targets,
+    * `multipartOnly`) and the injected analyzer rule
+    * ([[ResolveLakeTables]]), where execution is DEFERRED to command run
+    * time, never performed during analysis (analysis may run many times;
+    * a commit must happen exactly once, when `spark.sql` eagerly executes
+    * the command). MERGE declares the superset of its clause shapes'
+    * metrics ([[LakeDmlCommand.run]] zero-fills the ones a shape does not
+    * report). */
   private[sql] def dmlCommand(plan: LogicalPlan,
                               shadowed: String => Boolean,
                               multipartOnly: Boolean = false)
-      : Option[(Seq[String], SparkSession => DataFrame)] = {
+      : Option[LakeDmlCommand] = {
     // a lake DML target SHADOWED by a temp view must fail loudly: the
     // session's reads resolve the view (Spark precedence), so silently
     // committing DML against the lake table would split one name across
@@ -2911,39 +2844,42 @@ object LakeSql {
     }
     plan match {
       case DeleteFromTable(t, c) if claim(t) =>
-        Some((Seq("files_rewritten", "files_total", "rows_deleted",
-          "files_dropped", "files_masked"),
-          s => withAutoCompact(s, t)(runDelete(s, t, c))))
+        metrics("files_rewritten", "files_total", "rows_deleted",
+          "files_dropped", "files_masked")(s =>
+          withAutoCompact(s, t)(runDelete(s, t, c)))
+      // TRUNCATE TABLE <t> → remove every live row as ONE metadata-only
+      // commit (the next version references no files; nothing read or
+      // rewritten, pinned readers keep the data until VACUUM)
       case TruncateTable(t) if claim(t) =>
         val spec = lookup(t).get._2
-        Some((Seq("version", "rows_deleted", "files_dropped"), s => {
+        metrics("version", "rows_deleted", "files_dropped") { s =>
           requireDmlClearance(s, spec, "TRUNCATE")
           val r = Snapshots.truncateCommit(s, spec.manifestRoot)
-          metricsRow(s, Seq("version" -> r.version.toLong,
-            "rows_deleted" -> r.rowsDeleted,
-            "files_dropped" -> r.filesDropped))
-        }))
+          Seq(r.version.toLong, r.rowsDeleted, r.filesDropped)
+        }
       case u: UpdateTable if claim(u.table) =>
-        Some((Seq("files_rewritten", "files_total", "rows_updated",
-          "files_masked", "files_appended"),
-          s => withAutoCompact(s, u.table)(runUpdate(s, u))))
+        metrics("files_rewritten", "files_total", "rows_updated",
+          "files_masked", "files_appended")(s =>
+          withAutoCompact(s, u.table)(runUpdate(s, u)))
+      // MERGE's clause shapes report different metric sets, so its
+      // handler builds its own row and the command declares the superset
       case m: MergeIntoTable if claim(m.targetTable) =>
-        Some((Seq("version", "files_rewritten", "files_total",
-          "rows_updated", "rows_inserted", "rows_deleted"),
+        Some(LakeDmlCommand(longSchema(Seq("version", "files_rewritten",
+          "files_total", "rows_updated", "rows_inserted", "rows_deleted")),
           s => withAutoCompact(s, m.targetTable)(runMerge(s, m))))
       case i: InsertIntoStatement if claim(i.table) =>
-        Some((Seq("version", "files_appended"),
-          s => withAutoCompact(s, i.table)(runInsert(s, i))))
+        metrics("version", "files_appended")(s =>
+          withAutoCompact(s, i.table)(runInsert(s, i)))
+      // ALTER TABLE … SET/UNSET TBLPROPERTIES: the Delta table-property
+      // store as metadata-only marker commits
       case stp: SetTableProperties if claim(stp.table) =>
         val spec = lookup(stp.table).get._2
-        Some((Seq("version"), s => metricsRow(s, Seq("version" ->
-          Snapshots.setProperties(s, spec.manifestRoot,
-            stp.properties).toLong))))
+        metrics("version")(s => Seq(Snapshots.setProperties(s,
+          spec.manifestRoot, stp.properties).toLong))
       case utp: UnsetTableProperties if claim(utp.table) =>
         val spec = lookup(utp.table).get._2
-        Some((Seq("version"), s => metricsRow(s, Seq("version" ->
-          Snapshots.unsetProperties(s, spec.manifestRoot,
-            utp.propertyKeys).toLong))))
+        metrics("version")(s => Seq(Snapshots.unsetProperties(s,
+          spec.manifestRoot, utp.propertyKeys).toLong))
       case _ => None
     }
   }
@@ -2969,8 +2905,8 @@ object LakeSql {
     }
   }
 
-  private def withAutoCompact(spark: SparkSession, target: LogicalPlan)
-                             (run: => DataFrame): DataFrame = {
+  private def withAutoCompact[A](spark: SparkSession, target: LogicalPlan)
+                                (run: => A): A = {
     val out = run // the DML's own commit + eager metric row
     lookup(target).foreach { case (_, spec) => maybeAutoCompact(spark, spec) }
     out

@@ -2,7 +2,7 @@ package graft.sql
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction, UnresolvedRelation, UnresolvedStar}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, SubqueryAlias}
@@ -203,16 +203,13 @@ object MatViews {
     df.groupBy(m.dims.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
 
-  private def row(spark: SparkSession, kvs: (String, Long)*): DataFrame =
-    spark.createDataFrame(
-      java.util.Arrays.asList(Row(kvs.map(_._2): _*)),
-      LakeSql.longSchema(kvs.map(_._1)))
+  final case class CreateResult(version: Int, baseVersion: Int)
 
   /** CREATE: aggregate the base AT ITS HEAD, materialize as a new lake
     * table (z-ordered on the dims), one atomic commit carrying content +
     * definition properties + the `mvref_<baseHead>` cursor tag. */
   def create(spark: SparkSession, name: String, location: Option[String],
-             queryText: String): DataFrame = {
+             queryText: String): CreateResult = {
     val m = parseDef(spark, name, queryText)
     val nm = m.name
     require(LakeSql.specOf(nm).isEmpty && !mvs.contains(nm),
@@ -248,7 +245,7 @@ object MatViews {
       markers = Snapshots.propsMarkers(props))
     LakeSql.register(nm, spec)
     mvs.put(nm, m)
-    row(spark, "version" -> version.toLong, "base_version" -> baseHead.toLong)
+    CreateResult(version, baseHead)
   }
 
   /** Highest base version whose `mvref_` tag is on the view's log —

@@ -78,28 +78,26 @@ object ResultCache {
   /** The front door with the cache in the loop: serve a repeat SELECT
     * from its cached parquet when every input is version-unchanged;
     * execute-and-store on a miss; pass through (counted) when disabled,
-    * not a SELECT/WITH read, or not lake-only. */
+    * not a SELECT/WITH read, or not lake-only. The text is parsed once
+    * ([[LakeSql.parser]]) and every path routes that one plan. */
   def sql(spark: SparkSession, text: String): DataFrame = {
-    val root = cacheRoot.getOrElse(return LakeSql.sql(spark, text))
+    val plan = LakeSql.parser(spark).parsePlan(text)
+    val root = cacheRoot.getOrElse(return LakeSql.sqlParsed(spark, plan))
     val trimmed = text.trim
     val head = trimmed.take(6).toUpperCase(java.util.Locale.ROOT)
-    if (!head.startsWith("SELECT") && !head.startsWith("WITH")) {
+    // Only SELECT/WITH reads cache, and NONDETERMINISTIC ones never do
+    // (the result-cache contract): rand()/uuid()/current_timestamp-family
+    // calls make a repeat of the same text a DIFFERENT answer, so serving
+    // the first result forever would be silently wrong.
+    if ((!head.startsWith("SELECT") && !head.startsWith("WITH")) ||
+        hasNondeterministic(plan)) {
       uncacheableN.incrementAndGet()
-      return LakeSql.sql(spark, text)
-    }
-    val plan = spark.sessionState.sqlParser.parsePlan(text)
-    // NONDETERMINISTIC queries are never cached (the result-cache
-    // contract): rand()/uuid()/current_timestamp-family calls make a
-    // repeat of the same text a DIFFERENT answer, so serving the first
-    // result forever would be silently wrong.
-    if (hasNondeterministic(plan)) {
-      uncacheableN.incrementAndGet()
-      return LakeSql.sql(spark, text)
+      return LakeSql.sqlParsed(spark, plan)
     }
     LakeSql.lakeOnlyReads(spark, plan) match {
       case None =>
         uncacheableN.incrementAndGet()
-        LakeSql.sql(spark, text)
+        LakeSql.sqlParsed(spark, plan)
       case Some(tables) =>
         val versions = tables.sortBy(_._1).map { case (n, spec) =>
           s"$n=${Snapshots.latestVersion(spark, spec.manifestRoot)}"
@@ -115,7 +113,7 @@ object ResultCache {
             spark.read.schema(e.schema).parquet(e.path)
           case None =>
             missN.incrementAndGet()
-            val df = LakeSql.sql(spark, text)
+            val df = LakeSql.sqlParsed(spark, plan)
             // UNIQUE spill per miss: a re-miss of an evicted digest (or
             // two sessions missing the same digest concurrently) must
             // never overwrite a path a previously-returned lazy DataFrame

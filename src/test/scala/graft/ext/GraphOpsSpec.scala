@@ -38,4 +38,47 @@ class GraphOpsSpec extends SparkSpec {
     val dup = ranks(Seq("a" -> "b", "a" -> "b", "a" -> "c"), iters = 2)
     assert(once == dup)
   }
+
+  test("the rank-vector broadcast is gated on the session threshold") {
+    val edges = Seq("a" -> "hub", "b" -> "hub", "c" -> "hub", "hub" -> "a",
+      "a" -> "b")
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val before = spark.conf.getOption(key)
+    // the broadcast side of a join runs its own collect job, tagged
+    // "broadcast exchange (runId …)" by BroadcastExchangeExec
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .getOrElse("") + "|" +
+          js.stageInfos.headOption.map(_.name).getOrElse(""))
+    }
+    def run(threshold: String): (Map[String, Double], Int) = {
+      spark.conf.set(key, threshold)
+      jobs.clear()
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val r = ranks(edges, iters = 3)
+        // the listener bus is asynchronous: wait for the final collect
+        val deadline = System.currentTimeMillis() + 30000L
+        def seen = jobs.toArray.map(_.toString)
+        while (!seen.exists(_.contains("collect at GraphOpsSpec")) &&
+            System.currentTimeMillis() < deadline) Thread.sleep(20)
+        (r, seen.count(_.contains("broadcast exchange")))
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    try {
+      val (small, broadcastsSmall) = run("10485760") // 5 vertices ≪ 10 MB
+      val (large, broadcastsLarge) = run("64") // 5 × 48 bytes > 64 bytes
+      assert(broadcastsSmall > 0)
+      assert(broadcastsLarge == 0)
+      assert(small.keySet == large.keySet)
+      small.foreach { case (k, v) => assert(math.abs(v - large(k)) < 1e-12) }
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }

@@ -111,4 +111,28 @@ class TxnSpec extends SparkSpec {
     val expected = data.filter(!col("x").between(50, 200)).count()
     assert(Snapshots.tableAt(spark, s"$dir/m", r.version).count() == expected)
   }
+
+  test("an aborted txn stage above the head does not block an optimistic commit") {
+    val (dir, v1) = freshLayout()
+    val m = s"$dir/m"
+    // v2: a cross-table txn stage whose transaction then aborts
+    val id = "aborted1"
+    val staged = Snapshots.commit(spark,
+      Snapshots.manifestAt(spark, m, v1).localCheckpoint(), m,
+      contentFiles = Seq(Snapshots.TxnPendingMarker -> s"$dir/txn\n$id"))
+    assert(staged == 2)
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.create(new org.apache.hadoop.fs.Path(s"$dir/txn", s"abort_$id")).close()
+    assert(Snapshots.latestVersion(spark, m) == v1)
+    val files = manifestFiles(dir, v1)
+    val r = Snapshots.commitTxn(spark, m,
+      Snapshots.Txn(v1, Set(files.head), None, Set(files.head)))
+    // lands above the aborted slot with no rebase — it used to lose the
+    // rename onto v=2 until the attempt cap and throw
+    assert(r.version == 3 && r.rebasedOver == 0)
+    assert(Snapshots.visibleVersions(spark, m) == Seq(1, 3))
+    assert(Snapshots.latestVersion(spark, m) == 3)
+    assert(manifestFiles(dir, 3) == files.tail)
+  }
 }

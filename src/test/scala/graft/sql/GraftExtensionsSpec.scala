@@ -214,6 +214,52 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(spark.sql("SELECT 1 + 1 AS two").head().getInt(0) == 2)
   }
 
+  test("LakeSql.sql and spark.sql agree on every lake statement's result") {
+    // twin tables: the same statement sequence runs on one through each
+    // entry point; each result must match in schema and rows (paths,
+    // names and file ids normalized — the twins live in different dirs)
+    val (dirA, _) = freshLake("t_agree_a")
+    val (dirB, _) = freshLake("t_agree_b")
+    data.filter(col("id") < 50).select(col("id"), (col("x") + 1).as("x"))
+      .unionByName(spark.range(9000, 9020).select(col("id"), lit(3L).as("x")))
+      .createOrReplaceTempView("agree_src")
+    val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"
+    def result(df: org.apache.spark.sql.DataFrame, dir: String,
+               side: String) =
+      (df.schema, df.collect().toSeq.map(_.toSeq.map {
+        case s: String => s.replace(dir, "<dir>")
+          .replace(s"_agree_$side", "_agree_<side>").replaceAll(uuid, "<id>")
+        case v => String.valueOf(v)
+      }.mkString("|")).sorted)
+    val statements = Seq(
+      "CREATE MATERIALIZED VIEW mv_agree_$side LOCATION '$dir/mv' AS " +
+        "SELECT x, count(*) AS n FROM t_agree_$side GROUP BY x",
+      """MERGE INTO t_agree_$side t USING agree_src s ON t.id = s.id
+        |WHEN MATCHED THEN UPDATE SET x = s.x
+        |WHEN NOT MATCHED THEN INSERT *""".stripMargin,
+      "OPTIMIZE t_agree_$side SMALLFILES 1073741824",
+      "OPTIMIZE t_agree_$side",
+      "DESCRIBE DETAIL t_agree_$side",
+      "SHOW CREATE TABLE t_agree_$side",
+      "REFRESH MATERIALIZED VIEW mv_agree_$side",
+      "VACUUM t_agree_$side RETAIN 2 VERSIONS DRY RUN",
+      "VACUUM t_agree_$side RETAIN 2 VERSIONS",
+      "FSCK REPAIR TABLE t_agree_$side DRY RUN",
+      "TRUNCATE TABLE t_agree_$side")
+    try statements.foreach { st =>
+      def text(side: String, dir: String) =
+        st.replace("$side", side).replace("$dir", dir)
+      val viaDoor = result(LakeSql.sql(spark, text("a", dirA)), dirA, "a")
+      val viaSpark = result(spark.sql(text("b", dirB)), dirB, "b")
+      assert(viaDoor._1 == viaSpark._1, s"schema differs for: $st")
+      assert(viaDoor._2 == viaSpark._2, s"rows differ for: $st")
+      assert(viaDoor._1.nonEmpty)
+    } finally {
+      MatViews.drop(spark, "mv_agree_a"); MatViews.drop(spark, "mv_agree_b")
+      spark.catalog.dropTempView("agree_src")
+    }
+  }
+
   // ----------------------------------------- metadata-only aggregates
 
   private def isMetadataServed(df: org.apache.spark.sql.DataFrame): Boolean =
