@@ -37,20 +37,11 @@ object Cdc {
                               feedFilesRead: Long, feedFilesTotal: Long)
 
   /** Highest source version whose `cdc_` tag is on the mirror log — the
-    * derived cursor. Version-count-bounded driver work (one marker listing
-    * per mirror version), like every planner read here. */
-  def appliedCursor(spark: SparkSession, mirrorRoot: String): Int = {
-    val vs = Snapshots.versions(spark, mirrorRoot)
-    if (vs.isEmpty) return 0
-    val fs = new org.apache.hadoop.fs.Path(mirrorRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    vs.flatMap { v =>
-      fs.listStatus(new org.apache.hadoop.fs.Path(s"$mirrorRoot/v=$v"))
-        .toSeq.map(_.getPath.getName)
-        .collect { case n if n.startsWith("_txn_cdc_") =>
-          n.stripPrefix("_txn_cdc_").toInt }
-    }.maxOption.getOrElse(0)
-  }
+    * derived cursor. A max over every tag, not the newest one: concurrent
+    * consumers can tag out of order. */
+  def appliedCursor(spark: SparkSession, mirrorRoot: String): Int =
+    Snapshots.tags(spark, mirrorRoot, "cdc_").map(_._2.toInt).maxOption
+      .getOrElse(0)
 
   /** Bring the mirror up to the source head. Fresh mirror ⇒ one full
     * snapshot copy tagged with the source head version; otherwise every
@@ -96,10 +87,7 @@ object Cdc {
         if (ins.isEmpty)
           // pure-delete commit: the tag still needs a commit to ride —
           // re-commit the current manifest as a metadata-only version
-          Snapshots.commit(spark,
-            Snapshots.manifestAt(spark, mirrorRoot,
-              Snapshots.latestVersion(spark, mirrorRoot)),
-            mirrorRoot, tag = Some(tag))
+          Snapshots.metadataCommit(spark, mirrorRoot, Some(tag))(_ => Seq.empty)
         else
           Snapshots.appendCommit(spark, ins, cols, mirrorPath, mirrorRoot,
             nFiles, tag = Some(tag))

@@ -1,26 +1,33 @@
 package graft.sinks
 
 /** The lake's one driver-side metadata cache: manifests and delta folds,
-  * table properties, declared schemas, txn visibility, the CHECK and
-  * COPY INTO marker scans, and per-file parquet footer schemas, all in
-  * one access-ordered LRU over (table root, key) under one lock.
+  * each committed version dir's marker names and the markers in force at
+  * it, declared schemas, txn visibility, and per-file parquet footer
+  * schemas, all in one access-ordered LRU over (table root, key) under
+  * one lock.
   *
   * Sound because a committed `v=N` dir is immutable: the CAS rename is the
   * last write it ever sees, so anything derived from a fixed set of
-  * committed version dirs can be served from memory. What can change under
-  * a fixed key is the ROOT's life: a root dropped and re-created at the
-  * same path restarts its version numbers. [[forget]] is the one
-  * invalidation call: every path that begins a root (the v=1 commit), the
-  * SQL registry ([[graft.sql.LakeSql.register]] / `unregister`) and
-  * [[Snapshots.vacuum]] (which deletes version dirs and data files) call
-  * it. Per-kind rules stay with their callers: only resolved txn states
-  * are stored, a manifest is served only after a per-serve dir-existence
-  * probe, and the marker scans are monotone (they extend their entry by
-  * the new commits and reset when the head went backwards).
+  * committed version dirs can be served from memory. Every marker read
+  * (properties, column mapping, CHECK set, ADD COLUMN types, COPY INTO
+  * keys, tags, commit stamps, `_delta`, `_schema.json`, txn pending) goes
+  * through ONE listing per (root, v), so a commit lists one new dir, not
+  * the log. What can change under a fixed key is the ROOT's life: a root
+  * dropped and re-created at the same path restarts its version numbers.
+  * [[forget]] is the one invalidation call: every path that begins a root
+  * (the v=1 commit), the SQL registry ([[graft.sql.LakeSql.register]] /
+  * `unregister`), [[Snapshots.vacuum]] (which deletes version dirs and
+  * data files, and re-homes markers into the oldest kept dir) and the one
+  * reset in [[Snapshots.versions]] — a listed head lower than the highest
+  * this JVM has seen — call it. Per-kind rules stay with their callers:
+  * only resolved txn states are stored, and a manifest is served only
+  * after a per-serve dir-existence probe.
   *
   * SINGLE-WRITER-JVM: invalidation is in-process, like Delta's `DeltaLog`
-  * snapshot cache. A second process re-creating a root is not seen until
-  * the entry is evicted or this JVM forgets the root.
+  * snapshot cache. A second process re-creating a root is seen when this
+  * JVM lists a shorter log than it has seen; a re-created log that has
+  * grown back to the old length is not seen until the entries are evicted
+  * or this JVM forgets the root.
   *
   * Bounded two ways, LRU until both hold: [[MaxEntries]] entries and
   * [[MaxRows]] of summed weight, where a manifest entry weighs its row

@@ -53,20 +53,109 @@ object Snapshots {
   private val AddColPrefix = "_addcol_"
   private val CkPrefix = "_ck_"
   private val CopyPrefix = "_copy_"
+  private val TagPrefix = "_txn_"
 
-  /** Committed version numbers, ascending (empty for a fresh root). */
+  /** Committed version numbers, ascending (empty for a fresh root) — the
+    * listing every reader starts from, and so the one place the root's
+    * cached metadata resets: a head LOWER than the highest this JVM has
+    * seen means the root was deleted and re-created behind its back
+    * (another process, plain FS calls), and every entry describes the old
+    * log. */
   def versions(spark: SparkSession, manifestRoot: String): Seq[Int] = {
     val root = new org.apache.hadoop.fs.Path(manifestRoot)
     val fs = hfs(spark, manifestRoot)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.collect {
-      case st if st.isDirectory =>
-        st.getPath.getName match {
-          case VersionDir(n) => Some(n.toInt)
-          case _ => None
-        }
-    }.flatten.sorted
+    val vs =
+      if (!fs.exists(root)) Seq.empty
+      else fs.listStatus(root).toSeq.collect {
+        case st if st.isDirectory =>
+          st.getPath.getName match {
+            case VersionDir(n) => Some(n.toInt)
+            case _ => None
+          }
+      }.flatten.sorted
+    val head = vs.lastOption.getOrElse(0)
+    val seen = MetaCache.get[Int](manifestRoot, "head").getOrElse(0)
+    if (head < seen) MetaCache.forget(manifestRoot)
+    if (head > 0 && head != seen) MetaCache.put(manifestRoot, "head", head)
+    vs
   }
+
+  // ------------------------------------------------------------------
+  // THE VERSION-DIR READER — table metadata rides each commit as
+  // underscore-prefixed markers inside its `v=N` dir: properties, column
+  // mapping, CHECK set, ADD COLUMN types, COPY INTO keys, tags, the `_ts_`
+  // stamp, `_delta`, `_schema.json` and the txn pending marker. Every read
+  // of them goes through [[markerNames]] (ONE listing per committed
+  // version) and three resolvers over it: [[inForce]] (superseding kinds),
+  // [[accumulated]] (accumulating kinds) and [[tags]].
+  // ------------------------------------------------------------------
+
+  /** The underscore-prefixed names in `v=N`, sorted — listed ONCE per
+    * (root, v) and memoized in [[MetaCache]]. Sound because a committed
+    * version dir is immutable: the CAS rename is its last write, except
+    * [[vacuum]]'s marker re-homing, which forgets the root after it.
+    * Keeping only `_`-names also leaves out part files and a lost rename's
+    * transient `.tmp_` nest. A dir that is not there lists as empty and
+    * is not stored. */
+  private def markerNames(spark: SparkSession, manifestRoot: String,
+                          v: Int): Seq[String] =
+    MetaCache.get[Seq[String]](manifestRoot, ("names", v)).getOrElse {
+      try {
+        val names = hfs(spark, manifestRoot)
+          .listStatus(new org.apache.hadoop.fs.Path(s"$manifestRoot/v=$v"))
+          .toSeq.map(_.getPath.getName).filter(_.startsWith("_")).sorted
+        MetaCache.put(manifestRoot, ("names", v), names)
+        names
+      } catch { case _: java.io.FileNotFoundException => Seq.empty }
+    }
+
+  /** The newest version ≤ `v` carrying a `prefix` marker, with all of its
+    * `prefix` markers (a map may chunk across several) — "the marker in
+    * force at v" for every superseding kind. Memoized once `v` is
+    * committed: no later commit can change what is in force at it. */
+  private def inForce(spark: SparkSession, manifestRoot: String, v: Int,
+                      prefix: String): Option[(Int, Seq[String])] = {
+    val key = ("inForce", prefix, v)
+    MetaCache.get[Option[(Int, Seq[String])]](manifestRoot, key).getOrElse {
+      val vs = versions(spark, manifestRoot)
+      val hit = vs.reverseIterator.filter(_ <= v)
+        .map(x => x -> markerNames(spark, manifestRoot, x)
+          .filter(_.startsWith(prefix)))
+        .find(_._2.nonEmpty)
+      if (vs.lastOption.exists(_ >= v)) MetaCache.put(manifestRoot, key, hit)
+      hit
+    }
+  }
+
+  /** Every `prefix` marker of every version ≤ `v`, oldest first — the
+    * accumulating kinds (ADD COLUMN types, COPY INTO keys). */
+  private def accumulated(spark: SparkSession, manifestRoot: String, v: Int,
+                          prefix: String): Seq[String] =
+    versions(spark, manifestRoot).filter(_ <= v).flatMap(x =>
+      markerNames(spark, manifestRoot, x).filter(_.startsWith(prefix)))
+
+  /** Every commit tag starting `prefix`, as (version, rest of the tag),
+    * newest version first — the one reader behind [[versionForTag]] and
+    * the consumer cursors derived from tags (CDC mirrors, SCD2 targets,
+    * materialized views). */
+  private[graft] def tags(spark: SparkSession, manifestRoot: String,
+                         prefix: String): Iterator[(Int, String)] =
+    versions(spark, manifestRoot).reverseIterator.flatMap(v =>
+      markerNames(spark, manifestRoot, v).collect {
+        case n if n.startsWith(TagPrefix + prefix) =>
+          v -> n.stripPrefix(TagPrefix + prefix)
+      })
+
+  /** The body of content marker `name` in `v=N`, if listed there. */
+  private def markerContent(spark: SparkSession, manifestRoot: String, v: Int,
+                            name: String): Option[String] =
+    Option.when(markerNames(spark, manifestRoot, v).contains(name)) {
+      val in = hfs(spark, manifestRoot).open(
+        new org.apache.hadoop.fs.Path(s"$manifestRoot/v=$v", name))
+      try new String(
+        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
+      finally in.close()
+    }
 
   def latestVersion(spark: SparkSession, manifestRoot: String): Int = {
     val vs = versions(spark, manifestRoot)
@@ -104,20 +193,11 @@ object Snapshots {
 
   /** The (txnDir, txnId) of a pending-staged version, if any. */
   private[graft] def pendingInfo(spark: SparkSession, manifestRoot: String,
-                                 v: Int): Option[(String, String)] = {
-    val fs = hfs(spark, manifestRoot)
-    val p = new org.apache.hadoop.fs.Path(
-      s"$manifestRoot/v=$v", TxnPendingMarker)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val body = try new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-      finally in.close()
+                                 v: Int): Option[(String, String)] =
+    markerContent(spark, manifestRoot, v, TxnPendingMarker).map { body =>
       val Array(dir, id) = body.split("\n", 2)
-      Some((dir, id))
+      (dir, id)
     }
-  }
 
   // (root, v) → resolved visibility in [[MetaCache]]. Only RESOLVED
   // states are stored (plain version → true; txn committed → true; txn
@@ -333,32 +413,24 @@ object Snapshots {
     * contract re-expressed on the version log): an at-least-once appender
     * tags each commit with its batch id, and a replay that finds the tag
     * already committed skips the append instead of double-writing. Driver
-    * work is one existence probe per version — version-count-bounded,
-    * like every other planner read here. */
+    * work is a walk over the memoized marker names ([[tags]]). */
   def versionForTag(spark: SparkSession, manifestRoot: String,
-                    tag: String): Option[Int] = {
-    val fs = hfs(spark, manifestRoot)
-    versions(spark, manifestRoot).find { v =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$manifestRoot/v=$v/_txn_$tag"))
-    }
-  }
+                    tag: String): Option[Int] =
+    tags(spark, manifestRoot, tag).collectFirst { case (v, "") => v }
 
   /** The wall-clock commit stamp (epoch millis) of `version`, if stamped —
     * the `_ts_<millis>` marker that rode the commit's atomic rename.
     * Versions committed before timestamping existed return None and are
-    * invisible to timestamp resolution. One listing per call —
-    * version-count-bounded planner work. */
+    * invisible to timestamp resolution. */
   def commitTimestamp(spark: SparkSession, manifestRoot: String,
-                      version: Int): Option[Long] = {
-    val fs = hfs(spark, manifestRoot)
-    val dir = new org.apache.hadoop.fs.Path(s"$manifestRoot/v=$version")
-    if (!fs.exists(dir)) None
-    else fs.listStatus(dir).toSeq
-      .map(_.getPath.getName)
+                      version: Int): Option[Long] =
+    markerNames(spark, manifestRoot, version)
       .collectFirst { case n if n.startsWith(TsPrefix) =>
         n.stripPrefix(TsPrefix).toLong }
-  }
 
+  /** The newest stamp on the log — a max over every version, since racing
+    * writers can stamp out of version order; after the first call only
+    * the versions committed since are listed. */
   private def latestCommitTs(spark: SparkSession, manifestRoot: String): Long =
     versions(spark, manifestRoot)
       .flatMap(commitTimestamp(spark, manifestRoot, _))
@@ -387,8 +459,7 @@ object Snapshots {
     * than a full manifest — classified by the `_delta` marker that rode the
     * commit's atomic rename. */
   def isDelta(spark: SparkSession, manifestRoot: String, version: Int): Boolean =
-    hfs(spark, manifestRoot).exists(new org.apache.hadoop.fs.Path(
-      s"$manifestRoot/v=$version/$DeltaMarker"))
+    markerNames(spark, manifestRoot, version).contains(DeltaMarker)
 
   /** LOG-STRUCTURED COMMIT — the Delta-log model: instead of writing the
     * whole manifest every commit (O(table files) write volume, which a
@@ -1840,8 +1911,7 @@ object Snapshots {
             !txnVisible(spark, manifestRoot, v) &&
               !unresolvedStage(spark, manifestRoot, v))) above.last + 1
         else latest + 1
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$manifestRoot/v=$slot")) &&
-          unresolvedStage(spark, manifestRoot, slot)) {
+      if (unresolvedStage(spark, manifestRoot, slot)) {
         fs.delete(staged.dir, true)
         throw new IllegalStateException(
           s"$manifestRoot v=$slot is an unresolved cross-table " +
@@ -1985,65 +2055,95 @@ object Snapshots {
   private def b64d(s: String): String =
     new String(java.util.Base64.getUrlDecoder.decode(s), "UTF-8")
 
-  // separators '~' and ',' are outside the base64url alphabet AND legal
-  // in a Hadoop path segment (':' is not — it reads as a URI scheme)
-  //
-  // A property map too big for ONE path segment (most filesystems cap a
-  // name at 255 bytes — nine ANALYZE statistics already blow it) CHUNKS
-  // across several `_props_` markers in the same commit dir; readers
-  // merge every chunk of the newest version that carries any (keys are
-  // disjoint across chunks, so merge order is irrelevant, and the atomic
-  // dir rename publishes all chunks together or none).
-  private[graft] def propsMarkers(m: Map[String, String]): Seq[String] = {
-    val parts = m.toSeq.sorted
-      .map { case (k, v) => s"${b64e(k)}~${b64e(v)}" }
-    parts.foreach(p => require(p.length <= 230,
-      s"property too long for a name-encoded marker (${p.length} chars) — " +
-        "oversized values belong in a content marker like _schema.json"))
-    if (parts.isEmpty) return Seq(PropsPrefix)
-    val chunks = scala.collection.mutable.ArrayBuffer(
-      scala.collection.mutable.ArrayBuffer.empty[String])
-    parts.foreach { p =>
-      if (chunks.last.nonEmpty &&
-          chunks.last.map(_.length + 1).sum + p.length > 180)
-        chunks += scala.collection.mutable.ArrayBuffer(p)
-      else chunks.last += p
+  /** The codec of one MAP-VALUED marker kind (properties, column mapping,
+    * CHECK set): the map's sorted entries joined into marker-name bodies
+    * by `join`, split back out of one body by `split`.
+    *
+    * A map too big for ONE path segment (most filesystems cap a name at
+    * 255 bytes — nine ANALYZE statistics, a rename on a table of a dozen
+    * columns, two long CHECK conditions) CHUNKS across several markers in
+    * the same commit dir: entries pack greedily while a body stays within
+    * 180 chars. Readers merge every chunk of the newest version carrying
+    * any (keys are disjoint across chunks, and the atomic dir rename
+    * publishes all chunks together or none). A map that fits one chunk is
+    * one marker, byte-identical to the unchunked encoding. */
+  private[graft] final class MapMarker(prefix: String,
+                                       join: Seq[(String, String)] => String,
+                                       split: String => Seq[(String, String)]) {
+    def names(m: Map[String, String]): Seq[String] = {
+      val chunks =
+        scala.collection.mutable.ArrayBuffer(Seq.empty[(String, String)])
+      m.toSeq.sorted.foreach { e =>
+        val alone = join(Seq(e)).length
+        require(alone <= 230, s"entry ${e._1} too long for a name-encoded " +
+          s"marker ($alone chars) — oversized values belong in a content " +
+          "marker like _schema.json")
+        if (chunks.last.nonEmpty && join(chunks.last :+ e).length > 180)
+          chunks += Seq(e)
+        else chunks(chunks.size - 1) = chunks.last :+ e
+      }
+      chunks.map(c => prefix + join(c)).toSeq
     }
-    chunks.map(c => PropsPrefix + c.mkString(",")).toSeq
+
+    def parse(chunks: Seq[String]): Map[String, String] =
+      chunks.map(_.stripPrefix(prefix)).filter(_.nonEmpty)
+        .flatMap(split).toMap
+
+    /** The map in force at `version`, if any commit at or below set one. */
+    def at(spark: SparkSession, manifestRoot: String,
+           version: Int): Option[Map[String, String]] =
+      inForce(spark, manifestRoot, version, prefix).map(h => parse(h._2))
   }
 
-  private def parseProps(name: String): Map[String, String] = {
-    val body = name.stripPrefix(PropsPrefix)
-    if (body.isEmpty) Map.empty
-    else body.split(",").map { kv =>
+  // separators '~' and ',' (and '.') are outside the base64url alphabet
+  // AND legal in a Hadoop path segment (':' is not — it reads as a URI
+  // scheme)
+  private[graft] val Props = new MapMarker(PropsPrefix,
+    _.map { case (k, v) => s"${b64e(k)}~${b64e(v)}" }.mkString(","),
+    _.split(",").toSeq.map { kv =>
       val Array(k, v) = kv.split("~", 2)
       b64d(k) -> b64d(v)
-    }.toMap
+    })
+
+  private val Cmap = new MapMarker(CmapPrefix,
+    m => b64e(m.map { case (l, p) => s"$l=$p" }.mkString(",")),
+    body => b64d(body).split(",").toSeq.map { kv =>
+      val Array(l, p) = kv.split("=", 2)
+      l -> p
+    })
+
+  private val Ck = new MapMarker(CkPrefix,
+    _.map { case (n, c) => s"${b64e(n)}.${b64e(c)}" }.mkString(","),
+    _.split(",").toSeq.map { kv =>
+      val Array(n, c) = kv.split("\\.", 2)
+      b64d(n) -> b64d(c)
+    })
+
+  /** ONE metadata-only commit: the head's manifest carried forward
+    * unchanged, plus the markers `change(head)` returns as (name, body)
+    * pairs — a name-encoded marker has an empty body. The head is read
+    * once and handed to `change`, so what is computed and what is carried
+    * describe the same version. A change with nothing to stage and no tag
+    * commits nothing and returns the head (the IF EXISTS no-op). */
+  private[graft] def metadataCommit(spark: SparkSession, manifestRoot: String,
+                                    tag: Option[String] = None)
+                                   (change: Int => Seq[(String, String)]): Int = {
+    val v = latestVersion(spark, manifestRoot)
+    val files = change(v)
+    if (files.isEmpty && tag.isEmpty) v
+    else commit(spark, manifestAt(spark, manifestRoot, v), manifestRoot, tag,
+      contentFiles = files)
   }
 
-  /** The property map in force at `version` — empty before any SET.
-    * Memoized per (root, version) in [[MetaCache]], `Map.empty` included:
-    * a committed version's marker set is immutable (every property change
-    * is a NEW commit; VACUUM removes whole versions, never edits
-    * markers), so the stored map IS the map in force at that version. */
+  private def named(markers: Seq[String]): Seq[(String, String)] =
+    markers.map(_ -> "")
+
+  /** The property map in force at `version` — empty before any SET. A
+    * committed version's marker set is immutable (every property change
+    * is a NEW commit), so this is a walk over memoized marker names. */
   def tableProperties(spark: SparkSession, manifestRoot: String,
                       version: Int): Map[String, String] =
-    MetaCache.getOrElseUpdate(manifestRoot, ("props", version)) {
-      val fs = hfs(spark, manifestRoot)
-      versions(spark, manifestRoot).filter(_ <= version)
-        .sorted.reverse
-        .iterator
-        .map { v =>
-          val hits = fs.listStatus(
-              new org.apache.hadoop.fs.Path(s"$manifestRoot/v=$v"))
-            .toSeq.map(_.getPath.getName)
-            .filter(_.startsWith(PropsPrefix))
-          if (hits.isEmpty) None
-          else Some(hits.map(parseProps).reduce(_ ++ _)) // disjoint chunks
-        }
-        .collectFirst { case Some(mm) => mm }
-        .getOrElse(Map.empty[String, String])
-    }
+    Props.at(spark, manifestRoot, version).getOrElse(Map.empty)
 
   /** SET TBLPROPERTIES — Delta merge semantics (existing keys overwrite,
     * others persist), as ONE metadata-only marker commit: the next
@@ -2052,10 +2152,9 @@ object Snapshots {
   def setProperties(spark: SparkSession, manifestRoot: String,
                     props: Map[String, String]): Int = {
     require(props.nonEmpty, "SET TBLPROPERTIES with no properties")
-    val v = latestVersion(spark, manifestRoot)
-    val next = tableProperties(spark, manifestRoot, v) ++ props
-    commit(spark, manifestAt(spark, manifestRoot, v), manifestRoot,
-      markers = propsMarkers(next))
+    metadataCommit(spark, manifestRoot) { v =>
+      named(Props.names(tableProperties(spark, manifestRoot, v) ++ props))
+    }
   }
 
   /** UNSET TBLPROPERTIES — removes the keys (missing keys are a no-op,
@@ -2063,10 +2162,9 @@ object Snapshots {
   def unsetProperties(spark: SparkSession, manifestRoot: String,
                       keys: Seq[String]): Int = {
     require(keys.nonEmpty, "UNSET TBLPROPERTIES with no keys")
-    val v = latestVersion(spark, manifestRoot)
-    val next = tableProperties(spark, manifestRoot, v) -- keys
-    commit(spark, manifestAt(spark, manifestRoot, v), manifestRoot,
-      markers = propsMarkers(next))
+    metadataCommit(spark, manifestRoot) { v =>
+      named(Props.names(tableProperties(spark, manifestRoot, v) -- keys))
+    }
   }
 
   /** Table property carrying the DECLARED schema (StructType JSON) of a
@@ -2079,30 +2177,19 @@ object Snapshots {
   private val SchemaMarker = "_schema.json"
 
   /** The DECLARED schema in force at `version`: the content of the
-    * largest `_schema.json` marker at or below it (a CREATE TABLE writes
+    * newest `_schema.json` marker at or below it (a CREATE TABLE writes
     * one into v1). None for tables born from data (CTAS, CONVERT,
-    * register()). Memoized per (root, version) in [[MetaCache]] — a
-    * committed version's `_schema.json` is immutable (schema changes are
-    * NEW commits) — so a write path does not walk every version dir. */
+    * register()). The parsed content is memoized per carrying version in
+    * [[MetaCache]] — a committed `_schema.json` is immutable (schema
+    * changes are NEW commits) — and opened only where it is listed. */
   def declaredSchemaAt(spark: SparkSession, manifestRoot: String,
                        version: Int): Option[StructType] =
-    MetaCache.getOrElseUpdate(manifestRoot, ("schema", version)) {
-      val fs = hfs(spark, manifestRoot)
-      versions(spark, manifestRoot).filter(_ <= version).sorted.reverse
-        .iterator
-        .map { v =>
-          val p = new org.apache.hadoop.fs.Path(
-            s"$manifestRoot/v=$v", SchemaMarker)
-          if (fs.exists(p)) {
-            val in = fs.open(p)
-            try Some(org.apache.spark.sql.types.DataType
-              .fromJson(new String(
-                org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-                "UTF-8")).asInstanceOf[StructType])
-            finally in.close()
-          } else None
-        }
-        .collectFirst { case Some(s) => s }
+    inForce(spark, manifestRoot, version, SchemaMarker).map { case (v, _) =>
+      MetaCache.getOrElseUpdate(manifestRoot, ("schema", v)) {
+        org.apache.spark.sql.types.DataType.fromJson(
+          markerContent(spark, manifestRoot, v, SchemaMarker).get)
+          .asInstanceOf[StructType]
+      }
     }
 
   /** Re-declare the table's schema — ONE metadata-only commit carrying a
@@ -2114,15 +2201,14 @@ object Snapshots {
     * [[declaredSchemaAt]]. Fails on tables born from data (no declared
     * schema to amend). */
   def updateDeclaredSchema(spark: SparkSession, manifestRoot: String)
-                          (update: StructType => StructType): Int = {
-    val head = latestVersion(spark, manifestRoot)
-    val cur = declaredSchemaAt(spark, manifestRoot, head).getOrElse(
-      throw new IllegalArgumentException(
-        "no declared schema to alter — the table was born from data " +
-          "(CTAS/CONVERT/register), not CREATE TABLE"))
-    commit(spark, manifestAt(spark, manifestRoot, head), manifestRoot,
-      contentFiles = Seq(SchemaMarker -> update(cur).json))
-  }
+                          (update: StructType => StructType): Int =
+    metadataCommit(spark, manifestRoot) { v =>
+      val cur = declaredSchemaAt(spark, manifestRoot, v).getOrElse(
+        throw new IllegalArgumentException(
+          "no declared schema to alter — the table was born from data " +
+            "(CTAS/CONVERT/register), not CREATE TABLE"))
+      Seq(SchemaMarker -> update(cur).json)
+    }
 
   /** Is `from → to` a lossless TYPE WIDENING — the Delta type-widening
     * whitelist (public contract): integral up-casts, int→double,
@@ -2222,7 +2308,7 @@ object Snapshots {
     val empty = spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), manifestSchema)
     commit(spark, empty, manifestRoot,
-      markers = if (props.isEmpty) Seq.empty else propsMarkers(props),
+      markers = if (props.isEmpty) Seq.empty else Props.names(props),
       contentFiles = Seq(SchemaMarker -> schema.json))
   }
 
@@ -2280,49 +2366,23 @@ object Snapshots {
     * between the two). */
   def mergedPropsMarkers(spark: SparkSession, manifestRoot: String,
                          updates: Map[String, String]): Seq[String] =
-    propsMarkers(tableProperties(spark, manifestRoot,
+    Props.names(tableProperties(spark, manifestRoot,
       latestVersion(spark, manifestRoot)) ++ updates)
-
-  private def cmapMarker(m: Map[String, String]): String = {
-    val joined = m.toSeq.sorted.map { case (l, p) => s"$l=$p" }.mkString(",")
-    CmapPrefix + java.util.Base64.getUrlEncoder.withoutPadding
-      .encodeToString(joined.getBytes("UTF-8"))
-  }
-
-  private def parseCmap(name: String): Map[String, String] = {
-    val joined = new String(java.util.Base64.getUrlDecoder
-      .decode(name.stripPrefix(CmapPrefix)), "UTF-8")
-    joined.split(",").map { kv =>
-      val Array(l, p) = kv.split("=", 2)
-      l -> p
-    }.toMap
-  }
 
   /** The column mapping in force at `version`: the marker of the LARGEST
     * version at or below it that carries one (a mapping, once committed,
     * applies to every later version until superseded). None ⇒ physical
     * names are the visible schema. */
   def columnMapping(spark: SparkSession, manifestRoot: String,
-                    version: Int): Option[Map[String, String]] = {
-    val fs = hfs(spark, manifestRoot)
-    versions(spark, manifestRoot).filter(_ <= version).sorted.reverse
-      .iterator
-      .map { v =>
-        fs.listStatus(new org.apache.hadoop.fs.Path(s"$manifestRoot/v=$v"))
-          .toSeq.map(_.getPath.getName)
-          .collectFirst { case n if n.startsWith(CmapPrefix) => parseCmap(n) }
-      }
-      .collectFirst { case Some(m) => m }
-  }
+                    version: Int): Option[Map[String, String]] =
+    Cmap.at(spark, manifestRoot, version)
 
-  /** The mapping to commit against: the one in force, or identity over the
-    * latest snapshot's physical schema when none exists yet. */
-  private def currentMapping(spark: SparkSession,
-                             manifestRoot: String): Map[String, String] = {
-    val v = latestVersion(spark, manifestRoot)
+  /** The mapping to commit against at head `v`: the one in force, or
+    * identity over the snapshot's physical schema when none exists yet. */
+  private def currentMapping(spark: SparkSession, manifestRoot: String,
+                             v: Int): Map[String, String] =
     columnMapping(spark, manifestRoot, v).getOrElse(
       tableAt(spark, manifestRoot, v).columns.map(c => c -> c).toMap)
-  }
 
   /** RENAME a logical column — a metadata-only commit: the next version
     * carries the current manifest CONTENT unchanged plus the updated
@@ -2330,32 +2390,29 @@ object Snapshots {
     * q119 DV-re-point economics, applied to schema). Pinned reads below
     * the commit keep serving the old name. */
   def renameColumn(spark: SparkSession, manifestRoot: String,
-                   logicalOld: String, logicalNew: String): Int = {
-    val cur = currentMapping(spark, manifestRoot)
-    require(cur.contains(logicalOld),
-      s"rename: no visible column '$logicalOld' (have ${cur.keys.toSeq.sorted})")
-    require(!cur.contains(logicalNew),
-      s"rename: '$logicalNew' already visible")
-    val next = (cur - logicalOld) + (logicalNew -> cur(logicalOld))
-    commit(spark,
-      manifestAt(spark, manifestRoot, latestVersion(spark, manifestRoot)),
-      manifestRoot, markers = Seq(cmapMarker(next)))
-  }
+                   logicalOld: String, logicalNew: String): Int =
+    metadataCommit(spark, manifestRoot) { v =>
+      val cur = currentMapping(spark, manifestRoot, v)
+      require(cur.contains(logicalOld),
+        s"rename: no visible column '$logicalOld' (have ${cur.keys.toSeq.sorted})")
+      require(!cur.contains(logicalNew),
+        s"rename: '$logicalNew' already visible")
+      named(Cmap.names((cur - logicalOld) + (logicalNew -> cur(logicalOld))))
+    }
 
   /** DROP a logical column — metadata-only like [[renameColumn]]: the
     * column vanishes from the visible schema at this version; pinned reads
     * below it still serve it; the physical bytes stay (reclaimed only if a
     * later rewrite drops them). */
   def dropColumn(spark: SparkSession, manifestRoot: String,
-                 logical: String): Int = {
-    val cur = currentMapping(spark, manifestRoot)
-    require(cur.contains(logical),
-      s"drop: no visible column '$logical' (have ${cur.keys.toSeq.sorted})")
-    require(cur.size > 1, "drop would leave an empty visible schema")
-    commit(spark,
-      manifestAt(spark, manifestRoot, latestVersion(spark, manifestRoot)),
-      manifestRoot, markers = Seq(cmapMarker(cur - logical)))
-  }
+                 logical: String): Int =
+    metadataCommit(spark, manifestRoot) { v =>
+      val cur = currentMapping(spark, manifestRoot, v)
+      require(cur.contains(logical),
+        s"drop: no visible column '$logical' (have ${cur.keys.toSeq.sorted})")
+      require(cur.size > 1, "drop would leave an empty visible schema")
+      named(Cmap.names(cur - logical))
+    }
 
   /** EXTEND the mapping with a new logical column (schema-evolution ADD
     * after a rename/drop): once a mapping exists, an appended physical
@@ -2364,16 +2421,15 @@ object Snapshots {
     * through [[toPhysical]] as usual. The physical name defaults to the
     * logical one (a fresh column has nothing to indirect). */
   def extendMapping(spark: SparkSession, manifestRoot: String,
-                    logical: String, physical: Option[String] = None): Int = {
-    val cur = currentMapping(spark, manifestRoot)
-    require(!cur.contains(logical), s"extend: '$logical' already visible")
-    val phys = physical.getOrElse(logical)
-    require(!cur.values.exists(_ == phys),
-      s"extend: physical '$phys' already mapped")
-    commit(spark,
-      manifestAt(spark, manifestRoot, latestVersion(spark, manifestRoot)),
-      manifestRoot, markers = Seq(cmapMarker(cur + (logical -> phys))))
-  }
+                    logical: String, physical: Option[String] = None): Int =
+    metadataCommit(spark, manifestRoot) { v =>
+      val cur = currentMapping(spark, manifestRoot, v)
+      require(!cur.contains(logical), s"extend: '$logical' already visible")
+      val phys = physical.getOrElse(logical)
+      require(!cur.values.exists(_ == phys),
+        s"extend: physical '$phys' already mapped")
+      named(Cmap.names(cur + (logical -> phys)))
+    }
 
   /** ALTER TABLE ADD COLUMN — ONE metadata-only commit that (a) extends
     * the mapping with the new logical column and (b) declares its TYPE in
@@ -2384,41 +2440,29 @@ object Snapshots {
     * the column physically from then on (the q118 footer-merge
     * mechanics), at which point the real values shadow the null fill. */
   def addColumn(spark: SparkSession, manifestRoot: String, logical: String,
-                dataType: org.apache.spark.sql.types.DataType): Int = {
-    val cur = currentMapping(spark, manifestRoot)
-    require(!cur.contains(logical), s"add: '$logical' already visible")
-    require(!cur.values.exists(_ == logical),
-      s"add: physical '$logical' already exists")
-    commit(spark,
-      manifestAt(spark, manifestRoot, latestVersion(spark, manifestRoot)),
-      manifestRoot,
-      markers = Seq(cmapMarker(cur + (logical -> logical)),
-        addColMarker(logical, dataType)))
-  }
+                dataType: org.apache.spark.sql.types.DataType): Int =
+    metadataCommit(spark, manifestRoot) { v =>
+      val cur = currentMapping(spark, manifestRoot, v)
+      require(!cur.contains(logical), s"add: '$logical' already visible")
+      require(!cur.values.exists(_ == logical),
+        s"add: physical '$logical' already exists")
+      named(Cmap.names(cur + (logical -> logical)) :+
+        addColMarker(logical, dataType))
+    }
 
   private def addColMarker(physical: String,
                            dt: org.apache.spark.sql.types.DataType): String =
-    AddColPrefix + java.util.Base64.getUrlEncoder.withoutPadding
-      .encodeToString(s"$physical:${dt.catalogString}".getBytes("UTF-8"))
+    AddColPrefix + b64e(s"$physical:${dt.catalogString}")
 
   /** Declared (physical name → type) of every ADD COLUMN commit at or
     * below `version` — the types [[mappedTableAt]] null-fills with until
-    * data materializes the column. Version × marker-count bounded
-    * planner work, like [[columnMapping]]. */
+    * data materializes the column. */
   private def declaredTypes(spark: SparkSession, manifestRoot: String,
-                            version: Int): Map[String, org.apache.spark.sql.types.DataType] = {
-    val fs = hfs(spark, manifestRoot)
-    versions(spark, manifestRoot).filter(_ <= version).flatMap { v =>
-      fs.listStatus(new org.apache.hadoop.fs.Path(s"$manifestRoot/v=$v"))
-        .toSeq.map(_.getPath.getName)
-        .collect { case n if n.startsWith(AddColPrefix) =>
-          val decoded = new String(java.util.Base64.getUrlDecoder
-            .decode(n.stripPrefix(AddColPrefix)), "UTF-8")
-          val Array(p, ddl) = decoded.split(":", 2)
-          p -> org.apache.spark.sql.types.DataType.fromDDL(ddl)
-        }
+                            version: Int): Map[String, org.apache.spark.sql.types.DataType] =
+    accumulated(spark, manifestRoot, version, AddColPrefix).map { n =>
+      val Array(p, ddl) = b64d(n.stripPrefix(AddColPrefix)).split(":", 2)
+      p -> org.apache.spark.sql.types.DataType.fromDDL(ddl)
     }.toMap
-  }
 
   /** Route a LOGICAL-schema batch to PHYSICAL names for writing — what an
     * appender uses after a rename so every data file keeps the one
@@ -2704,60 +2748,13 @@ object Snapshots {
   // writer-independent: ANY committer against the log obeys it).
   // ------------------------------------------------------------------
 
-  private def ckMarker(cs: Map[String, String]): String = {
-    val enc = java.util.Base64.getUrlEncoder.withoutPadding
-    CkPrefix + cs.toSeq.sorted.map { case (n, c) =>
-      enc.encodeToString(n.getBytes("UTF-8")) + "." +
-        enc.encodeToString(c.getBytes("UTF-8"))
-    }.mkString(",")
-  }
-
-  private def parseCk(name: String): Map[String, String] = {
-    val dec = java.util.Base64.getUrlDecoder
-    val body = name.stripPrefix(CkPrefix)
-    if (body.isEmpty) Map.empty
-    else body.split(",").map { kv =>
-      val Array(n, c) = kv.split("\\.", 2)
-      new String(dec.decode(n), "UTF-8") -> new String(dec.decode(c), "UTF-8")
-    }.toMap
-  }
-
-  // Marker scans memoized per manifest root in [[MetaCache]]: (highest
-  // version scanned, markers found so far). Sound because committed
-  // version dirs are immutable (markers ride the commit's atomic rename;
-  // vacuum's re-homing only duplicates an already-known set), so only the
-  // (scanned, head] tail ever needs listing — a write-path probe costs
-  // O(new commits), not O(log length). A log whose head went BACKWARDS
-  // was deleted and re-created at the same path by a process that did
-  // not [[MetaCache.forget]] it: the entry describes the old log, rescan.
-  private def markerScan[A](spark: SparkSession, manifestRoot: String,
-                            kind: String, empty: A)
-                           (extend: (A, Seq[Int]) => A): A = {
-    val vs = versions(spark, manifestRoot)
-    val (scanned, known) = MetaCache.get[(Int, A)](manifestRoot, kind)
-      .filter(e => vs.nonEmpty && vs.last >= e._1).getOrElse((0, empty))
-    val all = extend(known, vs.filter(_ > scanned))
-    if (vs.nonEmpty && vs.last > scanned)
-      MetaCache.put(manifestRoot, kind, (vs.last, all))
-    all
-  }
-
-  private def markerNames(spark: SparkSession, manifestRoot: String,
-                          v: Int): Seq[String] =
-    hfs(spark, manifestRoot)
-      .listStatus(new org.apache.hadoop.fs.Path(s"$manifestRoot/v=$v"))
-      .toSeq.map(_.getPath.getName)
-
   /** Every source-file key ever loaded by [[copyIntoCommit]] (union over
     * all committed versions: the keys ride each append's atomic rename as
     * `_copy_<key>` markers and accumulate, and vacuum re-homes them).
-    * O(new commits) FS listings per call. */
+    * Lists only the versions committed since the last call. */
   def copiedKeys(spark: SparkSession, manifestRoot: String): Set[String] =
-    markerScan(spark, manifestRoot, "cp", Set.empty[String]) { (known, fresh) =>
-      known ++ fresh.flatMap(v => markerNames(spark, manifestRoot, v)
-        .collect { case n if n.startsWith(CopyPrefix) =>
-          n.stripPrefix(CopyPrefix) })
-    }
+    accumulated(spark, manifestRoot, Int.MaxValue, CopyPrefix)
+      .map(_.stripPrefix(CopyPrefix)).toSet
 
   final case class CopyResult(version: Int, filesLoaded: Long,
                               rowsLoaded: Long, filesSkipped: Long)
@@ -2798,15 +2795,7 @@ object Snapshots {
     * expression text over PHYSICAL column names. */
   def checkConstraints(spark: SparkSession, manifestRoot: String,
                        version: Int): Map[String, String] =
-    markerScan(spark, manifestRoot, "ck",
-        List.empty[(Int, Map[String, String])]) { (known, fresh) =>
-      // DESCENDING by version: the first at or below `version` governs
-      fresh.sorted.reverse.flatMap { v =>
-        markerNames(spark, manifestRoot, v)
-          .collectFirst { case n if n.startsWith(CkPrefix) => v -> parseCk(n) }
-      }.toList ++ known
-    }.collectFirst { case (v, m) if v <= version => m }
-      .getOrElse(Map.empty)
+    Ck.at(spark, manifestRoot, version).getOrElse(Map.empty)
 
   /** ADD a named CHECK constraint — ONE metadata-only commit after
     * validating that every EXISTING live row satisfies it (the Delta ADD
@@ -2818,23 +2807,23 @@ object Snapshots {
   def addConstraint(spark: SparkSession, manifestRoot: String,
                     name: String, condition: String): Int = {
     require(name != null && name.nonEmpty, "constraint needs a name")
-    val v = latestVersion(spark, manifestRoot)
-    val cur = checkConstraints(spark, manifestRoot, v)
-    require(!cur.contains(name),
-      s"constraint '$name' already exists (${cur(name)})")
-    // an EMPTY table (a plain CREATE TABLE before any INSERT) trivially
-    // satisfies every constraint — nothing to validate, no scan
-    val entries = Dv.entries(Dv.ensureDv(manifestAt(spark, manifestRoot, v)))
-    val bad =
-      if (entries.isEmpty) 0L
-      else Dv.readLive(spark, entries, declaredSchemaAt(spark, manifestRoot, v))
-        .filter(!coalesce(expr(condition), lit(true))).count()
-    if (bad > 0)
-      throw new ConstraintViolationException(
-        s"cannot ADD CONSTRAINT '$name' CHECK ($condition): $bad existing " +
-          "rows violate it — nothing committed")
-    commit(spark, manifestAt(spark, manifestRoot, v), manifestRoot,
-      markers = Seq(ckMarker(cur + (name -> condition))))
+    metadataCommit(spark, manifestRoot) { v =>
+      val cur = checkConstraints(spark, manifestRoot, v)
+      require(!cur.contains(name),
+        s"constraint '$name' already exists (${cur(name)})")
+      // an EMPTY table (a plain CREATE TABLE before any INSERT) trivially
+      // satisfies every constraint — nothing to validate, no scan
+      val entries = Dv.entries(Dv.ensureDv(manifestAt(spark, manifestRoot, v)))
+      val bad =
+        if (entries.isEmpty) 0L
+        else Dv.readLive(spark, entries, declaredSchemaAt(spark, manifestRoot, v))
+          .filter(!coalesce(expr(condition), lit(true))).count()
+      if (bad > 0)
+        throw new ConstraintViolationException(
+          s"cannot ADD CONSTRAINT '$name' CHECK ($condition): $bad existing " +
+            "rows violate it — nothing committed")
+      named(Ck.names(cur + (name -> condition)))
+    }
   }
 
   /** FOREIGN KEY constraints in force at `version` —
@@ -2902,17 +2891,16 @@ object Snapshots {
     * set without it; later writes stop enforcing it, pinned reads below
     * the commit are unaffected (constraints gate writes, not reads). */
   def dropConstraint(spark: SparkSession, manifestRoot: String,
-                     name: String, ifExists: Boolean = false): Int = {
-    val v = latestVersion(spark, manifestRoot)
-    val cur = checkConstraints(spark, manifestRoot, v)
-    if (!cur.contains(name)) {
-      require(ifExists,
-        s"no constraint '$name' (have ${cur.keys.toSeq.sorted.mkString(", ")})")
-      return v
+                     name: String, ifExists: Boolean = false): Int =
+    metadataCommit(spark, manifestRoot) { v =>
+      val cur = checkConstraints(spark, manifestRoot, v)
+      if (cur.contains(name)) named(Ck.names(cur - name))
+      else {
+        require(ifExists,
+          s"no constraint '$name' (have ${cur.keys.toSeq.sorted.mkString(", ")})")
+        Seq.empty
+      }
     }
-    commit(spark, manifestAt(spark, manifestRoot, v), manifestRoot,
-      markers = Seq(ckMarker(cur - name)))
-  }
 
   /** The write-path enforcement seam: validate a finished staging dir
     * against the constraint set in force at the log head NOW (at staging
@@ -3044,16 +3032,13 @@ object Snapshots {
     * masked rows — the physical count, like the formats' own histories). */
   def history(spark: SparkSession, manifestRoot: String): Seq[HistoryEntry] = {
     val vs = versions(spark, manifestRoot)
-    val fs = hfs(spark, manifestRoot)
     var prevEntries: Set[Dv.Entry] = Set.empty
     var prevRows = 0L
     vs.map { v =>
       val m = Dv.ensureDv(manifestAt(spark, manifestRoot, v))
       val entries = Dv.entries(m).toSet
       val rows = m.agg(sum(col("rows"))).collect()(0).getLong(0)
-      val markers = fs
-        .listStatus(new org.apache.hadoop.fs.Path(s"$manifestRoot/v=$v"))
-        .toSeq.map(_.getPath.getName)
+      val markers = markerNames(spark, manifestRoot, v)
       val op =
         if (markers.exists(_.startsWith("_restore_"))) "restore"
         else if (v == vs.head) "create"
@@ -3074,16 +3059,16 @@ object Snapshots {
     }
   }
 
-  /** Re-home governing markers out of about-to-drop version dirs (markers
-    * are empty files whose NAME carries the payload, so "copy" = create
-    * the same name in the oldest RETAINED version's dir):
-    *  - the newest column-mapping / constraint-set marker at-or-below the
-    *    cut is the one in force for every retained version — if it lives
-    *    in a dropped dir, recreate it at the cut (superseding-set
-    *    semantics at every surviving version are unchanged; history below
-    *    the cut is gone anyway);
-    *  - ADD COLUMN type markers ACCUMULATE (declaredTypes unions all ≤ v),
-    *    so every one in a dropped dir moves to the cut.
+  /** Re-home governing markers out of about-to-drop version dirs into the
+    * oldest RETAINED version's dir (the cut):
+    *  - the superseding kinds (column mapping, constraint set, properties
+    *    — every chunk of each — and the declared schema): the newest
+    *    marker at-or-below the cut is the one in force for every retained
+    *    version — if it lives in a dropped dir, recreate it at the cut
+    *    (superseding-set semantics at every surviving version are
+    *    unchanged; history below the cut is gone anyway);
+    *  - the accumulating kinds (ADD COLUMN types, COPY INTO keys): every
+    *    one in a dropped dir moves to the cut.
     * Without this, a vacuum reaching past the last schema/constraint
     * commit would silently strip the table of its renames, declared
     * columns, or write contracts. */
@@ -3092,29 +3077,19 @@ object Snapshots {
     if (drop.isEmpty) return
     val fs = hfs(spark, manifestRoot)
     val dropSet = drop.toSet
-    def names(v: Int): Seq[String] =
-      fs.listStatus(new org.apache.hadoop.fs.Path(s"$manifestRoot/v=$v"))
-        .toSeq.map(_.getPath.getName)
-    def rehome(marker: String): Unit =
-      fs.create(new org.apache.hadoop.fs.Path(
-        s"$manifestRoot/v=$cut/$marker"), true).close()
-    val below = versions(spark, manifestRoot).filter(_ <= cut).sorted.reverse
-    // props may CHUNK across several markers in one commit dir — rehome
-    // every chunk of the newest carrying version, or the surviving map
-    // would silently lose the keys of the unmoved chunks
-    for (prefix <- Seq(CmapPrefix, CkPrefix, PropsPrefix)) {
-      below.iterator
-        .map { v =>
-          val ms = names(v).filter(_.startsWith(prefix))
-          if (ms.isEmpty) None else Some((v, ms))
-        }
-        .collectFirst { case Some(hit) => hit }
-        .foreach { case (v, ms) =>
-          if (dropSet.contains(v)) ms.foreach(rehome) }
+    def rehome(from: Int, marker: String): Unit = {
+      val out = fs.create(new org.apache.hadoop.fs.Path(
+        s"$manifestRoot/v=$cut/$marker"), true)
+      try out.write(markerContent(spark, manifestRoot, from, marker).get
+        .getBytes("UTF-8"))
+      finally out.close()
     }
-    drop.foreach(v => names(v).filter(n =>
-        n.startsWith(AddColPrefix) || n.startsWith(CopyPrefix))
-      .foreach(rehome))
+    for (prefix <- Seq(CmapPrefix, CkPrefix, PropsPrefix, SchemaMarker))
+      inForce(spark, manifestRoot, cut, prefix).foreach { case (v, ms) =>
+        if (dropSet.contains(v)) ms.foreach(rehome(v, _)) }
+    drop.foreach(v => markerNames(spark, manifestRoot, v)
+      .filter(n => n.startsWith(AddColPrefix) || n.startsWith(CopyPrefix))
+      .foreach(rehome(v, _)))
   }
 
   /** [[vacuum]] by RETENTION PERIOD (the `VACUUM ... RETAIN n HOURS`
@@ -3171,11 +3146,11 @@ object Snapshots {
     val headMap = columnMapping(spark, manifestRoot, head)
     val markers =
       if (targetMap == headMap) Seq.empty
-      else Seq(cmapMarker(targetMap.getOrElse(
+      else Cmap.names(targetMap.getOrElse(
         // the head mapped names but the target predates every mapping:
         // the restore must re-expose raw physical names → identity map
         tableAt(spark, manifestRoot, toVersion).columns
-          .map(c => c -> c).toMap)))
+          .map(c => c -> c).toMap))
     commit(spark, manifestAt(spark, manifestRoot, toVersion), manifestRoot,
       markers = markers :+ s"_restore_$toVersion")
   }
@@ -3195,7 +3170,8 @@ object Snapshots {
                   version: Int): Int = {
     require(versions(spark, dstRoot).isEmpty,
       s"clone destination $dstRoot already has commits")
-    val markers = columnMapping(spark, srcRoot, version).map(cmapMarker).toSeq
+    val markers = columnMapping(spark, srcRoot, version).toSeq
+      .flatMap(Cmap.names)
     commit(spark, manifestAt(spark, srcRoot, version), dstRoot,
       markers = markers :+ s"_clone_v$version")
   }
@@ -3288,7 +3264,8 @@ object Snapshots {
             "left")
           .withColumn("dv", coalesce(col("_nd"), col("dv"))).drop("_nd")
       }
-    val markers = columnMapping(spark, srcRoot, version).map(cmapMarker).toSeq
+    val markers = columnMapping(spark, srcRoot, version).toSeq
+      .flatMap(Cmap.names)
     val v = commit(spark, next, dstRoot,
       markers = markers :+ s"_deepclone_v$version")
     DeepCloneResult(v, (dataPairs.size + dvDirMap.size).toLong,

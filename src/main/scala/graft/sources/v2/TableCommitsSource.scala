@@ -94,7 +94,8 @@ final class CommitsMicroBatchStream(opts: Map[String, String])
   override def initialOffset(): Offset = VersionOffset(starting)
 
   override def latestOffset(): Offset =
-    VersionOffset(Snapshots.versions(spark, root).lastOption.getOrElse(starting))
+    VersionOffset(Snapshots.visibleVersions(spark, root).lastOption
+      .getOrElse(starting))
 
   override def deserializeOffset(json: String): Offset =
     VersionOffset(json.trim.toInt)
@@ -103,13 +104,16 @@ final class CommitsMicroBatchStream(opts: Map[String, String])
                                    end: Offset): Array[InputPartition] = {
     val s0 = start.asInstanceOf[VersionOffset].v
     val s1 = end.asInstanceOf[VersionOffset].v
-    val vs = Snapshots.versions(spark, root).filter(v => v > s0 && v <= s1)
-    vs.map { v =>
-      def pairs(x: Int): Set[Dv.Entry] =
-        if (x < 1 || !Snapshots.versions(spark, root).contains(x)) Set.empty
-        else Dv.entries(Snapshots.manifestAt(spark, root, x)).toSet
-      val prev = pairs(v - 1)
-      val cur = pairs(v)
+    // visible versions only, each diffed against its nearest VISIBLE
+    // predecessor: a pending or aborted txn stage is not table history
+    // (its manifest read is refused), so it is neither a batch nor a base
+    val all = Snapshots.visibleVersions(spark, root)
+    def pairs(x: Option[Int]): Set[Dv.Entry] =
+      x.fold(Set.empty[Dv.Entry])(y =>
+        Dv.entries(Snapshots.manifestAt(spark, root, y)).toSet)
+    all.filter(v => v > s0 && v <= s1).map { v =>
+      val prev = pairs(all.filter(_ < v).lastOption)
+      val cur = pairs(Some(v))
       val removed = prev -- cur
       if (removed.nonEmpty && !ignoreDeletes)
         throw new IllegalStateException(

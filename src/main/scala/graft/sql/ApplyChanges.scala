@@ -38,36 +38,24 @@ object ApplyChanges {
 
   /** Highest source version whose `scd2_` tag is on the target log.
     *
-    * Scans target version dirs DESCENDING and stops at the first dir
-    * carrying a tag: applies run source versions in order and each tag
-    * rides the apply's own final commit, so tag values are monotone over
-    * target versions — the newest-versioned tag IS the max. Per-poll
-    * listStatus count is therefore O(target commits since the last
-    * apply), not O(all versions) — the bound a long-lived DLT-style
-    * target needs (a target with 10⁵ commits would otherwise pay 10⁵
-    * listStatus calls on every poll). */
+    * The newest tag is the max: applies run source versions in order and
+    * each tag rides the apply's own final commit, so tag values are
+    * monotone over target versions. The walk stops at the first tagged
+    * version, descending, so it visits only the target commits since the
+    * last apply, not all versions — the bound a long-lived DLT-style
+    * target needs. */
   private def appliedCursor(spark: SparkSession, targetRoot: String): Int =
     cursorScan(spark, targetRoot)._1
 
-  /** (cursor, version dirs listed) — the scan-count half exists so the
+  /** (cursor, version dirs walked) — the walk-count half exists so the
     * boundedness claim is spec-testable, not asserted. */
   private[sql] def cursorScan(spark: SparkSession,
                               targetRoot: String): (Int, Int) = {
     val vs = Snapshots.versions(spark, targetRoot)
-    if (vs.isEmpty) return (0, 0)
-    val fs = new org.apache.hadoop.fs.Path(targetRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var scanned = 0
-    for (v <- vs.reverseIterator) {
-      scanned += 1
-      val tag = fs.listStatus(new org.apache.hadoop.fs.Path(s"$targetRoot/v=$v"))
-        .toSeq.map(_.getPath.getName)
-        .collect { case n if n.startsWith("_txn_scd2_") =>
-          n.stripPrefix("_txn_scd2_").toInt }
-        .maxOption
-      if (tag.isDefined) return (tag.get, scanned)
+    Snapshots.tags(spark, targetRoot, "scd2_").nextOption() match {
+      case Some((v, tag)) => (tag.toInt, vs.count(_ >= v))
+      case None => (0, vs.size)
     }
-    (0, scanned)
   }
 
   /** Bring the SCD2 target up to the source head. The target must be a
@@ -119,10 +107,8 @@ object ApplyChanges {
         .withColumn("is_current", lit(true))
       if (opens.isEmpty)
         // pure-delete commit: the cursor tag still has to land atomically
-        Snapshots.commit(spark,
-          Snapshots.manifestAt(spark, spec.manifestRoot,
-            Snapshots.latestVersion(spark, spec.manifestRoot)),
-          spec.manifestRoot, tag = Some(s"scd2_$v"))
+        Snapshots.metadataCommit(spark, spec.manifestRoot,
+          Some(s"scd2_$v"))(_ => Seq.empty)
       else
         Snapshots.appendCommit(spark, opens, spec.cols, spec.path,
           spec.manifestRoot, spec.nFiles, tag = Some(s"scd2_$v"))

@@ -1638,35 +1638,24 @@ object LakeSql {
       s"MERGE key '$key' must be a manifest stats column " +
         s"(${spec.cols.mkString(", ")}) — anything else cannot prune the " +
         "touch set and degenerates to a full-table rewrite"))
-    (m.matchedActions, m.notMatchedActions,
+    val r = (m.matchedActions, m.notMatchedActions,
         m.notMatchedBySourceActions) match {
       // star fast paths (single key, unconditional SET */INSERT *, no
       // evolved columns) keep the lean mergeCommit/mergeCommitFull plans
       case (Seq(UpdateStarAction(None)), Seq(InsertStarAction(None)), Seq())
           if keys.sizeIs == 1 && extras.isEmpty =>
-        val r = Snapshots.mergeCommit(spark, source, keys.head, spec.cols,
+        val u = Snapshots.mergeCommit(spark, source, keys.head, spec.cols,
           spec.path, spec.manifestRoot, spec.nFiles)
-        metricsRow(spark,
-          Seq("version" -> r.version.toLong,
-            "files_rewritten" -> r.filesRewritten,
-            "files_total" -> r.filesTotal,
-            "rows_updated" -> r.rowsUpdated,
-            "rows_inserted" -> r.rowsInserted))
+        Snapshots.MergeFullResult(u.version, u.filesRewritten, u.filesTotal,
+          u.rowsUpdated, u.rowsInserted, rowsDeleted = 0L)
       case (Seq(UpdateStarAction(None)), Seq(InsertStarAction(None)),
           Seq(DeleteAction(Some(cond))))
           if keys.sizeIs == 1 && extras.isEmpty =>
         // the three-clause matrix: the delete clause must be stats-scoped
         // — same 100 TB honesty contract as Snapshots.mergeCommitFull
         val (prune, pred) = compileWhere(cond, spec, mapping, Some(spark))
-        val r = Snapshots.mergeCommitFullPred(spark, source, keys.head,
+        Snapshots.mergeCommitFullPred(spark, source, keys.head,
           spec.cols, spec.path, spec.manifestRoot, spec.nFiles, prune, pred)
-        metricsRow(spark,
-          Seq("version" -> r.version.toLong,
-            "files_rewritten" -> r.filesRewritten,
-            "files_total" -> r.filesTotal,
-            "rows_updated" -> r.rowsUpdated,
-            "rows_inserted" -> r.rowsInserted,
-            "rows_deleted" -> r.rowsDeleted))
       case (_, _, Seq(DeleteAction(None))) =>
         throw new IllegalArgumentException(
           "WHEN NOT MATCHED BY SOURCE THEN DELETE needs a scoping " +
@@ -1722,19 +1711,19 @@ object LakeSql {
           case other => throw new IllegalArgumentException(
             s"unsupported MERGE not-matched-by-source clause: $other")
         }
-        val r = Snapshots.mergeCommitClauses(spark, source, keys, spec.cols,
+        Snapshots.mergeCommitClauses(spark, source, keys, spec.cols,
           spec.path, spec.manifestRoot, spec.nFiles, matched, notMatched,
           compiledBySrc.map(_._2),
           compiledBySrc.map(_._1).reduceOption(_ || _),
           targetSchemaHint = Some(expectPhysical))
-        metricsRow(spark,
-          Seq("version" -> r.version.toLong,
-            "files_rewritten" -> r.filesRewritten,
-            "files_total" -> r.filesTotal,
-            "rows_updated" -> r.rowsUpdated,
-            "rows_inserted" -> r.rowsInserted,
-            "rows_deleted" -> r.rowsDeleted))
     }
+    metricsRow(spark,
+      Seq("version" -> r.version.toLong,
+        "files_rewritten" -> r.filesRewritten,
+        "files_total" -> r.filesTotal,
+        "rows_updated" -> r.rowsUpdated,
+        "rows_inserted" -> r.rowsInserted,
+        "rows_deleted" -> r.rowsDeleted))
   }
 
   /** Rewrites parsed MERGE clause expressions onto the frames

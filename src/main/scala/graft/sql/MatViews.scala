@@ -242,7 +242,7 @@ object MatViews {
     val version = Snapshots.commit(spark,
       graft.sinks.Layout.buildManifest(spark, spec.path, m.dims),
       spec.manifestRoot, tag = Some(s"mvref_$baseHead"),
-      markers = Snapshots.propsMarkers(props))
+      markers = Snapshots.Props.names(props))
     LakeSql.register(nm, spec)
     mvs.put(nm, m)
     CreateResult(version, baseHead)
@@ -252,18 +252,8 @@ object MatViews {
     * descending stop-at-first, the [[ApplyChanges]] cursor discipline
     * (tags are monotone over view versions because every refresh both
     * advances the cursor and commits). */
-  private[sql] def cursorOf(spark: SparkSession, mvRoot: String): Int = {
-    val vs = Snapshots.versions(spark, mvRoot)
-    val fs = new org.apache.hadoop.fs.Path(mvRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    vs.reverseIterator.map { v =>
-      fs.listStatus(new org.apache.hadoop.fs.Path(s"$mvRoot/v=$v"))
-        .toSeq.map(_.getPath.getName)
-        .collect { case n if n.startsWith("_txn_mvref_") =>
-          n.stripPrefix("_txn_mvref_").toInt }
-        .maxOption
-    }.collectFirst { case Some(c) => c }.getOrElse(0)
-  }
+  private[sql] def cursorOf(spark: SparkSession, mvRoot: String): Int =
+    Snapshots.tags(spark, mvRoot, "mvref_").nextOption().fold(0)(_._2.toInt)
 
   final case class RefreshResult(version: Int, fromVersion: Int,
                                  toVersion: Int, feedRows: Long,

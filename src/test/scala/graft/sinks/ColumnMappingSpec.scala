@@ -175,4 +175,56 @@ class ColumnMappingSpec extends SparkSpec {
       Snapshots.versionAtTimestamp(spark, s"$dir/m", ts1))
     assert(asOf.filter(col("x").between(10.0, 40.0)).count() > 0)
   }
+
+  /** A 20-column table of ten-character names: its mapping cannot fit one
+    * marker name (NAME_MAX 255 on ext4). */
+  private def wideTable(): String = {
+    val dir = tmpDir("cmapwide")
+    val cols = (1 to 20).map(i => f"measure_$i%02d")
+    val df = spark.range(200).select(
+      cols.zipWithIndex.map { case (c, i) => (col("id") * (i + 1)).as(c) }: _*)
+    Layout.zorderWrite(df, Seq("measure_01"), s"$dir/z", nFiles = 2)
+    Snapshots.commit(spark,
+      Layout.buildManifest(spark, s"$dir/z", Seq("measure_01")), s"$dir/m")
+    dir
+  }
+
+  private def cmapMarkers(m: String, v: Int): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(s"$m/v=$v")
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
+      .map(_.getPath.getName).filter(_.startsWith("_cmap_")).toSeq.sorted
+  }
+
+  test("RENAME COLUMN on a 20-column table chunks the mapping marker") {
+    val dir = wideTable()
+    val m = s"$dir/m"
+    val v = Snapshots.renameColumn(spark, m, "measure_07", "renamed_07")
+    val chunks = cmapMarkers(m, v)
+    assert(chunks.size > 1, chunks)
+    chunks.foreach(n => assert(n.getBytes("UTF-8").length <= 255, n))
+    val mapping = Snapshots.columnMapping(spark, m, v).get
+    assert(mapping.size == 20 && mapping("renamed_07") == "measure_07")
+    val t = Snapshots.mappedTableAt(spark, m, v)
+    assert(t.columns.contains("renamed_07") && !t.columns.contains("measure_07"))
+    assert(t.agg(sum(col("renamed_07"))).head().getLong(0) ==
+      (0 until 200).map(_ * 7L).sum)
+  }
+
+  test("VACUUM past a chunked column-mapping commit re-homes every chunk") {
+    val dir = wideTable()
+    val m = s"$dir/m"
+    val vr = Snapshots.renameColumn(spark, m, "measure_07", "renamed_07")
+    val chunks = cmapMarkers(m, vr)
+    assert(chunks.size > 1)
+    val mapping = Snapshots.columnMapping(spark, m, vr)
+    assert(mapping.exists(_.size == 20))
+    Snapshots.setProperties(spark, m, Map("after" -> "1"))
+    Snapshots.setProperties(spark, m, Map("after" -> "2"))
+    val head = Snapshots.latestVersion(spark, m)
+    Snapshots.vacuum(spark, s"$dir/z", m, retainLast = 1)
+    assert(Snapshots.versions(spark, m) == Seq(head))
+    assert(cmapMarkers(m, head) == chunks)
+    assert(Snapshots.columnMapping(spark, m, head) == mapping)
+    assert(Snapshots.mappedTableAt(spark, m, head).columns.contains("renamed_07"))
+  }
 }

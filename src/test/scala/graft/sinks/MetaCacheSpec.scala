@@ -151,4 +151,44 @@ class MetaCacheSpec extends SparkSpec {
     assert(jobs.isEmpty, jobs.mkString("; "))
     assert(Snapshots.manifestAt(spark, m, 1).count() == n)
   }
+
+  test("a root replaced behind the JVM's back by a SHORTER log: properties, " +
+      "column mapping and CHECK set all read the new log") {
+    val dir = tmpDir("mcswap")
+    val (root, other) = (s"$dir/m", s"$dir/other")
+    def born(data: String, m: String): Unit = {
+      Layout.zorderWrite(spark.range(20).select(col("id"),
+        (col("id") % 5).as("x")), Seq("id"), data, nFiles = 1)
+      Snapshots.commit(spark, Layout.buildManifest(spark, data, Seq("id")), m)
+    }
+    // the old log: five versions, every version's metadata read (memoized)
+    born(s"$dir/za", root)
+    Snapshots.renameColumn(spark, root, "x", "xa")
+    Snapshots.addConstraint(spark, root, "ca", "id >= 0")
+    Snapshots.setProperties(spark, root, Map("owner" -> "a"))
+    Snapshots.setProperties(spark, root, Map("n" -> "5"))
+    (1 to 5).foreach { v =>
+      Snapshots.tableProperties(spark, root, v)
+      Snapshots.columnMapping(spark, root, v)
+      Snapshots.checkConstraints(spark, root, v)
+    }
+    // the new log, four versions, built elsewhere and copied over the
+    // old root with plain FS calls: this JVM never forgets the root
+    born(s"$dir/zb", other)
+    Snapshots.setProperties(spark, other, Map("owner" -> "b"))
+    Snapshots.renameColumn(spark, other, "x", "xb")
+    Snapshots.addConstraint(spark, other, "cb", "id < 100")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
+    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    assert(org.apache.hadoop.fs.FileUtil.copy(fs,
+      new org.apache.hadoop.fs.Path(other), fs,
+      new org.apache.hadoop.fs.Path(root), false, conf))
+    val v = Snapshots.latestVersion(spark, root)
+    assert(v == 4)
+    assert(Snapshots.tableProperties(spark, root, v) == Map("owner" -> "b"))
+    assert(Snapshots.columnMapping(spark, root, v) ==
+      Some(Map("id" -> "id", "xb" -> "x")))
+    assert(Snapshots.checkConstraints(spark, root, v) == Map("cb" -> "id < 100"))
+  }
 }

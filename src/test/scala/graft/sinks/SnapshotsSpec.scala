@@ -429,4 +429,97 @@ class SnapshotsSpec extends SparkSpec {
       assert(!referenced.contains(p.getName), s"$p was adopted")
     }
   }
+
+  /** The `prefix` marker names committed in `v=N`, read straight off the
+    * filesystem. */
+  private def markersIn(m: String, v: Int, prefix: String): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(s"$m/v=$v")
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
+      .map(_.getPath.getName).filter(_.startsWith(prefix)).toSeq.sorted
+  }
+
+  /** Three ~100-char CHECK conditions: one marker name cannot hold them. */
+  private val longChecks = (1 to 3).map { i =>
+    s"long_check_$i" -> (s"(x + $i) >= $i AND y BETWEEN 0 AND 999 AND " +
+      s"coalesce(id, 0) >= 0 AND length(cast(x AS STRING)) <= ${3 + i}")
+  }.toMap
+
+  test("three ~100-char CHECK constraints chunk across markers, each name " +
+      "within NAME_MAX, and all of them gate writes") {
+    val (dir, _) = freshLayout()
+    val m = s"$dir/m"
+    longChecks.toSeq.sorted.foreach { case (n, c) =>
+      assert(c.length >= 95)
+      Snapshots.addConstraint(spark, m, n, c)
+    }
+    val head = Snapshots.latestVersion(spark, m)
+    assert(Snapshots.checkConstraints(spark, m, head) == longChecks)
+    val chunks = markersIn(m, head, "_ck_")
+    assert(chunks.size > 1, chunks)
+    chunks.foreach(n => assert(n.getBytes("UTF-8").length <= 255, n))
+    val bad = data.limit(3).withColumn("y", lit(5000L))
+    intercept[Snapshots.ConstraintViolationException] {
+      Snapshots.appendCommit(spark, bad, Seq("x", "y"), s"$dir/z", m, 1)
+    }
+    assert(Snapshots.latestVersion(spark, m) == head)
+  }
+
+  test("VACUUM past a chunked CHECK-set commit re-homes every chunk") {
+    val (dir, _) = freshLayout()
+    val m = s"$dir/m"
+    longChecks.toSeq.sorted.foreach { case (n, c) =>
+      Snapshots.addConstraint(spark, m, n, c)
+    }
+    val chunked = Snapshots.latestVersion(spark, m)
+    val chunks = markersIn(m, chunked, "_ck_")
+    assert(chunks.size > 1)
+    Snapshots.setProperties(spark, m, Map("after" -> "1"))
+    Snapshots.setProperties(spark, m, Map("after" -> "2"))
+    val head = Snapshots.latestVersion(spark, m)
+    Snapshots.vacuum(spark, s"$dir/z", m, retainLast = 1)
+    assert(Snapshots.versions(spark, m) == Seq(head))
+    assert(markersIn(m, head, "_ck_") == chunks)
+    assert(Snapshots.checkConstraints(spark, m, head) == longChecks)
+  }
+
+  test("a map marker that fits one name is byte-identical to the " +
+      "unchunked encoding (properties, column mapping, CHECK set)") {
+    val (dir, _) = freshLayout()
+    val m = s"$dir/m"
+    def b64(s: String) = java.util.Base64.getUrlEncoder.withoutPadding
+      .encodeToString(s.getBytes("UTF-8"))
+    val vp = Snapshots.setProperties(spark, m,
+      Map("owner" -> "ops", "tier" -> "gold"))
+    assert(markersIn(m, vp, "_props_") == Seq(
+      s"_props_${b64("owner")}~${b64("ops")},${b64("tier")}~${b64("gold")}"))
+    val vc = Snapshots.renameColumn(spark, m, "y", "why")
+    assert(markersIn(m, vc, "_cmap_") == Seq("_cmap_" + b64("id=id,why=y,x=x")))
+    val vk = Snapshots.addConstraint(spark, m, "pos", "x >= 0")
+    assert(markersIn(m, vk, "_ck_") == Seq(s"_ck_${b64("pos")}.${b64("x >= 0")}"))
+    // and the empty set after the last DROP CONSTRAINT
+    val vd = Snapshots.dropConstraint(spark, m, "pos")
+    assert(markersIn(m, vd, "_ck_") == Seq("_ck_"))
+    assert(Snapshots.checkConstraints(spark, m, vd).isEmpty)
+  }
+
+  test("VACUUM past the CREATE TABLE commit keeps the declared schema") {
+    import org.apache.spark.sql.types._
+    val dir = tmpDir("snapschema")
+    val (z, m) = (s"$dir/z", s"$dir/m")
+    val schema = StructType(Seq(StructField("id", LongType, nullable = false),
+      StructField("x", LongType)))
+    Snapshots.createEmptyTable(spark, m, schema, Seq("id"))
+    (1 to 2).foreach(i => Snapshots.appendCommit(spark,
+      spark.range(i * 10L, i * 10L + 10).select(col("id"), col("id").as("x")),
+      Seq("id"), z, m, nFiles = 1))
+    val head = Snapshots.latestVersion(spark, m)
+    Snapshots.vacuum(spark, z, m, retainLast = 1)
+    assert(Snapshots.versions(spark, m) == Seq(head))
+    assert(Snapshots.declaredSchemaAt(spark, m, head).contains(schema))
+    // the NOT NULL contract it carries still gates writes
+    intercept[Snapshots.ConstraintViolationException] {
+      Snapshots.appendCommit(spark, spark.range(1).select(
+        lit(null).cast("long").as("id"), col("id").as("x")), Seq("id"), z, m, 1)
+    }
+  }
 }

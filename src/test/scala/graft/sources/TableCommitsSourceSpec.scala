@@ -93,4 +93,33 @@ class TableCommitsSourceSpec extends SparkSpec {
     assert(v4files > 0)
     assert(captured.select("version").distinct().count() == 4L)
   }
+
+  test("an aborted txn stage between two appends: both appends stream") {
+    val dir = freshTable()
+    val (z, m) = (s"$dir/z", s"$dir/m")
+    def batch(lo: Long) = spark.range(lo, lo + 300).select(col("id"),
+      lit(5L).as("x"), lit(6L).as("y"))
+    val (v4, _) = Snapshots.appendCommit(spark, batch(7000), Seq("x", "y"),
+      z, m, nFiles = 1)
+    val (txnDir, id) = (s"$dir/txn", "t1")
+    val (stage, _) = Snapshots.appendCommit(spark, batch(8000), Seq("x", "y"),
+      z, m, nFiles = 1,
+      contentFiles = Seq(Snapshots.TxnPendingMarker -> s"$txnDir\n$id"))
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.create(new org.apache.hadoop.fs.Path(txnDir, s"abort_$id")).close()
+    val (v6, _) = Snapshots.appendCommit(spark, batch(9000), Seq("x", "y"),
+      z, m, nFiles = 1)
+    assert(stage == v4 + 1 && v6 == stage + 1)
+    drain(dir)
+    val captured = spark.read.parquet(s"$dir/captured")
+      .collect().map(r => (r.getInt(0), r.getString(1)))
+    def files(v: Int): Set[String] =
+      Snapshots.manifestAt(spark, m, v)
+        .select("file").collect().map(_.getString(0)).toSet
+    assert(captured.map(_._1).toSet == Set(1, 2, 3, v4, v6))
+    assert(captured.filter(_._1 == v6).map(_._2).toSet == files(v6) -- files(v4))
+    assert(spark.read.parquet(captured.map(_._2).distinct: _*).count() ==
+      6000L + 600L, "the aborted stage's rows must never stream")
+  }
 }

@@ -237,6 +237,10 @@ class GraftExtensionsSpec extends SparkSpec {
       """MERGE INTO t_agree_$side t USING agree_src s ON t.id = s.id
         |WHEN MATCHED THEN UPDATE SET x = s.x
         |WHEN NOT MATCHED THEN INSERT *""".stripMargin,
+      // the star fast path reports the same six columns
+      """MERGE INTO t_agree_$side t USING agree_src s ON t.id = s.id
+        |WHEN MATCHED THEN UPDATE SET *
+        |WHEN NOT MATCHED THEN INSERT *""".stripMargin,
       "OPTIMIZE t_agree_$side SMALLFILES 1073741824",
       "OPTIMIZE t_agree_$side",
       "DESCRIBE DETAIL t_agree_$side",
