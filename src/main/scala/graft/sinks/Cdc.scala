@@ -70,12 +70,13 @@ object Cdc {
         applied += 1
         to
       }
-    for (v <- (from + 1) to to) {
-      val tag = s"cdc_$v"
+    // visible source commits only: an aborted txn stage is not history
+    Snapshots.commits(spark, srcRoot, from, to).foreach { c =>
+      val tag = s"cdc_${c.version}"
       if (Snapshots.versionForTag(spark, mirrorRoot, tag).nonEmpty)
         skipped += 1
       else {
-        val feed = Snapshots.changesBetween(spark, srcRoot, v - 1, v)
+        val feed = Snapshots.changeFeed(spark, srcRoot, c)
         fRead += feed.filesRead; fTotal += feed.filesTotal
         val df = feed.df.localCheckpoint()
         val delKeys = df.filter(col("change_type") === "delete")

@@ -242,16 +242,6 @@ object Snapshots {
     versions(spark, manifestRoot)
       .filter(v => txnVisible(spark, manifestRoot, v))
 
-  /** True when the log's RAW tail is an unresolved txn stage — the
-    * write-write conflict a new commit must refuse (building past the
-    * stage would silently discard it when its txn commits). */
-  private def tailUnresolved(spark: SparkSession,
-                             manifestRoot: String): Boolean =
-    versions(spark, manifestRoot).lastOption.exists { last =>
-      !txnVisible(spark, manifestRoot, last) &&
-        unresolvedStage(spark, manifestRoot, last)
-    }
-
   /** Commit `manifest` as the next version; returns the number it actually
     * landed at. The write stages once into a hidden uniquely-named temp dir
     * (two racing committers must never share a staging path), then loops
@@ -278,20 +268,25 @@ object Snapshots {
                            markers: Seq[String] = Seq.empty,
                            contentFiles: Seq[(String, String)] = Seq.empty)
       : Int = {
-    val staged = stageVersion(spark, manifestRoot, content, tag, delta,
-      markers, contentFiles)
+    // ONE listing serves the tail check, the stamp and the first slot
+    val vs = versions(spark, manifestRoot)
     // write-write conflict with an in-flight cross-table transaction:
     // committing past an unresolved stage would silently bury it when
-    // its txn commits — refuse loudly; the txn owner resolves first.
-    require(!tailUnresolved(spark, manifestRoot),
+    // its txn commits — refuse loudly (before staging anything); the txn
+    // owner resolves first.
+    require(!vs.lastOption.exists(last =>
+        !txnVisible(spark, manifestRoot, last) &&
+          unresolvedStage(spark, manifestRoot, last)),
       s"$manifestRoot head is an unresolved cross-table transaction " +
         "stage — concurrent write refused (commit or abort the " +
         "transaction first)")
-    var next = versions(spark, manifestRoot).lastOption.getOrElse(0) + 1
+    val staged = stageVersion(spark, manifestRoot, vs, content, tag, delta,
+      markers, contentFiles)
+    var next = vs.lastOption.getOrElse(0) + 1
     var attempts = 0
     while (attempts < 100) {
       attempts += 1
-      // tailUnresolved was checked once BEFORE the loop — a concurrent
+      // the tail was checked once BEFORE the loop — a concurrent
       // txn stage can take a version slot between that check and any
       // rename attempt here (lost CAS or stale versions() read), and
       // landing our manifest past it would silently bury the staged
@@ -337,8 +332,10 @@ object Snapshots {
     * become visible with it. Each marker is underscore-prefixed (parquet
     * readers skip it) and travels INSIDE the staged dir, so content and
     * classification appear in the same atomic rename — a version is never
-    * observable untagged, unclassified or unstamped. */
+    * observable untagged, unclassified or unstamped. `vs` is a listing of
+    * the log taken just before: the stamp follows its newest stamp. */
   private def stageVersion(spark: SparkSession, manifestRoot: String,
+                           vs: Seq[Int],
                            content: DataFrame, tag: Option[String],
                            delta: Boolean, markers: Seq[String],
                            contentFiles: Seq[(String, String)]): Staged = {
@@ -358,7 +355,8 @@ object Snapshots {
     // out of version order — resolution is max-version-at-or-below-
     // timestamp, matching Delta.)
     put(TsPrefix + math.max(System.currentTimeMillis(),
-      latestCommitTs(spark, manifestRoot) + 1))
+      vs.flatMap(commitTimestamp(spark, manifestRoot, _)).maxOption
+        .getOrElse(0L) + 1))
     markers.foreach(put(_))
     // CONTENT-bearing markers (the declared schema JSON, a txn's pending
     // marker — bodies that do not fit a filename)
@@ -427,14 +425,6 @@ object Snapshots {
     markerNames(spark, manifestRoot, version)
       .collectFirst { case n if n.startsWith(TsPrefix) =>
         n.stripPrefix(TsPrefix).toLong }
-
-  /** The newest stamp on the log — a max over every version, since racing
-    * writers can stamp out of version order; after the first call only
-    * the versions committed since are listed. */
-  private def latestCommitTs(spark: SparkSession, manifestRoot: String): Long =
-    versions(spark, manifestRoot)
-      .flatMap(commitTimestamp(spark, manifestRoot, _))
-      .maxOption.getOrElse(0L)
 
   /** `AS OF <timestamp>` resolution: the LAST visible version whose stamp
     * is at or below `tsMillis` (the Delta/Iceberg timestamp-travel
@@ -1817,6 +1807,88 @@ object Snapshots {
       total, updated, inserted, deleted)
   }
 
+  // ------------------------------------------------------------------
+  // THE COMMIT DIFF — "what did visible commit v change" is decided here
+  // and nowhere else: the (file, dv) pairs removed and added against the
+  // nearest VISIBLE version below it. The snapshot identity of a file is
+  // the PAIR — a MoR delete leaves the data file in place but moves its
+  // dv pointer, and that pair change is what a change reader must see; a
+  // pair present on both sides is immutable on both axes and changed
+  // nothing. A pending or aborted txn stage is never a commit nor a base.
+  // Clients: the optimistic-txn conflict check, the change feed and the
+  // relayout gate, history, both commit streams, CDC mirrors and SCD2
+  // apply.
+  // ------------------------------------------------------------------
+
+  /** What `version` changed against `base` (0 = the empty table before
+    * the first commit): `before` and `entries` are the whole pair sets at
+    * `base` and at `version`. */
+  final case class CommitDiff(base: Int, version: Int,
+                              before: Set[Dv.Entry], entries: Set[Dv.Entry]) {
+    lazy val removed: Set[Dv.Entry] = before -- entries
+    lazy val added: Set[Dv.Entry] = entries -- before
+
+    /** The files an APPEND-ONLY stream emits for this commit, sorted. A
+      * commit that removed pairs fails the stream loudly unless
+      * `ignoreDeletes` (then only its added files stream). */
+    def appendedFiles(root: String,
+                      ignoreDeletes: Boolean): IndexedSeq[String] = {
+      if (removed.nonEmpty && !ignoreDeletes)
+        throw new IllegalStateException(
+          s"streamed table $root has a non-append commit v=$version " +
+            s"(${removed.size} removed file/dv pairs) — the append-only " +
+            "stream cannot express it; use Cdc.sync for row-level " +
+            "replication or set ignoreDeletes=true")
+      added.iterator.map(_.file).toIndexedSeq.sorted
+    }
+  }
+
+  private def pairsAt(spark: SparkSession, manifestRoot: String,
+                      v: Int): Set[Dv.Entry] =
+    if (v == 0) Set.empty
+    else Dv.entries(manifestAt(spark, manifestRoot, v)).toSet
+
+  /** The pair diff `vFrom → vTo` between two visible versions. */
+  private[graft] def diff(spark: SparkSession, manifestRoot: String,
+                          vFrom: Int, vTo: Int): CommitDiff =
+    CommitDiff(vFrom, vTo, pairsAt(spark, manifestRoot, vFrom),
+      pairsAt(spark, manifestRoot, vTo))
+
+  /** The visible commits in `(after, upTo]`, oldest first, each diffed
+    * against the visible version before it (the first against the newest
+    * visible version ≤ `after`). The walk carries the running pair set, so
+    * each manifest is read once, and applies a delta commit's add/remove
+    * rows to it instead of folding the chain again. Lazy: a consumer that
+    * stops early reads no further manifest. */
+  private[graft] def commits(spark: SparkSession, manifestRoot: String,
+                             after: Int, upTo: Int = Int.MaxValue)
+      : Iterator[CommitDiff] = {
+    val vs = visibleVersions(spark, manifestRoot)
+    val todo = vs.filter(v => v > after && v <= upTo)
+    if (todo.isEmpty) return Iterator.empty
+    val start = vs.takeWhile(_ <= after).lastOption.getOrElse(0)
+    todo.iterator.scanLeft(CommitDiff(0, start, Set.empty,
+        pairsAt(spark, manifestRoot, start))) { (prev, v) =>
+      CommitDiff(prev.version, v, prev.entries,
+        if (!isDelta(spark, manifestRoot, v)) pairsAt(spark, manifestRoot, v)
+        else {
+          val rows = Dv.ensureDv(versionRows(spark, manifestRoot, v))
+            .select(col("file"), col("dv"), col(ActionCol)).collect()
+          val touched = rows.map(_.getString(0)).toSet
+          prev.entries.filterNot(e => touched.contains(e.file)) ++
+            rows.iterator.filter(_.getString(2) == "add")
+              .map(r => Dv.Entry(r.getString(0), Option(r.getString(1))))
+        })
+    }.drop(1)
+  }
+
+  /** Visible commit `v` against its nearest visible predecessor. */
+  private[graft] def commitDiff(spark: SparkSession, manifestRoot: String,
+                                v: Int): CommitDiff =
+    commits(spark, manifestRoot, v - 1, v).nextOption().getOrElse(
+      throw new IllegalArgumentException(
+        s"version $v of $manifestRoot is not a visible commit"))
+
   /** Thrown when an optimistic transaction's read set was invalidated by a
     * commit that landed between its snapshot and its commit attempt — the
     * caller must re-plan against the current snapshot and retry. */
@@ -1833,6 +1905,8 @@ object Snapshots {
   final case class Txn(readVersion: Int, removes: Set[String],
                        adds: Option[DataFrame], readSet: Set[String])
 
+  /** `rebasedOver` counts the visible commits between the txn's snapshot
+    * and the version it landed on top of. */
   final case class TxnResult(version: Int, rebasedOver: Int)
 
   /** OPTIMISTIC COMMIT with conflict detection — the layer ABOVE the CAS
@@ -1840,12 +1914,13 @@ object Snapshots {
     * the same `v=N`; a loser could still land a manifest computed against
     * a stale parent, silently undoing the winner). Protocol, per attempt:
     *
-    *  1. read the CURRENT latest version L. If L > readVersion, diff every
-    *     intermediate commit: the (file, dv) pairs it removed. If any
-    *     removed pair names a file in this txn's `readSet` or `removes`,
-    *     the snapshot this txn planned against is gone — throw
-    *     [[CommitConflictException]] (the caller re-plans; blind retry
-    *     would resurrect the winner's deletes or double-apply its merge).
+    *  1. read the CURRENT latest visible version L and walk every visible
+    *     commit in (readVersion, L] ([[commits]]): the (file, dv) pairs it
+    *     removed. If any removed pair names a file in this txn's `readSet`
+    *     or `removes`, the snapshot this txn planned against is gone —
+    *     throw [[CommitConflictException]] (the caller re-plans; blind
+    *     retry would resurrect the winner's deletes or double-apply its
+    *     merge).
     *  2. otherwise REBASE: next = manifestAt(L) − removes + adds. The
     *     intermediate commits touched only files this txn never read, so
     *     the rebased manifest composes both outcomes (Delta/Iceberg's
@@ -1859,41 +1934,26 @@ object Snapshots {
                 contentFiles: Seq[(String, String)] = Seq.empty)
       : TxnResult = {
     val fs = hfs(spark, manifestRoot)
+    val mine = txn.readSet ++ txn.removes
     var attempts = 0
     while (attempts < 100) {
       attempts += 1
       val h = head(spark, manifestRoot)
       val latest = h.version
-      if (latest > txn.readVersion) {
-        val mine = txn.readSet ++ txn.removes
-        var prev = Dv.entries(manifestAt(spark, manifestRoot,
-          txn.readVersion)).toSet
-        for (v <- (txn.readVersion + 1) to latest) {
-          // a delta commit IS the change — apply it to the running pair set
-          // instead of folding the whole chain again for every v
-          val cur: Set[Dv.Entry] =
-            if (!isDelta(spark, manifestRoot, v))
-              Dv.entries(manifestAt(spark, manifestRoot, v)).toSet
-            else {
-              val rows = Dv.ensureDv(versionRows(spark, manifestRoot, v))
-                .select(col("file"), col("dv"), col(ActionCol)).collect()
-              val touched = rows.map(_.getString(0)).toSet
-              prev.filterNot(e => touched.contains(e.file)) ++
-                rows.toSeq.filter(_.getString(2) == "add")
-                  .map(r => Dv.Entry(r.getString(0), Option(r.getString(1))))
-            }
-          val removedPairs = prev -- cur
-          val clash = removedPairs.map(_.file).intersect(mine)
-          if (clash.nonEmpty)
-            throw new CommitConflictException(
-              s"commit v$v invalidated ${clash.size} file(s) this txn read " +
-                s"(snapshot v${txn.readVersion}): ${clash.take(3).mkString(", ")} …")
-          prev = cur
-        }
+      var rebased = 0
+      commits(spark, manifestRoot, txn.readVersion, latest).foreach { c =>
+        val clash = c.removed.map(_.file).intersect(mine)
+        if (clash.nonEmpty)
+          throw new CommitConflictException(
+            s"commit v${c.version} invalidated ${clash.size} file(s) this " +
+              s"txn read (snapshot v${txn.readVersion}): " +
+              s"${clash.take(3).mkString(", ")} …")
+        rebased += 1
       }
       // content markers (e.g. a cross-table txn's pending marker) become
       // visible in the same atomic rename as the manifest
-      val staged = stageVersion(spark, manifestRoot,
+      val vs = versions(spark, manifestRoot)
+      val staged = stageVersion(spark, manifestRoot, vs,
         swapped(h.manifest, txn.removes.toSeq, txn.adds.map(Dv.ensureDv)),
         tag = None, delta = false, markers = Seq.empty, contentFiles)
       // CAS at exactly latest+1: if another writer takes the slot first we
@@ -1905,7 +1965,7 @@ object Snapshots {
       // never be won). The slot may be held by ANOTHER txn's unresolved
       // stage — that is a held write lock, not a lost race: spinning
       // would never free it, so refuse loudly like every other writer does
-      val above = versions(spark, manifestRoot).filter(_ > latest)
+      val above = vs.filter(_ > latest)
       val slot =
         if (above.nonEmpty && above.forall(v =>
             !txnVisible(spark, manifestRoot, v) &&
@@ -1919,7 +1979,7 @@ object Snapshots {
             "abort the transaction first)")
       }
       if (claimSlot(spark, manifestRoot, staged, slot))
-        return TxnResult(slot, latest - txn.readVersion)
+        return TxnResult(slot, rebased)
       fs.delete(staged.dir, true)
     }
     throw new IllegalStateException(
@@ -1948,21 +2008,17 @@ object Snapshots {
     * — a pure re-layout moves every row from removed to added files, the
     * diff annihilates, and CDC consumers correctly see nothing. */
   def changesBetween(spark: SparkSession, manifestRoot: String,
-                     vFrom: Int, vTo: Int): ChangeScan = {
-    // the snapshot identity of a file is the (file, dv) PAIR: a MoR delete
-    // leaves the data file in place but moves its dv pointer, and that
-    // pair change is exactly what makes the file contribute its newly
-    // masked rows to the feed (old live rows minus new live rows). A pair
-    // present in both versions is immutable on both axes and contributes
-    // nothing, exactly as before.
-    def pairs(v: Int): Set[Dv.Entry] =
-      Dv.entries(manifestAt(spark, manifestRoot, v)).toSet
-    val from = pairs(vFrom)
-    val to = pairs(vTo)
-    val removed = (from -- to).toSeq
-    val added = (to -- from).toSeq
-    val total = (from ++ to).map(_.file).size.toLong
-    val read = (removed.map(_.file) ++ added.map(_.file)).distinct.size.toLong
+                     vFrom: Int, vTo: Int): ChangeScan =
+    changeFeed(spark, manifestRoot, diff(spark, manifestRoot, vFrom, vTo))
+
+  /** The row-level feed of one [[CommitDiff]] — [[changesBetween]]'s body,
+    * and what the per-commit consumers (CDC mirrors, SCD2 apply, the IVM
+    * stream) read for each step of [[commits]]. */
+  private[graft] def changeFeed(spark: SparkSession, manifestRoot: String,
+                                d: CommitDiff): ChangeScan = {
+    val removed = d.removed.toSeq
+    val added = d.added.toSeq
+    val read = (removed ++ added).map(_.file).distinct.size.toLong
     // mergeSchema (inside readLive) so a feed whose side spans a schema
     // evolution serves the superset schema; a diff whose removed AND added
     // sides have drifted apart (delete/compact across an evolution) would
@@ -1971,11 +2027,11 @@ object Snapshots {
     def rows(es: Seq[Dv.Entry]): Option[DataFrame] =
       if (es.isEmpty) None
       else Some(Dv.readLive(spark, es,
-        declaredSchemaAt(spark, manifestRoot, vTo)))
+        declaredSchemaAt(spark, manifestRoot, d.version)))
     val df = (rows(removed), rows(added)) match {
       case (None, None) =>
         // no file-level change at all: an empty feed with the table schema
-        tableAt(spark, manifestRoot, vTo).filter(lit(false))
+        tableAt(spark, manifestRoot, d.version).filter(lit(false))
           .withColumn("change_type", lit(""))
       case (Some(r), None) => r.withColumn("change_type", lit("delete"))
       case (None, Some(a)) => a.withColumn("change_type", lit("insert"))
@@ -1983,7 +2039,7 @@ object Snapshots {
         r.exceptAll(a).withColumn("change_type", lit("delete"))
           .unionByName(a.exceptAll(r).withColumn("change_type", lit("insert")))
     }
-    ChangeScan(df, read, total)
+    ChangeScan(df, read, (d.before ++ d.entries).map(_.file).size.toLong)
   }
 
   /** Prove a commit was a PURE RE-LAYOUT (compaction/purge: same rows,
@@ -1999,14 +2055,9 @@ object Snapshots {
     * actual diff rows. */
   def relayoutInvisible(spark: SparkSession, manifestRoot: String,
                         vFrom: Int, vTo: Int): Boolean = {
-    def pairs(v: Int): Set[Dv.Entry] =
-      Dv.entries(manifestAt(spark, manifestRoot, v)).toSet
-    val from = pairs(vFrom)
-    val to = pairs(vTo)
-    val removed = (from -- to).toSeq
-    val added = (to -- from).toSeq
-    if (removed.isEmpty && added.isEmpty) return true
-    if (removed.isEmpty || added.isEmpty) return false
+    val d = diff(spark, manifestRoot, vFrom, vTo)
+    if (d.removed.isEmpty && d.added.isEmpty) return true
+    if (d.removed.isEmpty || d.added.isEmpty) return false
     def fp(es: Seq[Dv.Entry]): Seq[Any] = {
       val df = Dv.readLive(spark, es,
         declaredSchemaAt(spark, manifestRoot, vTo))
@@ -2016,7 +2067,7 @@ object Snapshots {
           sum(xxhash64((lit(7) +: cs): _*).cast("decimal(38,0)")))
         .collect()(0).toSeq
     }
-    fp(removed) == fp(added)
+    fp(d.removed.toSeq) == fp(d.added.toSeq)
   }
 
   // ------------------------------------------------------------------
@@ -3023,7 +3074,8 @@ object Snapshots {
     * OPERATION inferred from the log itself — no writer cooperation
     * needed. Markers classify what manifests can't (`_restore_*`,
     * column-mapping commits); everything else falls out of the
-    * (file, dv)-pair diff against the previous version plus the manifest
+    * (file, dv)-pair diff against the previous visible version
+    * ([[commits]]: an aborted txn stage is not history) plus the manifest
     * row counts: adds-only ⇒ append, dv-pointer-only movement ⇒
     * mor-delete, equal rows across a changed file set ⇒ relayout
     * (compaction/purge), shrinking rows ⇒ delete, growing rows with
@@ -3031,32 +3083,28 @@ object Snapshots {
     * `rows` is the manifest row count (for MoR versions that includes
     * masked rows — the physical count, like the formats' own histories). */
   def history(spark: SparkSession, manifestRoot: String): Seq[HistoryEntry] = {
-    val vs = versions(spark, manifestRoot)
-    var prevEntries: Set[Dv.Entry] = Set.empty
     var prevRows = 0L
-    vs.map { v =>
-      val m = Dv.ensureDv(manifestAt(spark, manifestRoot, v))
-      val entries = Dv.entries(m).toSet
-      val rows = m.agg(sum(col("rows"))).collect()(0).getLong(0)
-      val markers = markerNames(spark, manifestRoot, v)
+    commits(spark, manifestRoot, 0).map { c =>
+      // Σ rows job-free on a cached manifest; a null `rows` stat falls
+      // back to counting the version's files
+      val rows = localLongSum(manifestAt(spark, manifestRoot, c.version),
+          "rows")
+        .getOrElse(spark.read.parquet(c.entries.toSeq.map(_.file): _*)
+          .count())
+      val markers = markerNames(spark, manifestRoot, c.version)
       val op =
         if (markers.exists(_.startsWith("_restore_"))) "restore"
-        else if (v == vs.head) "create"
+        else if (c.base == 0) "create"
         else if (markers.exists(_.startsWith(CmapPrefix))) "schema"
-        else {
-          val added = entries -- prevEntries
-          val removed = prevEntries -- entries
-          val sameFiles = entries.map(_.file) == prevEntries.map(_.file)
-          if (added.isEmpty && removed.isEmpty) "metadata"
-          else if (sameFiles) "mor-delete"
-          else if (removed.isEmpty) "append"
-          else if (rows == prevRows) "relayout"
-          else if (rows < prevRows) "delete"
-          else "merge"
-        }
-      prevEntries = entries; prevRows = rows
-      HistoryEntry(v, op, rows)
-    }
+        else if (c.added.isEmpty && c.removed.isEmpty) "metadata"
+        else if (c.added.map(_.file) == c.removed.map(_.file)) "mor-delete"
+        else if (c.removed.isEmpty) "append"
+        else if (rows == prevRows) "relayout"
+        else if (rows < prevRows) "delete"
+        else "merge"
+      prevRows = rows
+      HistoryEntry(c.version, op, rows)
+    }.toSeq
   }
 
   /** Re-home governing markers out of about-to-drop version dirs into the

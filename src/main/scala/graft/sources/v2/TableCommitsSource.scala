@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructT
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sinks.{Dv, Snapshots}
+import graft.sinks.Snapshots
 
 /** Structured-Streaming SOURCE over the version log (the "stream a lake
   * table's commits" integration every table format ships): a DataSource V2
@@ -104,26 +104,13 @@ final class CommitsMicroBatchStream(opts: Map[String, String])
                                    end: Offset): Array[InputPartition] = {
     val s0 = start.asInstanceOf[VersionOffset].v
     val s1 = end.asInstanceOf[VersionOffset].v
-    // visible versions only, each diffed against its nearest VISIBLE
+    // visible commits only, each diffed against its nearest VISIBLE
     // predecessor: a pending or aborted txn stage is not table history
     // (its manifest read is refused), so it is neither a batch nor a base
-    val all = Snapshots.visibleVersions(spark, root)
-    def pairs(x: Option[Int]): Set[Dv.Entry] =
-      x.fold(Set.empty[Dv.Entry])(y =>
-        Dv.entries(Snapshots.manifestAt(spark, root, y)).toSet)
-    all.filter(v => v > s0 && v <= s1).map { v =>
-      val prev = pairs(all.filter(_ < v).lastOption)
-      val cur = pairs(Some(v))
-      val removed = prev -- cur
-      if (removed.nonEmpty && !ignoreDeletes)
-        throw new IllegalStateException(
-          s"streamed table $root has a non-append commit v=$v " +
-            s"(${removed.size} removed file/dv pairs) — the append-only " +
-            "stream cannot express it; use Cdc.sync for row-level " +
-            "replication or set ignoreDeletes=true")
-      CommitPartition(v, (cur -- prev).map(_.file).toArray.sorted)
-        : InputPartition
-    }.toArray
+    Snapshots.commits(spark, root, s0, s1).map(c =>
+      CommitPartition(c.version,
+        c.appendedFiles(root, ignoreDeletes).toArray): InputPartition)
+      .toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

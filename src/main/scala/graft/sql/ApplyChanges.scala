@@ -85,12 +85,13 @@ object ApplyChanges {
       applied += 1
       cursor = 1
     }
-    for (v <- cursor + 1 to head) {
+    // visible source commits only: an aborted txn stage is not history
+    Snapshots.commits(spark, srcRoot, cursor, head).foreach { c =>
+      val v = c.version
       // cache the feed: it feeds the CLOSE keys, the OPEN batch, and the
       // empty-insert branch — recomputing the exceptAll diff thrice is
       // the exact waste localCheckpoint exists for
-      val feed = Snapshots.changesBetween(spark, srcRoot, v - 1, v)
-        .df.localCheckpoint()
+      val feed = Snapshots.changeFeed(spark, srcRoot, c).df.localCheckpoint()
       val closeKeys = feed.select(col(key)).distinct()
       val view = s"_scd2_close_${targetName.replace('.', '_')}_$v"
       closeKeys.createOrReplaceTempView(view)

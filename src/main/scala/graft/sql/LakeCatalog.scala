@@ -18,7 +18,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.sinks.{Dv, Snapshots}
+import graft.sinks.Snapshots
 import graft.sources.v2.CommitsTable
 import graft.sql.LakeSql.LakeTableSpec
 
@@ -466,36 +466,23 @@ final class LakeRowsMicroBatchStream(root: String, schema: StructType,
     * txn's atomic commit instant, exactly like batch readers. */
   private def visible: Seq[Int] = Snapshots.visibleVersions(spark, root)
 
-  private def addedFiles(v: Int, all: Seq[Int]): IndexedSeq[String] =
+  private def addedFiles(v: Int): IndexedSeq[String] =
     addedMemo.getOrElseUpdate(v, {
       require(Snapshots.columnMapping(spark, root, v).isEmpty,
         s"streamed table $root has column mapping in force at v=$v — " +
           "row-native streaming serves physical file bytes; stream the " +
           "$commits bridge instead")
-      def pairs(x: Option[Int]): Set[Dv.Entry] = x match {
-        case None => Set.empty
-        case Some(y) => Dv.entries(Snapshots.manifestAt(spark, root, y)).toSet
-      }
-      // diff against the nearest VISIBLE predecessor: v-1 may be an
-      // aborted txn stage whose manifest was never table history — the
-      // memo is stable because pending stages are tail-only, so once v is
-      // visible every version below it is permanently resolved
-      val prev = pairs(all.filter(_ < v).lastOption)
-      val cur = pairs(Some(v))
-      val removed = prev -- cur
-      if (removed.nonEmpty && !ignoreDeletes)
-        throw new IllegalStateException(
-          s"streamed table $root has a non-append commit v=$v " +
-            s"(${removed.size} removed file/dv pairs) — the append-only " +
-            "stream cannot express it; use Cdc.sync for row-level " +
-            "replication or set ignoreDeletes=true")
-      val added = cur -- prev
-      val masked = added.filter(_.dv.isDefined)
+      // diffed against the nearest VISIBLE predecessor: the memo is
+      // stable because pending stages are tail-only, so once v is visible
+      // every version below it is permanently resolved
+      val c = Snapshots.commitDiff(spark, root, v)
+      val files = c.appendedFiles(root, ignoreDeletes)
+      val masked = c.added.filter(_.dv.isDefined)
       require(masked.isEmpty,
         s"commit v=$v of $root adds deletion-vector-masked files " +
           s"(${masked.map(_.file).mkString(", ")}) — appended ROWS " +
           "cannot express a mask; REORG … APPLY (PURGE) first")
-      added.map(_.file).toIndexedSeq.sorted
+      files
     })
 
   override def initialOffset(): Offset =
@@ -545,17 +532,16 @@ final class LakeRowsMicroBatchStream(root: String, schema: StructType,
     }
     val (fb, bb) = budgets(limit)
     if (fb.isEmpty && bb.isEmpty) return latestOffset()
-    val all = visible
     var endV = s.v
     var endF = s.files
     var fileBudget = fb.map(_.toLong).getOrElse(Long.MaxValue)
     var byteBudget = bb.getOrElse(Long.MaxValue)
     var admitted = 0L
-    val it = all.iterator.filter(_ >= s.v)
+    val it = visible.iterator.filter(_ >= s.v)
     var cut = false
     while (it.hasNext && !cut) {
       val v = it.next()
-      val fs = addedFiles(v, all)
+      val fs = addedFiles(v)
       val from = if (v == s.v) math.min(s.files, fs.size) else 0
       var i = from
       while (i < fs.size && !cut) {
@@ -577,7 +563,7 @@ final class LakeRowsMicroBatchStream(root: String, schema: StructType,
     }
     if (end.v == s.v && (end.files == s.files ||
         (s.files != Int.MaxValue && end.files == Int.MaxValue &&
-          s.files >= addedFiles(s.v, all).size)))
+          s.files >= addedFiles(s.v).size)))
       s // no progress: hand back the start so the engine idles
     else end
   }
@@ -589,9 +575,8 @@ final class LakeRowsMicroBatchStream(root: String, schema: StructType,
                                    end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[LakeRowsOffset]
     val e = end.asInstanceOf[LakeRowsOffset]
-    val all = visible
-    all.filter(v => v >= s.v && v <= e.v).flatMap { v =>
-      val fs = addedFiles(v, all)
+    visible.filter(v => v >= s.v && v <= e.v).flatMap { v =>
+      val fs = addedFiles(v)
       val from = if (v == s.v) math.min(s.files, fs.size) else 0
       val to = if (v == e.v) math.min(e.files, fs.size) else fs.size
       if (from >= to) Seq.empty

@@ -639,8 +639,9 @@ object Streaming {
     * `batch=<id>` overwrite-dir chain seeded by the caller at `batch=-1`:
     * view(id) = applyFeed(view(max prior id), feed(id)) is a pure function
     * of committed state, so a replay rewrites its dir byte-identically.
-    * Single-writer stream assumed (the feed spans vTo−1 → vTo); concurrent
-    * DML on the same table would need the feed to span tag(id−1)→tag(id). */
+    * Single-writer stream assumed (the feed is vTo's own commit);
+    * concurrent DML on the same table would need the feed to span
+    * tag(id−1)→tag(id). */
   def ivmStream(stream: DataFrame, zcols: Seq[String], keys: Seq[String],
                 sums: Seq[(String, String)], cnt: String, path: String,
                 manifestRoot: String, viewDir: String, checkpoint: String,
@@ -656,8 +657,8 @@ object Streaming {
           val vTo = graft.sinks.Snapshots.versionForTag(s, manifestRoot, tag)
             .getOrElse(graft.sinks.Snapshots.appendCommit(s, batch, zcols,
               path, manifestRoot, nFiles, tag = Some(tag))._1)
-          val feed = graft.sinks.Snapshots
-            .changesBetween(s, manifestRoot, vTo - 1, vTo)
+          val feed = graft.sinks.Snapshots.changeFeed(s, manifestRoot,
+            graft.sinks.Snapshots.commitDiff(s, manifestRoot, vTo))
           graft.ops.Ivm.applyFeed(priorView(s, viewDir, id), feed.df,
               keys, sums, cnt)
             .coalesce(1).write.mode("overwrite").parquet(s"$viewDir/batch=$id")

@@ -1,6 +1,5 @@
 package graft.sinks
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.sql.LakeSql
@@ -13,31 +12,6 @@ import graft.sql.LakeSql
 class MetaCacheSpec extends SparkSpec {
 
   private def fd(sql: String) = LakeSql.sql(spark, sql)
-
-  /** First-stage call sites of the Spark jobs `body` starts. */
-  private def jobsOf(body: => Unit): Seq[String] = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        seen.add(js.stageInfos.headOption.map(_.name).getOrElse("?")): Unit
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      body
-      // the listener bus is asynchronous but ordered: once a fence job
-      // started after `body` is seen, every job of `body` has been seen
-      val fence = s"fence-${java.util.UUID.randomUUID()}"
-      sc.setCallSite(fence)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearCallSite()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.contains(fence) && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(seen.contains(fence), "listener never saw the fence job")
-      import scala.jdk.CollectionConverters._
-      seen.asScala.toSeq.takeWhile(_ != fence)
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("COPY INTO and CHECK after DROP TABLE PURGE + re-create at the " +
       "same LOCATION see only the new table's log") {
