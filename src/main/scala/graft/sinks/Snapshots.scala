@@ -1859,14 +1859,26 @@ object Snapshots {
     * visible version ≤ `after`). The walk carries the running pair set, so
     * each manifest is read once, and applies a delta commit's add/remove
     * rows to it instead of folding the chain again. Lazy: a consumer that
-    * stops early reads no further manifest. */
+    * stops early reads no further manifest.
+    *
+    * A base that [[vacuum]] dropped is refused: diffing the first retained
+    * commit against the empty table would report its whole manifest as
+    * added and the dropped versions' removals as nothing, so a lagging
+    * mirror would duplicate rows and a txn whose snapshot was vacuumed
+    * would pass its conflict check blind. The empty table is the base
+    * only while the log still starts at v=1 (vacuum drops a prefix, so
+    * then every version ≤ `after` is an invisible txn stage). */
   private[graft] def commits(spark: SparkSession, manifestRoot: String,
                              after: Int, upTo: Int = Int.MaxValue)
       : Iterator[CommitDiff] = {
-    val vs = visibleVersions(spark, manifestRoot)
+    val raw = versions(spark, manifestRoot)
+    val vs = raw.filter(v => txnVisible(spark, manifestRoot, v))
     val todo = vs.filter(v => v > after && v <= upTo)
     if (todo.isEmpty) return Iterator.empty
     val start = vs.takeWhile(_ <= after).lastOption.getOrElse(0)
+    if (start == 0 && after > 0 && !raw.headOption.contains(1))
+      throw new IllegalStateException(s"$manifestRoot: the changes after " +
+        s"v$after were vacuumed — re-read its current snapshot instead")
     todo.iterator.scanLeft(CommitDiff(0, start, Set.empty,
         pairsAt(spark, manifestRoot, start))) { (prev, v) =>
       CommitDiff(prev.version, v, prev.entries,
@@ -1881,13 +1893,6 @@ object Snapshots {
         })
     }.drop(1)
   }
-
-  /** Visible commit `v` against its nearest visible predecessor. */
-  private[graft] def commitDiff(spark: SparkSession, manifestRoot: String,
-                                v: Int): CommitDiff =
-    commits(spark, manifestRoot, v - 1, v).nextOption().getOrElse(
-      throw new IllegalArgumentException(
-        s"version $v of $manifestRoot is not a visible commit"))
 
   /** Thrown when an optimistic transaction's read set was invalidated by a
     * commit that landed between its snapshot and its commit attempt — the
@@ -2016,19 +2021,17 @@ object Snapshots {
     * stream) read for each step of [[commits]]. */
   private[graft] def changeFeed(spark: SparkSession, manifestRoot: String,
                                 d: CommitDiff): ChangeScan = {
-    val removed = d.removed.toSeq
-    val added = d.added.toSeq
-    val read = (removed ++ added).map(_.file).distinct.size.toLong
+    val read = (d.removed ++ d.added).map(_.file).size.toLong
     // mergeSchema (inside readLive) so a feed whose side spans a schema
     // evolution serves the superset schema; a diff whose removed AND added
     // sides have drifted apart (delete/compact across an evolution) would
     // need explicit column alignment before exceptAll — evolution here
     // arrives by append, whose feed has no removed side to clash with
-    def rows(es: Seq[Dv.Entry]): Option[DataFrame] =
+    def rows(es: Iterable[Dv.Entry]): Option[DataFrame] =
       if (es.isEmpty) None
-      else Some(Dv.readLive(spark, es,
+      else Some(Dv.readLive(spark, es.toSeq,
         declaredSchemaAt(spark, manifestRoot, d.version)))
-    val df = (rows(removed), rows(added)) match {
+    val df = (rows(d.removed), rows(d.added)) match {
       case (None, None) =>
         // no file-level change at all: an empty feed with the table schema
         tableAt(spark, manifestRoot, d.version).filter(lit(false))

@@ -441,9 +441,10 @@ final class LakeRowsMicroBatchStream(root: String, schema: StructType,
   // are immutable once renamed in, and the validation (append-only, no
   // masks, no column mapping) is version-local — so one manifest diff per
   // version per stream lifetime, shared by admission planning and batch
-  // planning.
-  private val addedMemo =
-    scala.collection.concurrent.TrieMap.empty[Int, IndexedSeq[String]]
+  // planning. A failed validation is memoized too and thrown only when
+  // the stream reaches that version.
+  private val addedMemo = scala.collection.concurrent.TrieMap
+    .empty[Int, scala.util.Try[IndexedSeq[String]]]
 
   // per-file byte sizes for the byte-budget walk: one driver status
   // probe per file per stream lifetime (data files are immutable once
@@ -466,24 +467,39 @@ final class LakeRowsMicroBatchStream(root: String, schema: StructType,
     * txn's atomic commit instant, exactly like batch readers. */
   private def visible: Seq[Int] = Snapshots.visibleVersions(spark, root)
 
-  private def addedFiles(v: Int): IndexedSeq[String] =
-    addedMemo.getOrElseUpdate(v, {
-      require(Snapshots.columnMapping(spark, root, v).isEmpty,
-        s"streamed table $root has column mapping in force at v=$v — " +
-          "row-native streaming serves physical file bytes; stream the " +
-          "$commits bridge instead")
-      // diffed against the nearest VISIBLE predecessor: the memo is
-      // stable because pending stages are tail-only, so once v is visible
-      // every version below it is permanently resolved
-      val c = Snapshots.commitDiff(spark, root, v)
-      val files = c.appendedFiles(root, ignoreDeletes)
-      val masked = c.added.filter(_.dv.isDefined)
-      require(masked.isEmpty,
-        s"commit v=$v of $root adds deletion-vector-masked files " +
-          s"(${masked.map(_.file).mkString(", ")}) — appended ROWS " +
-          "cannot express a mask; REORG … APPLY (PURGE) first")
-      files
-    })
+  private def appended(c: Snapshots.CommitDiff): IndexedSeq[String] = {
+    require(Snapshots.columnMapping(spark, root, c.version).isEmpty,
+      s"streamed table $root has column mapping in force at v=${c.version} " +
+        "— row-native streaming serves physical file bytes; stream the " +
+        "$commits bridge instead")
+    val files = c.appendedFiles(root, ignoreDeletes)
+    val masked = c.added.filter(_.dv.isDefined)
+    require(masked.isEmpty,
+      s"commit v=${c.version} of $root adds deletion-vector-masked files " +
+        s"(${masked.map(_.file).mkString(", ")}) — appended ROWS " +
+        "cannot express a mask; REORG … APPLY (PURGE) first")
+    files
+  }
+
+  /** The commits offset `s` has not fully consumed (`s.v` itself only
+    * while some of its files are unconsumed), oldest first, each with its
+    * validated added files. A memo miss walks the commits once
+    * ([[Snapshots.commits]], one listing of the root) from the newest
+    * memoized commit below it, or from the last version `s` fully
+    * consumed, and memoizes every commit it passes. The memo is stable
+    * because pending stages are tail-only, so once v is visible every
+    * version below it is permanently resolved. */
+  private def pending(s: LakeRowsOffset)
+      : Seq[(Int, scala.util.Try[IndexedSeq[String]])] = {
+    val base = if (s.files == Int.MaxValue) s.v else s.v - 1
+    val vs = visible.filter(_ > base)
+    vs.find(!addedMemo.contains(_)).foreach { miss =>
+      Snapshots.commits(spark, root,
+          (addedMemo.keysIterator.filter(_ < miss) ++ Iterator(base)).max)
+        .foreach(c => addedMemo(c.version) = scala.util.Try(appended(c)))
+    }
+    vs.map(v => v -> addedMemo(v))
+  }
 
   override def initialOffset(): Offset =
     LakeRowsOffset(starting, Int.MaxValue)
@@ -537,11 +553,11 @@ final class LakeRowsMicroBatchStream(root: String, schema: StructType,
     var fileBudget = fb.map(_.toLong).getOrElse(Long.MaxValue)
     var byteBudget = bb.getOrElse(Long.MaxValue)
     var admitted = 0L
-    val it = visible.iterator.filter(_ >= s.v)
+    val it = pending(s).iterator
     var cut = false
     while (it.hasNext && !cut) {
-      val v = it.next()
-      val fs = addedFiles(v)
+      val (v, added) = it.next()
+      val fs = added.get
       val from = if (v == s.v) math.min(s.files, fs.size) else 0
       var i = from
       while (i < fs.size && !cut) {
@@ -563,7 +579,7 @@ final class LakeRowsMicroBatchStream(root: String, schema: StructType,
     }
     if (end.v == s.v && (end.files == s.files ||
         (s.files != Int.MaxValue && end.files == Int.MaxValue &&
-          s.files >= addedFiles(s.v).size)))
+          s.files >= addedMemo(s.v).get.size)))
       s // no progress: hand back the start so the engine idles
     else end
   }
@@ -575,8 +591,8 @@ final class LakeRowsMicroBatchStream(root: String, schema: StructType,
                                    end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[LakeRowsOffset]
     val e = end.asInstanceOf[LakeRowsOffset]
-    visible.filter(v => v >= s.v && v <= e.v).flatMap { v =>
-      val fs = addedFiles(v)
+    pending(s).filter(_._1 <= e.v).flatMap { case (v, added) =>
+      val fs = added.get
       val from = if (v == s.v) math.min(s.files, fs.size) else 0
       val to = if (v == e.v) math.min(e.files, fs.size) else fs.size
       if (from >= to) Seq.empty

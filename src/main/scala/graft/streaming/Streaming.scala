@@ -658,7 +658,8 @@ object Streaming {
             .getOrElse(graft.sinks.Snapshots.appendCommit(s, batch, zcols,
               path, manifestRoot, nFiles, tag = Some(tag))._1)
           val feed = graft.sinks.Snapshots.changeFeed(s, manifestRoot,
-            graft.sinks.Snapshots.commitDiff(s, manifestRoot, vTo))
+            graft.sinks.Snapshots.commits(s, manifestRoot, vTo - 1, vTo)
+              .next())
           graft.ops.Ivm.applyFeed(priorView(s, viewDir, id), feed.df,
               keys, sums, cnt)
             .coalesce(1).write.mode("overwrite").parquet(s"$viewDir/batch=$id")

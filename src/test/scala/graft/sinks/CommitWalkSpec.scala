@@ -9,7 +9,8 @@ import graft.sql.{ApplyChanges, LakeRowsMicroBatchStream, LakeRowsOffset, LakeRo
 /** Every "what did commit v change" reader over one log with an aborted
   * cross-table txn stage in the middle — v1 full, v2 append, v3 a stage
   * whose txn aborted, v4 append: each skips v3 and diffs v4 against v2.
-  * Plus history on an empty version and its job count on a warm log. */
+  * Plus walks from a vacuumed base, history on an empty version and its
+  * job count on a warm log. */
 class CommitWalkSpec extends SparkSpec {
 
   private val cols = Seq("id", "x")
@@ -74,6 +75,72 @@ class CommitWalkSpec extends SparkSpec {
     assert(Snapshots.versionForTag(spark, s"$dir/mir/m", "cdc_3").isEmpty)
     assert(ids(Snapshots.tableAt(spark, s"$dir/mir/m",
       Snapshots.latestVersion(spark, s"$dir/mir/m"))) == (0L until 200L).toSet)
+  }
+
+  /** base() mirrored at v2, then v3 appends, v4 deletes ids 0–9, v5
+    * appends, and vacuum keeps v5 only; returns the dir and v2's files. */
+  private def vacuumedPastMirror(): (String, Set[String]) = {
+    val dir = base()
+    val (m, z) = (s"$dir/m", s"$dir/z")
+    Cdc.sync(spark, m, s"$dir/mir/z", s"$dir/mir/m", "id", cols)
+    val readAt2 = files(m, 2)
+    Snapshots.appendCommit(spark, batch(150, 50), cols, z, m, nFiles = 1)
+    Snapshots.deleteWhere(spark, z, m, cols, Seq(("id", 0.0, 9.0)))
+    Snapshots.appendCommit(spark, batch(200, 50), cols, z, m, nFiles = 1)
+    Snapshots.vacuum(spark, z, m, retainLast = 1)
+    assert(Snapshots.versions(spark, m) == Seq(5))
+    (dir, readAt2)
+  }
+
+  test("Cdc.sync refuses a mirror that lags past a vacuum") {
+    // diffed against the empty table, v5 would re-insert ids 0–149 into
+    // the mirror and never delete ids 0–9
+    val (dir, _) = vacuumedPastMirror()
+    val mirrored = Snapshots.latestVersion(spark, s"$dir/mir/m")
+    val e = intercept[IllegalStateException](
+      Cdc.sync(spark, s"$dir/m", s"$dir/mir/z", s"$dir/mir/m", "id", cols))
+    assert(e.getMessage.contains("vacuumed"))
+    assert(Snapshots.latestVersion(spark, s"$dir/mir/m") == mirrored)
+  }
+
+  test("commitTxn refuses a read version that was vacuumed") {
+    // v4 deleted from a file the txn read at v2: diffed against the empty
+    // table, v5 would show no removal and the txn would land blind
+    val (dir, readAt2) = vacuumedPastMirror()
+    val e = intercept[IllegalStateException](Snapshots.commitTxn(spark,
+      s"$dir/m", Snapshots.Txn(2, Set.empty, None, readAt2)))
+    assert(e.getMessage.contains("vacuumed"))
+    assert(Snapshots.versions(spark, s"$dir/m") == Seq(5))
+  }
+
+  test("a row stream from offset 0 serves the retained snapshot of a " +
+      "vacuumed log") {
+    val m = s"${vacuumedPastMirror()._1}/m"
+    val rows = new LakeRowsMicroBatchStream(m, batch(0, 1).schema, Map.empty)
+    val streamed = rows.planInputPartitions(LakeRowsOffset(0, Int.MaxValue),
+        rows.latestOffset())
+      .map(_.asInstanceOf[LakeRowsPartition].file).toSet
+    assert(streamed == files(m, 5))
+  }
+
+  test("streams whose consumed version survived a vacuum keep going") {
+    val dir = base()
+    val (m, z) = (s"$dir/m", s"$dir/z")
+    Snapshots.appendCommit(spark, batch(150, 50), cols, z, m, nFiles = 1)
+    Snapshots.vacuum(spark, z, m, retainLast = 2)
+    assert(Snapshots.versions(spark, m) == Seq(2, 3))
+    val added = files(m, 3) -- files(m, 2)
+    val commits = new CommitsMicroBatchStream(Map("manifestRoot" -> m))
+    val parts = commits.planInputPartitions(VersionOffset(2),
+        commits.latestOffset())
+      .map(_.asInstanceOf[CommitPartition])
+    assert(parts.map(_.version).toSeq == Seq(3) &&
+      parts.head.files.toSet == added)
+    val rows = new LakeRowsMicroBatchStream(m, batch(0, 1).schema, Map.empty)
+    val streamed = rows.planInputPartitions(LakeRowsOffset(2, Int.MaxValue),
+        rows.latestOffset())
+      .map(_.asInstanceOf[LakeRowsPartition].file).toSet
+    assert(streamed == added)
   }
 
   test("ApplyChanges.scd2 opens the keys of the commit above the aborted " +
