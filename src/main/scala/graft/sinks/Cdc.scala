@@ -88,7 +88,8 @@ object Cdc {
         if (ins.isEmpty)
           // pure-delete commit: the tag still needs a commit to ride —
           // re-commit the current manifest as a metadata-only version
-          Snapshots.metadataCommit(spark, mirrorRoot, Some(tag))(_ => Seq.empty)
+          Snapshots.metadataCommit(spark,
+            Snapshots.tableHead(spark, mirrorRoot), Some(tag))(Seq.empty)
         else
           Snapshots.appendCommit(spark, ins, cols, mirrorPath, mirrorRoot,
             nFiles, tag = Some(tag))

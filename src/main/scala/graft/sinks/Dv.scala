@@ -354,7 +354,7 @@ object Dv {
 
   def deleteWhereMoR(spark: SparkSession, path: String, manifestRoot: String,
                      box: Seq[(String, Double, Double)]): MoRDeleteResult =
-    deleteWhereMoRPred(spark, path, manifestRoot,
+    deleteWhereMoRPred(spark, path, Snapshots.tableHead(spark, manifestRoot),
       Layout.intersectsExpr(box), Layout.inBoxExpr(box))
 
   /** [[deleteWhereMoR]] generalized to the (prune, predicate) pair the SQL
@@ -367,16 +367,15 @@ object Dv {
     * The remaining touched files take the sidecar mask as before; zero
     * data files are written on either path. */
   def deleteWhereMoRPred(spark: SparkSession, path: String,
-                         manifestRoot: String,
+                         at: Snapshots.TableHead,
                          prune: org.apache.spark.sql.Column,
                          pred: org.apache.spark.sql.Column,
                          cover: Option[(org.apache.spark.sql.Column, Seq[String])] = None)
       : MoRDeleteResult = {
-    val h = Snapshots.head(spark, manifestRoot)
-    val total = Snapshots.localCount(h.manifest)
-    val hit = entries(h.manifest.filter(prune))
-    if (hit.isEmpty) return MoRDeleteResult(h.version, 0, total, 0, 0)
-    val dropped = Snapshots.wholeFileDrops(spark, h.manifest, prune, cover)
+    val total = Snapshots.localCount(at.manifest)
+    val hit = entries(at.manifest.filter(prune))
+    if (hit.isEmpty) return MoRDeleteResult(at.version, 0, total, 0, 0)
+    val dropped = Snapshots.wholeFileDrops(spark, at.manifest, prune, cover)
     val mask = hit.filterNot(e => dropped.contains(e.file))
     // newly deleted among the files that stay = their live in-predicate
     // rows (null-predicate rows survive: filter(pred) keeps TRUE only)
@@ -385,12 +384,12 @@ object Dv {
       else Some(positions(readLiveWithPos(spark, mask).filter(pred)))
     val freshRows = fresh.fold(0L)(_.count())
     if (freshRows == 0 && dropped.isEmpty)
-      return MoRDeleteResult(h.version, 0, total, 0, 0)
+      return MoRDeleteResult(at.version, 0, total, 0, 0)
     val next =
-      if (freshRows == 0) h.manifest
-      else repoint(h.manifest, mask.map(_.file),
+      if (freshRows == 0) at.manifest
+      else repoint(at.manifest, mask.map(_.file),
         remask(spark, path, mask, fresh.get))
-    MoRDeleteResult(Snapshots.swapCommit(spark, manifestRoot, next,
+    MoRDeleteResult(Snapshots.swapCommit(spark, at.root, next,
         dropped.keys.toSeq, None),
       (if (freshRows == 0) 0 else mask.size).toLong, total,
       freshRows + dropped.values.sum, 0, dropped.size.toLong)
@@ -410,7 +409,7 @@ object Dv {
   def planDeleteMoR(spark: SparkSession, path: String, manifestRoot: String,
                     box: Seq[(String, Double, Double)])
       : Option[(Snapshots.Txn, Long)] = {
-    val h = Snapshots.head(spark, manifestRoot)
+    val h = Snapshots.tableHead(spark, manifestRoot)
     val hit = entries(h.manifest.filter(Layout.intersectsExpr(box)))
     if (hit.isEmpty) return None
     val fresh = positions(readLiveWithPos(spark, hit)
@@ -441,7 +440,7 @@ object Dv {
   def deleteKeysMoR(spark: SparkSession, path: String, manifestRoot: String,
                     key: String, keys: DataFrame,
                     deltaCommit: Boolean = false): MoRDeleteResult = {
-    val h = Snapshots.head(spark, manifestRoot)
+    val h = Snapshots.tableHead(spark, manifestRoot)
     val manifest = h.manifest
     val total = Snapshots.localCount(manifest)
     // Stats-prune the touch set ONLY when the manifest actually carries
@@ -499,7 +498,7 @@ object Dv {
 
   def purgeDv(spark: SparkSession, path: String, manifestRoot: String,
               cols: Seq[String]): PurgeResult = {
-    val h = Snapshots.head(spark, manifestRoot)
+    val h = Snapshots.tableHead(spark, manifestRoot)
     val total = Snapshots.localCount(h.manifest)
     val masked = entries(h.manifest.filter(col("dv").isNotNull))
     if (masked.isEmpty) return PurgeResult(h.version, 0, total, 0)

@@ -58,7 +58,7 @@ object RowTracking {
                     path: String, manifestRoot: String,
                     nFiles: Int): (Int, Int) = {
     val prev = Option.when(Snapshots.versions(spark, manifestRoot).nonEmpty)(
-      Snapshots.head(spark, manifestRoot).manifest)
+      Snapshots.tableHead(spark, manifestRoot).manifest)
     val hw = prev.map(highWater).getOrElse(0L)
     val moved = Snapshots.land(spark, path,
         gatedBy = prev.map(_ => manifestRoot))(
@@ -126,7 +126,7 @@ object RowTracking {
     * in, files out). */
   def compactTracked(spark: SparkSession, path: String, manifestRoot: String,
                      cols: Seq[String], nFiles: Int): (Int, Int, Int) = {
-    val h = Snapshots.head(spark, manifestRoot)
+    val h = Snapshots.tableHead(spark, manifestRoot)
     val hw = highWater(h.manifest)
     val nIn = Snapshots.localCount(h.manifest).toInt
     val moved = Snapshots.land(spark, path, gatedBy = None)(

@@ -99,25 +99,32 @@ object Snapshots {
     * is not stored. */
   private def markerNames(spark: SparkSession, manifestRoot: String,
                           v: Int): Seq[String] =
-    MetaCache.get[Seq[String]](manifestRoot, ("names", v)).getOrElse {
+    listedNames(spark, manifestRoot, v).getOrElse(Seq.empty)
+
+  /** [[markerNames]], or None when `v=N` is not there. */
+  private def listedNames(spark: SparkSession, manifestRoot: String,
+                          v: Int): Option[Seq[String]] =
+    MetaCache.get[Seq[String]](manifestRoot, ("names", v)).orElse {
       try {
         val names = hfs(spark, manifestRoot)
           .listStatus(new org.apache.hadoop.fs.Path(s"$manifestRoot/v=$v"))
           .toSeq.map(_.getPath.getName).filter(_.startsWith("_")).sorted
         MetaCache.put(manifestRoot, ("names", v), names)
-        names
-      } catch { case _: java.io.FileNotFoundException => Seq.empty }
+        Some(names)
+      } catch { case _: java.io.FileNotFoundException => None }
     }
 
   /** The newest version ≤ `v` carrying a `prefix` marker, with all of its
     * `prefix` markers (a map may chunk across several) — "the marker in
-    * force at v" for every superseding kind. Memoized once `v` is
+    * force at v" for every superseding kind, resolved over the caller's
+    * root `listing` (evaluated only on a miss). Memoized once `v` is
     * committed: no later commit can change what is in force at it. */
   private def inForce(spark: SparkSession, manifestRoot: String, v: Int,
-                      prefix: String): Option[(Int, Seq[String])] = {
+                      prefix: String,
+                      listing: => Seq[Int]): Option[(Int, Seq[String])] = {
     val key = ("inForce", prefix, v)
     MetaCache.get[Option[(Int, Seq[String])]](manifestRoot, key).getOrElse {
-      val vs = versions(spark, manifestRoot)
+      val vs = listing
       val hit = vs.reverseIterator.filter(_ <= v)
         .map(x => x -> markerNames(spark, manifestRoot, x)
           .filter(_.startsWith(prefix)))
@@ -130,8 +137,8 @@ object Snapshots {
   /** Every `prefix` marker of every version ≤ `v`, oldest first — the
     * accumulating kinds (ADD COLUMN types, COPY INTO keys). */
   private def accumulated(spark: SparkSession, manifestRoot: String, v: Int,
-                          prefix: String): Seq[String] =
-    versions(spark, manifestRoot).filter(_ <= v).flatMap(x =>
+                          prefix: String, listing: Seq[Int]): Seq[String] =
+    listing.filter(_ <= v).flatMap(x =>
       markerNames(spark, manifestRoot, x).filter(_.startsWith(prefix)))
 
   /** Every commit tag starting `prefix`, as (version, rest of the tag),
@@ -157,7 +164,12 @@ object Snapshots {
       finally in.close()
     }
 
-  def latestVersion(spark: SparkSession, manifestRoot: String): Int = {
+  def latestVersion(spark: SparkSession, manifestRoot: String): Int =
+    tableHead(spark, manifestRoot).version
+
+  /** The [[TableHead]] of `manifestRoot`: the newest txn-visible version
+    * of ONE root listing. */
+  def tableHead(spark: SparkSession, manifestRoot: String): TableHead = {
     val vs = versions(spark, manifestRoot)
     require(vs.nonEmpty, s"no committed versions under $manifestRoot")
     // CROSS-TABLE TXN visibility: a version staged by [[graft.sql.LakeTxn]]
@@ -167,25 +179,61 @@ object Snapshots {
     // Pending stages can only occupy the log TAIL (commitStaged refuses
     // to build past an unresolved one), so this walk is O(1) amortized:
     // resolved states memoize, an unresolved head re-checks one file.
-    vs.reverseIterator.find(v => txnVisible(spark, manifestRoot, v))
-      .getOrElse(throw new IllegalStateException(
-        s"every version under $manifestRoot is an unresolved or aborted " +
-          "transaction stage — nothing visible to read"))
+    new TableHead(spark, manifestRoot, vs,
+      vs.reverseIterator.find(v => txnVisible(spark, manifestRoot, v))
+        .getOrElse(throw new IllegalStateException(
+          s"every version under $manifestRoot is an unresolved or aborted " +
+            "transaction stage — nothing visible to read")))
   }
 
-  /** A writer's view of the table head, read once: the latest visible
-    * version, its manifest (DV-normalized and pinned with [[pinLocal]], so
-    * the planner never sees a commit that lands while it works) and the
-    * declared schema at that SAME version. */
-  final case class Head(version: Int, manifest: DataFrame,
-                        schema: Option[StructType])
+  /** A table's head as one statement sees it: the visible `version`, the
+    * root `listing` it was resolved from, and the metadata in force at
+    * that version — properties, column mapping, CHECK set and declared
+    * schema — each resolved over that same listing, on first use. A
+    * statement resolves it once per table ([[tableHead]]: one root
+    * listing) and hands it to every reader and writer of the table; the
+    * DML planners also read its pinned `manifest`. A head built for a
+    * named version ([[headAt]]) takes its listing only when a marker
+    * lookup misses its memo or the version is empty. */
+  final class TableHead private[Snapshots] (spark: SparkSession,
+      val root: String, listed: => Seq[Int], val version: Int) {
+    lazy val listing: Seq[Int] = listed
+    lazy val props: Map[String, String] =
+      Props.at(spark, root, version, listing).getOrElse(Map.empty)
+    lazy val mapping: Option[Map[String, String]] =
+      Cmap.at(spark, root, version, listing)
+    lazy val checks: Map[String, String] =
+      Ck.at(spark, root, version, listing).getOrElse(Map.empty)
+    /** The manifest at `version`, DV-normalized and pinned with
+      * [[pinLocal]] on first use (only a DML planner uses it), so a
+      * planner never sees a commit that lands while it works. */
+    lazy val manifest: DataFrame =
+      pinLocal(Dv.ensureDv(manifestAt(spark, root, version)))
+    lazy val schema: Option[StructType] =
+      inForce(spark, root, version, SchemaMarker, listing).map { case (v, _) =>
+        MetaCache.getOrElseUpdate(root, ("schema", v)) {
+          org.apache.spark.sql.types.DataType.fromJson(
+            markerContent(spark, root, v, SchemaMarker).get)
+            .asInstanceOf[StructType]
+        }
+      }
 
-  /** The [[Head]] every DML planner starts from. */
-  def head(spark: SparkSession, manifestRoot: String): Head = {
-    val v = latestVersion(spark, manifestRoot)
-    Head(v, pinLocal(Dv.ensureDv(manifestAt(spark, manifestRoot, v))),
-      declaredSchemaAt(spark, manifestRoot, v))
+    /** The same table pinned at version `v` (`VERSION AS OF`), over this
+      * head's listing. */
+    def at(v: Int): TableHead = new TableHead(spark, root, listing, v)
+
+    /** This head after the statement's own commit landed at `v`: the
+      * slots between this listing's tail and `v` were taken by commits
+      * the CAS loop raced past, so the listing extends without a fresh
+      * root listing. */
+    def after(v: Int): TableHead = new TableHead(spark, root,
+      listing ++ (listing.lastOption.getOrElse(0) + 1 to v), v)
   }
+
+  /** `manifestRoot` at `version`, listing the root only on a memo miss. */
+  private def headAt(spark: SparkSession, manifestRoot: String,
+                     version: Int): TableHead =
+    new TableHead(spark, manifestRoot, versions(spark, manifestRoot), version)
 
   /** Content-marker filename a cross-table txn stage travels in (body =
     * txn dir + txn id, newline-separated). */
@@ -200,12 +248,16 @@ object Snapshots {
     }
 
   // (root, v) → resolved visibility in [[MetaCache]]. Only RESOLVED
-  // states are stored (plain version → true; txn committed → true; txn
-  // aborted → false); an unresolved pending stage re-checks its txn file
-  // every call because the commit file can appear at any moment.
+  // states of a version dir that is there are stored (plain version →
+  // true; txn committed → true; txn aborted → false); an unresolved
+  // pending stage re-checks its txn file every call because the commit
+  // file can appear at any moment.
   private[graft] def txnVisible(spark: SparkSession, manifestRoot: String,
                                 v: Int): Boolean =
     MetaCache.get[Boolean](manifestRoot, ("txn", v)).getOrElse {
+      // a slot no dir holds yet resolves nothing: a txn stage may land
+      // there later (a failed read of a future version must not poison it)
+      val there = listedNames(spark, manifestRoot, v).isDefined
       val resolved = pendingInfo(spark, manifestRoot, v) match {
         case None => Some(true)
         case Some((dir, id)) =>
@@ -216,7 +268,7 @@ object Snapshots {
             Some(false)
           else None // unresolved: re-check next call, never memoize
       }
-      resolved.foreach(MetaCache.put(manifestRoot, ("txn", v), _))
+      if (there) resolved.foreach(MetaCache.put(manifestRoot, ("txn", v), _))
       resolved.getOrElse(false)
     }
 
@@ -434,14 +486,19 @@ object Snapshots {
     * the result to [[manifestAt]]/[[tableAt]]/[[readAt]]; timestamp travel
     * is a resolution step, not a second read path. */
   def versionAtTimestamp(spark: SparkSession, manifestRoot: String,
+                         tsMillis: Long): Int =
+    versionAtTimestamp(spark, tableHead(spark, manifestRoot), tsMillis)
+
+  /** [[versionAtTimestamp]] over the listing of a statement's head. */
+  def versionAtTimestamp(spark: SparkSession, at: TableHead,
                          tsMillis: Long): Int = {
-    val stamped = visibleVersions(spark, manifestRoot)
-      .flatMap(v => commitTimestamp(spark, manifestRoot, v).map(v -> _))
-    require(stamped.nonEmpty, s"no timestamped versions under $manifestRoot")
+    val stamped = at.listing.filter(txnVisible(spark, at.root, _))
+      .flatMap(v => commitTimestamp(spark, at.root, v).map(v -> _))
+    require(stamped.nonEmpty, s"no timestamped versions under ${at.root}")
     val atOrBefore = stamped.filter(_._2 <= tsMillis)
     require(atOrBefore.nonEmpty,
       s"timestamp $tsMillis predates the first commit " +
-        s"(${stamped.map(_._2).min}) under $manifestRoot")
+        s"(${stamped.map(_._2).min}) under ${at.root}")
     atOrBefore.map(_._1).max
   }
 
@@ -787,11 +844,13 @@ object Snapshots {
     * column at all — schema evolution rides the same snapshot mechanics
     * as data DML, no rewrite. */
   def tableAt(spark: SparkSession, manifestRoot: String,
-              version: Int): DataFrame = {
-    val entries = Dv.entries(manifestAt(spark, manifestRoot, version))
-    if (entries.nonEmpty)
-      Dv.readLive(spark, entries,
-        declaredSchemaAt(spark, manifestRoot, version))
+              version: Int): DataFrame =
+    tableAt(spark, headAt(spark, manifestRoot, version))
+
+  /** [[tableAt]] at a statement's head (or a version pinned through it). */
+  def tableAt(spark: SparkSession, at: TableHead): DataFrame = {
+    val entries = Dv.entries(manifestAt(spark, at.root, at.version))
+    if (entries.nonEmpty) Dv.readLive(spark, entries, at.schema)
     else {
       // EMPTY version — reachable once a covering DELETE can drop every
       // file, or from birth via CREATE TABLE ([[createEmptyTable]]). The
@@ -802,17 +861,14 @@ object Snapshots {
       // table that has never held data serves its DECLARED schema (the
       // `graft.schema` table property CREATE TABLE commits); a table with
       // neither has no schema to serve and fails loudly.
-      visibleVersions(spark, manifestRoot).filter(_ < version)
+      at.listing.filter(v => v < at.version && txnVisible(spark, at.root, v))
         .sorted.reverse.view
-        .map(v => Dv.entries(manifestAt(spark, manifestRoot, v)))
+        .map(v => Dv.entries(manifestAt(spark, at.root, v)))
         .find(_.nonEmpty) match {
-        case Some(prior) =>
-          Dv.readLive(spark, prior,
-            declaredSchemaAt(spark, manifestRoot, version)).limit(0)
+        case Some(prior) => Dv.readLive(spark, prior, at.schema).limit(0)
         case None =>
-          val declared = declaredSchemaAt(spark, manifestRoot, version)
-            .getOrElse(throw new IllegalStateException(
-              s"version $version of $manifestRoot references no files, no " +
+          val declared = at.schema.getOrElse(throw new IllegalStateException(
+              s"version ${at.version} of ${at.root} references no files, no " +
                 "prior version does either, and no declared schema is " +
                 "recorded — empty table with unknowable schema"))
           spark.createDataFrame(
@@ -876,18 +932,25 @@ object Snapshots {
                       cols: Seq[String], prune: org.apache.spark.sql.Column,
                       pred: org.apache.spark.sql.Column,
                       cover: Option[(org.apache.spark.sql.Column, Seq[String])] = None)
+      : Layout.DeleteResult =
+    deleteWherePred(spark, path, tableHead(spark, manifestRoot), cols, prune,
+      pred, cover)
+
+  def deleteWherePred(spark: SparkSession, path: String, at: TableHead,
+                      cols: Seq[String], prune: org.apache.spark.sql.Column,
+                      pred: org.apache.spark.sql.Column,
+                      cover: Option[(org.apache.spark.sql.Column, Seq[String])])
       : Layout.DeleteResult = {
-    val h = head(spark, manifestRoot)
-    val total = localCount(h.manifest)
-    val hit = Dv.entries(h.manifest.filter(prune))
+    val total = localCount(at.manifest)
+    val hit = Dv.entries(at.manifest.filter(prune))
     if (hit.isEmpty) return Layout.DeleteResult(0, total, 0)
-    val dropped = wholeFileDrops(spark, h.manifest, prune, cover)
+    val dropped = wholeFileDrops(spark, at.manifest, prune, cover)
     val rewrite = hit.filterNot(e => dropped.contains(e.file))
     // survivors come from the LIVE rows (existing deletion vectors
     // applied — a copy-on-write rewrite of a masked file must not
     // resurrect its masked rows); the rewrite also FOLDS the DV away: the
     // new files carry no mask
-    lazy val live = Dv.readLive(spark, rewrite, h.schema)
+    lazy val live = Dv.readLive(spark, rewrite, at.schema)
     // survivors = NOT(pred), with null-match rows kept: a WHERE that
     // evaluates to null on a row must not delete it (SQL three-valued
     // logic — DELETE removes rows where the predicate is TRUE)
@@ -910,14 +973,14 @@ object Snapshots {
       if (rewrite.isEmpty) Some(0L)
       else if (rewrite.forall(_.dv.isEmpty)) {
         for {
-          liveRows <- localLongSum(h.manifest
+          liveRows <- localLongSum(at.manifest
             .filter(col("file").isInCollection(rewrite.map(_.file))), "rows")
           survivorRows <-
             survivorStats.map(localLongSum(_, "rows")).getOrElse(Some(0L))
         } yield liveRows - survivorRows
       } else None
     val deleted = arithmetic.getOrElse(live.filter(pred).count())
-    swapCommit(spark, manifestRoot, h.manifest, hit.map(_.file), survivorStats)
+    swapCommit(spark, at.root, at.manifest, hit.map(_.file), survivorStats)
     Layout.DeleteResult(rewrite.size.toLong, total,
       deleted + dropped.values.sum, dropped.size.toLong)
   }
@@ -933,15 +996,14 @@ object Snapshots {
     * and their sidecars stay on disk for pinned readers until [[vacuum]];
     * reads of the empty version serve a zero-row frame with the prior
     * version's schema ([[tableAt]]), and later INSERTs refill normally. */
-  def truncateCommit(spark: SparkSession, manifestRoot: String)
+  def truncateCommit(spark: SparkSession, at: TableHead)
       : TruncateResult = {
-    val h = head(spark, manifestRoot)
-    val files = localCount(h.manifest)
-    if (files == 0) return TruncateResult(h.version, 0, 0)
-    val phys = h.manifest.agg(sum(col("rows"))).head().getLong(0)
+    val files = localCount(at.manifest)
+    if (files == 0) return TruncateResult(at.version, 0, 0)
+    val phys = at.manifest.agg(sum(col("rows"))).head().getLong(0)
     // masked rows are already dead
-    val masked = Dv.maskedRows(spark, Dv.entries(h.manifest))
-    val v = commit(spark, h.manifest.filter(lit(false)), manifestRoot)
+    val masked = Dv.maskedRows(spark, Dv.entries(at.manifest))
+    val v = commit(spark, at.manifest.filter(lit(false)), at.root)
     TruncateResult(v, phys - masked, files)
   }
 
@@ -963,7 +1025,7 @@ object Snapshots {
     * plus the missing-file list WITHOUT committing. */
   def fsckCommit(spark: SparkSession, manifestRoot: String,
                  dryRun: Boolean = false): (FsckResult, Seq[String]) = {
-    val h = head(spark, manifestRoot)
+    val h = tableHead(spark, manifestRoot)
     val total = localCount(h.manifest)
     val conf = spark.sparkContext.hadoopConfiguration
     val missing = h.manifest.select(col("file"), col("rows"), col("dv"))
@@ -1023,7 +1085,7 @@ object Snapshots {
   def updateWhere(spark: SparkSession, path: String, manifestRoot: String,
                   cols: Seq[String], box: Seq[(String, Double, Double)],
                   assignments: Map[String, org.apache.spark.sql.Column]): UpdateResult =
-    updateWherePred(spark, path, manifestRoot, cols,
+    updateWherePred(spark, path, tableHead(spark, manifestRoot), cols,
       Layout.intersectsExpr(box), Layout.inBoxExpr(box), assignments)
 
   /** [[updateWhere]] generalized to a (prune, predicate) pair — see
@@ -1031,16 +1093,15 @@ object Snapshots {
     * files from manifest stats, `pred` is the exact row predicate gating
     * each assignment (null-predicate rows pass through unchanged, the SQL
     * three-valued UPDATE contract). */
-  def updateWherePred(spark: SparkSession, path: String, manifestRoot: String,
+  def updateWherePred(spark: SparkSession, path: String, at: TableHead,
                       cols: Seq[String], prune: org.apache.spark.sql.Column,
                       pred: org.apache.spark.sql.Column,
                       assignments: Map[String, org.apache.spark.sql.Column]): UpdateResult = {
     require(assignments.nonEmpty, "UPDATE with no assignments")
-    val h = head(spark, manifestRoot)
-    val total = localCount(h.manifest)
-    val hit = Dv.entries(h.manifest.filter(prune))
+    val total = localCount(at.manifest)
+    val hit = Dv.entries(at.manifest.filter(prune))
     if (hit.isEmpty) return UpdateResult(0, total, 0)
-    val live = Dv.readLive(spark, hit, h.schema)
+    val live = Dv.readLive(spark, hit, at.schema)
     val lower = assignments.map { case (k, v) =>
       k.toLowerCase(java.util.Locale.ROOT) -> v }
     val unknown = lower.keySet.diff(
@@ -1054,9 +1115,9 @@ object Snapshots {
         .map(rhs => when(coalesce(pred, lit(false)), rhs).otherwise(col(c)).as(c))
         .getOrElse(col(c))
     }: _*)
-    val moved = land(spark, path, gatedBy = Some(manifestRoot))(
+    val moved = land(spark, path, gatedBy = Some(at.root))(
       rewritten.write.parquet(_))
-    swapCommit(spark, manifestRoot, h.manifest, hit.map(_.file),
+    swapCommit(spark, at.root, at.manifest, hit.map(_.file),
       statsFor(spark, moved, cols))
     UpdateResult(hit.size.toLong, total, updated)
   }
@@ -1080,17 +1141,16 @@ object Snapshots {
     * files with no matched rows keep their existing mask pointer
     * untouched. `REORG … APPLY (PURGE)` repays the mask debt later. */
   def updateWhereMoRPred(spark: SparkSession, path: String,
-                         manifestRoot: String, cols: Seq[String],
+                         at: TableHead, cols: Seq[String],
                          prune: org.apache.spark.sql.Column,
                          pred: org.apache.spark.sql.Column,
                          assignments: Map[String, org.apache.spark.sql.Column],
                          nFiles: Int): MoRUpdateResult = {
     require(assignments.nonEmpty, "UPDATE with no assignments")
-    val h = head(spark, manifestRoot)
-    val total = localCount(h.manifest)
-    val hit = Dv.entries(h.manifest.filter(prune))
-    if (hit.isEmpty) return MoRUpdateResult(h.version, 0, total, 0, 0)
-    val live = Dv.readLiveWithPos(spark, hit, h.schema)
+    val total = localCount(at.manifest)
+    val hit = Dv.entries(at.manifest.filter(prune))
+    if (hit.isEmpty) return MoRUpdateResult(at.version, 0, total, 0, 0)
+    val live = Dv.readLiveWithPos(spark, hit, at.schema)
     val dataCols = live.columns.toIndexedSeq
       .filterNot(c => c == "_dv_f" || c == "_dv_p")
     val lower = assignments.map { case (k, a) =>
@@ -1104,13 +1164,13 @@ object Snapshots {
     // sidecar — it must not recompute after the manifest starts moving
     val matched = live.filter(coalesce(pred, lit(false))).localCheckpoint()
     val rowsUpdated = matched.count()
-    if (rowsUpdated == 0) return MoRUpdateResult(h.version, 0, total, 0, 0)
+    if (rowsUpdated == 0) return MoRUpdateResult(at.version, 0, total, 0, 0)
     // (b) the updated payload, staged and constraint-checked FIRST — a
     // violating update aborts before anything becomes visible
     val updatedRows = matched.select(dataCols.map(c =>
       lower.get(c.toLowerCase(java.util.Locale.ROOT))
         .map(_.as(c)).getOrElse(col(c))): _*)
-    val moved = land(spark, path, gatedBy = Some(manifestRoot))(
+    val moved = land(spark, path, gatedBy = Some(at.root))(
       Layout.zorderWrite(updatedRows, cols, _, nFiles))
     // (a) mask exactly the matched rows' files
     val maskFiles = matched.select(col("_dv_f")).distinct()
@@ -1118,8 +1178,8 @@ object Snapshots {
     val sidecar = Dv.remask(spark, path,
       hit.filter(e => maskFiles.contains(e.file)),
       Dv.positionCols(matched))
-    MoRUpdateResult(swapCommit(spark, manifestRoot,
-        Dv.repoint(h.manifest, maskFiles, sidecar), Nil,
+    MoRUpdateResult(swapCommit(spark, at.root,
+        Dv.repoint(at.manifest, maskFiles, sidecar), Nil,
         statsFor(spark, moved, cols)),
       maskFiles.size.toLong, total, rowsUpdated, moved.size.toLong)
   }
@@ -1141,11 +1201,17 @@ object Snapshots {
                    tag: Option[String] = None,
                    markers: Seq[String] = Seq.empty,
                    contentFiles: Seq[(String, String)] = Seq.empty)
-      : (Int, Int) = {
-    val h = head(spark, manifestRoot)
-    val moved = land(spark, path, gatedBy = Some(manifestRoot))(
+      : (Int, Int) =
+    appendCommit(spark, batch, cols, path, tableHead(spark, manifestRoot),
+      nFiles, tag, markers, contentFiles)
+
+  def appendCommit(spark: SparkSession, batch: DataFrame, cols: Seq[String],
+                   path: String, at: TableHead, nFiles: Int,
+                   tag: Option[String], markers: Seq[String],
+                   contentFiles: Seq[(String, String)]): (Int, Int) = {
+    val moved = land(spark, path, gatedBy = Some(at.root))(
       Layout.zorderWrite(batch, cols, _, nFiles))
-    (swapCommit(spark, manifestRoot, h.manifest, Nil,
+    (swapCommit(spark, at.root, at.manifest, Nil,
       statsFor(spark, moved, cols), tag, markers, contentFiles), moved.size)
   }
 
@@ -1273,17 +1339,22 @@ object Snapshots {
     * under ANY row order; clustering only changes how TIGHT they are). */
   def compactCommit(spark: SparkSession, path: String, manifestRoot: String,
                     cols: Seq[String], nFiles: Int,
-                    zorderCols: Option[Seq[String]] = None): (Int, Int, Int) = {
-    val h = head(spark, manifestRoot)
-    val entries = Dv.entries(h.manifest)
+                    zorderCols: Option[Seq[String]] = None): (Int, Int, Int) =
+    compactCommit(spark, path, tableHead(spark, manifestRoot), cols, nFiles,
+      zorderCols)
+
+  def compactCommit(spark: SparkSession, path: String, at: TableHead,
+                    cols: Seq[String], nFiles: Int,
+                    zorderCols: Option[Seq[String]]): (Int, Int, Int) = {
+    val entries = Dv.entries(at.manifest)
     // compaction reads LIVE rows: it is also the fold point for deletion
     // vectors — the rewritten files carry no mask, and the superseded
     // sidecars expire with the versions that referenced them
     val moved = land(spark, path, gatedBy = None)(
-      Layout.zorderWrite(Dv.readLive(spark, entries, h.schema),
+      Layout.zorderWrite(Dv.readLive(spark, entries, at.schema),
         zorderCols.getOrElse(cols), _, nFiles))
     val next = Layout.buildManifestFor(spark, moved, cols)
-    (commit(spark, next, manifestRoot), entries.size, moved.size)
+    (commit(spark, next, at.root), entries.size, moved.size)
   }
 
   final case class CompactSmallResult(version: Int, filesCompacted: Long,
@@ -1304,7 +1375,7 @@ object Snapshots {
   def compactSmallCommit(spark: SparkSession, path: String,
                          manifestRoot: String, cols: Seq[String],
                          smallBytes: Long, nFiles: Int): CompactSmallResult = {
-    val h = head(spark, manifestRoot)
+    val h = tableHead(spark, manifestRoot)
     val entries = Dv.entries(h.manifest)
     val fs = hfs(spark, path)
     val (small, big) = entries.partition { e =>
@@ -1337,18 +1408,17 @@ object Snapshots {
     * carries a DV (folding is the point), otherwise <2 selected files is
     * a commit-free no-op. */
   def compactScopedCommit(spark: SparkSession, path: String,
-                          manifestRoot: String, cols: Seq[String],
+                          at: TableHead, cols: Seq[String],
                           scope: Column, nFiles: Int,
                           zorderCols: Option[Seq[String]] = None): CompactScopedResult = {
-    val h = head(spark, manifestRoot)
-    val total = localCount(h.manifest)
-    val selected = Dv.entries(h.manifest.filter(scope))
+    val total = localCount(at.manifest)
+    val selected = Dv.entries(at.manifest.filter(scope))
     if (selected.size < 2 && !selected.exists(_.dv.isDefined))
-      return CompactScopedResult(h.version, 0, total, 0)
+      return CompactScopedResult(at.version, 0, total, 0)
     val moved = land(spark, path, gatedBy = None)(
-      Layout.zorderWrite(Dv.readLive(spark, selected, h.schema),
+      Layout.zorderWrite(Dv.readLive(spark, selected, at.schema),
         zorderCols.getOrElse(cols), _, nFiles))
-    CompactScopedResult(swapCommit(spark, manifestRoot, h.manifest,
+    CompactScopedResult(swapCommit(spark, at.root, at.manifest,
         selected.map(_.file), statsFor(spark, moved, cols)),
       selected.size.toLong, total - selected.size, moved.size.toLong)
   }
@@ -1380,15 +1450,14 @@ object Snapshots {
     * same z-order layout as [[Layout.zorderWrite]] — multi-key tight
     * stats boxes, pruning parity with the static path. */
   def clusterIncrementalCommit(spark: SparkSession, path: String,
-                               manifestRoot: String, cols: Seq[String],
+                               at: TableHead, cols: Seq[String],
                                clusterCols: Seq[String],
                                nFiles: Int,
                                full: Boolean = false): ClusterResult = {
     require(clusterCols.nonEmpty, "incremental clustering needs keys")
-    val h = head(spark, manifestRoot)
     val manifest =
-      if (h.manifest.columns.contains(ClusteredCol)) h.manifest
-      else h.manifest.withColumn(ClusteredCol, lit(null).cast("boolean"))
+      if (at.manifest.columns.contains(ClusteredCol)) at.manifest
+      else at.manifest.withColumn(ClusteredCol, lit(null).cast("boolean"))
     val flagged = manifest
       .select(col("file"), col("dv"), col(ClusteredCol)).collect().toSeq
       .map(r => (Dv.Entry(r.getString(0), Option(r.getString(1))),
@@ -1399,15 +1468,15 @@ object Snapshots {
       !full && isClustered && e.dv.isEmpty
     }
     if (rewrite.isEmpty)
-      return ClusterResult(h.version, 0, keep.size.toLong, 0)
+      return ClusterResult(at.version, 0, keep.size.toLong, 0)
     // increment-proportional output width: a 1-file append re-clusters
     // into ~1 file, a first-time OPTIMIZE into the table's full width
     val nOut = math.max(1, math.ceil(
       nFiles.toDouble * rewrite.size / flagged.size).toInt)
     val moved = land(spark, path, gatedBy = None)(
-      Layout.zorderWrite(Dv.readLive(spark, rewrite.map(_._1), h.schema),
+      Layout.zorderWrite(Dv.readLive(spark, rewrite.map(_._1), at.schema),
         clusterCols, _, nOut))
-    ClusterResult(swapCommit(spark, manifestRoot, manifest,
+    ClusterResult(swapCommit(spark, at.root, manifest,
         rewrite.map(_._1.file), statsFor(spark, moved, cols)
           .map(_.withColumn(ClusteredCol, lit(true)))),
       rewrite.size.toLong, keep.size.toLong, moved.size.toLong)
@@ -1439,13 +1508,18 @@ object Snapshots {
     * untouched cohabitants cancelling. */
   def mergeCommit(spark: SparkSession, source: DataFrame, key: String,
                   cols: Seq[String], path: String, manifestRoot: String,
+                  nFiles: Int): MergeResult =
+    mergeCommit(spark, source, key, cols, path, tableHead(spark, manifestRoot),
+      nFiles)
+
+  def mergeCommit(spark: SparkSession, source: DataFrame, key: String,
+                  cols: Seq[String], path: String, at: TableHead,
                   nFiles: Int): MergeResult = {
     require(cols.contains(key),
       s"merge key $key needs manifest stats — not in ${cols.mkString(",")}")
-    val h = head(spark, manifestRoot)
-    val total = localCount(h.manifest)
+    val total = localCount(at.manifest)
     val hit = source.select(col(key).cast("double").as("k")).distinct()
-      .join(broadcast(h.manifest.select(col("file"),
+      .join(broadcast(at.manifest.select(col("file"),
           col(s"min_$key").cast("double").as("lo"),
           col(s"max_$key").cast("double").as("hi"))),
         col("k") >= col("lo") && col("k") <= col("hi"))
@@ -1458,8 +1532,8 @@ object Snapshots {
         // live rows only: a merge rewriting a DV-masked file must not
         // resurrect its masked rows (the rewrite folds the mask away)
         val hitRows = Dv.readLive(spark,
-          Dv.entries(h.manifest.filter(col("file").isInCollection(hit))),
-          h.schema)
+          Dv.entries(at.manifest.filter(col("file").isInCollection(hit))),
+          at.schema)
         // ONE aggregate job yields all three metric scalars (rows
         // updated = touched-target rows sharing a key with the source;
         // matched source rows; source total): per-key counts on each
@@ -1473,7 +1547,7 @@ object Snapshots {
           sum(when(col("_sc").isNotNull, col("_tc"))).as("u"),
           sum(when(col("_tc").isNotNull, col("_sc"))).as("m"),
           sum(col("_sc")).as("t")).head()
-        def at(i: Int) = if (m.isNullAt(i)) 0L else m.getLong(i)
+        def metric(i: Int) = if (m.isNullAt(i)) 0L else m.getLong(i)
         val survivors = hitRows.join(srcKeys, Seq(key), "left_anti")
         // allowMissingColumns = MERGE WITH SCHEMA EVOLUTION: a source
         // column the target lacks null-fills the survivors (and the
@@ -1481,12 +1555,12 @@ object Snapshots {
         // the q118 mechanics); a target column absent from the source
         // null-fills the source rows
         (survivors.unionByName(source, allowMissingColumns = true),
-          at(0), at(1), at(2))
+          metric(0), metric(1), metric(2))
       }
     val inserted = srcTotal - matchedSrc
-    val moved = land(spark, path, gatedBy = Some(manifestRoot))(
+    val moved = land(spark, path, gatedBy = Some(at.root))(
       Layout.zorderWrite(newData, cols, _, nFiles))
-    MergeResult(swapCommit(spark, manifestRoot, h.manifest, hit,
+    MergeResult(swapCommit(spark, at.root, at.manifest, hit,
         statsFor(spark, moved, cols)), hit.size.toLong, total,
       updated, inserted)
   }
@@ -1570,7 +1644,7 @@ object Snapshots {
     * cardinality-violation error, checked here with one count). */
   def mergeCommitClauses(spark: SparkSession, source: DataFrame,
                          keys: Seq[String], cols: Seq[String], path: String,
-                         manifestRoot: String, nFiles: Int,
+                         at: TableHead, nFiles: Int,
                          matched: Seq[WhenMatched],
                          notMatched: Seq[WhenNotMatched],
                          bySource: Seq[WhenNotMatchedBySource] = Seq.empty,
@@ -1589,8 +1663,7 @@ object Snapshots {
     require(dup.isEmpty,
       s"MERGE source has duplicate key tuples (e.g. ${dup.headOption}) — " +
         "a target row matched twice has no deterministic outcome")
-    val h = head(spark, manifestRoot)
-    val manifest = h.manifest
+    val manifest = at.manifest
     val total = localCount(manifest)
     // touch set: distinct source key tuples × broadcast manifest, file
     // hit iff the tuple sits inside the file's stats box on EVERY key
@@ -1621,10 +1694,10 @@ object Snapshots {
       if (hit.isEmpty) None
       else Some(Dv.readLive(spark,
           Dv.entries(manifest.filter(col("file").isInCollection(hit))),
-          h.schema))
+          at.schema))
     val targetSchema = targetSchemaHint.getOrElse(
       rawHitRows.map(_.schema).getOrElse(
-        tableAt(spark, manifestRoot, h.version).schema))
+        tableAt(spark, at).schema))
     // align touched rows to the target schema: declared columns the data
     // files don't carry yet serve as typed nulls (the footer-merge
     // null-fill, applied to the rewrite input)
@@ -1729,9 +1802,9 @@ object Snapshots {
     val pieces = survivors.toSeq ++ matchedKept.toSeq ++ Seq(insRows)
     val newData = pieces.reduce(
       _.unionByName(_, allowMissingColumns = true))
-    val moved = land(spark, path, gatedBy = Some(manifestRoot))(
+    val moved = land(spark, path, gatedBy = Some(at.root))(
       Layout.zorderWrite(newData, cols, _, nFiles))
-    MergeFullResult(swapCommit(spark, manifestRoot, manifest, hit,
+    MergeFullResult(swapCommit(spark, at.root, manifest, hit,
         statsFor(spark, moved, cols)), hit.size.toLong,
       total, updated + bsUpdated, inserted, deleted + bsDeleted)
   }
@@ -1754,7 +1827,8 @@ object Snapshots {
                       cols: Seq[String], path: String, manifestRoot: String,
                       nFiles: Int,
                       deleteBox: Seq[(String, Double, Double)]): MergeFullResult =
-    mergeCommitFullPred(spark, source, key, cols, path, manifestRoot, nFiles,
+    mergeCommitFullPred(spark, source, key, cols, path,
+      tableHead(spark, manifestRoot), nFiles,
       Layout.intersectsExpr(deleteBox), Layout.inBoxExpr(deleteBox))
 
   /** [[mergeCommitFull]] with the delete scope as a (prune, predicate)
@@ -1762,13 +1836,12 @@ object Snapshots {
     * contract. The SQL front door's typed WHERE compiler targets this
     * form (string/date-scoped NOT MATCHED BY SOURCE DELETE). */
   def mergeCommitFullPred(spark: SparkSession, source: DataFrame, key: String,
-                          cols: Seq[String], path: String, manifestRoot: String,
+                          cols: Seq[String], path: String, at: TableHead,
                           nFiles: Int, deletePrune: org.apache.spark.sql.Column,
                           deletePred: org.apache.spark.sql.Column): MergeFullResult = {
     require(cols.contains(key),
       s"merge key $key needs manifest stats — not in ${cols.mkString(",")}")
-    val h = head(spark, manifestRoot)
-    val manifest = h.manifest
+    val manifest = at.manifest
     val total = localCount(manifest)
     val keyHit = source.select(col(key).cast("double").as("k")).distinct()
       .join(broadcast(manifest.select(col("file"),
@@ -1786,7 +1859,7 @@ object Snapshots {
       else {
         val hitRows = Dv.readLive(spark,
           Dv.entries(manifest.filter(col("file").isInCollection(hit))),
-          h.schema)
+          at.schema)
           .localCheckpoint()
         val hitKeys = hitRows.select(col(key)).distinct().localCheckpoint()
         val unmatched = hitRows.join(srcKeys, Seq(key), "left_anti")
@@ -1800,9 +1873,9 @@ object Snapshots {
       .map(_.unionByName(source, allowMissingColumns = true))
       .getOrElse(source)
     val inserted = source.count() - matchedSrc
-    val moved = land(spark, path, gatedBy = Some(manifestRoot))(
+    val moved = land(spark, path, gatedBy = Some(at.root))(
       Layout.zorderWrite(newData, cols, _, nFiles))
-    MergeFullResult(swapCommit(spark, manifestRoot, manifest, hit,
+    MergeFullResult(swapCommit(spark, at.root, manifest, hit,
         statsFor(spark, moved, cols)), hit.size.toLong,
       total, updated, inserted, deleted)
   }
@@ -1943,7 +2016,7 @@ object Snapshots {
     var attempts = 0
     while (attempts < 100) {
       attempts += 1
-      val h = head(spark, manifestRoot)
+      val h = tableHead(spark, manifestRoot)
       val latest = h.version
       var rebased = 0
       commits(spark, manifestRoot, txn.readVersion, latest).foreach { c =>
@@ -2143,10 +2216,12 @@ object Snapshots {
       chunks.map(_.stripPrefix(prefix)).filter(_.nonEmpty)
         .flatMap(split).toMap
 
-    /** The map in force at `version`, if any commit at or below set one. */
-    def at(spark: SparkSession, manifestRoot: String,
-           version: Int): Option[Map[String, String]] =
-      inForce(spark, manifestRoot, version, prefix).map(h => parse(h._2))
+    /** The map in force at `version`, if any commit at or below set one,
+      * over the root `listing` (evaluated only on a miss). */
+    def at(spark: SparkSession, manifestRoot: String, version: Int,
+           listing: => Seq[Int]): Option[Map[String, String]] =
+      inForce(spark, manifestRoot, version, prefix, listing)
+        .map(h => parse(h._2))
   }
 
   // separators '~' and ',' (and '.') are outside the base64url alphabet
@@ -2173,21 +2248,17 @@ object Snapshots {
       b64d(n) -> b64d(c)
     })
 
-  /** ONE metadata-only commit: the head's manifest carried forward
-    * unchanged, plus the markers `change(head)` returns as (name, body)
-    * pairs — a name-encoded marker has an empty body. The head is read
-    * once and handed to `change`, so what is computed and what is carried
-    * describe the same version. A change with nothing to stage and no tag
-    * commits nothing and returns the head (the IF EXISTS no-op). */
-  private[graft] def metadataCommit(spark: SparkSession, manifestRoot: String,
+  /** ONE metadata-only commit: the manifest of head `at` carried forward
+    * unchanged, plus the `files` markers computed from that same head as
+    * (name, body) pairs — a name-encoded marker has an empty body. No
+    * files and no tag commits nothing and returns the head (the IF EXISTS
+    * no-op). */
+  private[graft] def metadataCommit(spark: SparkSession, at: TableHead,
                                     tag: Option[String] = None)
-                                   (change: Int => Seq[(String, String)]): Int = {
-    val v = latestVersion(spark, manifestRoot)
-    val files = change(v)
-    if (files.isEmpty && tag.isEmpty) v
-    else commit(spark, manifestAt(spark, manifestRoot, v), manifestRoot, tag,
+                                   (files: Seq[(String, String)]): Int =
+    if (files.isEmpty && tag.isEmpty) at.version
+    else commit(spark, manifestAt(spark, at.root, at.version), at.root, tag,
       contentFiles = files)
-  }
 
   private def named(markers: Seq[String]): Seq[(String, String)] =
     markers.map(_ -> "")
@@ -2197,28 +2268,32 @@ object Snapshots {
     * is a NEW commit), so this is a walk over memoized marker names. */
   def tableProperties(spark: SparkSession, manifestRoot: String,
                       version: Int): Map[String, String] =
-    Props.at(spark, manifestRoot, version).getOrElse(Map.empty)
+    headAt(spark, manifestRoot, version).props
 
   /** SET TBLPROPERTIES — Delta merge semantics (existing keys overwrite,
     * others persist), as ONE metadata-only marker commit: the next
     * version carries the current manifest content unchanged plus the
     * merged map. */
   def setProperties(spark: SparkSession, manifestRoot: String,
+                    props: Map[String, String]): Int =
+    setProperties(spark, tableHead(spark, manifestRoot), props)
+
+  def setProperties(spark: SparkSession, at: TableHead,
                     props: Map[String, String]): Int = {
     require(props.nonEmpty, "SET TBLPROPERTIES with no properties")
-    metadataCommit(spark, manifestRoot) { v =>
-      named(Props.names(tableProperties(spark, manifestRoot, v) ++ props))
-    }
+    metadataCommit(spark, at)(named(Props.names(at.props ++ props)))
   }
 
   /** UNSET TBLPROPERTIES — removes the keys (missing keys are a no-op,
     * the IF EXISTS convention), one metadata-only marker commit. */
   def unsetProperties(spark: SparkSession, manifestRoot: String,
+                      keys: Seq[String]): Int =
+    unsetProperties(spark, tableHead(spark, manifestRoot), keys)
+
+  def unsetProperties(spark: SparkSession, at: TableHead,
                       keys: Seq[String]): Int = {
     require(keys.nonEmpty, "UNSET TBLPROPERTIES with no keys")
-    metadataCommit(spark, manifestRoot) { v =>
-      named(Props.names(tableProperties(spark, manifestRoot, v) -- keys))
-    }
+    metadataCommit(spark, at)(named(Props.names(at.props -- keys)))
   }
 
   /** Table property carrying the DECLARED schema (StructType JSON) of a
@@ -2238,13 +2313,7 @@ object Snapshots {
     * changes are NEW commits) — and opened only where it is listed. */
   def declaredSchemaAt(spark: SparkSession, manifestRoot: String,
                        version: Int): Option[StructType] =
-    inForce(spark, manifestRoot, version, SchemaMarker).map { case (v, _) =>
-      MetaCache.getOrElseUpdate(manifestRoot, ("schema", v)) {
-        org.apache.spark.sql.types.DataType.fromJson(
-          markerContent(spark, manifestRoot, v, SchemaMarker).get)
-          .asInstanceOf[StructType]
-      }
-    }
+    headAt(spark, manifestRoot, version).schema
 
   /** Re-declare the table's schema — ONE metadata-only commit carrying a
     * fresh `_schema.json` whose content is `update(current)`. This is how
@@ -2254,15 +2323,13 @@ object Snapshots {
     * declaration, and every later write path reads the new one through
     * [[declaredSchemaAt]]. Fails on tables born from data (no declared
     * schema to amend). */
-  def updateDeclaredSchema(spark: SparkSession, manifestRoot: String)
-                          (update: StructType => StructType): Int =
-    metadataCommit(spark, manifestRoot) { v =>
-      val cur = declaredSchemaAt(spark, manifestRoot, v).getOrElse(
-        throw new IllegalArgumentException(
-          "no declared schema to alter — the table was born from data " +
-            "(CTAS/CONVERT/register), not CREATE TABLE"))
-      Seq(SchemaMarker -> update(cur).json)
-    }
+  def updateDeclaredSchema(spark: SparkSession, at: TableHead)
+                          (update: StructType => StructType): Int = {
+    val cur = at.schema.getOrElse(throw new IllegalArgumentException(
+      "no declared schema to alter — the table was born from data " +
+        "(CTAS/CONVERT/register), not CREATE TABLE"))
+    metadataCommit(spark, at)(Seq(SchemaMarker -> update(cur).json))
+  }
 
   /** Is `from → to` a lossless TYPE WIDENING — the Delta type-widening
     * whitelist (public contract): integral up-casts, int→double,
@@ -2302,12 +2369,11 @@ object Snapshots {
   def widenColumn(spark: SparkSession, manifestRoot: String,
                   column: String,
                   newType: org.apache.spark.sql.types.DataType): Int = {
-    val head = latestVersion(spark, manifestRoot)
-    require(columnMapping(spark, manifestRoot, head).isEmpty,
+    val at = tableHead(spark, manifestRoot)
+    require(at.mapping.isEmpty,
       "ALTER COLUMN TYPE under a column mapping is not supported")
     val lower = column.toLowerCase(java.util.Locale.ROOT)
-    val current = declaredSchemaAt(spark, manifestRoot, head)
-      .getOrElse(tableAt(spark, manifestRoot, head).schema)
+    val current = at.schema.getOrElse(tableAt(spark, at).schema)
     val field = current.fields.find(
       _.name.toLowerCase(java.util.Locale.ROOT) == lower).getOrElse(
       throw new IllegalArgumentException(
@@ -2321,7 +2387,7 @@ object Snapshots {
       if (f.name.toLowerCase(java.util.Locale.ROOT) == lower)
         f.copy(dataType = newType)
       else f))
-    val m = Dv.ensureDv(manifestAt(spark, manifestRoot, head))
+    val m = Dv.ensureDv(manifestAt(spark, manifestRoot, at.version))
     val statMin = m.columns.find(_.equalsIgnoreCase(s"min_$lower"))
     val statMax = m.columns.find(_.equalsIgnoreCase(s"max_$lower"))
     val m2 = (statMin, statMax) match {
@@ -2413,30 +2479,19 @@ object Snapshots {
     (out, next + step * rows)
   }
 
-  /** Marker NAMES for a superseding property map = current ∪ `updates` —
-    * lets a DATA commit carry a property update in the SAME atomic
-    * rename (e.g. the identity high-water mark riding its INSERT's
-    * commit, never a separate metadata commit that could be lost
-    * between the two). */
-  def mergedPropsMarkers(spark: SparkSession, manifestRoot: String,
-                         updates: Map[String, String]): Seq[String] =
-    Props.names(tableProperties(spark, manifestRoot,
-      latestVersion(spark, manifestRoot)) ++ updates)
-
   /** The column mapping in force at `version`: the marker of the LARGEST
     * version at or below it that carries one (a mapping, once committed,
     * applies to every later version until superseded). None ⇒ physical
     * names are the visible schema. */
   def columnMapping(spark: SparkSession, manifestRoot: String,
                     version: Int): Option[Map[String, String]] =
-    Cmap.at(spark, manifestRoot, version)
+    headAt(spark, manifestRoot, version).mapping
 
-  /** The mapping to commit against at head `v`: the one in force, or
+  /** The mapping to commit against at head `at`: the one in force, or
     * identity over the snapshot's physical schema when none exists yet. */
-  private def currentMapping(spark: SparkSession, manifestRoot: String,
-                             v: Int): Map[String, String] =
-    columnMapping(spark, manifestRoot, v).getOrElse(
-      tableAt(spark, manifestRoot, v).columns.map(c => c -> c).toMap)
+  private def currentMapping(spark: SparkSession,
+                             at: TableHead): Map[String, String] =
+    at.mapping.getOrElse(tableAt(spark, at).columns.map(c => c -> c).toMap)
 
   /** RENAME a logical column — a metadata-only commit: the next version
     * carries the current manifest CONTENT unchanged plus the updated
@@ -2444,15 +2499,16 @@ object Snapshots {
     * q119 DV-re-point economics, applied to schema). Pinned reads below
     * the commit keep serving the old name. */
   def renameColumn(spark: SparkSession, manifestRoot: String,
-                   logicalOld: String, logicalNew: String): Int =
-    metadataCommit(spark, manifestRoot) { v =>
-      val cur = currentMapping(spark, manifestRoot, v)
-      require(cur.contains(logicalOld),
-        s"rename: no visible column '$logicalOld' (have ${cur.keys.toSeq.sorted})")
-      require(!cur.contains(logicalNew),
-        s"rename: '$logicalNew' already visible")
-      named(Cmap.names((cur - logicalOld) + (logicalNew -> cur(logicalOld))))
-    }
+                   logicalOld: String, logicalNew: String): Int = {
+    val at = tableHead(spark, manifestRoot)
+    val cur = currentMapping(spark, at)
+    require(cur.contains(logicalOld),
+      s"rename: no visible column '$logicalOld' (have ${cur.keys.toSeq.sorted})")
+    require(!cur.contains(logicalNew),
+      s"rename: '$logicalNew' already visible")
+    metadataCommit(spark, at)(named(
+      Cmap.names((cur - logicalOld) + (logicalNew -> cur(logicalOld)))))
+  }
 
   /** DROP a logical column — metadata-only like [[renameColumn]]: the
     * column vanishes from the visible schema at this version; pinned reads
@@ -2460,13 +2516,15 @@ object Snapshots {
     * later rewrite drops them). */
   def dropColumn(spark: SparkSession, manifestRoot: String,
                  logical: String): Int =
-    metadataCommit(spark, manifestRoot) { v =>
-      val cur = currentMapping(spark, manifestRoot, v)
-      require(cur.contains(logical),
-        s"drop: no visible column '$logical' (have ${cur.keys.toSeq.sorted})")
-      require(cur.size > 1, "drop would leave an empty visible schema")
-      named(Cmap.names(cur - logical))
-    }
+    dropColumn(spark, tableHead(spark, manifestRoot), logical)
+
+  def dropColumn(spark: SparkSession, at: TableHead, logical: String): Int = {
+    val cur = currentMapping(spark, at)
+    require(cur.contains(logical),
+      s"drop: no visible column '$logical' (have ${cur.keys.toSeq.sorted})")
+    require(cur.size > 1, "drop would leave an empty visible schema")
+    metadataCommit(spark, at)(named(Cmap.names(cur - logical)))
+  }
 
   /** EXTEND the mapping with a new logical column (schema-evolution ADD
     * after a rename/drop): once a mapping exists, an appended physical
@@ -2475,15 +2533,15 @@ object Snapshots {
     * through [[toPhysical]] as usual. The physical name defaults to the
     * logical one (a fresh column has nothing to indirect). */
   def extendMapping(spark: SparkSession, manifestRoot: String,
-                    logical: String, physical: Option[String] = None): Int =
-    metadataCommit(spark, manifestRoot) { v =>
-      val cur = currentMapping(spark, manifestRoot, v)
-      require(!cur.contains(logical), s"extend: '$logical' already visible")
-      val phys = physical.getOrElse(logical)
-      require(!cur.values.exists(_ == phys),
-        s"extend: physical '$phys' already mapped")
-      named(Cmap.names(cur + (logical -> phys)))
-    }
+                    logical: String, physical: Option[String] = None): Int = {
+    val at = tableHead(spark, manifestRoot)
+    val cur = currentMapping(spark, at)
+    require(!cur.contains(logical), s"extend: '$logical' already visible")
+    val phys = physical.getOrElse(logical)
+    require(!cur.values.exists(_ == phys),
+      s"extend: physical '$phys' already mapped")
+    metadataCommit(spark, at)(named(Cmap.names(cur + (logical -> phys))))
+  }
 
   /** ALTER TABLE ADD COLUMN — ONE metadata-only commit that (a) extends
     * the mapping with the new logical column and (b) declares its TYPE in
@@ -2493,16 +2551,15 @@ object Snapshots {
     * reads below the commit keep the old schema. Appended batches carry
     * the column physically from then on (the q118 footer-merge
     * mechanics), at which point the real values shadow the null fill. */
-  def addColumn(spark: SparkSession, manifestRoot: String, logical: String,
-                dataType: org.apache.spark.sql.types.DataType): Int =
-    metadataCommit(spark, manifestRoot) { v =>
-      val cur = currentMapping(spark, manifestRoot, v)
-      require(!cur.contains(logical), s"add: '$logical' already visible")
-      require(!cur.values.exists(_ == logical),
-        s"add: physical '$logical' already exists")
-      named(Cmap.names(cur + (logical -> logical)) :+
-        addColMarker(logical, dataType))
-    }
+  def addColumn(spark: SparkSession, at: TableHead, logical: String,
+                dataType: org.apache.spark.sql.types.DataType): Int = {
+    val cur = currentMapping(spark, at)
+    require(!cur.contains(logical), s"add: '$logical' already visible")
+    require(!cur.values.exists(_ == logical),
+      s"add: physical '$logical' already exists")
+    metadataCommit(spark, at)(named(Cmap.names(cur + (logical -> logical)) :+
+      addColMarker(logical, dataType)))
+  }
 
   private def addColMarker(physical: String,
                            dt: org.apache.spark.sql.types.DataType): String =
@@ -2512,8 +2569,9 @@ object Snapshots {
     * below `version` — the types [[mappedTableAt]] null-fills with until
     * data materializes the column. */
   private def declaredTypes(spark: SparkSession, manifestRoot: String,
-                            version: Int): Map[String, org.apache.spark.sql.types.DataType] =
-    accumulated(spark, manifestRoot, version, AddColPrefix).map { n =>
+                            version: Int, listing: Seq[Int])
+      : Map[String, org.apache.spark.sql.types.DataType] =
+    accumulated(spark, manifestRoot, version, AddColPrefix, listing).map { n =>
       val Array(p, ddl) = b64d(n.stripPrefix(AddColPrefix)).split(":", 2)
       p -> org.apache.spark.sql.types.DataType.fromDDL(ddl)
     }.toMap
@@ -2536,12 +2594,17 @@ object Snapshots {
     * by any data file serves as typed nulls (appended last, in logical
     * name order). */
   def mappedTableAt(spark: SparkSession, manifestRoot: String,
-                    version: Int): DataFrame = {
-    val t = tableAt(spark, manifestRoot, version)
-    columnMapping(spark, manifestRoot, version) match {
+                    version: Int): DataFrame =
+    mappedTableAt(spark, headAt(spark, manifestRoot, version))
+
+  /** [[mappedTableAt]] at a statement's head (or a version pinned
+    * through it). */
+  def mappedTableAt(spark: SparkSession, at: TableHead): DataFrame = {
+    val t = tableAt(spark, at)
+    at.mapping match {
       case None => t
       case Some(m) =>
-        val declared = declaredTypes(spark, manifestRoot, version)
+        val declared = declaredTypes(spark, at.root, at.version, at.listing)
         val order = t.columns.zipWithIndex.toMap
         val cols = m.toSeq
           .filter { case (_, p) => order.contains(p) }
@@ -2552,7 +2615,7 @@ object Snapshots {
           .sortBy(_._1)
           .map { case (l, p) => lit(null).cast(declared(p)).as(l) }
         require(cols.nonEmpty,
-          s"mapping at v$version matches no physical column of the snapshot")
+          s"mapping at v${at.version} matches no physical column of the snapshot")
         t.select(cols ++ synthesized: _*)
     }
   }
@@ -2807,8 +2870,8 @@ object Snapshots {
     * `_copy_<key>` markers and accumulate, and vacuum re-homes them).
     * Lists only the versions committed since the last call. */
   def copiedKeys(spark: SparkSession, manifestRoot: String): Set[String] =
-    accumulated(spark, manifestRoot, Int.MaxValue, CopyPrefix)
-      .map(_.stripPrefix(CopyPrefix)).toSet
+    accumulated(spark, manifestRoot, Int.MaxValue, CopyPrefix,
+      versions(spark, manifestRoot)).map(_.stripPrefix(CopyPrefix)).toSet
 
   final case class CopyResult(version: Int, filesLoaded: Long,
                               rowsLoaded: Long, filesSkipped: Long)
@@ -2827,19 +2890,18 @@ object Snapshots {
     * work; the data path is the ordinary staged z-ordered append — the
     * daily-ingest cadence cost is the new files' bytes, never the
     * table's. */
-  def copyIntoCommit(spark: SparkSession, path: String, manifestRoot: String,
+  def copyIntoCommit(spark: SparkSession, path: String, at: TableHead,
                      cols: Seq[String], nFiles: Int,
                      srcFiles: Seq[(String, String)],
                      read: Seq[String] => DataFrame): CopyResult = {
-    val loaded = copiedKeys(spark, manifestRoot)
+    val loaded = accumulated(spark, at.root, Int.MaxValue, CopyPrefix,
+      at.listing).map(_.stripPrefix(CopyPrefix)).toSet
     val (skip, fresh) = srcFiles.partition(f => loaded.contains(f._2))
-    if (fresh.isEmpty)
-      return CopyResult(latestVersion(spark, manifestRoot), 0L, 0L,
-        skip.size.toLong)
+    if (fresh.isEmpty) return CopyResult(at.version, 0L, 0L, skip.size.toLong)
     val batch = read(fresh.map(_._1)).localCheckpoint()
     val rows = batch.count()
-    val (version, _) = appendCommit(spark, batch, cols, path, manifestRoot,
-      nFiles, markers = fresh.map(f => CopyPrefix + f._2))
+    val (version, _) = appendCommit(spark, batch, cols, path, at, nFiles,
+      None, fresh.map(f => CopyPrefix + f._2), Seq.empty)
     CopyResult(version, fresh.size.toLong, rows, skip.size.toLong)
   }
 
@@ -2849,7 +2911,7 @@ object Snapshots {
     * expression text over PHYSICAL column names. */
   def checkConstraints(spark: SparkSession, manifestRoot: String,
                        version: Int): Map[String, String] =
-    Ck.at(spark, manifestRoot, version).getOrElse(Map.empty)
+    headAt(spark, manifestRoot, version).checks
 
   /** ADD a named CHECK constraint — ONE metadata-only commit after
     * validating that every EXISTING live row satisfies it (the Delta ADD
@@ -2859,37 +2921,37 @@ object Snapshots {
     * violate it. NULL passes; only explicit FALSE violates (SQL CHECK
     * three-valued semantics). */
   def addConstraint(spark: SparkSession, manifestRoot: String,
+                    name: String, condition: String): Int =
+    addConstraint(spark, tableHead(spark, manifestRoot), name, condition)
+
+  def addConstraint(spark: SparkSession, at: TableHead,
                     name: String, condition: String): Int = {
     require(name != null && name.nonEmpty, "constraint needs a name")
-    metadataCommit(spark, manifestRoot) { v =>
-      val cur = checkConstraints(spark, manifestRoot, v)
-      require(!cur.contains(name),
-        s"constraint '$name' already exists (${cur(name)})")
-      // an EMPTY table (a plain CREATE TABLE before any INSERT) trivially
-      // satisfies every constraint — nothing to validate, no scan
-      val entries = Dv.entries(Dv.ensureDv(manifestAt(spark, manifestRoot, v)))
-      val bad =
-        if (entries.isEmpty) 0L
-        else Dv.readLive(spark, entries, declaredSchemaAt(spark, manifestRoot, v))
-          .filter(!coalesce(expr(condition), lit(true))).count()
-      if (bad > 0)
-        throw new ConstraintViolationException(
-          s"cannot ADD CONSTRAINT '$name' CHECK ($condition): $bad existing " +
-            "rows violate it — nothing committed")
-      named(Ck.names(cur + (name -> condition)))
-    }
+    require(!at.checks.contains(name),
+      s"constraint '$name' already exists (${at.checks(name)})")
+    // an EMPTY table (a plain CREATE TABLE before any INSERT) trivially
+    // satisfies every constraint — nothing to validate, no scan
+    val entries = Dv.entries(Dv.ensureDv(manifestAt(spark, at.root, at.version)))
+    val bad =
+      if (entries.isEmpty) 0L
+      else Dv.readLive(spark, entries, at.schema)
+        .filter(!coalesce(expr(condition), lit(true))).count()
+    if (bad > 0)
+      throw new ConstraintViolationException(
+        s"cannot ADD CONSTRAINT '$name' CHECK ($condition): $bad existing " +
+          "rows violate it — nothing committed")
+    metadataCommit(spark, at)(named(Ck.names(at.checks + (name -> condition))))
   }
 
-  /** FOREIGN KEY constraints in force at `version` —
+  /** FOREIGN KEY constraints in force at head `at` —
     * name → (column, parent manifest root, parent key column). Stored as
     * `graft.fk.<name>` table properties (the parent is resolved to its
     * manifest root at ADD time, so enforcement never needs a name
     * registry). Unlike RELY constraints ([[graft.plans.RelyConstraints]],
     * optimizer hints the engine TRUSTS), these are ENFORCED: they gate
     * every staged write. */
-  def foreignKeys(spark: SparkSession, manifestRoot: String,
-                  version: Int): Map[String, (String, String, String)] =
-    tableProperties(spark, manifestRoot, version).collect {
+  def foreignKeys(at: TableHead): Map[String, (String, String, String)] =
+    at.props.collect {
       case (k, v) if k.startsWith("graft.fk.") =>
         val Array(c, root, key) = v.split("\t", 3)
         k.stripPrefix("graft.fk.") -> ((c, root, key))
@@ -2902,24 +2964,22 @@ object Snapshots {
     * three-valued logic); enforcement on later writes is a key-distinct
     * anti-join of the staged batch against the parent's live keys —
     * batch-keys-bounded, the parent streams once. */
-  def addForeignKey(spark: SparkSession, manifestRoot: String, name: String,
-                    column: String, parentManifestRoot: String,
+  def addForeignKey(spark: SparkSession, at: TableHead, name: String,
+                    column: String, parent: TableHead,
                     parentKey: String): Int = {
-    val v = latestVersion(spark, manifestRoot)
-    require(!foreignKeys(spark, manifestRoot, v).contains(name),
+    require(!foreignKeys(at).contains(name),
       s"foreign key '$name' already exists")
-    val entries = Dv.entries(Dv.ensureDv(manifestAt(spark, manifestRoot, v)))
+    val entries = Dv.entries(Dv.ensureDv(manifestAt(spark, at.root, at.version)))
     if (entries.nonEmpty) {
       val orphans = orphanCount(spark,
-        Dv.readLive(spark, entries, declaredSchemaAt(spark, manifestRoot, v)),
-        column, parentManifestRoot, parentKey)
+        Dv.readLive(spark, entries, at.schema), column, parent, parentKey)
       if (orphans > 0)
         throw new ConstraintViolationException(
           s"cannot ADD FOREIGN KEY '$name' ($column → $parentKey): " +
             s"$orphans existing rows have no parent — nothing committed")
     }
-    setProperties(spark, manifestRoot, Map(
-      s"graft.fk.$name" -> s"$column\t$parentManifestRoot\t$parentKey"))
+    setProperties(spark, at, Map(
+      s"graft.fk.$name" -> s"$column\t${parent.root}\t$parentKey"))
   }
 
   /** Child rows of `df` whose non-null `column` has no match in the
@@ -2928,12 +2988,10 @@ object Snapshots {
     * join is keys × keys, never rows × rows), then matches broadcast
     * back. */
   private def orphanCount(spark: SparkSession, df: DataFrame, column: String,
-                          parentManifestRoot: String,
-                          parentKey: String): Long = {
-    val pv = latestVersion(spark, parentManifestRoot)
+                          parentHead: TableHead, parentKey: String): Long = {
     val parent = Dv.readLive(spark,
-        Dv.entries(manifestAt(spark, parentManifestRoot, pv)),
-        declaredSchemaAt(spark, parentManifestRoot, pv))
+        Dv.entries(manifestAt(spark, parentHead.root, parentHead.version)),
+        parentHead.schema)
       .select(col(parentKey).as("_fk_p")).distinct()
     df.filter(col(column).isNotNull)
       .select(col(column).as("_fk_c")).distinct()
@@ -2946,15 +3004,16 @@ object Snapshots {
     * the commit are unaffected (constraints gate writes, not reads). */
   def dropConstraint(spark: SparkSession, manifestRoot: String,
                      name: String, ifExists: Boolean = false): Int =
-    metadataCommit(spark, manifestRoot) { v =>
-      val cur = checkConstraints(spark, manifestRoot, v)
-      if (cur.contains(name)) named(Ck.names(cur - name))
-      else {
-        require(ifExists,
-          s"no constraint '$name' (have ${cur.keys.toSeq.sorted.mkString(", ")})")
-        Seq.empty
-      }
-    }
+    dropConstraint(spark, tableHead(spark, manifestRoot), name, ifExists)
+
+  def dropConstraint(spark: SparkSession, at: TableHead, name: String,
+                     ifExists: Boolean): Int = {
+    require(at.checks.contains(name) || ifExists,
+      s"no constraint '$name' (have ${at.checks.keys.toSeq.sorted.mkString(", ")})")
+    metadataCommit(spark, at)(
+      if (at.checks.contains(name)) named(Ck.names(at.checks - name))
+      else Seq.empty)
+  }
 
   /** The write-path enforcement seam: validate a finished staging dir
     * against the constraint set in force at the log head NOW (at staging
@@ -2971,16 +3030,15 @@ object Snapshots {
   private def enforceStagedConstraints(spark: SparkSession,
                                        manifestRoot: String,
                                        staging: String): Unit = {
-    val v = latestVersion(spark, manifestRoot)
-    val fks = foreignKeys(spark, manifestRoot, v).toSeq.sortBy(_._1)
-    val cs = checkConstraints(spark, manifestRoot, v).toSeq.sorted
+    val at = tableHead(spark, manifestRoot)
+    val fks = foreignKeys(at).toSeq.sortBy(_._1)
+    val cs = at.checks.toSeq.sorted
     // NOT NULL (the OTHER write-side contract a Databricks table
     // carries): declared-nullable=false columns gate alongside the CHECK
     // constraints, in the SAME fused single-pass aggregate. Note the
     // semantics difference the fixture pins: a NULL PASSES a CHECK
     // (three-valued logic — only FALSE rejects) but FAILS NOT NULL.
-    val nn = declaredSchemaAt(spark, manifestRoot, v)
-      .map(_.fields.filter(!_.nullable).map(_.name).toSeq)
+    val nn = at.schema.map(_.fields.filter(!_.nullable).map(_.name).toSeq)
       .getOrElse(Seq.empty)
     if (fks.isEmpty && cs.isEmpty && nn.isEmpty) return
     val df = Dv.readDir(spark, staging)
@@ -2994,7 +3052,8 @@ object Snapshots {
     }
     fks.foreach { case (name, (column, parentRoot, parentKey)) =>
       if (present(column.toLowerCase(java.util.Locale.ROOT))) {
-        val orphans = orphanCount(spark, df, column, parentRoot, parentKey)
+        val orphans = orphanCount(spark, df, column,
+          tableHead(spark, parentRoot), parentKey)
         if (orphans > 0)
           reject(s"FOREIGN KEY '$name' ($column → $parentKey) violated by " +
             s"$orphans staged rows with no parent")
@@ -3033,7 +3092,7 @@ object Snapshots {
     * the table's CHECK constraints like every other write. A crash at any
     * point pre-commit leaves only unreferenced files. */
   def replaceWhereCommit(spark: SparkSession, batch: DataFrame,
-                         cols: Seq[String], path: String, manifestRoot: String,
+                         cols: Seq[String], path: String, at: TableHead,
                          nFiles: Int, prune: org.apache.spark.sql.Column,
                          pred: org.apache.spark.sql.Column,
                          cover: Option[(org.apache.spark.sql.Column, Seq[String])] = None)
@@ -3043,29 +3102,28 @@ object Snapshots {
       s"REPLACE WHERE batch has $escaped rows OUTSIDE the replaced " +
         "predicate — a scoped overwrite cannot smuggle rows past its " +
         "scope; nothing committed")
-    val h = head(spark, manifestRoot)
-    val total = localCount(h.manifest)
-    val hit = Dv.entries(h.manifest.filter(prune))
+    val total = localCount(at.manifest)
+    val hit = Dv.entries(at.manifest.filter(prune))
     // whole-file drops (same proof as [[deleteWherePred]]): the daily
     // `REPLACE WHERE run_date = X` re-land is THE partition-overwrite
     // workload — on a date-clustered layout the old partition's files are
     // fully covered, so the replace removes them metadata-only and pays
     // for writing the new batch, not rewriting the old one
-    val dropped = wholeFileDrops(spark, h.manifest, prune, cover)
+    val dropped = wholeFileDrops(spark, at.manifest, prune, cover)
     val rewrite = hit.filterNot(e => dropped.contains(e.file))
     // batch lands (and constraint-checks) FIRST: a rejected batch aborts
     // before any survivor rewrite work is spent
-    val bMoved = land(spark, path, gatedBy = Some(manifestRoot))(
+    val bMoved = land(spark, path, gatedBy = Some(at.root))(
       Layout.zorderWrite(batch, cols, _, nFiles))
     val (survivorFiles, deleted) =
       if (rewrite.isEmpty) (Seq.empty[String], 0L)
       else {
-        val live = Dv.readLive(spark, rewrite, h.schema)
+        val live = Dv.readLive(spark, rewrite, at.schema)
         val del = live.filter(pred).count()
         (land(spark, path, gatedBy = None)(
           live.filter(!coalesce(pred, lit(false))).write.parquet(_)), del)
       }
-    ReplaceResult(swapCommit(spark, manifestRoot, h.manifest, hit.map(_.file),
+    ReplaceResult(swapCommit(spark, at.root, at.manifest, hit.map(_.file),
         statsFor(spark, survivorFiles ++ bMoved, cols)), rewrite.size.toLong,
       total, deleted + dropped.values.sum, bMoved.size.toLong,
       dropped.size.toLong)
@@ -3136,7 +3194,8 @@ object Snapshots {
       finally out.close()
     }
     for (prefix <- Seq(CmapPrefix, CkPrefix, PropsPrefix, SchemaMarker))
-      inForce(spark, manifestRoot, cut, prefix).foreach { case (v, ms) =>
+      inForce(spark, manifestRoot, cut, prefix, versions(spark, manifestRoot))
+        .foreach { case (v, ms) =>
         if (dropSet.contains(v)) ms.foreach(rehome(v, _)) }
     drop.foreach(v => markerNames(spark, manifestRoot, v)
       .filter(n => n.startsWith(AddColPrefix) || n.startsWith(CopyPrefix))

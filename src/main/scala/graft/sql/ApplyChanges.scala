@@ -62,7 +62,9 @@ object ApplyChanges {
     * REGISTERED lake table whose schema is (key, payload…, start_at
     * BIGINT, end_at BIGINT, is_current BOOLEAN) and whose stats columns
     * include `key` (so the CLOSE merge prunes). A fresh target bootstraps
-    * from source v1 (opening intervals), then applies 2..head. */
+    * from the oldest visible source version f (opening intervals at f; a
+    * VACUUM may have dropped v1), then applies f+1..head. A target whose
+    * cursor lags past a source VACUUM refuses ([[Snapshots.commits]]). */
   def scd2(spark: SparkSession, srcRoot: String, targetName: String,
            key: String, payload: Seq[String]): ApplyResult = {
     val spec = LakeSql.specOf(targetName).getOrElse(
@@ -75,15 +77,16 @@ object ApplyChanges {
     var cursor = appliedCursor(spark, spec.manifestRoot)
     val from = cursor
     if (cursor == 0) {
-      val snap = Snapshots.tableAt(spark, srcRoot, 1)
+      val first = Snapshots.visibleVersions(spark, srcRoot).head
+      val snap = Snapshots.tableAt(spark, srcRoot, first)
         .select((key +: payload).map(col): _*)
-        .withColumn("start_at", lit(1L))
+        .withColumn("start_at", lit(first.toLong))
         .withColumn("end_at", lit(null).cast("long"))
         .withColumn("is_current", lit(true))
       Snapshots.appendCommit(spark, snap, spec.cols, spec.path,
-        spec.manifestRoot, spec.nFiles, tag = Some("scd2_1"))
+        spec.manifestRoot, spec.nFiles, tag = Some(s"scd2_$first"))
       applied += 1
-      cursor = 1
+      cursor = first
     }
     // visible source commits only: an aborted txn stage is not history
     Snapshots.commits(spark, srcRoot, cursor, head).foreach { c =>
@@ -108,8 +111,8 @@ object ApplyChanges {
         .withColumn("is_current", lit(true))
       if (opens.isEmpty)
         // pure-delete commit: the cursor tag still has to land atomically
-        Snapshots.metadataCommit(spark, spec.manifestRoot,
-          Some(s"scd2_$v"))(_ => Seq.empty)
+        Snapshots.metadataCommit(spark,
+          Snapshots.tableHead(spark, spec.manifestRoot), Some(s"scd2_$v"))(Nil)
       else
         Snapshots.appendCommit(spark, opens, spec.cols, spec.path,
           spec.manifestRoot, spec.nFiles, tag = Some(s"scd2_$v"))

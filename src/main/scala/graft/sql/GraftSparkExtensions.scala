@@ -121,13 +121,14 @@ final case class ResolveLakeTables(spark: SparkSession)
     // path; the `exists` probe keeps the non-catalog common case to one
     // cheap type walk, and the rewrite erases the match so the fixpoint
     // cannot loop.
+    val hs = new LakeSql.Heads(spark)
     val p =
       if (plan.exists {
         case r: DataSourceV2Relation => r.table.isInstanceOf[LakeRowTable]
         case _ => false
       }) plan.resolveOperatorsDown {
         case r: DataSourceV2Relation if r.table.isInstanceOf[LakeRowTable] =>
-          LakeSql.rewriteCatalogRelation(spark, r,
+          LakeSql.rewriteCatalogRelation(hs, r,
             r.table.asInstanceOf[LakeRowTable])
       }
       else plan
@@ -144,7 +145,7 @@ final case class ResolveLakeTables(spark: SparkSession)
     if (p.resolved) p
     else LakeSql.dmlCommand(p,
       n => spark.sessionState.catalog.isTempView(Seq(n))).getOrElse(
-      p.resolveOperatorsDown(LakeSql.substitutions(spark, _ => false)))
+      p.resolveOperatorsDown(LakeSql.substitutions(hs, _ => false)))
   }
 }
 
@@ -316,7 +317,7 @@ final class GraftSqlParser(delegate: ParserInterface)
     case rts: org.apache.spark.sql.catalyst.plans.logical.ReplaceTableAsSelect
         if LakeSql.claimableReplace(rts) =>
       LakeDmlCommand(LakeSql.longSchema(Seq("version", "files")),
-        s => LakeSql.runReplaceTas(s, rts))
+        s => LakeSql.runReplaceTas(new LakeSql.Heads(s), rts))
     case _ =>
       LakeSql.dmlCommand(plan, _ => false, multipartOnly = true)
         .getOrElse(plan)

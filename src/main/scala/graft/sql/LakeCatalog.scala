@@ -175,8 +175,7 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces {
     * properties CREATE TABLE recorded. Self-registers under `db.t`. */
   private def specOf(ident: Identifier): LakeTableSpec = {
     val root = tableRoot(ident)
-    val props = Snapshots.tableProperties(spark, new Path(root, "m").toString,
-      Snapshots.latestVersion(spark, new Path(root, "m").toString))
+    val props = Snapshots.tableHead(spark, new Path(root, "m").toString).props
     val manifestRoot = props.getOrElse("manifest_dir",
       new Path(root, "m").toString)
     val dataDir = props.getOrElse("data_dir", new Path(root, "z").toString)
@@ -321,18 +320,19 @@ final case class LakeRowTable(tableName: String, spec: LakeTableSpec,
 
   override def name(): String = tableName
 
+  /** The table's head, or the pinned version over its listing. */
+  private def head: Snapshots.TableHead = {
+    val h = Snapshots.tableHead(spark, spec.manifestRoot)
+    pinnedVersion.fold(h)(h.at)
+  }
+
   override def schema(): StructType =
-    Snapshots.mappedTableAt(spark, spec.manifestRoot,
-      pinnedVersion.getOrElse(
-        Snapshots.latestVersion(spark, spec.manifestRoot))).schema
+    Snapshots.mappedTableAt(spark, head).schema
 
   /** The manifest's property map (what SHOW TBLPROPERTIES / DESCRIBE
     * EXTENDED read through Spark's v2 execs) plus the structural facts. */
   override def properties(): util.Map[String, String] = {
-    val props = Snapshots.tableProperties(spark, spec.manifestRoot,
-      pinnedVersion.getOrElse(
-        Snapshots.latestVersion(spark, spec.manifestRoot)))
-    (props ++ Map(
+    (head.props ++ Map(
       TableCatalog.PROP_PROVIDER -> "lake",
       "stats_cols" -> spec.cols.mkString(","),
       "data_dir" -> spec.path,

@@ -290,12 +290,9 @@ object LakeSql {
     * plain OPTIMIZE to pick the incremental path. */
   private[sql] val ClusterByProp = "graft.cluster.by"
 
-  /** The clustering keys in force at HEAD, if any. */
-  private def clusterColsOf(spark: SparkSession,
-                            spec: LakeTableSpec): Seq[String] =
-    Snapshots.tableProperties(spark, spec.manifestRoot,
-        Snapshots.latestVersion(spark, spec.manifestRoot))
-      .get(ClusterByProp)
+  /** The clustering keys in force at head `h`, if any. */
+  private def clusterCols(h: Snapshots.TableHead): Seq[String] =
+    h.props.get(ClusterByProp)
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Seq.empty)
 
@@ -496,7 +493,7 @@ object LakeSql {
     * rewrite, extension grammar, Spark's grammar, lake claims), and the
     * plan is routed by [[sqlParsed]]. */
   def sql(spark: SparkSession, text: String): DataFrame =
-    sqlParsed(spark, parser(spark).parsePlan(text))
+    sqlParsed(new Heads(spark), parser(spark).parsePlan(text))
 
   /** The session's parser when the session carries [[GraftSparkExtensions]],
     * else Spark's wrapped in a [[GraftSqlParser]] — so this entry point
@@ -537,12 +534,13 @@ object LakeSql {
         metrics("version", "files_rewritten", "files_skipped", "files_out") {
           spark =>
             val spec = specByName(name)
-            val mapping = headMapping(spark, spec)
-            val zcols = Option(colList).map(zorderCols(spec, mapping, _))
+            val hs = new Heads(spark)
+            val h = hs(spec)
+            val zcols = Option(colList).map(zorderCols(spec, h.mapping, _))
             val cond = spark.sessionState.sqlParser.parseExpression(condText)
-            val (prune, _) = compileWhere(cond, spec, mapping, Some(spark))
-            val r = Snapshots.compactScopedCommit(spark, spec.path,
-              spec.manifestRoot, spec.cols, prune, spec.nFiles, zcols)
+            val (prune, _) = compileWhere(cond, spec, h.mapping, Some(hs))
+            val r = Snapshots.compactScopedCommit(spark, spec.path, h,
+              spec.cols, prune, spec.nFiles, zcols)
             Seq(r.version.toLong, r.filesRewritten, r.filesSkipped, r.filesOut)
         }
       // OPTIMIZE … ZORDER BY: re-layout the latest snapshot CLUSTERED on
@@ -555,18 +553,20 @@ object LakeSql {
       case OptimizeZRe(name, colList) =>
         metrics("version", "files_in", "files_out") { spark =>
           val spec = specByName(name)
-          val zcols = zorderCols(spec, headMapping(spark, spec), colList)
+          val h = Snapshots.tableHead(spark, spec.manifestRoot)
+          val zcols = zorderCols(spec, h.mapping, colList)
           val (version, nIn, nOut) = Snapshots.compactCommit(spark, spec.path,
-            spec.manifestRoot, spec.cols, spec.nFiles, zorderCols = Some(zcols))
+            h, spec.cols, spec.nFiles, Some(zcols))
           Seq(version.toLong, nIn.toLong, nOut.toLong)
         }
       case OptimizeFullRe(name) =>
         metrics("version", "files_in", "files_out") { spark =>
           val spec = specByName(name)
-          require(clusterColsOf(spark, spec).nonEmpty,
+          val h = Snapshots.tableHead(spark, spec.manifestRoot)
+          require(clusterCols(h).nonEmpty,
             s"OPTIMIZE $name FULL needs clustering keys — set them with " +
               "CREATE/ALTER TABLE … CLUSTER BY (…)")
-          recluster(spark, spec, full = true)
+          recluster(spark, spec, h, full = true)
         }
       case OptimizeRe(name, small) =>
         if (small == null)
@@ -576,11 +576,11 @@ object LakeSql {
             // clustered base stays byte-identical (liquid shape); tables
             // without keys keep the full re-layout compaction
             val spec = specByName(name)
-            if (clusterColsOf(spark, spec).nonEmpty)
-              recluster(spark, spec, full = false)
+            val h = Snapshots.tableHead(spark, spec.manifestRoot)
+            if (clusterCols(h).nonEmpty) recluster(spark, spec, h, full = false)
             else {
               val (version, nIn, nOut) = Snapshots.compactCommit(spark,
-                spec.path, spec.manifestRoot, spec.cols, spec.nFiles)
+                spec.path, h, spec.cols, spec.nFiles, None)
               Seq(version.toLong, nIn.toLong, nOut.toLong)
             }
           }
@@ -665,17 +665,17 @@ object LakeSql {
             StructField("stats_cols", StringType, nullable = false)))) {
           spark =>
             val spec = specByName(name)
-            val v = Snapshots.latestVersion(spark, spec.manifestRoot)
+            val h = Snapshots.tableHead(spark, spec.manifestRoot)
             val entries = graft.sinks.Dv.entries(
-              Snapshots.manifestAt(spark, spec.manifestRoot, v))
+              Snapshots.manifestAt(spark, spec.manifestRoot, h.version))
             val p = new org.apache.hadoop.fs.Path(spec.path)
             val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
             val bytes = entries.map(e =>
               fs.getFileStatus(new org.apache.hadoop.fs.Path(e.file)).getLen)
               .sum
-            val nv = Snapshots.versions(spark, spec.manifestRoot).size
             Seq(Row(name.toLowerCase(java.util.Locale.ROOT), spec.path,
-              entries.size.toLong, bytes, nv.toLong, spec.cols.mkString(",")))
+              entries.size.toLong, bytes, h.listing.size.toLong,
+              spec.cols.mkString(",")))
         }
       // ALTER TABLE … ADD CONSTRAINT … FOREIGN KEY: the enforced
       // referential contract — parent resolved to its manifest root NOW
@@ -684,17 +684,17 @@ object LakeSql {
       case AddFkRe(name, cname, column, parent, key, _)
           if isRegisteredName(name) && isRegisteredName(parent) =>
         metrics("version") { spark =>
-          val spec = specByName(name)
-          val pspec = specByName(parent)
+          val hs = new Heads(spark)
+          val (h, ph) = (hs(specByName(name)), hs(specByName(parent)))
           val childCol = physicalName(
             column.toLowerCase(java.util.Locale.ROOT),
-            headMapping(spark, spec), "FOREIGN KEY column")
+            h.mapping, "FOREIGN KEY column")
           val parentCol = physicalName(
             key.toLowerCase(java.util.Locale.ROOT),
-            headMapping(spark, pspec), "REFERENCES column")
-          Seq(Snapshots.addForeignKey(spark, spec.manifestRoot,
+            ph.mapping, "REFERENCES column")
+          Seq(Snapshots.addForeignKey(spark, h,
             cname.toLowerCase(java.util.Locale.ROOT), childCol,
-            pspec.manifestRoot, parentCol).toLong)
+            ph, parentCol).toLong)
         }
       case AlterColTypeRe(name, colName, typeStr) if isRegisteredName(name) =>
         metrics("version") { spark =>
@@ -707,9 +707,9 @@ object LakeSql {
       // applied to every read by [[aliasedTableAt]] → [[applyPolicies]].
       case SetRowFilterRe(name, cond) =>
         metrics("version") { spark =>
-          val spec = specByName(name)
-          validatePolicyExpr(spark, spec, cond.trim, None)
-          Seq(Snapshots.setProperties(spark, spec.manifestRoot,
+          val h = Snapshots.tableHead(spark, specByName(name).manifestRoot)
+          validatePolicyExpr(spark, h, cond.trim, None)
+          Seq(Snapshots.setProperties(spark, h,
             Map(RowFilterProp -> cond.trim)).toLong)
         }
       case DropRowFilterRe(name) =>
@@ -717,10 +717,10 @@ object LakeSql {
           specByName(name).manifestRoot, Seq(RowFilterProp)).toLong))
       case SetMaskRe(name, colName, maskExpr) =>
         metrics("version") { spark =>
-          val spec = specByName(name)
+          val h = Snapshots.tableHead(spark, specByName(name).manifestRoot)
           val c = colName.toLowerCase(java.util.Locale.ROOT)
-          validatePolicyExpr(spark, spec, maskExpr.trim, Some(c))
-          Seq(Snapshots.setProperties(spark, spec.manifestRoot,
+          validatePolicyExpr(spark, h, maskExpr.trim, Some(c))
+          Seq(Snapshots.setProperties(spark, h,
             Map(s"$MaskPropPrefix$c" -> maskExpr.trim)).toLong)
         }
       case DropMaskRe(name, colName) =>
@@ -761,17 +761,17 @@ object LakeSql {
       case AlterClusterRe(name, colList) if isRegisteredName(name) =>
         metrics("version") { spark =>
           val spec = specByName(name)
-          val mapping = headMapping(spark, spec)
+          val h = Snapshots.tableHead(spark, spec.manifestRoot)
           val ccols = colList.split(",").map(_.trim).filter(_.nonEmpty).toSeq
             .map(_.toLowerCase(java.util.Locale.ROOT))
           require(ccols.nonEmpty, "CLUSTER BY needs at least one column")
           val physical =
-            ccols.map(c => physicalName(c, mapping, "CLUSTER BY column"))
+            ccols.map(c => physicalName(c, h.mapping, "CLUSTER BY column"))
           val missing = physical.filterNot(spec.cols.contains)
           require(missing.isEmpty,
             s"CLUSTER BY columns must carry manifest stats (have " +
               s"${spec.cols.mkString(", ")}; missing ${missing.mkString(", ")})")
-          Seq(Snapshots.setProperties(spark, spec.manifestRoot,
+          Seq(Snapshots.setProperties(spark, h,
             Map(ClusterByProp -> ccols.mkString(","))).toLong)
         }
       // ANALYZE TABLE: one aggregate job over the LIVE rows (DV-masked rows
@@ -783,9 +783,8 @@ object LakeSql {
       // plans through Spark's expand, still one scan).
       case AnalyzeRe(name, forCols) if isRegisteredName(name) =>
         metrics("version", "row_count", "columns_analyzed") { spark =>
-          val spec = specByName(name)
-          val v = Snapshots.latestVersion(spark, spec.manifestRoot)
-          val df = Snapshots.mappedTableAt(spark, spec.manifestRoot, v)
+          val h = Snapshots.tableHead(spark, specByName(name).manifestRoot)
+          val df = Snapshots.mappedTableAt(spark, h)
           val cols =
             if (forCols == null) Seq.empty[String] else df.columns.toSeq
           val aggs = count(lit(1)).as("_rc") +: cols.flatMap(c => Seq(
@@ -798,8 +797,8 @@ object LakeSql {
             cols.zipWithIndex.flatMap { case (c, i) => Seq(
               s"stats.$c.distinctCount" -> longAt(1 + 2 * i).toString,
               s"stats.$c.nullCount" -> longAt(2 + 2 * i).toString) }
-          val nv = Snapshots.setProperties(spark, spec.manifestRoot, props)
-          Seq(nv.toLong, rc, cols.size.toLong)
+          Seq(Snapshots.setProperties(spark, h, props).toLong, rc,
+            cols.size.toLong)
         }
       // RESTORE TABLE (the Delta RESTORE statement): ONE metadata-only
       // roll-FORWARD commit re-referencing the target version's files —
@@ -864,15 +863,16 @@ object LakeSql {
         metrics("version", "files_rewritten", "files_total", "rows_deleted",
             "files_appended", "files_dropped") { spark =>
           val spec = specByName(name)
-          requireDmlClearance(spark, spec, "INSERT ... REPLACE WHERE")
-          val mapping = headMapping(spark, spec)
+          val hs = new Heads(spark)
+          val h = hs(spec)
+          requireDmlClearance(spark, h, "INSERT ... REPLACE WHERE")
           val cond = spark.sessionState.sqlParser.parseExpression(condText)
-          val (prune, pred) = compileWhere(cond, spec, mapping, Some(spark))
-          val batch = alignedPhysicalBatch(spark, spec,
+          val (prune, pred) = compileWhere(cond, spec, h.mapping, Some(hs))
+          val batch = alignedPhysicalBatch(hs, spec,
             spark.sessionState.sqlParser.parsePlan(queryText))
           val r = Snapshots.replaceWhereCommit(spark, batch, spec.cols,
-            spec.path, spec.manifestRoot, spec.nFiles, prune, pred,
-            compileCover(cond, spec, mapping, Some(spark)))
+            spec.path, h, spec.nFiles, prune, pred,
+            compileCover(cond, spec, h.mapping, Some(hs)))
           Seq(r.version.toLong, r.filesRewritten, r.filesTotal,
             r.rowsDeleted, r.filesAppended, r.filesDropped)
         }
@@ -934,12 +934,11 @@ object LakeSql {
   /** Re-cluster on the table's CLUSTER BY keys (incremental, or every
     * live file when `full`): the (version, files_in, files_out) values. */
   private def recluster(spark: SparkSession, spec: LakeTableSpec,
-                        full: Boolean): Seq[Long] = {
-    val mapping = headMapping(spark, spec)
-    val physical = clusterColsOf(spark, spec)
-      .map(c => physicalName(c, mapping, "CLUSTER BY column"))
-    val r = Snapshots.clusterIncrementalCommit(spark, spec.path,
-      spec.manifestRoot, spec.cols, physical, spec.nFiles, full = full)
+                        h: Snapshots.TableHead, full: Boolean): Seq[Long] = {
+    val physical = clusterCols(h)
+      .map(c => physicalName(c, h.mapping, "CLUSTER BY column"))
+    val r = Snapshots.clusterIncrementalCommit(spark, spec.path, h,
+      spec.cols, physical, spec.nFiles, full = full)
     Seq(r.version.toLong, r.filesReclustered, r.filesOut)
   }
 
@@ -978,13 +977,12 @@ object LakeSql {
     * DECLARED schema's field metadata and print back too. */
   private def showCreate(spark: SparkSession, name: String): String = {
     val spec = specByName(name)
-    val head = Snapshots.latestVersion(spark, spec.manifestRoot)
-    val declaredByName = Snapshots.declaredSchemaAt(spark,
-        spec.manifestRoot, head)
+    val h = Snapshots.tableHead(spark, spec.manifestRoot)
+    val declaredByName = h.schema
       .map(_.fields.map(f =>
         f.name.toLowerCase(java.util.Locale.ROOT) -> f).toMap)
       .getOrElse(Map.empty)
-    val fields = mappedTableSchema(spark, spec).fields.toSeq
+    val fields = Snapshots.mappedTableAt(spark, h).schema.fields.toSeq
       .map { f =>
         val clauses = declaredByName
           .get(f.name.toLowerCase(java.util.Locale.ROOT)).toSeq
@@ -1005,7 +1003,7 @@ object LakeSql {
           }
         (s"  ${f.name} ${f.dataType.sql}" +: clauses).mkString(" ")
       }
-    val props = Snapshots.tableProperties(spark, spec.manifestRoot, head)
+    val props = h.props
     val all = Seq(
       "stats_cols" -> spec.cols.mkString(","),
       "files" -> spec.nFiles.toString,
@@ -1042,38 +1040,60 @@ object LakeSql {
           .digest((s"${st.getPath.toString}:${st.getLen}:" +
               st.getModificationTime)
             .getBytes("UTF-8")).map("%02x".format(_)).mkString))
-    val mapping = headMapping(spark, spec)
-    val logicalSchema = Snapshots.mappedTableAt(spark, spec.manifestRoot,
-      Snapshots.latestVersion(spark, spec.manifestRoot)).schema
+    val h = Snapshots.tableHead(spark, spec.manifestRoot)
+    val logicalSchema = Snapshots.mappedTableAt(spark, h).schema
     def read(paths: Seq[String]): DataFrame = {
       val raw = fmt match {
         case "PARQUET" => spark.read.parquet(paths: _*)
         case "JSON" => spark.read.schema(logicalSchema).json(paths: _*)
       }
-      alignedPhysicalFrame(spark, spec, toPhysicalFrame(raw, mapping))
+      alignedPhysicalFrame(spark, h, toPhysicalFrame(raw, h.mapping))
     }
-    val r = Snapshots.copyIntoCommit(spark, spec.path, spec.manifestRoot,
-      spec.cols, spec.nFiles, files, read)
-    maybeAutoCompact(spark, spec)
+    val r = Snapshots.copyIntoCommit(spark, spec.path, h, spec.cols,
+      spec.nFiles, files, read)
+    maybeAutoCompact(spark, spec, h)
     r
   }
 
   /** Route one parsed statement: a command the parser claimed and lake
     * DML / property statements ([[dmlCommand]]) run their handler now;
     * everything else is lake DDL or a read. */
-  private[sql] def sqlParsed(spark: SparkSession,
-                             plan: LogicalPlan): DataFrame = plan match {
-    case c: LakeDmlCommand => c.exec(spark)
-    case _ =>
-      dmlCommand(plan, _ => false).fold(ddlOrRead(spark, plan))(_.exec(spark))
+  private[sql] def sqlParsed(hs: Heads, plan: LogicalPlan): DataFrame =
+    plan match {
+      case c: LakeDmlCommand => c.exec(hs.spark)
+      case _ => dmlCommand(plan, _ => false)
+        .fold(ddlOrRead(hs, plan))(_.exec(hs.spark))
+    }
+
+  /** The heads one statement acts on: each lake table's
+    * [[Snapshots.TableHead]] resolved ONCE, on first use, and handed to
+    * every reader and writer of that table in the statement — a self-join,
+    * a subquery and a DML statement's source read the version its target
+    * resolved. It lives only as long as its statement. */
+  private[sql] final class Heads(val spark: SparkSession) {
+    private val byRoot =
+      scala.collection.mutable.Map.empty[String, Snapshots.TableHead]
+
+    def apply(spec: LakeTableSpec): Snapshots.TableHead =
+      byRoot.getOrElseUpdate(spec.manifestRoot,
+        Snapshots.tableHead(spark, spec.manifestRoot))
+
+    /** Run a metadata-only commit (`run`) against `spec`'s head; the
+      * head then moves to the version the commit returned. */
+    def commit(spec: LakeTableSpec)(run: Snapshots.TableHead => Int): Int = {
+      val v = run(apply(spec))
+      byRoot(spec.manifestRoot) = apply(spec).after(v)
+      v
+    }
   }
 
-  private def ddlOrRead(spark: SparkSession, plan: LogicalPlan): DataFrame =
+  private def ddlOrRead(hs: Heads, plan: LogicalPlan): DataFrame = {
+    val spark = hs.spark
     plan match {
       case cts: CreateTableAsSelect =>
-        runCtas(spark, cts)
+        runCtas(hs, cts)
       case rts: ReplaceTableAsSelect =>
-        runReplaceTas(spark, rts)
+        runReplaceTas(hs, rts)
       case rc: RenameColumn if isLake(rc.table) =>
         val (_, spec) = lookup(rc.table).get
         val v = Snapshots.renameColumn(spark, spec.manifestRoot,
@@ -1081,17 +1101,14 @@ object LakeSql {
         metricsRow(spark, Seq("version" -> v.toLong))
       case dc: DropColumns if isLake(dc.table) =>
         val (_, spec) = lookup(dc.table).get
-        val v = dc.columnsToDrop.map(f =>
-          Snapshots.dropColumn(spark, spec.manifestRoot,
-            f.name.mkString("."))).last
+        val v = dc.columnsToDrop.map(f => hs.commit(spec)(
+          Snapshots.dropColumn(spark, _, f.name.mkString(".")))).last
         metricsRow(spark, Seq("version" -> v.toLong))
       // SHOW TBLPROPERTIES: the Delta table-property store's read side
       // (SET/UNSET TBLPROPERTIES commit through [[dmlCommand]];
       // superseding-set semantics, pinned reads see THEIR version's map)
       case sp: ShowTableProperties if isLake(sp.table) =>
-        val (_, spec) = lookup(sp.table).get
-        val props = Snapshots.tableProperties(spark, spec.manifestRoot,
-          Snapshots.latestVersion(spark, spec.manifestRoot))
+        val props = hs(lookup(sp.table).get._2).props
         val sel = sp.propertyKey match {
           case Some(k) => props.view.filterKeys(_ == k).toMap
           case None => props
@@ -1115,8 +1132,8 @@ object LakeSql {
           require(qct.default.isEmpty,
             "ADD COLUMN DEFAULT is not supported — added columns " +
               "null-fill until data arrives")
-          Snapshots.addColumn(spark, spec.manifestRoot, qct.colName,
-            qct.dataType)
+          hs.commit(spec)(
+            Snapshots.addColumn(spark, _, qct.colName, qct.dataType))
         }.last
         metricsRow(spark, Seq("version" -> v.toLong,
           "columns_added" -> ac.columnsToAdd.size.toLong))
@@ -1137,7 +1154,7 @@ object LakeSql {
           require(s.newDefaultExpression.nonEmpty || s.dropDefault,
             "ALTER COLUMN: nothing to change")
           val cname = s.column.name.mkString(".")
-          Snapshots.updateDeclaredSchema(spark, spec.manifestRoot) { cur =>
+          hs.commit(spec)(Snapshots.updateDeclaredSchema(spark, _) { cur =>
             val i = cur.fieldIndex(cname.toLowerCase(java.util.Locale.ROOT))
             val f = cur.fields(i)
             require(!f.metadata.contains(IdentityStartKey) &&
@@ -1154,7 +1171,7 @@ object LakeSql {
             }
             StructType(cur.fields.updated(i,
               f.copy(metadata = mb.build())))
-          }
+          })
         }.last
         metricsRow(spark, Seq("version" -> v.toLong))
       // ALTER TABLE … ADD CONSTRAINT <n> CHECK (<cond>): a PERSISTED
@@ -1168,31 +1185,26 @@ object LakeSql {
       // the parser encodes the target as Filter(NOT cond, relation) — the
       // "find violating rows" plan — so the table is the Filter's child
       case acc: AddCheckConstraint if isLake(constraintTarget(acc)) =>
-        val (_, spec) = lookup(constraintTarget(acc)).get
+        val h = hs(lookup(constraintTarget(acc)).get._2)
         val cc = acc.checkConstraint
         val name = Option(cc.userProvidedName).getOrElse(
           throw new IllegalArgumentException(
             "ADD CONSTRAINT needs an explicit name (generated names are " +
               "not stable across sessions)"))
-        val condition = headMapping(spark, spec) match {
+        val condition = h.mapping match {
           case None => cc.condition
           case Some(m) => toPhysicalExpr(cc.child, m).sql
         }
-        val v = Snapshots.addConstraint(spark, spec.manifestRoot, name,
-          condition)
+        val v = Snapshots.addConstraint(spark, h, name, condition)
         metricsRow(spark, Seq("version" -> v.toLong))
       case dcn: DropConstraint if isLake(dcn.table) =>
-        val (_, spec) = lookup(dcn.table).get
-        val v0 = Snapshots.latestVersion(spark, spec.manifestRoot)
+        val h = hs(lookup(dcn.table).get._2)
         // the name may be a CHECK or a FOREIGN KEY — FK edges live as
         // graft.fk.* properties, CHECKs as _ck_ markers
         val v =
-          if (Snapshots.foreignKeys(spark, spec.manifestRoot, v0)
-              .contains(dcn.name))
-            Snapshots.unsetProperties(spark, spec.manifestRoot,
-              Seq(s"graft.fk.${dcn.name}"))
-          else Snapshots.dropConstraint(spark, spec.manifestRoot,
-            dcn.name, dcn.ifExists)
+          if (Snapshots.foreignKeys(h).contains(dcn.name))
+            Snapshots.unsetProperties(spark, h, Seq(s"graft.fk.${dcn.name}"))
+          else Snapshots.dropConstraint(spark, h, dcn.name, dcn.ifExists)
         metricsRow(spark, Seq("version" -> v.toLong))
       // DROP TABLE: unregisters the name; PURGE also deletes the data
       // and manifest dirs (without it, files stay — the external-table
@@ -1231,9 +1243,7 @@ object LakeSql {
       // extended form appends the # Detailed Table Information block
       case DescribeRelation(rel, _, isExtended, _) if isLake(rel) =>
         val (name, spec) = lookup(rel).get
-        val head = Snapshots.latestVersion(spark, spec.manifestRoot)
-        val schema = Snapshots.mappedTableAt(spark, spec.manifestRoot, head)
-          .schema
+        val schema = Snapshots.mappedTableAt(spark, hs(spec)).schema
         val colRows = schema.fields.toSeq.map(f =>
           Row(f.name, f.dataType.catalogString, ""))
         val extra =
@@ -1244,14 +1254,15 @@ object LakeSql {
             Row("Name", name, ""),
             Row("Location", spec.path, ""),
             Row("Stats Columns", spec.cols.mkString(","), ""),
-            Row("Version", head.toString, ""))
+            Row("Version", hs(spec).version.toString, ""))
         spark.createDataFrame((colRows ++ extra).asJava, StructType(Seq(
           StructField("col_name", StringType, nullable = false),
           StructField("data_type", StringType, nullable = false),
           StructField("comment", StringType, nullable = false))))
       case read =>
-        GraftSqlBridge.ofRows(spark, resolveReads(spark, read))
+        GraftSqlBridge.ofRows(spark, resolveReads(hs, read))
     }
+  }
 
   // ---------------------------------------------------------------- reads
 
@@ -1265,16 +1276,17 @@ object LakeSql {
     * global) temp view is left for Spark's own resolver, even when a
     * lake table shares the name. Explicit `VERSION/TIMESTAMP AS OF` still
     * binds to the lake table — time travel is a lake-only capability, so
-    * the travel clause IS the disambiguation. */
-  private def resolveReads(spark: SparkSession, plan: LogicalPlan): LogicalPlan = {
-    val cteNames = plan.collect {
+    * the travel clause IS the disambiguation. Subquery plans resolve in
+    * the same pass, against the same heads. */
+  private def resolveReads(hs: Heads, plan: LogicalPlan): LogicalPlan = {
+    val cteNames = plan.collectWithSubqueries {
       case w: org.apache.spark.sql.catalyst.plans.logical.UnresolvedWith =>
         w.cteRelations.map(_._1.toLowerCase(java.util.Locale.ROOT))
     }.flatten.toSet
     def shadowed(name: String): Boolean =
       cteNames.contains(name) ||
-        spark.sessionState.catalog.isTempView(Seq(name))
-    plan.transformDown(substitutions(spark, shadowed))
+        hs.spark.sessionState.catalog.isTempView(Seq(name))
+    plan.transformDownWithSubqueries(substitutions(hs, shadowed))
   }
 
   /** The relation-substitution cases themselves — shared between
@@ -1283,25 +1295,24 @@ object LakeSql {
     * analyzer rule behind plain `spark.sql`, where Spark's own
     * substitution/resolution rules have already consumed CTEs and temp
     * views by the time an [[UnresolvedRelation]] reaches us). */
-  private[sql] def substitutions(spark: SparkSession,
+  private[sql] def substitutions(hs: Heads,
                                  shadowed: String => Boolean): PartialFunction[LogicalPlan, LogicalPlan] = {
       case rtt: RelationTimeTravel if isLake(rtt.relation) =>
         val (name, spec) = lookup(rtt.relation).get
-        val version = (rtt.version, rtt.timestamp) match {
-          case (Some(v), _) => v.toIntOption.getOrElse(
+        val h = hs(spec)
+        val read = (rtt.version, rtt.timestamp) match {
+          case (Some(v), _) => h.at(v.toIntOption.getOrElse(
             throw new IllegalArgumentException(
-              s"VERSION AS OF wants an integer version, got '$v'"))
-          case (_, Some(ts)) =>
-            Snapshots.versionAtTimestamp(spark, spec.manifestRoot,
-              evalTimestampMillis(ts))
-          case _ => Snapshots.latestVersion(spark, spec.manifestRoot)
+              s"VERSION AS OF wants an integer version, got '$v'")))
+          case (_, Some(ts)) => h.at(
+            Snapshots.versionAtTimestamp(hs.spark, h, evalTimestampMillis(ts)))
+          case _ => h
         }
-        aliasedTableAt(spark, name, spec, version)
+        aliasedTableAt(hs.spark, name, spec, read, h)
       case ur: UnresolvedRelation
           if isLake(ur) && !shadowed(lookup(ur).get._1) =>
         val (name, spec) = lookup(ur).get
-        aliasedTableAt(spark, name, spec,
-          Snapshots.latestVersion(spark, spec.manifestRoot))
+        aliasedTableAt(hs.spark, name, spec, hs(spec), hs(spec))
       // table-valued functions over the version log — the Delta-idiom SQL
       // surface for CDC and DESCRIBE HISTORY:
       //   table_changes('<table>', vFrom, vTo)  → the change feed between
@@ -1311,11 +1322,11 @@ object LakeSql {
       case tvf: UnresolvedTableValuedFunction
           if tvf.name.size == 1 &&
             tvf.name.head.equalsIgnoreCase("table_changes") =>
-        tableChangesPlan(spark, tvf.functionArgs)
+        tableChangesPlan(hs.spark, tvf.functionArgs)
       case tvf: UnresolvedTableValuedFunction
           if tvf.name.size == 1 &&
             tvf.name.head.equalsIgnoreCase("table_history") =>
-        tableHistoryPlan(spark, tvf.functionArgs)
+        tableHistoryPlan(hs.spark, tvf.functionArgs)
   }
 
   /** `table_changes('<table>', vFrom, vTo)` → the change feed between two
@@ -1379,23 +1390,17 @@ object LakeSql {
     new org.apache.spark.sql.catalyst.trees.TreeNodeTag[
       (String, Int, Seq[String])]("graft.lake.scan")
 
-  /** Apply the table's HEAD governance policies (row filter, then column
-    * masks — masks see RAW values, the Unity-Catalog evaluation order) to
-    * a read plan. Head, not the read's pinned version: a `VERSION AS OF`
-    * is not a policy bypass. Sessions with `graft.policy.bypass=true`
-    * read raw (the privileged-principal model). Soundness with the
-    * metadata-only aggregate rule is structural: a row filter interposes
-    * a `Filter`, a mask a non-attribute `Project` — either breaks
-    * [[ServeAggFromManifest]]'s match, so policied counts always scan. */
-  private def headPolicies(spark: SparkSession, spec: LakeTableSpec)
-      : (Option[String], Map[String, String]) = {
-    val props = Snapshots.tableProperties(spark, spec.manifestRoot,
-      Snapshots.latestVersion(spark, spec.manifestRoot))
-    (props.get(RowFilterProp), props.collect {
+  /** The governance policies in force at head `h`: the row filter and
+    * the column masks by column — none for a privileged session
+    * (`graft.policy.bypass=true`). */
+  private def policies(spark: SparkSession, h: Snapshots.TableHead)
+      : (Option[String], Map[String, String]) =
+    if (spark.conf.get("graft.policy.bypass", "false").toBoolean)
+      (None, Map.empty)
+    else (h.props.get(RowFilterProp), h.props.collect {
       case (k, v) if k.startsWith(MaskPropPrefix) =>
         k.stripPrefix(MaskPropPrefix) -> v
     })
-  }
 
   /** Read-dependent DML (DELETE / UPDATE / MERGE / REPLACE WHERE /
     * TRUNCATE) on a policy-protected table requires the PRIVILEGED
@@ -1404,10 +1409,10 @@ object LakeSql {
     * cannot see — the Databricks contract is that policies govern DML
     * too, and this engine enforces it by refusal rather than silent
     * raw-row DML. (Plain INSERT stays open — it reads nothing.) */
-  private[sql] def requireDmlClearance(spark: SparkSession, spec: LakeTableSpec,
-                                  stmt: String): Unit = {
-    if (spark.conf.get("graft.policy.bypass", "false").toBoolean) return
-    val (filter, masks) = headPolicies(spark, spec)
+  private[sql] def requireDmlClearance(spark: SparkSession,
+                                       h: Snapshots.TableHead,
+                                       stmt: String): Unit = {
+    val (filter, masks) = policies(spark, h)
     require(filter.isEmpty && masks.isEmpty,
       s"$stmt on a policy-protected table (row filter/mask in force) " +
         "requires the privileged session (graft.policy.bypass=true) — " +
@@ -1415,10 +1420,17 @@ object LakeSql {
         "reads cannot see")
   }
 
+  /** Apply the table's HEAD governance policies (row filter, then column
+    * masks — masks see RAW values, the Unity-Catalog evaluation order) to
+    * a read plan. Head, not the read's pinned version: a `VERSION AS OF`
+    * is not a policy bypass. Sessions with `graft.policy.bypass=true`
+    * read raw (the privileged-principal model). Soundness with the
+    * metadata-only aggregate rule is structural: a row filter interposes
+    * a `Filter`, a mask a non-attribute `Project` — either breaks
+    * [[ServeAggFromManifest]]'s match, so policied counts always scan. */
   private def applyPolicies(spark: SparkSession, df: DataFrame,
-                            spec: LakeTableSpec): DataFrame = {
-    if (spark.conf.get("graft.policy.bypass", "false").toBoolean) return df
-    val (filter, masks) = headPolicies(spark, spec)
+                            h: Snapshots.TableHead): DataFrame = {
+    val (filter, masks) = policies(spark, h)
     val filtered = filter match {
       case Some(f) => df.filter(org.apache.spark.sql.functions.expr(f))
       case None => df
@@ -1436,10 +1448,9 @@ object LakeSql {
   /** DDL-time validation of a policy expression: it must ANALYZE against
     * the table's live logical schema (and, for a mask, cast to the masked
     * column's type) — driver-side analysis only, no job. */
-  private def validatePolicyExpr(spark: SparkSession, spec: LakeTableSpec,
+  private def validatePolicyExpr(spark: SparkSession, h: Snapshots.TableHead,
                                  sql: String, maskCol: Option[String]): Unit = {
-    val df = Snapshots.mappedTableAt(spark, spec.manifestRoot,
-      Snapshots.latestVersion(spark, spec.manifestRoot))
+    val df = Snapshots.mappedTableAt(spark, h)
     maskCol match {
       case None =>
         df.filter(org.apache.spark.sql.functions.expr(sql))
@@ -1456,21 +1467,24 @@ object LakeSql {
     ()
   }
 
+  /** The plan reading `read` (the head, or a version pinned through it)
+    * under the policies in force at head `h`. */
   private def aliasedTableAt(spark: SparkSession, name: String,
-                             spec: LakeTableSpec, version: Int,
+                             spec: LakeTableSpec, read: Snapshots.TableHead,
+                             h: Snapshots.TableHead,
                              analyzed: Boolean = false): LogicalPlan = {
     // mappedTableAt = tableAt when no column mapping exists (identical
     // plan, so the q169 sameResult gate holds); under a mapping it serves
-    // physical columns under the LOGICAL names in force AT `version` —
-    // SQL reads are rename-aware and pinned reads keep old names
-    val df = applyPolicies(spark,
-      Snapshots.mappedTableAt(spark, spec.manifestRoot, version), spec)
+    // physical columns under the LOGICAL names in force AT the read's
+    // version — SQL reads are rename-aware and pinned reads keep old names
+    val df = applyPolicies(spark, Snapshots.mappedTableAt(spark, read), h)
     val inner =
       if (analyzed) df.queryExecution.analyzed else df.queryExecution.logical
-    if (Snapshots.columnMapping(spark, spec.manifestRoot, version).isEmpty)
+    if (read.mapping.isEmpty)
       inner.foreach {
         case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          lr.setTagValue(LakeScanTag, (spec.manifestRoot, version, spec.cols))
+          lr.setTagValue(LakeScanTag,
+            (spec.manifestRoot, read.version, spec.cols))
         case _ => ()
       }
     SubqueryAlias(name, inner)
@@ -1486,13 +1500,12 @@ object LakeSql {
     * resolved parent, so the replacement preserves the relation's output
     * attribute IDs via an aliasing projection. */
   private[sql] def rewriteCatalogRelation(
-      spark: SparkSession,
+      hs: Heads,
       r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation,
       t: LakeRowTable): LogicalPlan = {
-    val version = t.pinnedVersion.getOrElse(
-      Snapshots.latestVersion(spark, t.spec.manifestRoot))
-    val inner = aliasedTableAt(spark, t.tableName, t.spec, version,
-      analyzed = true)
+    val h = hs(t.spec)
+    val inner = aliasedTableAt(hs.spark, t.tableName, t.spec,
+      t.pinnedVersion.fold(h)(h.at), h, analyzed = true)
     val byName = inner.output
       .map(a => a.name.toLowerCase(java.util.Locale.ROOT) -> a).toMap
     val projs: Seq[org.apache.spark.sql.catalyst.expressions.NamedExpression] =
@@ -1507,14 +1520,6 @@ object LakeSql {
       }
     org.apache.spark.sql.catalyst.plans.logical.Project(projs, inner)
   }
-
-  /** The column mapping in force at the table's head (None before any
-    * ALTER) — the logical→physical indirection every DML statement must
-    * translate through. */
-  private def headMapping(spark: SparkSession,
-                          spec: LakeTableSpec): Option[Map[String, String]] =
-    Snapshots.columnMapping(spark, spec.manifestRoot,
-      Snapshots.latestVersion(spark, spec.manifestRoot))
 
   private def physicalName(logical: String,
                            mapping: Option[Map[String, String]],
@@ -1573,37 +1578,35 @@ object LakeSql {
     * the manifest outright on either path. Metrics are the superset
     * (`files_masked` 0 under CoW, `files_rewritten` 0 under MoR), in
     * [[dmlCommand]]'s DELETE order. */
-  private def runDelete(spark: SparkSession, target: LogicalPlan,
+  private def runDelete(hs: Heads, target: LogicalPlan,
                         condition: Expression): Seq[Long] = {
     val (_, spec) = lookup(target).get
-    requireDmlClearance(spark, spec, "DELETE")
-    val mapping = headMapping(spark, spec)
-    val (prune, pred) = compileWhere(condition, spec, mapping, Some(spark))
-    val cover = compileCover(condition, spec, mapping, Some(spark))
-    val mor = Snapshots.tableProperties(spark, spec.manifestRoot,
-      Snapshots.latestVersion(spark, spec.manifestRoot))
-      .get("delete.mode").exists(_.equalsIgnoreCase("mor"))
-    if (mor) {
-      val r = graft.sinks.Dv.deleteWhereMoRPred(spark, spec.path,
-        spec.manifestRoot, prune, pred, cover)
+    val h = hs(spec)
+    requireDmlClearance(hs.spark, h, "DELETE")
+    val (prune, pred) = compileWhere(condition, spec, h.mapping, Some(hs))
+    val cover = compileCover(condition, spec, h.mapping, Some(hs))
+    if (h.props.get("delete.mode").exists(_.equalsIgnoreCase("mor"))) {
+      val r = graft.sinks.Dv.deleteWhereMoRPred(hs.spark, spec.path, h,
+        prune, pred, cover)
       require(r.dataFilesWritten == 0, s"MoR delete wrote data files: $r")
       Seq(0L, r.filesTotal, r.rowsDeleted, r.filesDropped, r.filesMasked)
     } else {
-      val r = Snapshots.deleteWherePred(spark, spec.path,
-        spec.manifestRoot, spec.cols, prune, pred, cover)
+      val r = Snapshots.deleteWherePred(hs.spark, spec.path, h, spec.cols,
+        prune, pred, cover)
       Seq(r.filesRewritten, r.filesTotal, r.rowsDeleted, r.filesDropped, 0L)
     }
   }
 
-  private def runMerge(spark: SparkSession, m: MergeIntoTable): DataFrame = {
+  private def runMerge(hs: Heads, m: MergeIntoTable): DataFrame = {
+    val spark = hs.spark
     val (tname, spec) = lookup(m.targetTable).get
-    requireDmlClearance(spark, spec, "MERGE")
-    val mapping0 = headMapping(spark, spec)
+    val h0 = hs(spec)
+    requireDmlClearance(spark, h0, "MERGE")
     // the source arrives in the LOGICAL schema; the lake's rows are
     // physical — route it through the mapping before the commit
     val source = toPhysicalFrame(
-      GraftSqlBridge.ofRows(spark, resolveReads(spark, m.sourceTable)),
-      mapping0)
+      GraftSqlBridge.ofRows(spark, resolveReads(hs, m.sourceTable)),
+      h0.mapping)
     // WITH SCHEMA EVOLUTION (the Delta clause, parsed natively by Spark):
     // source columns absent from the table's visible schema are DECLARED
     // first — metadata-only ADD COLUMN commits, old rows serve typed
@@ -1611,7 +1614,7 @@ object LakeSql {
     // SET * / INSERT * carry the new columns. WITHOUT the clause, extra
     // source columns are REJECTED loudly (the schema-on-write default) —
     // never silently dropped, never silently evolved.
-    val visible0 = mappedTableSchema(spark, spec).fieldNames
+    val visible0 = Snapshots.mappedTableAt(spark, h0).schema.fieldNames
       .map(_.toLowerCase(java.util.Locale.ROOT)).toSet
     val extras = source.schema.fields.toSeq.filterNot(f =>
       visible0.contains(f.name.toLowerCase(java.util.Locale.ROOT)))
@@ -1621,17 +1624,17 @@ object LakeSql {
           s"[${extras.map(_.name).mkString(", ")}] — nothing committed; " +
           "add WITH SCHEMA EVOLUTION to declare them, or drop them from " +
           "the source")
-      extras.foreach(f =>
-        Snapshots.addColumn(spark, spec.manifestRoot, f.name, f.dataType))
+      extras.foreach(f => hs.commit(spec)(
+        Snapshots.addColumn(spark, _, f.name, f.dataType)))
     }
-    val mapping = if (extras.isEmpty) mapping0 else headMapping(spark, spec)
-    // the head VISIBLE schema in physical names — the merge's write
-    // schema (carries declared-but-unmaterialized columns)
-    val expectPhysical = {
-      val vis = mappedTableSchema(spark, spec)
-      org.apache.spark.sql.types.StructType(vis.fields.map(f =>
+    // the head after any evolution commits: its VISIBLE schema in
+    // physical names is the merge's write schema (carries
+    // declared-but-unmaterialized columns)
+    val h = hs(spec)
+    val mapping = h.mapping
+    val expectPhysical = org.apache.spark.sql.types.StructType(
+      Snapshots.mappedTableAt(spark, h).schema.fields.map(f =>
         f.copy(name = mapping.fold(f.name)(mp => mp(f.name)))))
-    }
     val keys = equiJoinKeys(m.mergeCondition)
       .map(k => physicalName(k, mapping, "MERGE key"))
     keys.foreach(key => require(spec.cols.contains(key),
@@ -1645,7 +1648,7 @@ object LakeSql {
       case (Seq(UpdateStarAction(None)), Seq(InsertStarAction(None)), Seq())
           if keys.sizeIs == 1 && extras.isEmpty =>
         val u = Snapshots.mergeCommit(spark, source, keys.head, spec.cols,
-          spec.path, spec.manifestRoot, spec.nFiles)
+          spec.path, h, spec.nFiles)
         Snapshots.MergeFullResult(u.version, u.filesRewritten, u.filesTotal,
           u.rowsUpdated, u.rowsInserted, rowsDeleted = 0L)
       case (Seq(UpdateStarAction(None)), Seq(InsertStarAction(None)),
@@ -1653,9 +1656,9 @@ object LakeSql {
           if keys.sizeIs == 1 && extras.isEmpty =>
         // the three-clause matrix: the delete clause must be stats-scoped
         // — same 100 TB honesty contract as Snapshots.mergeCommitFull
-        val (prune, pred) = compileWhere(cond, spec, mapping, Some(spark))
+        val (prune, pred) = compileWhere(cond, spec, mapping, Some(hs))
         Snapshots.mergeCommitFullPred(spark, source, keys.head,
-          spec.cols, spec.path, spec.manifestRoot, spec.nFiles, prune, pred)
+          spec.cols, spec.path, h, spec.nFiles, prune, pred)
       case (_, _, Seq(DeleteAction(None))) =>
         throw new IllegalArgumentException(
           "WHEN NOT MATCHED BY SOURCE THEN DELETE needs a scoping " +
@@ -1666,8 +1669,7 @@ object LakeSql {
         // the GENERAL clause matrix: conditional clauses, explicit SET
         // assignments and INSERT values, composite keys, matched DELETE,
         // and stats-scoped NOT MATCHED BY SOURCE UPDATE/DELETE
-        val rw = new MergeRewriter(spark, m, tname, spec, mapping,
-          source.columns.toSet)
+        val rw = new MergeRewriter(spark, m, tname, h, source.columns.toSet)
         val matched = matchedActs.map {
           case UpdateStarAction(c) =>
             Snapshots.MatchedUpdateStar(c.map(rw.pairExpr))
@@ -1699,10 +1701,10 @@ object LakeSql {
           "key is absent'"
         val compiledBySrc = bySrcActs.map {
           case DeleteAction(Some(c)) =>
-            val (prune, pred) = compileWhere(c, spec, mapping, Some(spark))
+            val (prune, pred) = compileWhere(c, spec, mapping, Some(hs))
             (prune, Snapshots.BySourceDelete(Some(pred)))
           case UpdateAction(Some(c), assigns, _) =>
-            val (prune, pred) = compileWhere(c, spec, mapping, Some(spark))
+            val (prune, pred) = compileWhere(c, spec, mapping, Some(hs))
             (prune, Snapshots.BySourceUpdateSet(Some(pred),
               assigns.map(a => rw.assignTarget(a) -> rw.tgtExpr(a.value))
                 .toMap))
@@ -1712,7 +1714,7 @@ object LakeSql {
             s"unsupported MERGE not-matched-by-source clause: $other")
         }
         Snapshots.mergeCommitClauses(spark, source, keys, spec.cols,
-          spec.path, spec.manifestRoot, spec.nFiles, matched, notMatched,
+          spec.path, h, spec.nFiles, matched, notMatched,
           compiledBySrc.map(_._2),
           compiledBySrc.map(_._1).reduceOption(_ || _),
           targetSchemaHint = Some(expectPhysical))
@@ -1735,8 +1737,7 @@ object LakeSql {
     * alias (or table name) wins its own; unqualified refs resolve
     * target-first (matched context) / source-only (insert context). */
   private final class MergeRewriter(spark: SparkSession, m: MergeIntoTable,
-                                    tname: String, spec: LakeTableSpec,
-                                    mapping: Option[Map[String, String]],
+                                    tname: String, h: Snapshots.TableHead,
                                     sourceCols: Set[String]) {
     private def aliasOf(p: LogicalPlan): Option[String] = p match {
       case SubqueryAlias(id, _) => Some(id.name)
@@ -1746,16 +1747,15 @@ object LakeSql {
     private val srcAlias = aliasOf(m.sourceTable)
     // visible LOGICAL target columns: the mapping's keys when one exists,
     // else the table's physical schema (plan-only read, no job)
-    private val targetLogical: Set[String] = mapping match {
+    private val targetLogical: Set[String] = h.mapping match {
       case Some(mp) => mp.keySet
-      case None => Snapshots.tableAt(spark, spec.manifestRoot,
-        Snapshots.latestVersion(spark, spec.manifestRoot)).columns.toSet
+      case None => Snapshots.tableAt(spark, h).columns.toSet
     }
     private val srcLower = sourceCols.map(_.toLowerCase(java.util.Locale.ROOT))
 
     private def isSrcQ(q: String) = srcAlias.exists(_.equalsIgnoreCase(q))
     private def isTgtQ(q: String) = tgtAlias.equalsIgnoreCase(q)
-    private def phys(n: String) = physicalName(n, mapping, "MERGE expression")
+    private def phys(n: String) = physicalName(n, h.mapping, "MERGE expression")
     private def inSource(physical: String) =
       srcLower.contains(physical.toLowerCase(java.util.Locale.ROOT))
 
@@ -1832,8 +1832,8 @@ object LakeSql {
     * `INSERT OVERWRITE` is rejected: on a versioned lake table the
     * replace-everything semantic is a delete+insert the caller must spell
     * out (an accidental OVERWRITE at 100 TB is not a typo to forgive). */
-  private def runInsert(spark: SparkSession,
-                        ins: InsertIntoStatement): Seq[Long] = {
+  private def runInsert(hs: Heads, ins: InsertIntoStatement): Seq[Long] = {
+    val spark = hs.spark
     val (_, spec) = lookup(ins.table).get
     require(!ins.overwrite,
       "INSERT OVERWRITE is not supported on a versioned lake table — " +
@@ -1841,15 +1841,15 @@ object LakeSql {
     require(ins.partitionSpec.isEmpty,
       "supported form: INSERT INTO <table> [(column list)] <query> " +
         "(no partition spec)")
-    val head = Snapshots.latestVersion(spark, spec.manifestRoot)
-    val declared = Snapshots.declaredSchemaAt(spark, spec.manifestRoot, head)
+    val h = hs(spec)
+    val declared = h.schema
     val engineCols = declared.map(_.fields.filter(f =>
       f.metadata.contains(IdentityStartKey) ||
         f.metadata.contains(GenerationKey)).toSeq).getOrElse(Seq.empty)
     if (engineCols.isEmpty && ins.userSpecifiedCols.isEmpty) {
-      val aligned = alignedPhysicalBatch(spark, spec, ins.query)
+      val aligned = alignedPhysicalBatch(hs, spec, ins.query)
       val (version, files) = Snapshots.appendCommit(spark, aligned, spec.cols,
-        spec.path, spec.manifestRoot, spec.nFiles)
+        spec.path, h, spec.nFiles, None, Seq.empty, Seq.empty)
       return Seq(version.toLong, files.toLong)
     }
     // ENGINE-ASSIGNED columns (identity / generated): the batch supplies
@@ -1864,7 +1864,7 @@ object LakeSql {
       "INSERT with a column list needs a declared schema (CREATE TABLE) " +
         "— tables born from data (CTAS/CONVERT) take full-width batches")
     def lower(s: String) = s.toLowerCase(java.util.Locale.ROOT)
-    val src = GraftSqlBridge.ofRows(spark, resolveReads(spark, ins.query))
+    val src = GraftSqlBridge.ofRows(spark, resolveReads(hs, ins.query))
     val engineNames = engineCols.map(f => lower(f.name)).toSet
     val explicit = (src.columns.map(lower).toSet ++
       ins.userSpecifiedCols.map(lower)).intersect(engineNames)
@@ -1919,12 +1919,11 @@ object LakeSql {
     // declared order, so positional mechanics downstream stay stable
     out = out.select(userFields.map(f =>
       org.apache.spark.sql.functions.col(f.name)).toIndexedSeq: _*)
-    val props = Snapshots.tableProperties(spark, spec.manifestRoot, head)
     var hwm = Map.empty[String, String]
     engineCols.foreach { f =>
       if (f.metadata.contains(IdentityStartKey)) {
         val step = f.metadata.getLong(IdentityStepKey)
-        val next = props.get(s"identity.next.${f.name}").map(_.toLong)
+        val next = h.props.get(s"identity.next.${f.name}").map(_.toLong)
           .getOrElse(f.metadata.getLong(IdentityStartKey))
         val (assigned, after) =
           Snapshots.assignIdentity(out, f.name, f.dataType, next, step)
@@ -1936,14 +1935,13 @@ object LakeSql {
           org.apache.spark.sql.functions.expr(
             f.metadata.getString(GenerationKey)).cast(f.dataType))
     }
-    val aligned = alignedPhysicalFrame(spark, spec,
-      toPhysicalFrame(out, headMapping(spark, spec)))
+    val aligned = alignedPhysicalFrame(spark, h, toPhysicalFrame(out, h.mapping))
     // the identity HIGH-WATER MARK rides the same atomic commit as the
     // data — a crash can never assign the same id range twice
     val markers = if (hwm.isEmpty) Seq.empty
-      else Snapshots.mergedPropsMarkers(spark, spec.manifestRoot, hwm)
+      else Snapshots.Props.names(h.props ++ hwm)
     val (version, files) = Snapshots.appendCommit(spark, aligned, spec.cols,
-      spec.path, spec.manifestRoot, spec.nFiles, markers = markers)
+      spec.path, h, spec.nFiles, None, markers, Seq.empty)
     Seq(version.toLong, files.toLong)
   }
 
@@ -1956,25 +1954,18 @@ object LakeSql {
     * order. Safe upcasts are aligned in place; the projection also fixes
     * column ORDER to the table's, so footer order never varies by writer.
     * Shared by INSERT INTO and INSERT INTO … REPLACE WHERE. */
-  private def alignedPhysicalBatch(spark: SparkSession, spec: LakeTableSpec,
+  private def alignedPhysicalBatch(hs: Heads, spec: LakeTableSpec,
                                    query: LogicalPlan): DataFrame =
-    alignedPhysicalFrame(spark, spec, toPhysicalFrame(
-      GraftSqlBridge.ofRows(spark, resolveReads(spark, query)),
-      headMapping(spark, spec)))
-
-  /** The table's VISIBLE (logical-name) schema at head — mapping-aware,
-    * declared-column-aware. */
-  private def mappedTableSchema(spark: SparkSession,
-                                spec: LakeTableSpec): StructType =
-    Snapshots.mappedTableAt(spark, spec.manifestRoot,
-      Snapshots.latestVersion(spark, spec.manifestRoot)).schema
+    alignedPhysicalFrame(hs.spark, hs(spec), toPhysicalFrame(
+      GraftSqlBridge.ofRows(hs.spark, resolveReads(hs, query)),
+      hs(spec).mapping))
 
   /** Frame-level half of [[alignedPhysicalBatch]] — the batch is already
     * in PHYSICAL names; shared with COPY INTO. */
-  private def alignedPhysicalFrame(spark: SparkSession, spec: LakeTableSpec,
+  private def alignedPhysicalFrame(spark: SparkSession, h: Snapshots.TableHead,
                                    batch0: DataFrame): DataFrame = {
-    val headMap = headMapping(spark, spec)
-    val visible = mappedTableSchema(spark, spec)
+    val headMap = h.mapping
+    val visible = Snapshots.mappedTableAt(spark, h).schema
     // the batch is already physical; compare against the VISIBLE schema
     // translated to physical names (covers ADD-COLUMN-declared columns
     // the data files don't carry yet)
@@ -2042,8 +2033,8 @@ object LakeSql {
     * pruned DML), committed as v1, and registered for every other
     * statement. `IF NOT EXISTS` on an existing table is a no-op (version 0
     * metrics row); a bare CREATE on an existing table is an error. */
-  private def runCtas(spark: SparkSession,
-                      cts: CreateTableAsSelect): DataFrame = {
+  private def runCtas(hs: Heads, cts: CreateTableAsSelect): DataFrame = {
+    val spark = hs.spark
     val name = cts.name match {
       case UnresolvedIdentifier(Seq(n), _) =>
         n.toLowerCase(java.util.Locale.ROOT)
@@ -2074,7 +2065,7 @@ object LakeSql {
       throw new IllegalArgumentException(
         s"lake table '$name' already exists (use IF NOT EXISTS)")
     }
-    val df = GraftSqlBridge.ofRows(spark, resolveReads(spark, cts.query))
+    val df = GraftSqlBridge.ofRows(spark, resolveReads(hs, cts.query))
     val missing = spec.cols.filterNot(df.columns.contains)
     require(missing.isEmpty,
       s"stats_cols ${missing.mkString(", ")} not in the CTAS query's " +
@@ -2097,8 +2088,9 @@ object LakeSql {
     * without it requires existence). Refused loudly under column mapping
     * or CHECK constraints: those contracts ride version markers that
     * would silently re-apply to the replaced schema. */
-  private[sql] def runReplaceTas(spark: SparkSession,
-                            rts: ReplaceTableAsSelect): DataFrame = {
+  private[sql] def runReplaceTas(hs: Heads,
+                                 rts: ReplaceTableAsSelect): DataFrame = {
+    val spark = hs.spark
     val name = rts.name match {
       case UnresolvedIdentifier(Seq(n), _) =>
         n.toLowerCase(java.util.Locale.ROOT)
@@ -2118,22 +2110,22 @@ object LakeSql {
         require(rts.orCreate,
           s"REPLACE TABLE: lake table '$name' does not exist " +
             "(use CREATE OR REPLACE TABLE)")
-        runCtas(spark, CreateTableAsSelect(rts.name, rts.partitioning,
+        runCtas(hs, CreateTableAsSelect(rts.name, rts.partitioning,
           rts.query, rts.tableSpec, rts.writeOptions, ignoreIfExists = false))
       case Some(spec0) =>
-        val v0 = Snapshots.latestVersion(spark, spec0.manifestRoot)
-        require(Snapshots.columnMapping(spark, spec0.manifestRoot, v0).isEmpty,
+        val h = hs(spec0)
+        require(h.mapping.isEmpty,
           s"REPLACE TABLE '$name' under a column mapping is not supported " +
             "— the mapping markers would re-apply to the new schema; " +
             "DROP and recreate instead")
-        require(Snapshots.checkConstraints(spark, spec0.manifestRoot, v0).isEmpty,
+        require(h.checks.isEmpty,
           s"REPLACE TABLE '$name' with CHECK constraints in force is not " +
             "supported — drop the constraints first (they would silently " +
             "gate the new schema)")
         val statsCols = props.get("stats_cols")
           .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
           .getOrElse(spec0.cols)
-        val df = GraftSqlBridge.ofRows(spark, resolveReads(spark, rts.query))
+        val df = GraftSqlBridge.ofRows(spark, resolveReads(hs, rts.query))
         val missing = statsCols.filterNot(df.columns.contains)
         require(missing.isEmpty,
           s"stats_cols ${missing.mkString(", ")} not in the REPLACE " +
@@ -2319,10 +2311,11 @@ object LakeSql {
     * DataFrame API as unresolved columns and resolve against the live
     * rows. An UPDATE without WHERE is rejected — unscoped it is a
     * full-table rewrite the caller must spell out via the DataFrame API. */
-  private def runUpdate(spark: SparkSession, u: UpdateTable): Seq[Long] = {
+  private def runUpdate(hs: Heads, u: UpdateTable): Seq[Long] = {
     val (_, spec) = lookup(u.table).get
-    requireDmlClearance(spark, spec, "UPDATE")
-    val mapping = headMapping(spark, spec)
+    val h = hs(spec)
+    requireDmlClearance(hs.spark, h, "UPDATE")
+    val mapping = h.mapping
     val cond = u.condition.getOrElse(throw new IllegalArgumentException(
       "UPDATE needs a WHERE over stats columns — unscoped it must rewrite " +
         "every file of the table"))
@@ -2337,21 +2330,17 @@ object LakeSql {
       case other => throw new IllegalArgumentException(
         s"unsupported UPDATE assignment target: $other")
     }.toMap
-    val (prune, pred) = compileWhere(cond, spec, mapping, Some(spark))
+    val (prune, pred) = compileWhere(cond, spec, mapping, Some(hs))
     // `TBLPROPERTIES ('update.mode' = 'mor')` flips the table to
     // merge-on-read updates: mask the matched rows, append only their
     // updated versions — O(matched rows), never a touched-file rewrite
-    val mor = Snapshots.tableProperties(spark, spec.manifestRoot,
-      Snapshots.latestVersion(spark, spec.manifestRoot))
-      .get("update.mode").exists(_.equalsIgnoreCase("mor"))
-    if (mor) {
-      val r = Snapshots.updateWhereMoRPred(spark, spec.path,
-        spec.manifestRoot, spec.cols, prune, pred, assignments,
-        spec.nFiles)
+    if (h.props.get("update.mode").exists(_.equalsIgnoreCase("mor"))) {
+      val r = Snapshots.updateWhereMoRPred(hs.spark, spec.path, h, spec.cols,
+        prune, pred, assignments, spec.nFiles)
       Seq(0L, r.filesTotal, r.rowsUpdated, r.filesMasked, r.filesAppended)
     } else {
-      val r = Snapshots.updateWherePred(spark, spec.path,
-        spec.manifestRoot, spec.cols, prune, pred, assignments)
+      val r = Snapshots.updateWherePred(hs.spark, spec.path, h, spec.cols,
+        prune, pred, assignments)
       Seq(r.filesRewritten, r.filesTotal, r.rowsUpdated, 0L, 0L)
     }
   }
@@ -2373,7 +2362,7 @@ object LakeSql {
     * DML no stats can prune is a full-table rewrite the caller must opt
     * into via the DataFrame API.
     *
-    * SUBQUERY predicates (when `subEval` carries the session): an
+    * SUBQUERY predicates (when `subEval` carries the statement's heads): an
     * uncorrelated scalar subquery folds to a literal ONCE (so the prune
     * and the row predicate see the same value — the watermark-delete
     * shape `WHERE d > (SELECT max(d) FROM w)`); `col IN (SELECT …)`
@@ -2386,7 +2375,7 @@ object LakeSql {
     * conjunct, same contract as any residual. */
   private[graft] def compileWhere(cond: Expression, spec: LakeTableSpec,
                                   mapping: Option[Map[String, String]] = None,
-                                  subEval: Option[SparkSession] = None): (Column, Column) = {
+                                  subEval: Option[Heads] = None): (Column, Column) = {
     // BETWEEN arrives from the parser as the unresolved `between`
     // function (the analyzer would rewrite it later — this path runs
     // pre-analysis); desugar to the >= AND <= pair so both halves
@@ -2400,9 +2389,9 @@ object LakeSql {
     // fold uncorrelated scalar subqueries to literals ONCE, before the
     // prune/residual split, so both halves see the identical value
     val folded = subEval match {
-      case Some(s) => cond0.transformUp {
+      case Some(hs) => cond0.transformUp {
         case sq: ScalarSubquery =>
-          val df = GraftSqlBridge.ofRows(s, resolveReads(s, sq.plan))
+          val df = GraftSqlBridge.ofRows(hs.spark, resolveReads(hs, sq.plan))
           require(df.columns.length == 1,
             s"scalar subquery must return ONE column, got " +
               df.columns.mkString(", "))
@@ -2414,10 +2403,10 @@ object LakeSql {
       }
       case None => cond0
     }
-    // native stats types (when a session is available): cross-type
+    // native stats types (when the heads are available): cross-type
     // literal conjuncts whose coercion is not stats-monotone are refused
     // a prune term — they ride as row residual or reject loudly below
-    val natTypes = subEval.map(s => statsNativeTypes(s, spec))
+    val natTypes = subEval.map(statsNativeTypes(_, spec))
     val prunes = splitAnd(folded).flatMap(c =>
       pruneOf(c, spec, mapping, subEval, natTypes))
     require(prunes.nonEmpty,
@@ -2436,9 +2425,9 @@ object LakeSql {
         physicalName(a.nameParts.last, mapping, "predicate column")))
     }
     val rowPred = GraftSqlBridge.column(subEval match {
-      case Some(s) => mapped.transform {
-        case q: ListQuery => q.copy(plan = resolveReads(s, q.plan))
-        case e: Exists => e.copy(plan = resolveReads(s, e.plan))
+      case Some(hs) => mapped.transform {
+        case q: ListQuery => q.copy(plan = resolveReads(hs, q.plan))
+        case e: Exists => e.copy(plan = resolveReads(hs, e.plan))
       }
       case None => mapped
     })
@@ -2450,13 +2439,13 @@ object LakeSql {
     case other => Seq(other)
   }
 
-  /** Native type of each stats column, from the HEAD manifest's `min_`
-    * field schema — a footer-only, file-count-bounded metadata read. */
-  private def statsNativeTypes(spark: SparkSession,
+  /** Native type of each stats column, from the statement head's
+    * manifest `min_` field schema — a footer-only, file-count-bounded
+    * metadata read. */
+  private def statsNativeTypes(hs: Heads,
                                spec: LakeTableSpec): Map[String, DataType] =
-    Snapshots.manifestAt(spark, spec.manifestRoot,
-      Snapshots.latestVersion(spark, spec.manifestRoot)).schema.fields
-      .iterator.filter(_.name.startsWith("min_"))
+    Snapshots.manifestAt(hs.spark, spec.manifestRoot, hs(spec).version)
+      .schema.fields.iterator.filter(_.name.startsWith("min_"))
       .map(f => f.name.stripPrefix("min_") -> f.dataType).toMap
 
   /** Soundness gate for a stats-box comparison against a literal of type
@@ -2508,7 +2497,7 @@ object LakeSql {
     * in its [min,max] can satisfy the comparison. */
   private def pruneOf(e: Expression, spec: LakeTableSpec,
                       mapping: Option[Map[String, String]],
-                      subEval: Option[SparkSession] = None,
+                      subEval: Option[Heads] = None,
                       types: Option[Map[String, DataType]] = None)
       : Option[Column] = {
     // physical stats-column name, or None when the conjunct's column has
@@ -2572,8 +2561,8 @@ object LakeSql {
         // subquery — the key list itself never reaches the driver; the
         // row side keeps the subquery (Catalyst semi-join rewrite).
         subEval match {
-          case Some(s) =>
-            val sub = GraftSqlBridge.ofRows(s, resolveReads(s, q.plan))
+          case Some(hs) =>
+            val sub = GraftSqlBridge.ofRows(hs.spark, resolveReads(hs, q.plan))
             require(sub.columns.length == 1,
               s"IN subquery must return ONE column, got " +
                 sub.columns.mkString(", "))
@@ -2615,14 +2604,14 @@ object LakeSql {
     * which rows die; a None here only costs a rewrite, never correctness. */
   private[graft] def compileCover(cond: Expression, spec: LakeTableSpec,
                                   mapping: Option[Map[String, String]] = None,
-                                  typeEval: Option[SparkSession] = None)
+                                  typeEval: Option[Heads] = None)
       : Option[(Column, Seq[String])] = {
     val hasSubquery = cond.exists {
       case _: ScalarSubquery | _: ListQuery | _: Exists => true
       case _ => false
     }
     if (hasSubquery) return None
-    val natTypes = typeEval.map(s => statsNativeTypes(s, spec))
+    val natTypes = typeEval.map(statsNativeTypes(_, spec))
     val parts = splitAnd(cond).map(c => coverOf(c, spec, mapping, natTypes))
     if (parts.exists(_.isEmpty)) None
     else {
@@ -2835,30 +2824,31 @@ object LakeSql {
       case DeleteFromTable(t, c) if claim(t) =>
         metrics("files_rewritten", "files_total", "rows_deleted",
           "files_dropped", "files_masked")(s =>
-          withAutoCompact(s, t)(runDelete(s, t, c)))
+          withAutoCompact(s, t)(runDelete(_, t, c)))
       // TRUNCATE TABLE <t> → remove every live row as ONE metadata-only
       // commit (the next version references no files; nothing read or
       // rewritten, pinned readers keep the data until VACUUM)
       case TruncateTable(t) if claim(t) =>
         val spec = lookup(t).get._2
         metrics("version", "rows_deleted", "files_dropped") { s =>
-          requireDmlClearance(s, spec, "TRUNCATE")
-          val r = Snapshots.truncateCommit(s, spec.manifestRoot)
+          val h = Snapshots.tableHead(s, spec.manifestRoot)
+          requireDmlClearance(s, h, "TRUNCATE")
+          val r = Snapshots.truncateCommit(s, h)
           Seq(r.version.toLong, r.rowsDeleted, r.filesDropped)
         }
       case u: UpdateTable if claim(u.table) =>
         metrics("files_rewritten", "files_total", "rows_updated",
           "files_masked", "files_appended")(s =>
-          withAutoCompact(s, u.table)(runUpdate(s, u)))
+          withAutoCompact(s, u.table)(runUpdate(_, u)))
       // MERGE's clause shapes report different metric sets, so its
       // handler builds its own row and the command declares the superset
       case m: MergeIntoTable if claim(m.targetTable) =>
         Some(LakeDmlCommand(longSchema(Seq("version", "files_rewritten",
           "files_total", "rows_updated", "rows_inserted", "rows_deleted")),
-          s => withAutoCompact(s, m.targetTable)(runMerge(s, m))))
+          s => withAutoCompact(s, m.targetTable)(runMerge(_, m))))
       case i: InsertIntoStatement if claim(i.table) =>
         metrics("version", "files_appended")(s =>
-          withAutoCompact(s, i.table)(runInsert(s, i)))
+          withAutoCompact(s, i.table)(runInsert(_, i)))
       // ALTER TABLE … SET/UNSET TBLPROPERTIES: the Delta table-property
       // store as metadata-only marker commits
       case stp: SetTableProperties if claim(stp.table) =>
@@ -2882,22 +2872,23 @@ object LakeSql {
     * no-ops without committing, so a steady-state table pays one status
     * probe per statement, never a rewrite. The DML's own metric row is
     * untouched — compaction is a separate operation, as in Delta. */
-  private def maybeAutoCompact(spark: SparkSession,
-                               spec: LakeTableSpec): Unit = {
-    val v = Snapshots.latestVersion(spark, spec.manifestRoot)
-    val props = Snapshots.tableProperties(spark, spec.manifestRoot, v)
-    if (props.get("auto_compact").contains("true")) {
-      val smallBytes = props.get("auto_compact.small_bytes")
+  private def maybeAutoCompact(spark: SparkSession, spec: LakeTableSpec,
+                               h: Snapshots.TableHead): Unit =
+    if (h.props.get("auto_compact").contains("true")) {
+      val smallBytes = h.props.get("auto_compact.small_bytes")
         .map(_.toLong).getOrElse(134217728L)
       Snapshots.compactSmallCommit(spark, spec.path, spec.manifestRoot,
         spec.cols, smallBytes, spec.nFiles) : Unit
     }
-  }
 
+  /** Run one DML statement over fresh heads, then the target's follow-on
+    * auto-compaction, decided by the statement head's properties. */
   private def withAutoCompact[A](spark: SparkSession, target: LogicalPlan)
-                                (run: => A): A = {
-    val out = run // the DML's own commit + eager metric row
-    lookup(target).foreach { case (_, spec) => maybeAutoCompact(spark, spec) }
+                                (run: Heads => A): A = {
+    val hs = new Heads(spark)
+    val out = run(hs) // the DML's own commit + eager metric row
+    lookup(target).foreach { case (_, spec) =>
+      maybeAutoCompact(spark, spec, hs(spec)) }
     out
   }
 

@@ -100,8 +100,7 @@ object MatViews {
   private[sql] def metaOf(spark: SparkSession, name: String): Option[MvMeta] =
     mvs.get(lower(name)).orElse {
       LakeSql.specOf(lower(name)).flatMap { spec =>
-        val head = Snapshots.latestVersion(spark, spec.manifestRoot)
-        val p = Snapshots.tableProperties(spark, spec.manifestRoot, head)
+        val p = Snapshots.tableHead(spark, spec.manifestRoot).props
         p.get("graft.mv.base").map { base =>
           val m = MvMeta(lower(name), base,
             p("graft.mv.dims").split(",").toSeq,
@@ -215,10 +214,10 @@ object MatViews {
     require(LakeSql.specOf(nm).isEmpty && !mvs.contains(nm),
       s"materialized view or table '$nm' already exists")
     val baseSpec = LakeSql.specOf(m.base).get
-    LakeSql.requireDmlClearance(spark, baseSpec, "CREATE MATERIALIZED VIEW")
-    val baseHead = Snapshots.latestVersion(spark, baseSpec.manifestRoot)
-    require(Snapshots.columnMapping(spark, baseSpec.manifestRoot,
-      baseHead).isEmpty,
+    val base = Snapshots.tableHead(spark, baseSpec.manifestRoot)
+    val baseHead = base.version
+    LakeSql.requireDmlClearance(spark, base, "CREATE MATERIALIZED VIEW")
+    require(base.mapping.isEmpty,
       "CREATE MATERIALIZED VIEW over a column-mapped base is not " +
         "supported — the feed fold would mix logical and physical names")
     val root = location.orElse(LakeSql.warehouseDir.map(w => s"$w/$nm"))
@@ -228,8 +227,7 @@ object MatViews {
     val spec = LakeTableSpec(s"$root/z", s"$root/m", m.dims, nFiles = 4)
     require(Snapshots.versions(spark, spec.manifestRoot).isEmpty,
       s"'$root' already holds a versioned table")
-    val content =
-      aggOf(m)(Snapshots.tableAt(spark, baseSpec.manifestRoot, baseHead))
+    val content = aggOf(m)(Snapshots.tableAt(spark, base))
     graft.sinks.Layout.zorderWrite(content, m.dims, spec.path, spec.nFiles)
     val props = Map(
       "graft.mv.base" -> m.base,
@@ -341,19 +339,18 @@ object MatViews {
     val baseSpec = LakeSql.specOf(m.base).getOrElse(
       throw new IllegalArgumentException(
         s"materialized view '$nm': base table '${m.base}' is not registered"))
-    LakeSql.requireDmlClearance(spark, baseSpec, "REFRESH MATERIALIZED VIEW")
+    val base = Snapshots.tableHead(spark, baseSpec.manifestRoot)
+    val head = base.version
+    LakeSql.requireDmlClearance(spark, base, "REFRESH MATERIALIZED VIEW")
     val cursor = cursorOf(spark, spec.manifestRoot)
     require(cursor > 0, s"'$nm' carries no mvref cursor tag — not a " +
       "materialized view commit history")
-    val head = Snapshots.latestVersion(spark, baseSpec.manifestRoot)
     require(head >= cursor, s"base '${m.base}' head $head is BEHIND the " +
       s"view cursor $cursor — was the base log truncated or re-created?")
-    require(Snapshots.columnMapping(spark, baseSpec.manifestRoot,
-      head).isEmpty,
+    require(base.mapping.isEmpty,
       "REFRESH over a column-mapped base is not supported")
     if (full) {
-      val content =
-        aggOf(m)(Snapshots.tableAt(spark, baseSpec.manifestRoot, head))
+      val content = aggOf(m)(Snapshots.tableAt(spark, base))
       val (version, _) = Snapshots.replaceCommit(spark, content, m.dims,
         spec.path, spec.manifestRoot, spec.nFiles,
         tag = Some(s"mvref_$head"))

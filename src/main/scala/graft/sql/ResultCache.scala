@@ -5,8 +5,6 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-import graft.sinks.Snapshots
-
 /** QUERY RESULT CACHE over the lake SQL surface — the Databricks SQL
   * result-cache shape (public behavior: a repeated SELECT whose inputs
   * are unchanged is answered from the cached result set, never
@@ -82,7 +80,9 @@ object ResultCache {
     * ([[LakeSql.parser]]) and every path routes that one plan. */
   def sql(spark: SparkSession, text: String): DataFrame = {
     val plan = LakeSql.parser(spark).parsePlan(text)
-    val root = cacheRoot.getOrElse(return LakeSql.sqlParsed(spark, plan))
+    // the statement's heads: a key's versions are the ones its read resolves
+    val hs = new LakeSql.Heads(spark)
+    val root = cacheRoot.getOrElse(return LakeSql.sqlParsed(hs, plan))
     val trimmed = text.trim
     val head = trimmed.take(6).toUpperCase(java.util.Locale.ROOT)
     // Only SELECT/WITH reads cache, and NONDETERMINISTIC ones never do
@@ -92,15 +92,15 @@ object ResultCache {
     if ((!head.startsWith("SELECT") && !head.startsWith("WITH")) ||
         hasNondeterministic(plan)) {
       uncacheableN.incrementAndGet()
-      return LakeSql.sqlParsed(spark, plan)
+      return LakeSql.sqlParsed(hs, plan)
     }
     LakeSql.lakeOnlyReads(spark, plan) match {
       case None =>
         uncacheableN.incrementAndGet()
-        LakeSql.sqlParsed(spark, plan)
+        LakeSql.sqlParsed(hs, plan)
       case Some(tables) =>
         val versions = tables.sortBy(_._1).map { case (n, spec) =>
-          s"$n=${Snapshots.latestVersion(spark, spec.manifestRoot)}"
+          s"$n=${hs(spec).version}"
         }
         val bypass = spark.conf.get("graft.policy.bypass", "false")
         val digest = java.security.MessageDigest.getInstance("SHA-256")
@@ -113,7 +113,7 @@ object ResultCache {
             spark.read.schema(e.schema).parquet(e.path)
           case None =>
             missN.incrementAndGet()
-            val df = LakeSql.sqlParsed(spark, plan)
+            val df = LakeSql.sqlParsed(hs, plan)
             // UNIQUE spill per miss: a re-miss of an evicted digest (or
             // two sessions missing the same digest concurrently) must
             // never overwrite a path a previously-returned lazy DataFrame

@@ -16,13 +16,48 @@ object TestSpark {
     .config("spark.sql.catalog.lake.warehouse",
       java.nio.file.Files.createTempDirectory("graft_lake_wh").toString)
     .config("spark.ui.enabled", "false")
+    .config("spark.hadoop.fs.countfs.impl", classOf[CountingFs].getName)
     .getOrCreate()
+}
+
+/** The local file system under the `countfs://` scheme, counting every
+  * directory listing by path — how a spec prices the listings a statement
+  * makes (on an object store each is a paged LIST). */
+class CountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("countfs:///")
+  override def getScheme: String = "countfs"
+  override def listStatus(
+      f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    CountingFs.listed.add(CountingFs.key(f))
+    super.listStatus(f)
+  }
+}
+
+object CountingFs {
+  private[graft] val listed =
+    new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  private[graft] def key(p: org.apache.hadoop.fs.Path): String =
+    p.toUri.getPath.stripSuffix("/")
 }
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** A fresh dir under the counting file system ([[CountingFs]]). */
+  def countingDir(prefix: String): String = "countfs://" + tmpDir(prefix)
+
+  /** How many times `body` lists the directory `dir` (a `countfs://`
+    * path): for a manifest root, the root listings behind version
+    * resolution. */
+  def listingsOf(dir: String)(body: => Unit): Int = {
+    val k = CountingFs.key(new org.apache.hadoop.fs.Path(dir))
+    CountingFs.listed.clear()
+    body
+    import scala.jdk.CollectionConverters._
+    CountingFs.listed.asScala.count(_ == k)
+  }
 
   /** First-stage call sites of the Spark jobs `body` starts. */
   def jobsOf(body: => Unit): Seq[String] = {

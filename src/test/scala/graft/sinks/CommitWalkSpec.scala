@@ -163,6 +163,51 @@ class CommitWalkSpec extends SparkSpec {
     } finally LakeSql.unregister("walk_scd")
   }
 
+  /** A registered, empty SCD2 target over (id, x) under `dir`. */
+  private def scdTarget(dir: String, name: String): Unit = {
+    LakeSql.unregister(name)
+    LakeSql.sql(spark, s"""CREATE TABLE $name (id BIGINT, x BIGINT,
+      start_at BIGINT, end_at BIGINT, is_current BOOLEAN)
+      USING lake LOCATION '$dir/scd'
+      TBLPROPERTIES ('stats_cols' = 'id,start_at', 'files' = '1')""")
+    ()
+  }
+
+  test("ApplyChanges.scd2 bootstraps a fresh target from the oldest " +
+      "retained version of a vacuumed source") {
+    val (dir, _) = vacuumedPastMirror()
+    scdTarget(dir, "walk_scd_vac")
+    try {
+      val r = ApplyChanges.scd2(spark, s"$dir/m", "walk_scd_vac", "id",
+        Seq("x"))
+      assert(r.toVersion == 5 && r.commitsApplied == 1)
+      val opened = LakeSql.sql(spark,
+        "SELECT start_at, id FROM walk_scd_vac WHERE is_current").collect()
+      assert(opened.map(_.getLong(0)).toSet == Set(5L))
+      assert(opened.map(_.getLong(1)).toSet == (10L until 250L).toSet)
+    } finally LakeSql.unregister("walk_scd_vac")
+  }
+
+  test("ApplyChanges.scd2 refuses a target that lags past a source vacuum") {
+    // the target applied v2; v3–v4 (a delete of ids 0–9) are vacuumed
+    // away before it applies again
+    val dir = base()
+    val (m, z) = (s"$dir/m", s"$dir/z")
+    scdTarget(dir, "walk_scd_lag")
+    try {
+      ApplyChanges.scd2(spark, m, "walk_scd_lag", "id", Seq("x"))
+      Snapshots.appendCommit(spark, batch(150, 50), cols, z, m, nFiles = 1)
+      Snapshots.deleteWhere(spark, z, m, cols, Seq(("id", 0.0, 9.0)))
+      Snapshots.appendCommit(spark, batch(200, 50), cols, z, m, nFiles = 1)
+      Snapshots.vacuum(spark, z, m, retainLast = 1)
+      val target = Snapshots.latestVersion(spark, s"$dir/scd/m")
+      val e = intercept[IllegalStateException](
+        ApplyChanges.scd2(spark, m, "walk_scd_lag", "id", Seq("x")))
+      assert(e.getMessage.contains("vacuumed"))
+      assert(Snapshots.latestVersion(spark, s"$dir/scd/m") == target)
+    } finally LakeSql.unregister("walk_scd_lag")
+  }
+
   test("commitTxn rebases over the visible commits only") {
     val dir = fixture()
     val m = s"$dir/m"

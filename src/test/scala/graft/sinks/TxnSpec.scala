@@ -135,4 +135,17 @@ class TxnSpec extends SparkSpec {
     assert(Snapshots.latestVersion(spark, m) == 3)
     assert(manifestFiles(dir, 3) == files.tail)
   }
+
+  test("a failed read of a future version does not make a later txn " +
+      "stage in that slot visible") {
+    val (dir, v1) = freshLayout()
+    val m = s"$dir/m"
+    intercept[Exception](Snapshots.manifestAt(spark, m, v1 + 1).collect())
+    val (stage, _) = Snapshots.appendCommit(spark, data.limit(10), Seq("x"),
+      s"$dir/z", m, nFiles = 1,
+      contentFiles = Seq(Snapshots.TxnPendingMarker -> s"$dir/txn\nt1"))
+    assert(stage == v1 + 1)
+    assert(Snapshots.latestVersion(spark, m) == v1)
+    assert(Snapshots.visibleVersions(spark, m) == Seq(v1))
+  }
 }
