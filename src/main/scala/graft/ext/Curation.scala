@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftSqlBridge}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Pin
 import graft.functions.{MisraGriesAggregator, NormalizeText}
 
 /** Training-data curation operators (north-star extension, SURVEY §2.11 [N]):
@@ -265,9 +266,8 @@ object Curation {
     // inner-prefix join); Catalyst has no common-subplan elimination, so
     // without a checkpoint the full scan + tokenize runs twice. The frame
     // is three longs per document — negligible next to the corpus.
-    val d = docs.select(col(idCol).as("id"), nTokens.cast("long").as("n"))
-      .withColumn("bucket", floor(col("id") / lit(bucketSize.toDouble)).cast("long"))
-      .localCheckpoint()
+    val d = Pin(docs.select(col(idCol).as("id"), nTokens.cast("long").as("n"))
+      .withColumn("bucket", floor(col("id") / lit(bucketSize.toDouble)).cast("long")))
     val offsets = d.groupBy("bucket").agg(sum("n").as("btot"))
       .select(col("bucket"),
         coalesce(sum(col("btot")).over(
@@ -367,11 +367,10 @@ object Curation {
     * 8-byte keys). */
   def sourceOverlapMatrix(docs: DataFrame, groupCol: String, textCol: String,
                           k: Int): DataFrame = {
-    val sh = docs
+    val sh = Pin(docs
       .select(col(groupCol).as("g"),
         explode(TextAnalysis.shingles(col(textCol), k)).as("s"))
-      .distinct()
-      .localCheckpoint() // one scan feeds sizes AND both join sides
+      .distinct()) // one scan feeds sizes AND both join sides
     val sz = sh.groupBy(col("g")).agg(count(lit(1)).as("n"))
     val inter = sh.as("a")
       .join(sh.as("b"),
@@ -418,9 +417,8 @@ object Curation {
         substring(md5(col("tok")), 1, 2).as("bucket"))
     // Per-(doc, bucket) counts: the one corpus-proportional shuffle, with
     // map-side combine; carries is_target along (constant per doc).
-    val docBucket = toks.groupBy(col(idCol), col("bucket"))
-      .agg(count(lit(1)).as("n"), first(col("is_target")).as("is_target"))
-      .localCheckpoint()
+    val docBucket = Pin(toks.groupBy(col(idCol), col("bucket"))
+      .agg(count(lit(1)).as("n"), first(col("is_target")).as("is_target")))
     // Bucket totals for the two distributions: ≤256 rows, derived from the
     // already-aggregated per-doc counts (no second pass over the corpus).
     val bucketStats = docBucket.groupBy(col("bucket"))

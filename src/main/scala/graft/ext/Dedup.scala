@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Pin
+
 /** Deduplication operators for LLM-training-data pipelines (north-star
   * extension): exact (hash groupBy), n-gram Jaccard (inverted shingle index),
   * MinHash+LSH (banded signature bucketing), and SimHash (shuffle-free
@@ -235,8 +237,8 @@ object Dedup {
     val base =
       if (wordShingles) wordShingleHashes(uniques, "doc", "txt", n)
       else shingleHashes(uniques, "doc", "txt", n)
-    val full = base.localCheckpoint()
-    val sig = signaturesFromHashes(full, k).localCheckpoint()
+    val full = Pin(base)
+    val sig = Pin(signaturesFromHashes(full, k))
     val cands = bandedCandidates(sig, k, bands)
       .join(sig.as("sa"), col("doc_a") === col("sa.doc"))
       .join(sig.as("sb"), col("doc_b") === col("sb.doc"))
@@ -285,8 +287,8 @@ object Dedup {
     * only) shared by [[jaccardPairsWords]] and the q27 gate. */
   private def jaccardRepPairsWords(uniques: DataFrame, n: Int,
                                    threshold: Double): DataFrame = {
-    val sh = wordShingleHashes(uniques, "doc", "txt", n)
-      .distinct().localCheckpoint() // set semantics; feeds sizes AND the join
+    val sh = Pin(wordShingleHashes(uniques, "doc", "txt", n)
+      .distinct()) // set semantics; feeds sizes AND the join
     val sizes = sh.groupBy(col("doc")).agg(count(lit(1)).as("sz"))
     val inter = sh.as("a")
       .join(sh.as("b"), col("a.h") === col("b.h") && col("a.doc") < col("b.doc"))
@@ -316,7 +318,7 @@ object Dedup {
                              threshold: Double = 0.5,
                              recallFloor: Double = 0.75): DataFrame = {
     val (members, uniques) = exactCollapse(docs, idCol, textCol)
-    val exactRep = jaccardRepPairsWords(uniques, n, threshold).localCheckpoint()
+    val exactRep = Pin(jaccardRepPairsWords(uniques, n, threshold))
     val bandedRep = minHashRepPairs(uniques, n, k, bands, threshold,
       wordShingles = true)
     val v = graft.qc.RecallGate.check(exactRep, bandedRep,
@@ -352,7 +354,7 @@ object Dedup {
   def simHashPairsBrute(docs: DataFrame, idCol: String, textCol: String,
                         maxHamming: Int = 3): DataFrame = {
     val (members, uniques) = exactCollapse(docs, idCol, textCol)
-    val sk = simHashSketches(uniques, "doc", "txt").localCheckpoint()
+    val sk = Pin(simHashSketches(uniques, "doc", "txt"))
     expandCollapsed(members, simHashRepPairsBrute(sk, maxHamming),
       "hamming", lit(0).cast("int"))
   }
@@ -370,9 +372,8 @@ object Dedup {
     val keyed = docs.select(col(idCol).as("doc"), col(textCol).as("txt"))
       .filter(col("txt").isNotNull)
       .withColumn("fp", md5(col("txt").cast("binary")))
-    val members = keyed.select(col("doc"), col("fp"))
-      .join(keyed.groupBy(col("fp")).agg(min(col("doc")).as("rep")), "fp")
-      .localCheckpoint()
+    val members = Pin(keyed.select(col("doc"), col("fp"))
+      .join(keyed.groupBy(col("fp")).agg(min(col("doc")).as("rep")), "fp"))
     val uniques = keyed.join(
       members.filter(col("doc") === col("rep")).select(col("doc")), "doc")
     (members, uniques)
@@ -439,17 +440,17 @@ object Dedup {
     * exhausts `maxIters`, the computation AUTO-DISPATCHES to
     * [[starContraction]] (large-star/small-star, O(log² n) rounds
     * regardless of diameter) instead of iterating on. Each round is
-    * checkpointed: the lineage would otherwise grow one join per round.
+    * pinned ([[graft.Pin]]): the lineage would otherwise grow one join per
+    * round.
     *
     * Returns (node, cluster_id); nodes not present in `pairs` are absent
     * (singletons — callers coalesce to self, see [[dedupByPairs]]). */
   def clusters(pairs: DataFrame, aCol: String = "doc_a", bCol: String = "doc_b",
                maxIters: Int = 20): DataFrame = {
     val fwd = pairs.select(col(aCol).as("x"), col(bCol).as("y"))
-    val edges = fwd.union(fwd.select(col("y").as("x"), col("x").as("y")))
-      .localCheckpoint()
-    var labels = edges.select(col("x").as("node")).distinct()
-      .select(col("node"), col("node").as("label")).localCheckpoint()
+    val edges = Pin(fwd.union(fwd.select(col("y").as("x"), col("x").as("y"))))
+    var labels = Pin(edges.select(col("x").as("node")).distinct()
+      .select(col("node"), col("node").as("label")))
     var converged = false
     var i = 0
     while (!converged && i < maxIters) {
@@ -458,15 +459,14 @@ object Dedup {
         .groupBy(col("x").as("node"))
         .agg(min(col("nl")).as("cand"))
       // prev label rides along so the convergence probe is a filter over
-      // the checkpointed frame, not another join
-      val updated = labels.join(nbrMin, Seq("node"), "left")
+      // the pinned frame, not another join
+      val updated = Pin(labels.join(nbrMin, Seq("node"), "left")
         .select(col("node"),
           least(col("label"), coalesce(col("cand"), col("label"))).as("label"),
-          col("label").as("prev"))
-        .localCheckpoint()
-      val changed = updated.filter(col("label") =!= col("prev"))
-        .limit(1).count() // existence probe, not a full count
-      converged = changed == 0
+          col("label").as("prev")))
+      // existence probe, not a full count; job-free on a driver-local pin
+      converged =
+        Pin.count(updated.filter(col("label") =!= col("prev")).limit(1)) == 0
       labels = updated.select(col("node"), col("label"))
       i += 1
     }
@@ -489,7 +489,7 @@ object Dedup {
     *    m = min of u's smaller neighborhood
     * The fixed point is a forest of stars whose centers are the component
     * minima. Edges are kept canonical (hi → lo) between rounds; each round
-    * is checkpointed to cut lineage.
+    * is pinned to cut lineage.
     *
     * Returns (node, cluster_id) for every node in `pairs`, cluster labeled
     * by its minimum id — the same contract as [[clusters]]. */
@@ -497,11 +497,11 @@ object Dedup {
                       bCol: String = "doc_b", maxRounds: Int = 40): DataFrame = {
     val fwd = pairs.select(col(aCol).as("x"), col(bCol).as("y"))
     // canonical hi → lo, self-loops dropped
-    var canon = fwd.union(fwd.select(col("y").as("x"), col("x").as("y")))
+    var canon = Pin(fwd.union(fwd.select(col("y").as("x"), col("x").as("y")))
       .filter(col("x") =!= col("y"))
       .select(greatest(col("x"), col("y")).as("x"),
         least(col("x"), col("y")).as("y"))
-      .distinct().localCheckpoint()
+      .distinct())
     var converged = false
     var i = 0
     while (!converged && i < maxRounds) {
@@ -517,15 +517,15 @@ object Dedup {
       val e2 = ls.union(ls.select(col("y").as("x"), col("x").as("y")))
       val sm = e2.filter(col("y") < col("x"))
       val ms = sm.groupBy(col("x").as("u")).agg(min(col("y")).as("m"))
-      val next = sm.join(ms, col("x") === col("u"))
+      val next = Pin(sm.join(ms, col("x") === col("u"))
         .select(col("y").as("x"), col("m").as("y"))
         .filter(col("x") =!= col("y"))
         .select(greatest(col("x"), col("y")).as("x"),
           least(col("x"), col("y")).as("y"))
         .union(ms.select(col("u").as("x"), col("m").as("y"))) // u > m always
-        .distinct().localCheckpoint()
+        .distinct())
       // fixed point: the canonical edge set stopped changing (star forest)
-      converged = next.count() == canon.count() &&
+      converged = Pin.count(next) == Pin.count(canon) &&
         next.except(canon).limit(1).count() == 0
       canon = next
       i += 1
@@ -579,7 +579,7 @@ object Dedup {
     * so a passage repeated across d documents costs d rows, not d². */
   def repeatedPassageStats(docs: DataFrame, idCol: String, textCol: String,
                            window: Int = 10, stride: Int = 5): DataFrame = {
-    val wins = docs
+    val wins = Pin(docs
       .select(col(idCol).as("doc"), split(col(textCol), " ").as("w"))
       .select(col("doc"),
         explode(sequence(lit(1),
@@ -588,8 +588,7 @@ object Dedup {
         col("w"))
       .select(col("doc"),
         md5(concat_ws(" ", slice(col("w"), col("i"), lit(window))).cast("binary"))
-          .as("wkey"))
-      .localCheckpoint() // feeds both the share-count agg and the re-join
+          .as("wkey"))) // feeds both the share-count agg and the re-join
     val shared = wins.groupBy(col("wkey"))
       .agg(countDistinct(col("doc")).as("ndocs"))
       .filter(col("ndocs") > 1)
@@ -612,7 +611,7 @@ object Dedup {
                    maxHamming: Int = 3): DataFrame = {
     val (members, uniques) = exactCollapse(docs, idCol, textCol)
     // one sketch pass feeds both self-join sides (see minHashDedupPairs)
-    val sk = simHashSketches(uniques, "doc", "txt").localCheckpoint()
+    val sk = Pin(simHashSketches(uniques, "doc", "txt"))
     expandCollapsed(members, simHashRepPairs(sk, maxHamming),
       "hamming", lit(0).cast("int"))
   }
@@ -675,17 +674,17 @@ object Dedup {
                                 maxHamming: Int = 3,
                                 sampleMod: Int = 101): DataFrame = {
     val (members, uniques) = exactCollapse(docs, idCol, textCol)
-    val sk = simHashSketches(uniques, "doc", "txt").localCheckpoint()
+    val sk = Pin(simHashSketches(uniques, "doc", "txt"))
     val bandedRep = simHashRepPairs(sk, maxHamming)
     val bruteRep = simHashRepPairsBrute(sk, maxHamming)
     val pigeonholeOk = graft.qc.RecallGate.equivalent(bandedRep, bruteRep,
       Seq("doc_a", "doc_b", "hamming"),
       "q28 SimHash banded vs brute force (rep plane)")
-    val exact = members.as("a")
+    // feeds the sampled probe AND the emission
+    val exact = Pin(members.as("a")
       .join(members.as("b"),
         col("a.fp") === col("b.fp") && col("a.doc") < col("b.doc"))
-      .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"))
-      .localCheckpoint() // feeds the sampled probe AND the emission
+      .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b")))
     val expandedSlice =
       expandCollapsed(members, bandedRep, "hamming", lit(0).cast("int"))
         .filter(col("doc_a") % sampleMod === 0 && col("hamming") === 0)
@@ -715,8 +714,8 @@ object Dedup {
     * unacceptable. Returns (doc_a < doc_b, jaccard). */
   def prefixJaccardPairsWords(docs: DataFrame, idCol: String,
                               textCol: String, threshold: Double): DataFrame = {
-    val sets = docs.select(col(idCol).as("id"),
-      array_distinct(split(col(textCol), " ")).as("s")).localCheckpoint()
+    val sets = Pin(docs.select(col(idCol).as("id"),
+      array_distinct(split(col(textCol), " ")).as("s")))
     val toks = sets.select(col("id"), explode(col("s")).as("tok"))
     val freq = toks.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val w = org.apache.spark.sql.expressions.Window

@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Pin
+
 /** Graph analytics over edge-list DataFrames — PageRank as the canonical
   * iterative-propagation operator (the same join+agg skeleton as the dedup
   * family's min-label propagation in [[Dedup]], with rank mass instead of
@@ -41,25 +43,24 @@ object GraphOps {
     */
   def pageRank(edges: DataFrame, iters: Int, damping: Double): DataFrame = {
     // Edge list, vertex set, and out-degrees materialize ONCE
-    // (localCheckpoint truncates lineage — without it every iteration's
+    // (a pin truncates lineage — without it every iteration's
     // plan re-derives the upstream edge construction, and the work grows
     // quadratically in the iteration count).
-    val e = edges.select(col("src"), col("dst")).distinct().localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().localCheckpoint()
-    // N read once from the checkpointed vertex set (a bounded scalar, like
+    val e = Pin(edges.select(col("src"), col("dst")).distinct())
+    val nodes = Pin(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct())
+    // N read once from the pinned vertex set (a bounded scalar, like
     // the engine's other single-row stat reads) and folded in as a literal
     // — a per-iteration broadcast subplan would re-run its little job every
     // round.
-    val n = nodes.count().toDouble
+    val n = Pin.count(nodes).toDouble
     // out-degrees are joined ONTO THE EDGE LIST once up front — the
     // degree of an edge's source is iteration-invariant, and joining it
     // inside the loop paid one extra shuffle join per round (the agg
     // input multiset is identical either way)
-    val eDeg = e.join(
+    val eDeg = Pin(e.join(
         e.groupBy(col("src"))
-          .agg(count(lit(1)).cast("double").as("outdeg")), "src")
-      .localCheckpoint()
+          .agg(count(lit(1)).cast("double").as("outdeg")), "src"))
     // the rank vector is O(vertices) — broadcast it onto the (much
     // wider) edge list so the join never shuffles edges; only the
     // per-destination aggregate shuffles, and it shuffles partial
@@ -78,12 +79,11 @@ object GraphOps {
         .agg(sum(col("rank") / col("outdeg")).as("mass"))
       // Checkpoint the rank vector each round: iteration cost stays flat
       // (one vertex-keyed join + one agg), the GraphX/Pregel discipline.
-      rank = nodes
+      rank = Pin(nodes
         .join(vertexSide(contrib), nodes("node") === contrib("dst"), "left")
         .select(col("node"),
           (lit(1.0 - damping) / lit(n) +
-            lit(damping) * coalesce(col("mass"), lit(0.0))).as("rank"))
-        .localCheckpoint()
+            lit(damping) * coalesce(col("mass"), lit(0.0))).as("rank")))
     }
     rank
   }

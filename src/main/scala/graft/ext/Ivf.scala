@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Pin
+
 /** IVF (inverted-file) approximate nearest neighbor — the centroid-bucketed
   * alternative to random-hyperplane LSH ([[Similarity.annTopK]]).
   *
@@ -108,22 +110,20 @@ object Ivf {
     val spark = corpus.sparkSession
     import spark.implicits._
     val l = math.max((oversample * c).toLong, 1L)
-    val pts = corpus
+    val pts = Pin(corpus
       .select(col(idCol).cast("long").as("id"),
-        col(vecCol).cast("array<float>").as("v"))
-      .localCheckpoint()
-    var candidates = pts.orderBy(col("id")).limit(1).localCheckpoint()
+        col(vecCol).cast("array<float>").as("v")))
+    var candidates = Pin(pts.orderBy(col("id")).limit(1))
     var round = 1
     var exhausted = false
     while (round <= rounds && !exhausted) {
-      val scored = pts.as("p")
+      val scored = Pin(pts.as("p")
         .crossJoin(broadcast(candidates.select(col("v").as("cv"))))
         .select(col("p.id"), col("p.v"),
           Similarity.cosine(col("p.v"), col("cv")).as("cos"))
         .groupBy(col("id"))
         .agg(first(col("v")).as("v"),
-          greatest(lit(0.0), lit(1.0) - max(col("cos"))).as("cost"))
-        .localCheckpoint()
+          greatest(lit(0.0), lit(1.0) - max(col("cos"))).as("cost")))
       val phi = scored.agg(sum(col("cost"))).head().getDouble(0)
       if (phi <= 1e-12) exhausted = true // every point already covered
       else {
@@ -134,8 +134,8 @@ object Ivf {
         // a candidate's own residual cost is ~1e-16 (float cosine), so a
         // hash fluke can re-accept it — dedup by id keeps the candidate set
         // (and the distinct-centroid guarantee downstream) honest
-        candidates = candidates.unionAll(accepted)
-          .dropDuplicates("id").localCheckpoint()
+        candidates = Pin(candidates.unionAll(accepted)
+          .dropDuplicates("id"))
       }
       round += 1
     }
@@ -233,17 +233,16 @@ object Ivf {
       else seedCentroidsLarge(corpus, c, idCol = idCol, vecCol = vecCol)
     var carried: DataFrame = null
     (0 until math.max(iters, 0)).foreach { _ =>
-      carried = assignCarry(corpus, centroids, idCol, vecCol).localCheckpoint()
-      centroids = centroids
+      carried = Pin(assignCarry(corpus, centroids, idCol, vecCol))
+      centroids = Pin(centroids
         .join(cellMeans(carried, vecCol), Seq("centroid_id"), "left")
         .select(col("centroid_id"),
-          coalesce(col("new_centroid"), col("centroid")).as("centroid"))
-        .localCheckpoint()
+          coalesce(col("new_centroid"), col("centroid")).as("centroid")))
     }
     // iters = 0 is seeding-only: no Lloyd round, but the index still needs
     // an assignment against the (seed) centroids
     if (carried == null)
-      carried = assignCarry(corpus, centroids, idCol, vecCol).localCheckpoint()
+      carried = Pin(assignCarry(corpus, centroids, idCol, vecCol))
     (centroids, carried)
   }
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Pin
+
 /** IVF-PQ — the COMPOSITION of the coarse quantizer ([[Ivf]] inverted
   * lists) with the compressed code plane ([[Pq]]): the standard 100 TB ANN
   * deployment shape (Jégou et al., "Product quantization for nearest
@@ -67,7 +69,7 @@ object IvfPq {
     val bcAnchors = spark.sparkContext.broadcast(anchors)
     // residual plane: one typed pass over the carried assignment (the
     // inverted lists already hold the vectors — the corpus is not re-read)
-    val residuals = carried
+    val residuals = Pin(carried
       .select(col(idCol).cast("long"), col("centroid_id").cast("int"),
         col(vecCol).cast("array<float>"))
       .as[(Long, Int, Array[Float])]
@@ -79,8 +81,7 @@ object IvfPq {
         while (i < nv.length) { r(i) = nv(i) - a(i); i += 1 }
         (id, cell, r)
       }
-      .toDF(idCol, "cell", "residual")
-      .localCheckpoint()
+      .toDF(idCol, "cell", "residual"))
     val cb = Pq.train(residuals, idCol, "residual", m, k, sampleCap,
       normalizeInput = false)
     val bcCb = spark.sparkContext.broadcast(cb)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Pin
+
 /** k-NN-GRAPH approximate nearest neighbor — the GRAPH-index family
   * (the production niche HNSW/NSW occupy), re-expressed Spark-first:
   *
@@ -48,8 +50,8 @@ object Knng {
   def buildGraph(corpus: DataFrame, k: Int, iters: Int = 2,
                  blocks: Int = 8, seeds: Int = 2, idCol: String = "vec_id",
                  vecCol: String = "embedding"): DataFrame = {
-    val v = corpus.select(col(idCol).as("_id"), col(vecCol).as("_v"))
-      .localCheckpoint() // joined every round from both sides
+    // joined every round from both sides
+    val v = Pin(corpus.select(col(idCol).as("_id"), col(vecCol).as("_v")))
     def topK(cand: DataFrame): DataFrame = {
       // score candidate (src, dst) pairs and keep each src's best k
       val scored = cand
@@ -72,7 +74,7 @@ object Knng {
         .filter(col("src") =!= col("dst"))
         .select(col("src"), col("dst"))
     }.reduce(_ union _).distinct())
-    var g = init.localCheckpoint()
+    var g = Pin(init)
     for (_ <- 1 to iters) {
       val e = g.select(col("src"), col("dst"))
       val rev = e.select(col("dst").as("src"), col("src").as("dst"))
@@ -81,7 +83,7 @@ object Knng {
       val hop2 = e.as("l").join(e.as("r"), col("l.dst") === col("r.src"))
         .select(col("l.src").as("src"), col("r.dst").as("dst"))
         .filter(col("src") =!= col("dst"))
-      g = topK(e.union(rev).union(hop2).distinct()).localCheckpoint()
+      g = Pin(topK(e.union(rev).union(hop2).distinct()))
     }
     // NSW-style NAVIGABILITY augmentation (Kleinberg small-world /
     // Malkov-Yashunin NSW long links, public knowledge): a pure kNN
@@ -111,7 +113,7 @@ object Knng {
     // graph, and an unpinned plan re-derives this union+distinct (and the
     // long-link scoring joins) per hop — k-bounded rows, same contract as
     // the per-round checkpoints above
-    g.union(longScored).distinct().localCheckpoint()
+    Pin(g.union(longScored).distinct())
   }
 
   /** Beam search over a [[buildGraph]] graph: per-probe top-k by cosine
@@ -133,8 +135,8 @@ object Knng {
     // corpus rather than clustered at the low ids
     val entry = corpus.select(col(corpusId).as("_nid"))
       .orderBy(xxhash64(col("_nid")).asc, col("_nid").asc).limit(entries)
-    var visited = score(broadcast(entry)
-      .crossJoin(p.select(col("probe_id")))).localCheckpoint()
+    var visited = Pin(score(broadcast(entry)
+      .crossJoin(p.select(col("probe_id")))))
     val wBeam = Window.partitionBy(col("probe_id"))
       .orderBy(col("cos").desc, col("_nid").asc)
     for (_ <- 1 to hops) {
@@ -145,7 +147,7 @@ object Knng {
         .select(col("probe_id"), col("dst").as("_nid")).distinct()
         .join(visited.select(col("probe_id"), col("_nid")),
           Seq("probe_id", "_nid"), "left_anti")
-      visited = visited.union(score(reached)).localCheckpoint()
+      visited = Pin(visited.union(score(reached)))
     }
     visited.withColumn("rank", row_number().over(wBeam))
       .filter(col("rank") <= k)

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Pin
 import graft.qc.RecallGate
 
 /** Shared machinery of the perceptual-hash media dedup family
@@ -37,10 +38,9 @@ private[ext] object MediaNearDup {
     * banding uncollapsed would put O(d²) rows through each bucket (the
     * q27 OOM shape). Returns (members, uniques). */
   def hashCollapse(sk: DataFrame): (DataFrame, DataFrame) = {
-    val members = sk.select(col("doc"), col("sk").as("fp"))
+    val members = Pin(sk.select(col("doc"), col("sk").as("fp"))
       .join(sk.groupBy(col("sk").as("fp")).agg(min(col("doc")).as("rep")),
-        "fp")
-      .localCheckpoint()
+        "fp"))
     val uniques = members.filter(col("doc") === col("rep"))
       .select(col("doc"), col("fp").as("sk"))
     (members, uniques)
@@ -112,7 +112,7 @@ private[ext] object MediaNearDup {
         .select((col("doc_id") + copyIdOffset).as("doc_id"), col("text")))
     val media = textCorpus(spark, aug, render, jitterIdFloor = copyIdOffset)
     val (members, uniques0) = hashCollapse(hashes(media, hash))
-    val uniques = uniques0.localCheckpoint()
+    val uniques = Pin(uniques0)
     val repBanded = Dedup.hammingPairsBanded(uniques, maxHamming)
     val gateUniques = uniques.filter(col("doc") % gateSampleMod === 0)
     val pigeonholeOk = RecallGate.equivalent(
@@ -124,11 +124,10 @@ private[ext] object MediaNearDup {
         "hamming", lit(0).cast("int"))
       .filter(col("doc_a") % sampleMod === 0)
     val txt = aug.filter(col("text").isNotNull)
-    val exact = txt.as("a")
+    val exact = Pin(txt.as("a")
       .join(txt.as("b"),
         col("a.text") === col("b.text") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .localCheckpoint()
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b")))
     val exactSlice = exact.filter(col("doc_a") % sampleMod === 0)
     val v = RecallGate.check(exactSlice, expandedSlice, Seq("doc_a", "doc_b"),
       recallFloor = 1.0,

@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.Pin
+
 /** Text-analysis operators for LLM-training-data pipelines (north-star
   * extension, SURVEY.md §2.11 [N]): tokenization, quality scoring,
   * language-ID heuristics, shingling, and document fingerprinting.
@@ -144,11 +146,10 @@ object TextAnalysis {
                        idCol: String, textCol: String,
                        maxDf: Long, k: Int): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val tf = docs
+    val tf = Pin(docs
       .select(col(idCol), explode(tokens(col(textCol))).as("term"))
       .groupBy(col(idCol), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("tf")))
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf)
     tf.join(dfreq, "term")
@@ -266,7 +267,7 @@ object TextAnalysis {
       .distinct()
       .join(toks, Seq(idCol, "pos"))
       .groupBy(col(idCol)).agg(sum(col("len")).as("ch"))
-    val gTop = grams(nTop).localCheckpoint()
+    val gTop = Pin(grams(nTop))
     val top = gTop.groupBy(col(idCol), col("gram"))
       .agg(count(lit(1)).as("c"))
       .withColumn("rn", row_number().over(
@@ -278,7 +279,7 @@ object TextAnalysis {
       coverChars(gTop.join(top, Seq(idCol))
         .filter(col("gram") === col("top_gram")), nTop)
         .withColumnRenamed("ch", "topch")
-    val gDup = grams(nDup).localCheckpoint()
+    val gDup = Pin(grams(nDup))
     val dupVals = gDup.groupBy(col(idCol), col("gram"))
       .agg(count(lit(1)).as("c")).filter(col("c") >= 2)
       .select(col(idCol), col("gram"))
@@ -327,9 +328,9 @@ object TextAnalysis {
       .select(col(idCol), col("tr"), col("p.w1"), col("p.w2"))
     val c2 = bg.filter(col("tr")).groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("n2"))
-    val c1 = w.filter(col("tr")).select(explode(col("ws")).as("tk"))
-      .groupBy(col("tk")).agg(count(lit(1)).as("n1"))
-      .localCheckpoint() // joined twice (context + back-off legs)
+    // joined twice (context + back-off legs)
+    val c1 = Pin(w.filter(col("tr")).select(explode(col("ws")).as("tk"))
+      .groupBy(col("tk")).agg(count(lit(1)).as("n1")))
     val tot = c1.agg(sum(col("n1")).cast("double").as("t"),
       count(lit(1)).cast("double").as("v"))
     bg.join(c2, Seq("w1", "w2"), "left")
@@ -403,9 +404,8 @@ object TextAnalysis {
       isTrain.as("_tr"), split(lower(col(textCol)), " ").as("_ws"))
     val feats = base.select(col(idCol), col("_lbl"), col("_tr"),
       explode(col("_ws")).as("_f"))
-    val cnt = feats.filter(col("_tr")).groupBy(col("_lbl"), col("_f"))
-      .agg(count(lit(1)).as("_n"))
-      .localCheckpoint() // three downstream consumers (tot, vocab, join)
+    val cnt = Pin(feats.filter(col("_tr")).groupBy(col("_lbl"), col("_f"))
+      .agg(count(lit(1)).as("_n"))) // three downstream consumers (tot, vocab, join)
     val classes = base.filter(col("_tr")).groupBy(col("_lbl"))
       .agg(count(lit(1)).as("_p"))
       .join(cnt.groupBy(col("_lbl")).agg(sum(col("_n")).as("_t")),

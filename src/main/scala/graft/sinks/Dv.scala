@@ -3,6 +3,8 @@ package graft.sinks
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Pin
+
 /** Positional DELETION VECTORS — merge-on-read deletes over the
   * [[Snapshots]] version log (the Delta deletion-vector / Iceberg
   * positional-delete model re-expressed on plain parquet).
@@ -79,6 +81,10 @@ object Dv {
   // of) the session that assembled it — a second/restarted session must
   // assemble its own. LRU-bounded; emptied by [[MetaCache.forget]] on root
   // re-creation and vacuum (the only paths that delete referenced files).
+  // A session's entries die with it: the first insert for a SparkContext
+  // hooks that context's application end, which drops the entries of
+  // every session on it — a stopped session's plans, and the session
+  // itself, are not pinned for the life of the JVM.
   private type ReadLiveKey =
     (SparkSession, Seq[Entry], Option[org.apache.spark.sql.types.StructType])
   private val readLiveCache =
@@ -88,8 +94,27 @@ object Dv {
           : Boolean = size() > 512
     }
 
+  private val stopHooked = java.util.Collections.newSetFromMap(
+    new java.util.WeakHashMap[org.apache.spark.SparkContext, java.lang.Boolean])
+
+  private def dropOnStop(sc: org.apache.spark.SparkContext): Unit =
+    if (readLiveCache.synchronized(stopHooked.add(sc)))
+      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+        override def onApplicationEnd(
+            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
+          readLiveCache.synchronized(
+            readLiveCache.keySet.removeIf(_._1.sparkContext eq sc)): Unit
+      })
+
   private[sinks] def clearReadLiveCache(): Unit =
     readLiveCache.synchronized(readLiveCache.clear())
+
+  /** How many memoized read plans `spark` holds. */
+  private[sinks] def readLivePlans(spark: SparkSession): Int =
+    readLiveCache.synchronized {
+      import scala.jdk.CollectionConverters._
+      readLiveCache.keySet.asScala.count(_._1 eq spark)
+    }
 
   /** Relation-level nullable normalization (what `DataType.asNullable`
     * does; it is `private[sql]`): file-based relations serve every field
@@ -133,7 +158,7 @@ object Dv {
   private def readFooter(spark: SparkSession,
                          in: org.apache.parquet.hadoop.util.HadoopInputFile)
       : Part = {
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val reader = Layout.openFooter(in)
     val (rows, msg, kv) =
       try {
         val md = reader.getFooter.getFileMetaData
@@ -218,6 +243,7 @@ object Dv {
       case Some(df) => df
       case None =>
         val df = assembleReadLive(spark, entries, declared)
+        dropOnStop(spark.sparkContext)
         readLiveCache.synchronized(readLiveCache.put(key, df)): Unit
         df
     }
@@ -372,7 +398,7 @@ object Dv {
                          pred: org.apache.spark.sql.Column,
                          cover: Option[(org.apache.spark.sql.Column, Seq[String])] = None)
       : MoRDeleteResult = {
-    val total = Snapshots.localCount(at.manifest)
+    val total = Pin.count(at.manifest)
     val hit = entries(at.manifest.filter(prune))
     if (hit.isEmpty) return MoRDeleteResult(at.version, 0, total, 0, 0)
     val dropped = Snapshots.wholeFileDrops(spark, at.manifest, prune, cover)
@@ -442,7 +468,7 @@ object Dv {
                     deltaCommit: Boolean = false): MoRDeleteResult = {
     val h = Snapshots.tableHead(spark, manifestRoot)
     val manifest = h.manifest
-    val total = Snapshots.localCount(manifest)
+    val total = Pin.count(manifest)
     // Stats-prune the touch set ONLY when the manifest actually carries
     // [min,max] stats for the delete key — a manifest built with stats for
     // other columns (or none) degrades to the full file set. Correctness
@@ -499,7 +525,7 @@ object Dv {
   def purgeDv(spark: SparkSession, path: String, manifestRoot: String,
               cols: Seq[String]): PurgeResult = {
     val h = Snapshots.tableHead(spark, manifestRoot)
-    val total = Snapshots.localCount(h.manifest)
+    val total = Pin.count(h.manifest)
     val masked = entries(h.manifest.filter(col("dv").isNotNull))
     if (masked.isEmpty) return PurgeResult(h.version, 0, total, 0)
     // an empty landing means every masked file was fully dead

@@ -412,7 +412,6 @@ object Layout {
   private[sinks] def footerManifestFor(spark: SparkSession, paths: Seq[String],
                                        cols: Seq[String]): Option[DataFrame] = try {
     import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import org.apache.spark.sql.types._
@@ -441,7 +440,7 @@ object Layout {
     if (files.isEmpty) return None
     var sparkTypes: Map[String, DataType] = Map.empty
     val rows = files.map { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      val reader = openFooter(HadoopInputFile.fromPath(f, conf))
       try {
         val footer = reader.getFooter
         val msgType = footer.getFileMetaData.getSchema
@@ -512,14 +511,12 @@ object Layout {
   private[graft] def nullFreeFiles(spark: SparkSession, files: Seq[String],
                                    cols: Seq[String]): Set[String] = {
     import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import scala.jdk.CollectionConverters._
     val conf = spark.sparkContext.hadoopConfiguration
     files.filter { f =>
       try {
-        val reader = ParquetFileReader.open(
-          HadoopInputFile.fromPath(new Path(f), conf))
+        val reader = openFooter(HadoopInputFile.fromPath(new Path(f), conf))
         try {
           val blocks = reader.getFooter.getBlocks.asScala.toSeq
           cols.forall { c =>
@@ -566,6 +563,15 @@ object Layout {
         .write.mode("append").parquet(manifestPath)
     fresh.size
   }
+
+  /** Open a parquet file for its footer with read options built from the
+    * file's own Hadoop conf (the session's). `ParquetFileReader.open(in)`
+    * alone builds them from a fresh default `Configuration`, which
+    * re-parses Hadoop's default XML files on every open. */
+  private[sinks] def openFooter(in: org.apache.parquet.hadoop.util.HadoopInputFile)
+      : org.apache.parquet.hadoop.ParquetFileReader =
+    org.apache.parquet.hadoop.ParquetFileReader.open(in,
+      org.apache.parquet.HadoopReadOptions.builder(in.getConfiguration).build())
 
   private[sinks] def fileName(uri: String): String =
     uri.substring(uri.lastIndexOf('/') + 1)

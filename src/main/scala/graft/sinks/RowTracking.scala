@@ -3,6 +3,8 @@ package graft.sinks
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Pin
+
 /** ROW TRACKING — stable per-row identities that survive re-layout, the
   * Delta Lake "row tracking" feature (public contract: every data file
   * carries a `baseRowId`; a row's default id is `baseRowId + position`;
@@ -89,7 +91,7 @@ object RowTracking {
     * plus later appends) read as one frame. */
   def readTracked(spark: SparkSession, manifestRoot: String,
                   version: Int): DataFrame = {
-    val m = Snapshots.pinLocal(
+    val m = Pin.checkpoint(
       Snapshots.manifestAt(spark, manifestRoot, version))
     // deletion vectors are out of this path's scope: refuse loudly rather
     // than resurrect masked rows (a DV-aware read would thread
@@ -128,7 +130,7 @@ object RowTracking {
                      cols: Seq[String], nFiles: Int): (Int, Int, Int) = {
     val h = Snapshots.tableHead(spark, manifestRoot)
     val hw = highWater(h.manifest)
-    val nIn = Snapshots.localCount(h.manifest).toInt
+    val nIn = Pin.count(h.manifest).toInt
     val moved = Snapshots.land(spark, path, gatedBy = None)(
       Layout.zorderWrite(readTracked(spark, manifestRoot, h.version), cols,
         _, nFiles))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 
+import graft.Pin
+
 /** Versioned manifests over a [[Layout]] — snapshot isolation, time-travel
   * reads, and vacuum on plain parquet, the table-format (Delta/Iceberg)
   * metadata model re-expressed with the file-stats manifest as the commit
@@ -205,10 +207,10 @@ object Snapshots {
     lazy val checks: Map[String, String] =
       Ck.at(spark, root, version, listing).getOrElse(Map.empty)
     /** The manifest at `version`, DV-normalized and pinned with
-      * [[pinLocal]] on first use (only a DML planner uses it), so a
+      * [[graft.Pin.checkpoint]] on first use (only a DML planner uses it), so a
       * planner never sees a commit that lands while it works. */
     lazy val manifest: DataFrame =
-      pinLocal(Dv.ensureDv(manifestAt(spark, root, version)))
+      Pin.checkpoint(Dv.ensureDv(manifestAt(spark, root, version)))
     lazy val schema: Option[StructType] =
       inForce(spark, root, version, SchemaMarker, listing).map { case (v, _) =>
         MetaCache.getOrElseUpdate(root, ("schema", v)) {
@@ -616,13 +618,13 @@ object Snapshots {
       case _ => false
     })
     if (!simple || schema.isEmpty) return None
-    // only when every row already sits on the driver ([[driverRows]]: the
+    // only when every row already sits on the driver ([[graft.Pin.rows]]: the
     // shape cached manifests, footer manifest builds and their unions
     // produce) — no Spark job at all. A distributed content plan
     // (scan-fallback stats build, un-cached fold) keeps the parallel
     // write: collecting it first would serialize the computation through
     // one partition.
-    val local = driverRows(content).getOrElse(return None)
+    val local = Pin.rows(content).getOrElse(return None)
     if (local.length > MetaCache.MaxEntryRows) return None
     val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
       .createToScalaConverter(schema)
@@ -716,52 +718,6 @@ object Snapshots {
                           v: Int): DataFrame = {
     val dir = s"$manifestRoot/v=$v"
     cachedManifestDf(spark, manifestRoot, ("manifest", v), dir)(_(dir))
-  }
-
-  /** The rows of a driver-local frame — its optimized plan a
-    * `LocalRelation` or a `Union` of them (a cached manifest serve, a
-    * footer-built manifest, a swap commit's kept ∪ added rows) — in the
-    * frame's output order; None when computing it would need a Spark job. */
-  private def driverRows(df: DataFrame)
-      : Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] = {
-    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Union}
-    df.queryExecution.optimizedPlan match {
-      case l: LocalRelation => Some(l.data)
-      case u: Union if u.children.forall(_.isInstanceOf[LocalRelation]) =>
-        Some(u.children.flatMap(_.asInstanceOf[LocalRelation].data))
-      case _ => None
-    }
-  }
-
-  /** `localCheckpoint()` unless the frame is already driver-local
-    * ([[driverRows]]): checkpointing local rows pays a Spark job + a
-    * partition copy for rows that already sit in driver memory, and both
-    * forms are equally immutable pins. The DML planners pin every manifest
-    * before the commit starts moving the table under it — this keeps that
-    * pin while making it job-free on the cache-hit path. */
-  private[graft] def pinLocal(df: DataFrame): DataFrame =
-    if (driverRows(df).isDefined) df else df.localCheckpoint()
-
-  /** Row count without a Spark job when the frame is driver-local (the
-    * manifest `count()`s every DML planner opens with). */
-  private[graft] def localCount(df: DataFrame): Long =
-    driverRows(df).fold(df.count())(_.length.toLong)
-
-  /** Σ of a long column without a Spark job when the frame is
-    * driver-local (footer-built manifests are LocalRelations); None when
-    * any row's value is null (a manifest entry without its `rows` stat),
-    * so a caller can never under-count by skipping it. */
-  private[graft] def localLongSum(df: DataFrame, c: String): Option[Long] = {
-    val proj = df.select(col(c))
-    driverRows(proj) match {
-      case Some(rows) =>
-        if (rows.exists(_.isNullAt(0))) None
-        else Some(rows.iterator.map(_.getLong(0)).sum)
-      case None =>
-        val r = proj.agg(sum(col(c)), count(when(col(c).isNull, 1))).head()
-        if (r.getLong(1) > 0) None
-        else Some(if (r.isNullAt(0)) 0L else r.getLong(0))
-    }
   }
 
   final case class FoldInfo(base: Int, baseIsCheckpoint: Boolean,
@@ -882,7 +838,7 @@ object Snapshots {
   def readAt(spark: SparkSession, manifestRoot: String, version: Int,
              ranges: Seq[(String, Double, Double)]): Layout.PrunedScan = {
     val m = manifestAt(spark, manifestRoot, version)
-    val total = localCount(m)
+    val total = Pin.count(m)
     val hit = Dv.entries(m.filter(Layout.intersectsExpr(ranges)))
     val df =
       if (hit.isEmpty) tableAt(spark, manifestRoot, version).filter(lit(false))
@@ -941,7 +897,7 @@ object Snapshots {
                       pred: org.apache.spark.sql.Column,
                       cover: Option[(org.apache.spark.sql.Column, Seq[String])])
       : Layout.DeleteResult = {
-    val total = localCount(at.manifest)
+    val total = Pin.count(at.manifest)
     val hit = Dv.entries(at.manifest.filter(prune))
     if (hit.isEmpty) return Layout.DeleteResult(0, total, 0)
     val dropped = wholeFileDrops(spark, at.manifest, prune, cover)
@@ -973,10 +929,10 @@ object Snapshots {
       if (rewrite.isEmpty) Some(0L)
       else if (rewrite.forall(_.dv.isEmpty)) {
         for {
-          liveRows <- localLongSum(at.manifest
+          liveRows <- Pin.longSum(at.manifest
             .filter(col("file").isInCollection(rewrite.map(_.file))), "rows")
           survivorRows <-
-            survivorStats.map(localLongSum(_, "rows")).getOrElse(Some(0L))
+            survivorStats.map(Pin.longSum(_, "rows")).getOrElse(Some(0L))
         } yield liveRows - survivorRows
       } else None
     val deleted = arithmetic.getOrElse(live.filter(pred).count())
@@ -998,7 +954,7 @@ object Snapshots {
     * version's schema ([[tableAt]]), and later INSERTs refill normally. */
   def truncateCommit(spark: SparkSession, at: TableHead)
       : TruncateResult = {
-    val files = localCount(at.manifest)
+    val files = Pin.count(at.manifest)
     if (files == 0) return TruncateResult(at.version, 0, 0)
     val phys = at.manifest.agg(sum(col("rows"))).head().getLong(0)
     // masked rows are already dead
@@ -1026,7 +982,7 @@ object Snapshots {
   def fsckCommit(spark: SparkSession, manifestRoot: String,
                  dryRun: Boolean = false): (FsckResult, Seq[String]) = {
     val h = tableHead(spark, manifestRoot)
-    val total = localCount(h.manifest)
+    val total = Pin.count(h.manifest)
     val conf = spark.sparkContext.hadoopConfiguration
     val missing = h.manifest.select(col("file"), col("rows"), col("dv"))
       .collect().filterNot { r =>
@@ -1098,7 +1054,7 @@ object Snapshots {
                       pred: org.apache.spark.sql.Column,
                       assignments: Map[String, org.apache.spark.sql.Column]): UpdateResult = {
     require(assignments.nonEmpty, "UPDATE with no assignments")
-    val total = localCount(at.manifest)
+    val total = Pin.count(at.manifest)
     val hit = Dv.entries(at.manifest.filter(prune))
     if (hit.isEmpty) return UpdateResult(0, total, 0)
     val live = Dv.readLive(spark, hit, at.schema)
@@ -1147,7 +1103,7 @@ object Snapshots {
                          assignments: Map[String, org.apache.spark.sql.Column],
                          nFiles: Int): MoRUpdateResult = {
     require(assignments.nonEmpty, "UPDATE with no assignments")
-    val total = localCount(at.manifest)
+    val total = Pin.count(at.manifest)
     val hit = Dv.entries(at.manifest.filter(prune))
     if (hit.isEmpty) return MoRUpdateResult(at.version, 0, total, 0, 0)
     val live = Dv.readLiveWithPos(spark, hit, at.schema)
@@ -1411,7 +1367,7 @@ object Snapshots {
                           at: TableHead, cols: Seq[String],
                           scope: Column, nFiles: Int,
                           zorderCols: Option[Seq[String]] = None): CompactScopedResult = {
-    val total = localCount(at.manifest)
+    val total = Pin.count(at.manifest)
     val selected = Dv.entries(at.manifest.filter(scope))
     if (selected.size < 2 && !selected.exists(_.dv.isDefined))
       return CompactScopedResult(at.version, 0, total, 0)
@@ -1517,7 +1473,7 @@ object Snapshots {
                   nFiles: Int): MergeResult = {
     require(cols.contains(key),
       s"merge key $key needs manifest stats — not in ${cols.mkString(",")}")
-    val total = localCount(at.manifest)
+    val total = Pin.count(at.manifest)
     val hit = source.select(col(key).cast("double").as("k")).distinct()
       .join(broadcast(at.manifest.select(col("file"),
           col(s"min_$key").cast("double").as("lo"),
@@ -1664,7 +1620,7 @@ object Snapshots {
       s"MERGE source has duplicate key tuples (e.g. ${dup.headOption}) — " +
         "a target row matched twice has no deterministic outcome")
     val manifest = at.manifest
-    val total = localCount(manifest)
+    val total = Pin.count(manifest)
     // touch set: distinct source key tuples × broadcast manifest, file
     // hit iff the tuple sits inside the file's stats box on EVERY key
     val keyTuples = source.select(keys.map(k => col(k).as(s"_k_$k")): _*)
@@ -1842,7 +1798,7 @@ object Snapshots {
     require(cols.contains(key),
       s"merge key $key needs manifest stats — not in ${cols.mkString(",")}")
     val manifest = at.manifest
-    val total = localCount(manifest)
+    val total = Pin.count(manifest)
     val keyHit = source.select(col(key).cast("double").as("k")).distinct()
       .join(broadcast(manifest.select(col("file"),
           col(s"min_$key").cast("double").as("lo"),
@@ -3102,7 +3058,7 @@ object Snapshots {
       s"REPLACE WHERE batch has $escaped rows OUTSIDE the replaced " +
         "predicate — a scoped overwrite cannot smuggle rows past its " +
         "scope; nothing committed")
-    val total = localCount(at.manifest)
+    val total = Pin.count(at.manifest)
     val hit = Dv.entries(at.manifest.filter(prune))
     // whole-file drops (same proof as [[deleteWherePred]]): the daily
     // `REPLACE WHERE run_date = X` re-land is THE partition-overwrite
@@ -3148,7 +3104,7 @@ object Snapshots {
     commits(spark, manifestRoot, 0).map { c =>
       // Σ rows job-free on a cached manifest; a null `rows` stat falls
       // back to counting the version's files
-      val rows = localLongSum(manifestAt(spark, manifestRoot, c.version),
+      val rows = Pin.longSum(manifestAt(spark, manifestRoot, c.version),
           "rows")
         .getOrElse(spark.read.parquet(c.entries.toSeq.map(_.file): _*)
           .count())
@@ -3309,7 +3265,7 @@ object Snapshots {
                       dstRoot: String, version: Int): DeepCloneResult = {
     require(versions(spark, dstRoot).isEmpty,
       s"clone destination $dstRoot already has commits")
-    val m = pinLocal(Dv.ensureDv(manifestAt(spark, srcRoot, version)))
+    val m = Pin.checkpoint(Dv.ensureDv(manifestAt(spark, srcRoot, version)))
     val entries = Dv.entries(m)
     require(entries.nonEmpty, "DEEP CLONE of an empty version")
     val conf = spark.sparkContext.hadoopConfiguration

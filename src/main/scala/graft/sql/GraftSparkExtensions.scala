@@ -57,6 +57,9 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
       StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
       GraftSparkExtensions.CodegenCacheEntries.toString))
     ext.injectResolutionRule(ResolveLakeTables)
+    // a broadcast of driver-local rows (a small graft.Pin, a cached
+    // manifest) reads them from driver memory, without a Spark job
+    ext.injectPlannerStrategy(_ => GraftSqlBridge.DriverLocalScan)
     // metadata-only aggregates: COUNT(*)/MIN/MAX over a bare lake scan
     // answered from the manifest, zero data files opened
     ext.injectOptimizerRule(ServeAggFromManifest)

@@ -10,6 +10,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 
+import graft.Pin
 import graft.ops.Ivm
 import graft.plans.MatView
 import graft.sinks.{Dv, Snapshots}
@@ -276,9 +277,9 @@ object MatViews {
     val touched = feed.select(m.dims.map(col): _*).distinct()
       .localCheckpoint()
     val nTouched = touched.count()
-    val mf = Snapshots.pinLocal(
+    val mf = Pin.checkpoint(
       Snapshots.manifestAt(spark, baseSpec.manifestRoot, head))
-    val total = Snapshots.localCount(mf)
+    val total = Pin.count(mf)
     val statCols = mf.schema.fieldNames.toSet
     val feedHasNullDim = m.dims.nonEmpty &&
       touched.filter(m.dims.map(col(_).isNull).reduce(_ || _))
