@@ -59,8 +59,7 @@ object RowTracking {
   def appendTracked(spark: SparkSession, batch: DataFrame, cols: Seq[String],
                     path: String, manifestRoot: String,
                     nFiles: Int): (Int, Int) = {
-    val prev = Option.when(Snapshots.versions(spark, manifestRoot).nonEmpty)(
-      Snapshots.tableHead(spark, manifestRoot).manifest)
+    val prev = Snapshots.headOption(spark, manifestRoot).map(_.manifest)
     val hw = prev.map(highWater).getOrElse(0L)
     val moved = Snapshots.land(spark, path,
         gatedBy = prev.map(_ => manifestRoot))(

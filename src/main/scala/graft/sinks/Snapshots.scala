@@ -57,29 +57,34 @@ object Snapshots {
   private val CopyPrefix = "_copy_"
   private val TagPrefix = "_txn_"
 
-  /** Committed version numbers, ascending (empty for a fresh root) — the
-    * listing every reader starts from, and so the one place the root's
-    * cached metadata resets: a head LOWER than the highest this JVM has
-    * seen means the root was deleted and re-created behind its back
+  /** Committed version numbers, ascending (empty for a fresh root). */
+  def versions(spark: SparkSession, manifestRoot: String): Seq[Int] =
+    listRoot(spark, manifestRoot).versions
+
+  /** What one listing of a manifest root holds: its committed `v=N` dirs
+    * and its `ckpt=N` checkpoints ([[writeCheckpoint]]), each ascending. */
+  private[sinks] final case class RootListing(versions: Seq[Int],
+                                              checkpoints: Seq[Int])
+
+  /** The ONE listing of a manifest root (both halves empty for a fresh
+    * root) — every reader starts from it, and so it is the one place the
+    * root's cached metadata resets: a head LOWER than the highest this JVM
+    * has seen means the root was deleted and re-created behind its back
     * (another process, plain FS calls), and every entry describes the old
     * log. */
-  def versions(spark: SparkSession, manifestRoot: String): Seq[Int] = {
-    val root = new org.apache.hadoop.fs.Path(manifestRoot)
-    val fs = hfs(spark, manifestRoot)
-    val vs =
-      if (!fs.exists(root)) Seq.empty
-      else fs.listStatus(root).toSeq.collect {
-        case st if st.isDirectory =>
-          st.getPath.getName match {
-            case VersionDir(n) => Some(n.toInt)
-            case _ => None
-          }
-      }.flatten.sorted
+  private def listRoot(spark: SparkSession,
+                       manifestRoot: String): RootListing = {
+    val dirs =
+      try hfs(spark, manifestRoot)
+        .listStatus(new org.apache.hadoop.fs.Path(manifestRoot)).toSeq
+        .collect { case st if st.isDirectory => st.getPath.getName }
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    val vs = dirs.collect { case VersionDir(n) => n.toInt }.sorted
     val head = vs.lastOption.getOrElse(0)
     val seen = MetaCache.get[Int](manifestRoot, "head").getOrElse(0)
     if (head < seen) MetaCache.forget(manifestRoot)
     if (head > 0 && head != seen) MetaCache.put(manifestRoot, "head", head)
-    vs
+    RootListing(vs, dirs.collect { case CkptDir(n) => n.toInt }.sorted)
   }
 
   // ------------------------------------------------------------------
@@ -171,9 +176,15 @@ object Snapshots {
 
   /** The [[TableHead]] of `manifestRoot`: the newest txn-visible version
     * of ONE root listing. */
-  def tableHead(spark: SparkSession, manifestRoot: String): TableHead = {
-    val vs = versions(spark, manifestRoot)
-    require(vs.nonEmpty, s"no committed versions under $manifestRoot")
+  def tableHead(spark: SparkSession, manifestRoot: String): TableHead =
+    headOption(spark, manifestRoot).getOrElse(
+      throw new IllegalArgumentException(
+        s"no committed versions under $manifestRoot"))
+
+  /** [[tableHead]], or None when the root holds no committed version. */
+  def headOption(spark: SparkSession,
+                 manifestRoot: String): Option[TableHead] = {
+    val listed = listRoot(spark, manifestRoot)
     // CROSS-TABLE TXN visibility: a version staged by [[graft.sql.LakeTxn]]
     // carries a pending marker and is INVISIBLE until its transaction's
     // single commit file exists — that file creation is the one atomic
@@ -181,25 +192,29 @@ object Snapshots {
     // Pending stages can only occupy the log TAIL (commitStaged refuses
     // to build past an unresolved one), so this walk is O(1) amortized:
     // resolved states memoize, an unresolved head re-checks one file.
-    new TableHead(spark, manifestRoot, vs,
-      vs.reverseIterator.find(v => txnVisible(spark, manifestRoot, v))
+    Option.when(listed.versions.nonEmpty)(new TableHead(spark, manifestRoot,
+      listed, listed.versions.reverseIterator
+        .find(v => txnVisible(spark, manifestRoot, v))
         .getOrElse(throw new IllegalStateException(
           s"every version under $manifestRoot is an unresolved or aborted " +
-            "transaction stage — nothing visible to read")))
+            "transaction stage — nothing visible to read"))))
   }
 
   /** A table's head as one statement sees it: the visible `version`, the
-    * root `listing` it was resolved from, and the metadata in force at
-    * that version — properties, column mapping, CHECK set and declared
-    * schema — each resolved over that same listing, on first use. A
-    * statement resolves it once per table ([[tableHead]]: one root
-    * listing) and hands it to every reader and writer of the table; the
-    * DML planners also read its pinned `manifest`. A head built for a
-    * named version ([[headAt]]) takes its listing only when a marker
-    * lookup misses its memo or the version is empty. */
+    * root `listing` and `checkpoints` it was resolved from, and the
+    * metadata in force at that version — properties, column mapping,
+    * CHECK set and declared schema — each resolved over that same
+    * listing, on first use. A statement resolves it once per table
+    * ([[tableHead]]: one root listing) and hands it to every reader and
+    * writer of the table, the delta fold included; the DML planners also
+    * read its pinned `manifest`. A head built for a named version
+    * ([[headAt]]) takes its listing only when a marker lookup misses its
+    * memo, the version is empty or a delta commit. */
   final class TableHead private[Snapshots] (spark: SparkSession,
-      val root: String, listed: => Seq[Int], val version: Int) {
-    lazy val listing: Seq[Int] = listed
+      val root: String, listed: => RootListing, val version: Int) {
+    private lazy val rootListing: RootListing = listed
+    lazy val listing: Seq[Int] = rootListing.versions
+    def checkpoints: Seq[Int] = rootListing.checkpoints
     lazy val props: Map[String, String] =
       Props.at(spark, root, version, listing).getOrElse(Map.empty)
     lazy val mapping: Option[Map[String, String]] =
@@ -210,7 +225,7 @@ object Snapshots {
       * [[graft.Pin.checkpoint]] on first use (only a DML planner uses it), so a
       * planner never sees a commit that lands while it works. */
     lazy val manifest: DataFrame =
-      Pin.checkpoint(Dv.ensureDv(manifestAt(spark, root, version)))
+      Pin.checkpoint(Dv.ensureDv(manifestAt(spark, this)))
     lazy val schema: Option[StructType] =
       inForce(spark, root, version, SchemaMarker, listing).map { case (v, _) =>
         MetaCache.getOrElseUpdate(root, ("schema", v)) {
@@ -222,20 +237,22 @@ object Snapshots {
 
     /** The same table pinned at version `v` (`VERSION AS OF`), over this
       * head's listing. */
-    def at(v: Int): TableHead = new TableHead(spark, root, listing, v)
+    def at(v: Int): TableHead = new TableHead(spark, root, rootListing, v)
 
     /** This head after the statement's own commit landed at `v`: the
       * slots between this listing's tail and `v` were taken by commits
       * the CAS loop raced past, so the listing extends without a fresh
       * root listing. */
     def after(v: Int): TableHead = new TableHead(spark, root,
-      listing ++ (listing.lastOption.getOrElse(0) + 1 to v), v)
+      rootListing.copy(versions =
+        listing ++ (listing.lastOption.getOrElse(0) + 1 to v)), v)
   }
 
-  /** `manifestRoot` at `version`, listing the root only on a memo miss. */
+  /** `manifestRoot` at `version`, listing the root only when a read needs
+    * it: a marker memo miss, an empty version or a delta fold. */
   private def headAt(spark: SparkSession, manifestRoot: String,
                      version: Int): TableHead =
-    new TableHead(spark, manifestRoot, versions(spark, manifestRoot), version)
+    new TableHead(spark, manifestRoot, listRoot(spark, manifestRoot), version)
 
   /** Content-marker filename a cross-table txn stage travels in (body =
     * txn dir + txn id, newline-separated). */
@@ -542,44 +559,25 @@ object Snapshots {
     commitStaged(spark, delta, manifestRoot, tag, delta = true)
   }
 
-  /** Checkpoint versions present under the root, ascending. A checkpoint
-    * `ckpt=N` is the MATERIALIZED full manifest of version N — a derived
-    * cache object, not a commit: writing one never creates a version, and
-    * any reader folding to a version ≥ N may start from it instead of
-    * walking the delta chain below. */
-  def checkpoints(spark: SparkSession, manifestRoot: String): Seq[Int] = {
-    val root = new org.apache.hadoop.fs.Path(manifestRoot)
-    val fs = hfs(spark, manifestRoot)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.collect {
-      case st if st.isDirectory =>
-        st.getPath.getName match {
-          case CkptDir(n) => Some(n.toInt)
-          case _ => None
-        }
-    }.flatten.sorted
-  }
-
-  /** Materialize the full manifest of `version` as `ckpt=version`.
-    * Idempotent and race-safe without coordination: the content is a pure
-    * function of the (immutable) log prefix, so two writers racing to the
-    * same checkpoint stage identical bytes and the rename loser simply
+  /** Materialize the full manifest of head `at`'s version as
+    * `ckpt=<version>`, folded over `at`'s listing. A checkpoint is the
+    * MATERIALIZED full manifest of a version — a derived cache object, not
+    * a commit: writing one never creates a version, and any reader
+    * folding to a version ≥ it may start from it instead of walking the
+    * delta chain below ([[TableHead.checkpoints]] lists them). Idempotent
+    * and race-safe without coordination: the content is a pure function
+    * of the (immutable) log prefix, so two writers racing to the same
+    * checkpoint stage identical bytes and the rename loser simply
     * discards its copy. */
-  def writeCheckpoint(spark: SparkSession, manifestRoot: String,
-                      version: Int): Unit = {
-    val fs = hfs(spark, manifestRoot)
-    val dest = new org.apache.hadoop.fs.Path(s"$manifestRoot/ckpt=$version")
+  def writeCheckpoint(spark: SparkSession, at: TableHead): Unit = {
+    val fs = hfs(spark, at.root)
+    val dest = new org.apache.hadoop.fs.Path(s"${at.root}/ckpt=${at.version}")
     if (fs.exists(dest)) return
-    val staged = stageManifest(spark, manifestRoot,
-      manifestAt(spark, manifestRoot, version))
+    val staged = stageManifest(spark, at.root, manifestAt(spark, at))
     if (!renameOnto(fs, staged.dir, dest))
       fs.delete(staged.dir, true) // lost a benign race
   }
 
-  /** How [[manifestAt]] would reconstruct `version`: the base it folds from
-    * (a full version or a checkpoint) and how many delta commits sit on
-    * top. The gate-visible evidence that checkpoints actually re-base the
-    * log (`deltasFolded` drops back to the post-checkpoint tail). */
   // ------------------------------------------------------------------
   // MANIFEST CACHE — a committed version dir is IMMUTABLE, so the
   // collected manifest rows of a (root, version) — and the delta FOLD over
@@ -720,26 +718,31 @@ object Snapshots {
     cachedManifestDf(spark, manifestRoot, ("manifest", v), dir)(_(dir))
   }
 
+  /** How [[manifestAt]] reconstructs a version: the `base` it folds from
+    * (a full version or a checkpoint) and the visible delta commits on
+    * top, ascending. The gate-visible evidence that checkpoints actually
+    * re-base the log (`deltas` drops back to the post-checkpoint tail). */
   final case class FoldInfo(base: Int, baseIsCheckpoint: Boolean,
-                            deltasFolded: Int)
+                            deltas: Seq[Int])
 
-  def foldInfo(spark: SparkSession, manifestRoot: String,
-               version: Int): FoldInfo = {
+  /** The [[FoldInfo]] of head `at`'s version, over `at`'s listing. */
+  def foldInfo(spark: SparkSession, at: TableHead): FoldInfo = {
     // visible versions only: an ABORTED txn stage occupies a version slot
     // with a full manifest that was never table history — choosing it as
     // the fold base (or counting it in the delta tail) would serve the
     // aborted content to every read of a later delta commit
-    val vs = visibleVersions(spark, manifestRoot).filter(_ <= version)
-    require(vs.contains(version), s"version $version not committed")
-    val fulls = vs.filterNot(isDelta(spark, manifestRoot, _))
-    val ckpts = checkpoints(spark, manifestRoot).filter(_ <= version)
+    val vs = at.listing
+      .filter(v => v <= at.version && txnVisible(spark, at.root, v))
+    require(vs.contains(at.version), s"version ${at.version} not committed")
+    val fulls = vs.filterNot(isDelta(spark, at.root, _))
+    val ckpts = at.checkpoints.filter(_ <= at.version)
     require(fulls.nonEmpty || ckpts.nonEmpty,
-      s"version $version is an unreadable delta chain: no full manifest or " +
-        s"checkpoint at or below it under $manifestRoot — a fresh root must " +
-        "start with a full commit")
+      s"version ${at.version} is an unreadable delta chain: no full " +
+        s"manifest or checkpoint at or below it under ${at.root} — a " +
+        "fresh root must start with a full commit")
     val base = (fulls ++ ckpts).max
     FoldInfo(base, baseIsCheckpoint = !fulls.contains(base),
-      vs.count(v => v > base))
+      vs.filter(_ > base))
   }
 
   /** The manifest of `version`. A full commit reads directly; a delta
@@ -750,36 +753,39 @@ object Snapshots {
     * inputs are file-count-bounded manifests; the fold is one window over
     * their union. */
   def manifestAt(spark: SparkSession, manifestRoot: String,
-                 version: Int): DataFrame = {
+                 version: Int): DataFrame =
+    manifestAt(spark, headAt(spark, manifestRoot, version))
+
+  /** [[manifestAt]] of head `at`'s version, folded over `at`'s listing. */
+  private[graft] def manifestAt(spark: SparkSession,
+                                at: TableHead): DataFrame = {
+    val (root, version) = (at.root, at.version)
     // TXN VISIBILITY for pinned reads: a version staged by an unresolved
     // or aborted cross-table txn is not table history — an explicit
     // `VERSION AS OF` of it must refuse loudly, not leak pre-publish (or
     // never-published) content
-    require(txnVisible(spark, manifestRoot, version),
-      s"version $version of $manifestRoot is a cross-table transaction " +
+    require(txnVisible(spark, root, version),
+      s"version $version of $root is a cross-table transaction " +
         "stage that is not (or never became) visible — reads serve only " +
         "committed history")
-    if (!isDelta(spark, manifestRoot, version))
-      return versionRows(spark, manifestRoot, version)
-    val info = foldInfo(spark, manifestRoot, version)
-    val deltaVs = visibleVersions(spark, manifestRoot)
-      .filter(v => v > info.base && v <= version)
+    if (!isDelta(spark, root, version))
+      return versionRows(spark, root, version)
+    val info = foldInfo(spark, at)
+    val baseDir =
+      s"$root/${if (info.baseIsCheckpoint) "ckpt" else "v"}=${info.base}"
     // the fold is keyed on its COMPLETE input set (base + visible delta
     // versions): visibility changes (a txn stage resolving) change the
     // set and therefore the key, so a cached fold can never serve a
     // different-visibility answer
-    cachedManifestDf(spark, manifestRoot,
-      ("fold", version, info.base, info.baseIsCheckpoint, deltaVs.toList),
-      s"$manifestRoot/v=$version",
-      inputDirs = (if (info.baseIsCheckpoint) s"$manifestRoot/ckpt=${info.base}"
-        else s"$manifestRoot/v=${info.base}") +:
-        deltaVs.map(v => s"$manifestRoot/v=$v")) { read =>
-      val baseDf = (if (info.baseIsCheckpoint)
-          read(s"$manifestRoot/ckpt=${info.base}")
-        else versionRows(spark, manifestRoot, info.base))
+    cachedManifestDf(spark, root,
+      ("fold", version, info.base, info.baseIsCheckpoint, info.deltas.toList),
+      s"$root/v=$version",
+      inputDirs = baseDir +: info.deltas.map(v => s"$root/v=$v")) { read =>
+      val baseDf = (if (info.baseIsCheckpoint) read(baseDir)
+        else versionRows(spark, root, info.base))
         .withColumn(ActionCol, lit("add")).withColumn("_v", lit(info.base))
-      val deltas = deltaVs
-        .map(v => versionRows(spark, manifestRoot, v).withColumn("_v", lit(v)))
+      val deltas = info.deltas
+        .map(v => versionRows(spark, root, v).withColumn("_v", lit(v)))
       val all = (baseDf +: deltas)
         .reduce(_.unionByName(_, allowMissingColumns = true))
       val w = org.apache.spark.sql.expressions.Window
@@ -805,7 +811,7 @@ object Snapshots {
 
   /** [[tableAt]] at a statement's head (or a version pinned through it). */
   def tableAt(spark: SparkSession, at: TableHead): DataFrame = {
-    val entries = Dv.entries(manifestAt(spark, at.root, at.version))
+    val entries = Dv.entries(manifestAt(spark, at))
     if (entries.nonEmpty) Dv.readLive(spark, entries, at.schema)
     else {
       // EMPTY version — reachable once a covering DELETE can drop every
@@ -819,7 +825,7 @@ object Snapshots {
       // neither has no schema to serve and fails loudly.
       at.listing.filter(v => v < at.version && txnVisible(spark, at.root, v))
         .sorted.reverse.view
-        .map(v => Dv.entries(manifestAt(spark, at.root, v)))
+        .map(v => Dv.entries(manifestAt(spark, at.at(v))))
         .find(_.nonEmpty) match {
         case Some(prior) => Dv.readLive(spark, prior, at.schema).limit(0)
         case None =>
@@ -1253,9 +1259,10 @@ object Snapshots {
       Layout.zorderWrite(batch, cols, _, nFiles))
     val v = commitDelta(spark, manifestRoot, statsFor(spark, moved, cols),
       tag = tag)
+    val at = headAt(spark, manifestRoot, v) // lists the root only if folded
     if (checkpointEvery > 0 &&
-        foldInfo(spark, manifestRoot, v).deltasFolded >= checkpointEvery)
-      writeCheckpoint(spark, manifestRoot, v)
+        foldInfo(spark, at).deltas.size >= checkpointEvery)
+      writeCheckpoint(spark, at)
     (v, moved.size)
   }
 
@@ -2213,7 +2220,7 @@ object Snapshots {
                                     tag: Option[String] = None)
                                    (files: Seq[(String, String)]): Int =
     if (files.isEmpty && tag.isEmpty) at.version
-    else commit(spark, manifestAt(spark, at.root, at.version), at.root, tag,
+    else commit(spark, manifestAt(spark, at), at.root, tag,
       contentFiles = files)
 
   private def named(markers: Seq[String]): Seq[(String, String)] =
@@ -2343,7 +2350,7 @@ object Snapshots {
       if (f.name.toLowerCase(java.util.Locale.ROOT) == lower)
         f.copy(dataType = newType)
       else f))
-    val m = Dv.ensureDv(manifestAt(spark, manifestRoot, at.version))
+    val m = Dv.ensureDv(manifestAt(spark, at))
     val statMin = m.columns.find(_.equalsIgnoreCase(s"min_$lower"))
     val statMax = m.columns.find(_.equalsIgnoreCase(s"max_$lower"))
     val m2 = (statMin, statMax) match {
@@ -2638,14 +2645,16 @@ object Snapshots {
   def vacuumPlan(spark: SparkSession, path: String, manifestRoot: String,
                  retainLast: Int): VacuumPlan = {
     require(retainLast >= 1, "must retain at least the latest version")
-    val vs = versions(spark, manifestRoot)
+    val listed = listRoot(spark, manifestRoot)
+    val vs = listed.versions
     require(vs.nonEmpty, s"no committed versions under $manifestRoot")
     val (drop, keep) = vs.splitAt((vs.size - retainLast).max(0))
     // a txn stage in the kept range is read raw ([[manifestAt]] refuses
     // it): an unresolved stage's files must outlive the vacuum, since its
     // txn may still commit
     val retained = keep.map(v => Dv.entries(
-      if (txnVisible(spark, manifestRoot, v)) manifestAt(spark, manifestRoot, v)
+      if (txnVisible(spark, manifestRoot, v))
+        manifestAt(spark, new TableHead(spark, manifestRoot, listed, v))
       else versionRows(spark, manifestRoot, v)))
     val referenced = retained.flatten.map(e => Layout.fileName(e.file)).toSet
     val dir = new org.apache.hadoop.fs.Path(path)
@@ -2674,17 +2683,18 @@ object Snapshots {
   def vacuum(spark: SparkSession, path: String, manifestRoot: String,
              retainLast: Int): VacuumResult = {
     val plan = vacuumPlan(spark, path, manifestRoot, retainLast)
-    val vs = versions(spark, manifestRoot)
+    val listed = listRoot(spark, manifestRoot)
     val drop = plan.dropVersions
     // log-structured tails must stay self-contained: if the oldest retained
     // version is a delta whose fold base is about to be dropped,
     // materialize it as a checkpoint FIRST — every retained version then
     // folds from a base ≥ the cut. (writeCheckpoint is a no-op when the
     // base is already a retained full version or surviving checkpoint.)
-    val cut = vs.drop(drop.size).head
+    val cut = listed.versions.drop(drop.size).head
+    val atCut = new TableHead(spark, manifestRoot, listed, cut)
     if (drop.nonEmpty && isDelta(spark, manifestRoot, cut) &&
-        foldInfo(spark, manifestRoot, cut).base < cut)
-      writeCheckpoint(spark, manifestRoot, cut)
+        foldInfo(spark, atCut).base < cut)
+      writeCheckpoint(spark, atCut)
     val fs = hfs(spark, path)
     plan.deadFiles.foreach(f =>
       fs.delete(new org.apache.hadoop.fs.Path(f), false))
@@ -2693,7 +2703,7 @@ object Snapshots {
     // a marker commit (column mapping / declared column types / constraint
     // set) governs every LATER version until superseded — dropping its dir
     // must not lose the table's schema indirection or write contracts
-    preserveMarkers(spark, manifestRoot, drop, cut)
+    preserveMarkers(spark, atCut, drop)
     drop.foreach { v =>
       fs.delete(new org.apache.hadoop.fs.Path(s"$manifestRoot/v=$v"), true)
     }
@@ -2701,7 +2711,7 @@ object Snapshots {
     // (after the version drop, so a crash mid-vacuum never leaves a delta
     // tail whose base was deleted first)
     val mfs = hfs(spark, manifestRoot)
-    checkpoints(spark, manifestRoot).filter(_ < cut).foreach { c =>
+    listed.checkpoints.filter(_ < cut).foreach { c =>
       mfs.delete(new org.apache.hadoop.fs.Path(s"$manifestRoot/ckpt=$c"), true)
     }
     // vacuum is the one operation that DELETES version dirs and data/DV
@@ -2887,7 +2897,7 @@ object Snapshots {
       s"constraint '$name' already exists (${at.checks(name)})")
     // an EMPTY table (a plain CREATE TABLE before any INSERT) trivially
     // satisfies every constraint — nothing to validate, no scan
-    val entries = Dv.entries(Dv.ensureDv(manifestAt(spark, at.root, at.version)))
+    val entries = Dv.entries(Dv.ensureDv(manifestAt(spark, at)))
     val bad =
       if (entries.isEmpty) 0L
       else Dv.readLive(spark, entries, at.schema)
@@ -2925,7 +2935,7 @@ object Snapshots {
                     parentKey: String): Int = {
     require(!foreignKeys(at).contains(name),
       s"foreign key '$name' already exists")
-    val entries = Dv.entries(Dv.ensureDv(manifestAt(spark, at.root, at.version)))
+    val entries = Dv.entries(Dv.ensureDv(manifestAt(spark, at)))
     if (entries.nonEmpty) {
       val orphans = orphanCount(spark,
         Dv.readLive(spark, entries, at.schema), column, parent, parentKey)
@@ -2946,7 +2956,7 @@ object Snapshots {
   private def orphanCount(spark: SparkSession, df: DataFrame, column: String,
                           parentHead: TableHead, parentKey: String): Long = {
     val parent = Dv.readLive(spark,
-        Dv.entries(manifestAt(spark, parentHead.root, parentHead.version)),
+        Dv.entries(manifestAt(spark, parentHead)),
         parentHead.schema)
       .select(col(parentKey).as("_fk_p")).distinct()
     df.filter(col(column).isNotNull)
@@ -3125,7 +3135,7 @@ object Snapshots {
   }
 
   /** Re-home governing markers out of about-to-drop version dirs into the
-    * oldest RETAINED version's dir (the cut):
+    * oldest RETAINED version's dir (the cut, head `atCut`'s version):
     *  - the superseding kinds (column mapping, constraint set, properties
     *    — every chunk of each — and the declared schema): the newest
     *    marker at-or-below the cut is the one in force for every retained
@@ -3137,9 +3147,10 @@ object Snapshots {
     * Without this, a vacuum reaching past the last schema/constraint
     * commit would silently strip the table of its renames, declared
     * columns, or write contracts. */
-  private def preserveMarkers(spark: SparkSession, manifestRoot: String,
-                              drop: Seq[Int], cut: Int): Unit = {
+  private def preserveMarkers(spark: SparkSession, atCut: TableHead,
+                              drop: Seq[Int]): Unit = {
     if (drop.isEmpty) return
+    val (manifestRoot, cut) = (atCut.root, atCut.version)
     val fs = hfs(spark, manifestRoot)
     val dropSet = drop.toSet
     def rehome(from: Int, marker: String): Unit = {
@@ -3150,7 +3161,7 @@ object Snapshots {
       finally out.close()
     }
     for (prefix <- Seq(CmapPrefix, CkPrefix, PropsPrefix, SchemaMarker))
-      inForce(spark, manifestRoot, cut, prefix, versions(spark, manifestRoot))
+      inForce(spark, manifestRoot, cut, prefix, atCut.listing)
         .foreach { case (v, ms) =>
         if (dropSet.contains(v)) ms.foreach(rehome(v, _)) }
     drop.foreach(v => markerNames(spark, manifestRoot, v)

@@ -64,32 +64,28 @@ object DeltaInterop {
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
   /** Commit versions present in the log, ascending. */
-  def versions(spark: SparkSession, dir: String): Seq[Long] = {
-    val logDir = new org.apache.hadoop.fs.Path(dir, "_delta_log")
-    val f = fs(spark, dir)
-    if (!f.exists(logDir)) Seq.empty
-    else f.listStatus(logDir).toSeq.map(_.getPath.getName)
-      .filter(n => n.endsWith(".json") && n.length == 25 &&
-        n.dropRight(5).forall(_.isDigit))
-      .map(_.dropRight(5).toLong).sorted
-  }
+  def versions(spark: SparkSession, dir: String): Seq[Long] =
+    listLog(spark, dir)._1
 
-  /** Checkpoint parquet(s) present in the log, version → absolute file
-    * paths (multi-part checkpoints grouped; readers union them). */
-  def checkpoints(spark: SparkSession, dir: String): Map[Long, Seq[String]] = {
-    val logDir = new org.apache.hadoop.fs.Path(dir, "_delta_log")
-    val f = fs(spark, dir)
-    if (!f.exists(logDir)) Map.empty
-    else {
-      val single = """(\d{20})\.checkpoint\.parquet""".r
-      val multi = """(\d{20})\.checkpoint\.\d{10}\.\d{10}\.parquet""".r
-      f.listStatus(logDir).toSeq.map(_.getPath.getName).collect {
-        case n @ single(v) => (v.toLong, n)
-        case n @ multi(v) => (v.toLong, n)
-      }.groupBy(_._1).map { case (v, ns) =>
-        v -> ns.map(p => s"$dir/_delta_log/${p._2}").sorted
-      }
-    }
+  private val JsonCommit = """(\d{20})\.json""".r
+  private val Checkpoint =
+    """(\d{20})\.checkpoint(?:\.\d{10}\.\d{10})?\.parquet""".r
+
+  /** ONE listing of `_delta_log`: the JSON commit versions, ascending, and
+    * the checkpoint parquet(s), version → absolute file paths (multi-part
+    * checkpoints grouped; readers union them). */
+  private def listLog(spark: SparkSession, dir: String)
+      : (Seq[Long], Map[Long, Seq[String]]) = {
+    val names =
+      try fs(spark, dir)
+        .listStatus(new org.apache.hadoop.fs.Path(dir, "_delta_log")).toSeq
+        .map(_.getPath.getName)
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    (names.collect { case JsonCommit(v) => v.toLong }.sorted,
+      names.collect { case n @ Checkpoint(v) => v.toLong -> n }
+        .groupBy(_._1).map { case (v, ns) =>
+          v -> ns.map(p => s"$dir/_delta_log/${p._2}").sorted
+        })
   }
 
   /** Replay the log to `version` (default: head). A log whose early JSON
@@ -97,8 +93,7 @@ object DeltaInterop {
     * at-or-below the target and replays only the JSON tail after it. */
   def snapshotAt(spark: SparkSession, dir: String,
                  version: Option[Long] = None): Snapshot = {
-    val vs = versions(spark, dir)
-    val ckpts = checkpoints(spark, dir)
+    val (vs, ckpts) = listLog(spark, dir)
     require(vs.nonEmpty || ckpts.nonEmpty,
       s"no _delta_log JSON commits or checkpoints under $dir")
     val target = version.getOrElse((vs ++ ckpts.keys).max)

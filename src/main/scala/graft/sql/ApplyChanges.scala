@@ -72,13 +72,14 @@ object ApplyChanges {
         s"'$targetName' is not a registered lake table"))
     require(spec.cols.contains(key),
       s"target stats columns must include the key '$key' for merge pruning")
-    val head = Snapshots.latestVersion(spark, srcRoot)
+    val src = Snapshots.tableHead(spark, srcRoot)
     var applied = 0L
     var cursor = appliedCursor(spark, spec.manifestRoot)
     val from = cursor
     if (cursor == 0) {
-      val first = Snapshots.visibleVersions(spark, srcRoot).head
-      val snap = Snapshots.tableAt(spark, srcRoot, first)
+      // the oldest visible version of the head's own listing
+      val first = src.listing.find(Snapshots.txnVisible(spark, srcRoot, _)).get
+      val snap = Snapshots.tableAt(spark, src.at(first))
         .select((key +: payload).map(col): _*)
         .withColumn("start_at", lit(first.toLong))
         .withColumn("end_at", lit(null).cast("long"))
@@ -89,7 +90,7 @@ object ApplyChanges {
       cursor = first
     }
     // visible source commits only: an aborted txn stage is not history
-    Snapshots.commits(spark, srcRoot, cursor, head).foreach { c =>
+    Snapshots.commits(spark, srcRoot, cursor, src.version).foreach { c =>
       val v = c.version
       // cache the feed: it feeds the CLOSE keys, the OPEN batch, and the
       // empty-insert branch — recomputing the exceptAll diff thrice is
@@ -118,6 +119,6 @@ object ApplyChanges {
           spec.manifestRoot, spec.nFiles, tag = Some(s"scd2_$v"))
       applied += 1
     }
-    ApplyResult(from, head, applied)
+    ApplyResult(from, src.version, applied)
   }
 }

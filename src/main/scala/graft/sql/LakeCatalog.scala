@@ -71,8 +71,10 @@ import graft.sql.LakeSql.LakeTableSpec
   *
   * SCALE: every operation here is metadata-only — namespace/table
   * listing is directory status, createTable commits one empty manifest,
-  * loadTable reads one manifest footer. No data file is ever opened by
-  * the catalog itself.
+  * loadTable lists the manifest root once and reads the head manifest
+  * (its footer on a cache miss, plus the delta tail of a log-structured
+  * head), and the statement reuses that head. No data file is ever
+  * opened by the catalog itself.
   */
 class LakeCatalog extends TableCatalog with SupportsNamespaces {
 
@@ -169,21 +171,31 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces {
     try { loadTable(ident); true }
     catch { case _: NoSuchTableException => false }
 
-  /** Rebuild the table's spec from its persisted state: stats columns
-    * from the manifest's `min_` fields (the schema authority for the
-    * prune domain), rewrite fan-out and non-conventional dirs from the
+  /** Load `ident` from ONE head, the listing of `<root>/m` (a second
+    * only when a `manifest_dir` property points the manifest elsewhere):
+    * an empty root is a missing table; stats columns come from the head
+    * manifest's `min_` fields (the schema authority for the prune
+    * domain), rewrite fan-out and non-conventional dirs from the
     * properties CREATE TABLE recorded. Self-registers under `db.t`. */
-  private def specOf(ident: Identifier): LakeTableSpec = {
+  private def load(ident: Identifier,
+                   pinnedVersion: Snapshots.TableHead => Option[Int])
+      : LakeRowTable = {
+    def missing = new NoSuchTableException(ident.namespace :+ ident.name)
+    if (ident.namespace.length != 1) throw missing
     val root = tableRoot(ident)
-    val props = Snapshots.tableHead(spark, new Path(root, "m").toString).props
-    val manifestRoot = props.getOrElse("manifest_dir",
-      new Path(root, "m").toString)
-    val dataDir = props.getOrElse("data_dir", new Path(root, "z").toString)
-    val statsCols = Snapshots.manifestAt(spark, manifestRoot,
-      Snapshots.latestVersion(spark, manifestRoot)).schema.fieldNames
+    val conventional = new Path(root, "m").toString
+    val h = Snapshots.headOption(spark, conventional).getOrElse(throw missing)
+    val manifestRoot = h.props.getOrElse("manifest_dir", conventional)
+    val head =
+      if (manifestRoot == conventional) h
+      else Snapshots.tableHead(spark, manifestRoot)
+    val statsCols = Snapshots.manifestAt(spark, head).schema.fieldNames
       .filter(_.startsWith("min_")).map(_.stripPrefix("min_")).toSeq
-    LakeTableSpec(dataDir, manifestRoot, statsCols,
-      props.get("files").map(_.toInt).getOrElse(8))
+    val spec = LakeTableSpec(
+      h.props.getOrElse("data_dir", new Path(root, "z").toString),
+      manifestRoot, statsCols, h.props.get("files").map(_.toInt).getOrElse(8))
+    LakeSql.register(registryKey(ident), spec)
+    LakeRowTable(registryKey(ident), spec, pinnedVersion(head))(head)
   }
 
   override def loadTable(ident: Identifier): Table = {
@@ -192,37 +204,20 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces {
     if (ident.name.endsWith("$commits")) {
       val base = Identifier.of(ident.namespace,
         ident.name.stripSuffix("$commits"))
-      val spec = loadedSpec(base)
-      return new CommitsTable(Map("manifestRoot" -> spec.manifestRoot))
+      return new CommitsTable(
+        Map("manifestRoot" -> load(base, _ => None).spec.manifestRoot))
     }
-    val spec = loadedSpec(ident)
-    LakeRowTable(registryKey(ident), spec, pinnedVersion = None)
+    load(ident, _ => None)
   }
 
-  private def loadedSpec(ident: Identifier): LakeTableSpec = {
-    val mRoot = new Path(tableRoot(ident), "m").toString
-    if (ident.namespace.length != 1 ||
-        Snapshots.versions(spark, mRoot).isEmpty)
-      throw new NoSuchTableException(ident.namespace :+ ident.name)
-    val spec = specOf(ident)
-    LakeSql.register(registryKey(ident), spec)
-    spec
-  }
-
-  override def loadTable(ident: Identifier, version: String): Table = {
-    val spec = loadedSpec(ident)
-    val v = version.toIntOption.getOrElse(
+  override def loadTable(ident: Identifier, version: String): Table =
+    load(ident, _ => Some(version.toIntOption.getOrElse(
       throw new IllegalArgumentException(
-        s"VERSION AS OF wants an integer version, got '$version'"))
-    LakeRowTable(registryKey(ident), spec, pinnedVersion = Some(v))
-  }
+        s"VERSION AS OF wants an integer version, got '$version'"))))
 
-  override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
-    val spec = loadedSpec(ident)
-    val v = Snapshots.versionAtTimestamp(spark, spec.manifestRoot,
-      timestampMicros / 1000L)
-    LakeRowTable(registryKey(ident), spec, pinnedVersion = Some(v))
-  }
+  override def loadTable(ident: Identifier, timestampMicros: Long): Table =
+    load(ident, h => Some(
+      Snapshots.versionAtTimestamp(spark, h, timestampMicros / 1000L)))
 
   override def createTable(ident: Identifier, schema: StructType,
                            partitions: Array[Transform],
@@ -260,11 +255,12 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces {
     val spec = LakeTableSpec(dataDir, manifestRoot, statsCols,
       props.get("files").map(_.toInt).getOrElse(8))
     LakeSql.register(registryKey(ident), spec)
-    LakeRowTable(registryKey(ident), spec, pinnedVersion = None)
+    LakeRowTable(registryKey(ident), spec, pinnedVersion = None)(
+      Snapshots.tableHead(spark, manifestRoot))
   }
 
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
-    val spec = loadedSpec(ident)
+    val spec = load(ident, _ => None).spec
     val sets = changes.collect {
       case s: TableChange.SetProperty => s.property -> s.value }
     val unsets = changes.collect {
@@ -311,28 +307,30 @@ object LakeCatalog {
   * (same plan as the `LakeSql.sql` front door — DV anti-joins, column
   * mapping, metadata-agg scan tag all included). Streaming reads ARE
   * served natively: `spark.readStream.table` plans one micro-batch per
-  * commit range, reading exactly the files those commits appended. */
+  * commit range, reading exactly the files those commits appended.
+  * `head` is the table's head as [[LakeCatalog.loadTable]] resolved it:
+  * schema, properties and the rewrite all read it, so a catalog statement
+  * lists the root once. It stays out of the relation's equality, which is
+  * `(tableName, spec, pinnedVersion)`. */
 final case class LakeRowTable(tableName: String, spec: LakeTableSpec,
                               pinnedVersion: Option[Int])
+                             (val head: Snapshots.TableHead)
     extends Table with SupportsRead {
 
   private def spark = SparkSession.active
 
   override def name(): String = tableName
 
-  /** The table's head, or the pinned version over its listing. */
-  private def head: Snapshots.TableHead = {
-    val h = Snapshots.tableHead(spark, spec.manifestRoot)
-    pinnedVersion.fold(h)(h.at)
-  }
+  /** The head, or the pinned version over its listing. */
+  private def read: Snapshots.TableHead = pinnedVersion.fold(head)(head.at)
 
   override def schema(): StructType =
-    Snapshots.mappedTableAt(spark, head).schema
+    Snapshots.mappedTableAt(spark, read).schema
 
   /** The manifest's property map (what SHOW TBLPROPERTIES / DESCRIBE
     * EXTENDED read through Spark's v2 execs) plus the structural facts. */
   override def properties(): util.Map[String, String] = {
-    (head.props ++ Map(
+    (read.props ++ Map(
       TableCatalog.PROP_PROVIDER -> "lake",
       "stats_cols" -> spec.cols.mkString(","),
       "data_dir" -> spec.path,

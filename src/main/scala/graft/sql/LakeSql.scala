@@ -666,8 +666,7 @@ object LakeSql {
           spark =>
             val spec = specByName(name)
             val h = Snapshots.tableHead(spark, spec.manifestRoot)
-            val entries = graft.sinks.Dv.entries(
-              Snapshots.manifestAt(spark, spec.manifestRoot, h.version))
+            val entries = graft.sinks.Dv.entries(Snapshots.manifestAt(spark, h))
             val p = new org.apache.hadoop.fs.Path(spec.path)
             val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
             val bytes = entries.map(e =>
@@ -1077,6 +1076,11 @@ object LakeSql {
     def apply(spec: LakeTableSpec): Snapshots.TableHead =
       byRoot.getOrElseUpdate(spec.manifestRoot,
         Snapshots.tableHead(spark, spec.manifestRoot))
+
+    /** `h` as its table's head, unless the statement already resolved
+      * one — a catalog handle hands down the head it was loaded with. */
+    def seed(h: Snapshots.TableHead): Snapshots.TableHead =
+      byRoot.getOrElseUpdate(h.root, h)
 
     /** Run a metadata-only commit (`run`) against `spec`'s head; the
       * head then moves to the version the commit returned. */
@@ -1503,7 +1507,7 @@ object LakeSql {
       hs: Heads,
       r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation,
       t: LakeRowTable): LogicalPlan = {
-    val h = hs(t.spec)
+    val h = hs.seed(t.head)
     val inner = aliasedTableAt(hs.spark, t.tableName, t.spec,
       t.pinnedVersion.fold(h)(h.at), h, analyzed = true)
     val byName = inner.output
@@ -2444,7 +2448,7 @@ object LakeSql {
     * metadata read. */
   private def statsNativeTypes(hs: Heads,
                                spec: LakeTableSpec): Map[String, DataType] =
-    Snapshots.manifestAt(hs.spark, spec.manifestRoot, hs(spec).version)
+    Snapshots.manifestAt(hs.spark, hs(spec))
       .schema.fields.iterator.filter(_.name.startsWith("min_"))
       .map(f => f.name.stripPrefix("min_") -> f.dataType).toMap
 

@@ -21,8 +21,9 @@ object TestSpark {
 }
 
 /** The local file system under the `countfs://` scheme, counting every
-  * directory listing by path — how a spec prices the listings a statement
-  * makes (on an object store each is a paged LIST). */
+  * directory listing and every existence or status probe by path — how a
+  * spec prices the listings and probes a statement makes (on an object
+  * store each listing is a paged LIST, each probe a HEAD). */
 class CountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("countfs:///")
   override def getScheme: String = "countfs"
@@ -31,10 +32,23 @@ class CountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
     CountingFs.listed.add(CountingFs.key(f))
     super.listStatus(f)
   }
+  // RawLocalFileSystem answers `exists` itself, without `getFileStatus`,
+  // so each probe counts once
+  override def exists(f: org.apache.hadoop.fs.Path): Boolean = {
+    CountingFs.probed.add(CountingFs.key(f))
+    super.exists(f)
+  }
+  override def getFileStatus(
+      f: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FileStatus = {
+    CountingFs.probed.add(CountingFs.key(f))
+    super.getFileStatus(f)
+  }
 }
 
 object CountingFs {
   private[graft] val listed =
+    new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  private[graft] val probed =
     new java.util.concurrent.ConcurrentLinkedQueue[String]()
   private[graft] def key(p: org.apache.hadoop.fs.Path): String =
     p.toUri.getPath.stripSuffix("/")
@@ -51,12 +65,21 @@ abstract class SparkSpec extends AnyFunSuite {
   /** How many times `body` lists the directory `dir` (a `countfs://`
     * path): for a manifest root, the root listings behind version
     * resolution. */
-  def listingsOf(dir: String)(body: => Unit): Int = {
+  def listingsOf(dir: String)(body: => Unit): Int =
+    countsOf(CountingFs.listed, dir)(body)
+
+  /** How many times `body` probes the path `dir` (a `countfs://` path)
+    * with `exists` or `getFileStatus`. */
+  def probesOf(dir: String)(body: => Unit): Int =
+    countsOf(CountingFs.probed, dir)(body)
+
+  private def countsOf(seen: java.util.Queue[String], dir: String)
+                      (body: => Unit): Int = {
     val k = CountingFs.key(new org.apache.hadoop.fs.Path(dir))
-    CountingFs.listed.clear()
+    seen.clear()
     body
     import scala.jdk.CollectionConverters._
-    CountingFs.listed.asScala.count(_ == k)
+    seen.asScala.count(_ == k)
   }
 
   /** First-stage call sites of the Spark jobs `body` starts. */

@@ -44,8 +44,9 @@ class SnapshotsLogSpec extends SparkSpec {
       assert(ids(Snapshots.tableAt(spark, s"$dir/m", v)) == want,
         s"wrong snapshot at v$v")
     }
-    val info = Snapshots.foldInfo(spark, s"$dir/m", 4)
-    assert(info == Snapshots.FoldInfo(1, baseIsCheckpoint = false, 3))
+    val info = Snapshots.foldInfo(spark, Snapshots.tableHead(spark, s"$dir/m"))
+    assert(info ==
+      Snapshots.FoldInfo(1, baseIsCheckpoint = false, Seq(2, 3, 4)))
   }
 
   test("a delta commit writes O(batch) manifest rows, not O(table)") {
@@ -91,14 +92,15 @@ class SnapshotsLogSpec extends SparkSpec {
   test("checkpointEvery re-bases the fold; checkpoints list and are reused") {
     val dir = freshLog(checkpointEvery = 2)
     // deltas at v2 (tail 1: no ckpt), v3 (tail 2: ckpt), v4 (tail 1 again)
-    assert(Snapshots.checkpoints(spark, s"$dir/m") == Seq(3))
-    val info = Snapshots.foldInfo(spark, s"$dir/m", 4)
-    assert(info == Snapshots.FoldInfo(3, baseIsCheckpoint = true, 1))
+    val head = Snapshots.tableHead(spark, s"$dir/m")
+    assert(head.checkpoints == Seq(3))
+    val info = Snapshots.foldInfo(spark, head)
+    assert(info == Snapshots.FoldInfo(3, baseIsCheckpoint = true, Seq(4)))
     // checkpointed read ≡ direct fold from v1
     assert(ids(Snapshots.tableAt(spark, s"$dir/m", 4)) == ids(data))
     // writeCheckpoint is idempotent
-    Snapshots.writeCheckpoint(spark, s"$dir/m", 3)
-    assert(Snapshots.checkpoints(spark, s"$dir/m") == Seq(3))
+    Snapshots.writeCheckpoint(spark, head.at(3))
+    assert(Snapshots.tableHead(spark, s"$dir/m").checkpoints == Seq(3))
   }
 
   test("vacuum self-contains a delta tail and reclaims stale checkpoints") {
@@ -108,7 +110,7 @@ class SnapshotsLogSpec extends SparkSpec {
     assert(Snapshots.versions(spark, s"$dir/m") == Seq(4))
     // the cut (v4, a delta) was checkpointed before its base was dropped;
     // the stale ckpt=3 is gone
-    assert(Snapshots.checkpoints(spark, s"$dir/m") == Seq(4))
+    assert(Snapshots.tableHead(spark, s"$dir/m").checkpoints == Seq(4))
     assert(ids(Snapshots.tableAt(spark, s"$dir/m", 4)) == ids(data))
     // appends removed nothing, so no data file is reclaimable
     assert(vac.filesDeleted == 0)
